@@ -13,16 +13,16 @@ import graft.xbrl.TableSchema
   * archive in, lazily-planned output tables + coverage stats out, with
   * optional table filtering and instance-name pattern matching.
   *
-  * Nothing materializes until a sink runs each table's plan; at cluster
-  * scale the per-table builds are independent Spark jobs over the same
-  * persisted parse, so they schedule concurrently and share the scan.
+  * Only the shared grouped fact store materializes up front; each
+  * table's plan runs when a sink writes it, as a map-only projection of
+  * that store.
   */
 object XbrlExtract {
 
-  /** `release()` unpersists the shared grouped store and the parsed
-    * filings backing `tables` — call it once every output table is
-    * materialized (long-lived callers; a CLI process exit releases
-    * implicitly).
+  /** `release()` frees the shared grouped store's checkpoint blocks and
+    * the parsed filings backing `tables` — call it once every output
+    * table is materialized (long-lived callers; a CLI process exit
+    * releases implicitly).
     */
   case class ExtractOutput(
       taxonomies: Seq[graft.xbrl.Taxonomy],
@@ -34,6 +34,15 @@ object XbrlExtract {
   /** Each element of `filings` may be a zip archive, a directory of
     * `.xbrl` files, or a single `.xbrl` filing — dispatched per input
     * like the reference CLI's positional arguments (cli.py:28-32).
+    *
+    * Every table is a map-only projection of ONE grouped fact store
+    * ([[FactTableBuilder.groupedStore]]), so all N tables cost one
+    * corpus aggregation, not N. The store is materialized here, eagerly,
+    * by [[checkpointed]]: each table's plan then scans a leaf RDD
+    * instead of re-planning and re-shipping the parse-and-aggregate
+    * lineage in its task binary. The tables themselves stay lazy until
+    * a sink runs them — `graft.Main` writes them all in one batched job
+    * through [[XbrlSinks.writeParquetPooled]].
     */
   def extract(
       spark: SparkSession,
@@ -59,43 +68,35 @@ object XbrlExtract {
       .as[graft.xbrl.XbrlContext](org.apache.spark.sql.Encoders.product[graft.xbrl.XbrlContext])
     val meta = pattern(parsed.map(_.meta).reduce(_ unionByName _))
 
-    // every table is a map-only projection of ONE shared grouped store
-    // (see FactTableBuilder.groupedStore): materializing all N tables
-    // costs one corpus aggregation, not N. persist() is lazy — nothing
-    // runs until a table does.
-    val store = FactTableBuilder.groupedStore(schemas, facts, contexts, meta)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (store, releaseStore) = checkpointed(
+      FactTableBuilder.groupedStore(schemas, facts, contexts, meta))
     val tables = schemas.map(s =>
       s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
     val stats = FactTableBuilder.stats(spark, schemas, facts, contexts, meta)
     ExtractOutput(taxonomies, schemas, tables, stats,
       release = () => {
-        store.unpersist(blocking = false)
+        releaseStore()
         parsed.foreach(_.unpersist())
       })
   }
 
-  /** The reference CLI's full parquet workload over an ALREADY-PARSED
-    * filing store (xbrl.py:86-140 + cli.py:101-130, one measured run):
-    * build every table in `schemas` from the shared parse, write each to
-    * `<outDir>/tables/<name>.parquet`, write the validated parquet
-    * datapackage descriptor and the taxonomy metadata JSON, and return
-    * one summary row per table `(table_name, n_rows, n_cols, error)`.
-    *
-    * Scale shape: the corpus is aggregated ONCE into the shared grouped
-    * fact store ([[graft.plans.FactTableBuilder.groupedStore]] — three
-    * exchanges total, persisted here unless the caller hands in its own
-    * cached copy), after which every table is a map-only
-    * filter-projection write over that store: no per-table shuffle, no
-    * per-table corpus pass, and the archive itself is parsed once by
-    * the `parsed` store the caller holds. Row counts piggyback on the
-    * write jobs via `observe` (no second pass over any table). The
-    * independent per-table jobs are submitted from a bounded driver
-    * pool — exactly how this schedules on a real cluster, where
-    * concurrent small jobs backfill executor slots a single serial loop
-    * would leave idle; the driver holds only table names and counts
-    * (metadata), never table data.
+  /** `df` materialized now by `localCheckpoint`, and the function that
+    * frees it. The checkpoint truncates the lineage: jobs over the
+    * result ship a scan of the checkpoint blocks, not `df`'s plan.
+    * `Dataset.unpersist` does not reach those blocks — they belong to
+    * the checkpointed RDD under the result's plan, which the returned
+    * function unpersists. Local checkpoint blocks cannot be recomputed:
+    * an executor lost with them fails the jobs reading them (reliable
+    * `checkpoint()` is the durable edition of the same move).
     */
+  private[graft] def checkpointed(df: DataFrame): (DataFrame, () => Unit) = {
+    val cp = df.localCheckpoint()
+    val rdds = cp.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }
+    (cp, () => rdds.foreach(_.unpersist(blocking = false)))
+  }
+
   /** Upper-bound per-table row counts from the shared store in ONE job:
     * explode each store row's fact names against the broadcast
     * (name, period) -> table mapping and count distinct store rows per
@@ -105,9 +106,9 @@ object XbrlExtract {
     *
     * This IS one extra aggregation pass over the store beyond the
     * store's own materialization; it has never registered in the x05
-    * profile (the store is persisted, the pass is a cached scan into a
-    * 255-row agg). If it ever does, piggyback the counts on the store's
-    * materialization via `observe` metrics instead of a second pass.
+    * profile (the store is materialized, the pass is a cached scan into
+    * a 255-row agg). If it ever does, piggyback the counts on the
+    * store's materialization via `observe` metrics instead.
     */
   private[graft] def estimateTableRows(
       spark: SparkSession,
@@ -128,61 +129,33 @@ object XbrlExtract {
       .collect().toMap // one row per table: metadata, not data
   }
 
-  /** Partial-output semantics: a failed table job surfaces as its
-    * summary row's `error` (the other tables still write and report
-    * counts — one transient failure must not destroy a 255-table run's
-    * record); the descriptor, written only AFTER the table jobs finish,
-    * lists exactly the tables that succeeded, so it never references
-    * missing or partial data. A rerun into the same `outDir` repairs
-    * failed tables via overwrite. If `timeout` expires, the in-flight
-    * write jobs are cancelled through their job group and the run
-    * throws — no descriptor is written.
+  /** The reference CLI's full parquet workload over an ALREADY-PARSED
+    * filing store (xbrl.py:86-140 + cli.py:101-130, one measured run):
+    * build every table in `schemas` from the shared grouped store, write
+    * each to `<outDir>/tables/<name>.parquet`, write the validated
+    * parquet datapackage descriptor and the taxonomy metadata JSON, and
+    * return one summary row per table `(table_name, n_rows, n_cols,
+    * error)`.
     *
-    * File sizing: each table writes `ceil(rows / targetRowsPerFile)`
-    * files (min 1), from a one-job per-table row estimate over the
-    * store — ferc1-sized tables keep the reference's one-file-per-table
-    * layout (cli.py:211-230) while a mega-table's write parallelizes by
-    * default instead of funnelling through one task.
+    * The store is aggregated ONCE (checkpointed here unless the caller
+    * hands in its own materialized copy); every table is then a
+    * map-only filter-projection over it. Tables whose estimated rows
+    * fit one file (`targetRowsPerFile`; all of ferc1's, keeping the
+    * reference's one-file-per-table layout, cli.py:211-230) write in
+    * ONE batched job through [[XbrlSinks.writeSingleFileTables]], the
+    * writer `graft.Main` uses too; a mega-table keeps the standard
+    * multi-file DataFrame write, whose data amortizes the per-job
+    * constants the batch removes.
     *
-    * Batched writes (r18, guide §2.2/§2.6, VERDICT r17 #1): the
-    * single-file tables no longer run one SQL write COMMAND each —
-    * measured r18, each such job cost ~80 ms of task time but ~235 ms
-    * of single-threaded driver constants (stage creation + task-binary
-    * broadcast including a fresh ~100 KB serialized Hadoop conf, all on
-    * the DAGScheduler event loop), so 255 jobs serialized ~4-6 s that
-    * 32 pool threads could not hide. Now every single-file table's
-    * plan compiles to its RDD (in parallel, on the pool), the RDDs
-    * union into jobs of up to [[WriteBatch]] tables, and each task
-    * writes ITS table's parquet file through the same
-    * ParquetWriteSupport/ParquetOutputWriter machinery the SQL write
-    * command uses (same schema conversion, same codec, same
-    * rebase/legacy conf), counting rows as it writes — identical
-    * files-on-disk contract (one `part-*.snappy.parquet` + `_SUCCESS`
-    * per table dir), identical summary rows, two orders of magnitude
-    * fewer driver round-trips. Tables estimated past
-    * `targetRowsPerFile` keep the standard multi-file DataFrame write
-    * (their data amortizes the per-job constants). A table failure
-    * inside a batch is caught IN ITS TASK and reported as that table's
-    * error row — the batch's other tables still land, preserving the
-    * partial-output contract.
+    * Partial-output semantics: a failed table surfaces as its summary
+    * row's `error` (the other tables still write and report counts —
+    * one transient failure must not destroy a 255-table run's record);
+    * the descriptor, written only AFTER the table jobs finish, lists
+    * exactly the tables that succeeded, so it never references missing
+    * or partial data. A rerun into the same `outDir` repairs failed
+    * tables via overwrite. If `timeout` expires, the in-flight write
+    * jobs are cancelled and the run throws — no descriptor is written.
     */
-  private val WriteBatch = 64
-
-  /** Java-serializable Hadoop conf carrier (the spark-internal
-    * SerializableConfiguration is private[spark]; this is the same
-    * 10-line idiom).
-    */
-  private class ConfBox(@transient var conf: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new org.apache.hadoop.conf.Configuration(false)
-      conf.readFields(in)
-    }
-  }
   def writeParquetDatapackage(
       spark: SparkSession,
       taxonomies: Seq[graft.xbrl.Taxonomy],
@@ -204,17 +177,13 @@ object XbrlExtract {
     // finish — a descriptor must never describe tables that aren't there
     XbrlSinks.datapackageParquetJson(schemas, formNumber,
       tableNames = Some(schemas.map(_.name).toSet))
-    val st = store.getOrElse(FactTableBuilder.groupedStore(
-      schemas, parsed.facts, parsed.contexts, parsed.meta))
-    val ownStore = store.isEmpty
-    if (ownStore) st.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val jobGroup = s"graft-datapackage-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    type SRow = (String, Option[Long], Int, Option[String])
+    val (st, releaseStore) = store.fold(checkpointed(FactTableBuilder.groupedStore(
+      schemas, parsed.facts, parsed.contexts, parsed.meta)))(s => (s, () => ()))
+    def row(t: TableSchema, result: Either[String, Long]): (String, Option[Long], Int, Option[String]) =
+      (t.name, result.toOption, t.fields.size, result.left.toOption)
     val summary =
-      try {
+      try XbrlSinks.onPool(spark, poolSize, timeout, "datapackage write") { (jobGroup, pool) =>
+        implicit val ec: scala.concurrent.ExecutionContext = pool
         // the estimate is file-sizing metadata derived from the store —
         // a caller holding a session-cached store hands in the estimate
         // computed once beside it (the SharedIndex discipline) instead
@@ -224,12 +193,8 @@ object XbrlExtract {
           (estimates.getOrElse(t.name, 0L) + targetRowsPerFile - 1) / targetRowsPerFile)
         val (smalls, bigs) = schemas.partition(nFiles(_) == 1L)
 
-        // mega-tables: the standard multi-file DataFrame write — their
-        // data amortizes the per-job constants the batch path removes
         val bigJobs = bigs.map { t =>
           scala.concurrent.Future {
-            // group tags this pool thread's jobs so a timeout can cancel
-            // the in-flight writes instead of letting them run headless
             spark.sparkContext.setJobGroup(jobGroup,
               s"graft datapackage table ${t.name}", interruptOnCancel = true)
             try {
@@ -239,70 +204,20 @@ object XbrlExtract {
                 .observe(obs, org.apache.spark.sql.functions.count(
                   org.apache.spark.sql.functions.lit(1)).as("n"))
                 .write.mode("overwrite").parquet(s"$outDir/tables/${t.name}.parquet")
-              (t.name, Some(obs.get("n").asInstanceOf[Long]), t.fields.size, None: Option[String])
+              row(t, Right(obs.get("n").asInstanceOf[Long]))
             } catch {
               case scala.util.control.NonFatal(e) =>
-                (t.name, None: Option[Long], t.fields.size,
-                  Some(s"${e.getClass.getName}: ${e.getMessage}")): SRow
+                row(t, Left(XbrlSinks.describe(e)))
             }
           }
         }
-
-        // single-file tables: plan each on the pool (a buildTable
-        // failure is that table's error row, like before), then write
-        // WriteBatch tables per Spark job — one task per table
-        val confBox = spark.sparkContext.broadcast(
-          new ConfBox(XbrlExtract.parquetWriteConf(spark)))
-        val builds = smalls.map { t =>
-          scala.concurrent.Future {
-            try {
-              val df = buildTable(t, st)
-              Right((t.name, t.fields.size, df.schema,
-                df.queryExecution.toRdd.coalesce(1)))
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                Left((t.name, None: Option[Long], t.fields.size,
-                  Some(s"${e.getClass.getName}: ${e.getMessage}")): SRow)
-            }
-          }
-        }
-        val batched = scala.concurrent.Future.sequence(builds).flatMap { eithers =>
-          val errRows = eithers.collect { case Left(r) => r }
-          val built = eithers.collect { case Right(b) => b }
-          val batchJobs = built.grouped(WriteBatch).toSeq.map { group =>
-            scala.concurrent.Future {
-              spark.sparkContext.setJobGroup(jobGroup,
-                s"graft datapackage batch of ${group.size} tables", interruptOnCancel = true)
-              val metas = group.map { case (name, nf, schema, _) =>
-                (name, s"$outDir/tables/$name.parquet", schema, nf)
-              }.toArray
-              val union = spark.sparkContext.union(group.map(_._4))
-              val box = confBox
-              spark.sparkContext.runJob(union,
-                (ctx: org.apache.spark.TaskContext,
-                 it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-                  XbrlExtract.writeOneTable(metas(ctx.partitionId()), box.value.conf,
-                    ctx.partitionId(), it)).toSeq
-            }
-          }
-          scala.concurrent.Future.sequence(batchJobs).map(rs => errRows ++ rs.flatten)
-        }
-
-        val all = scala.concurrent.Future.sequence(bigJobs).zip(batched)
-          .map { case (b, s) => s ++ b }
-        try scala.concurrent.Await.result(all, timeout)
-        catch {
-          case e: java.util.concurrent.TimeoutException =>
-            spark.sparkContext.cancelJobGroup(jobGroup)
-            pool.shutdownNow()
-            throw new java.util.concurrent.TimeoutException(
-              s"datapackage write exceeded $timeout; in-flight table jobs cancelled " +
-                s"(job group $jobGroup): ${e.getMessage}")
-        }
-      } finally {
-        pool.shutdown()
-        if (ownStore) st.unpersist(blocking = false)
+        val byName = smalls.map(t => t.name -> t).toMap
+        val batched = XbrlSinks.writeSingleFileTables(spark,
+          smalls.map(t => t.name -> (() => buildTable(t, st))), s"$outDir/tables", jobGroup)
+          .map(_.map { case (name, result) => row(byName(name), result) })
+        scala.concurrent.Future.sequence(bigJobs).zipWith(batched)(_ ++ _)
       }
+      finally releaseStore()
     val written = summary.collect { case (name, _, _, None) => name }.toSet
     if (written.nonEmpty) {
       XbrlSinks.writeString(s"$outDir/datapackage.json",
@@ -312,97 +227,7 @@ object XbrlExtract {
         XbrlSinks.metadataJson(taxonomies))
     }
     import spark.implicits._
-    val summaryRows: Seq[(String, Option[Long], Int, Option[String])] = summary
-    summaryRows.toDF("table_name", "n_rows", "n_cols", "error").orderBy("table_name")
-  }
-
-  /** Hadoop conf for the batched parquet writes: the session's Hadoop
-    * conf plus the same entries ParquetFileFormat.prepareWrite sets for
-    * a SQL parquet write command (write-support class, legacy-format /
-    * timestamp-type / rebase-mode keys, codec) — the per-TABLE schema
-    * is set on a task-local copy, since it differs per table.
-    */
-  private[graft] def parquetWriteConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
-    val conf = spark.sessionState.newHadoopConf()
-    def sql(key: String, default: String): String =
-      try spark.conf.get(key) catch { case scala.util.control.NonFatal(_) => default }
-    conf.set("parquet.write.support.class",
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport].getName)
-    conf.set("spark.sql.parquet.writeLegacyFormat",
-      sql("spark.sql.parquet.writeLegacyFormat", "false"))
-    conf.set("spark.sql.parquet.outputTimestampType",
-      sql("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite",
-      sql("spark.sql.parquet.datetimeRebaseModeInWrite", "EXCEPTION"))
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite",
-      sql("spark.sql.parquet.int96RebaseModeInWrite", "EXCEPTION"))
-    conf.set("spark.sql.parquet.fieldId.write.enabled",
-      sql("spark.sql.parquet.fieldId.write.enabled", "true"))
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      sql("spark.sql.parquet.variant.annotateLogicalType.enabled", "false"))
-    val codecName = sql("spark.sql.parquet.compression.codec", "snappy")
-      .toUpperCase(java.util.Locale.ROOT) match {
-      case "NONE" | "UNCOMPRESSED" => "UNCOMPRESSED"
-      case c => c
-    }
-    conf.set("parquet.compression", codecName)
-    conf
-  }
-
-  /** One batched-write task: stream this table's rows into a single
-    * parquet part file at its final location through the same
-    * ParquetWriteSupport machinery the SQL write command uses,
-    * counting rows as they land (the observe-exact count, task-side).
-    * Idempotent under task retry (the table dir is cleared first);
-    * a per-table failure cleans up and reports as that table's error
-    * row, so the batch's other tables still land.
-    */
-  private[graft] def writeOneTable(
-      meta: (String, String, org.apache.spark.sql.types.StructType, Int),
-      baseConf: org.apache.hadoop.conf.Configuration,
-      split: Int,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
-      : (String, Option[Long], Int, Option[String]) = {
-    val (name, dirStr, schema, nFields) = meta
-    val conf = new org.apache.hadoop.conf.Configuration(baseConf)
-    org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-      .setSchema(schema, conf)
-    val dir = new org.apache.hadoop.fs.Path(dirStr)
-    try {
-      val fs = dir.getFileSystem(conf)
-      if (fs.exists(dir)) fs.delete(dir, true)
-      fs.mkdirs(dir)
-      val codec = org.apache.parquet.hadoop.metadata.CompressionCodecName.valueOf(
-        conf.get("parquet.compression", "SNAPPY"))
-      val file = new org.apache.hadoop.fs.Path(dir,
-        f"part-$split%05d-${java.util.UUID.randomUUID()}.c000${codec.getExtension}.parquet")
-      val tid = new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID("graft_datapackage", 0),
-          org.apache.hadoop.mapreduce.TaskType.MAP, split), 0)
-      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf, tid)
-      val writer = new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetOutputWriter(file.toString, ctx)
-      var n = 0L
-      try { while (rows.hasNext) { writer.write(rows.next()); n += 1 } }
-      finally writer.close()
-      fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
-      (name, Some(n), nFields, None)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (sys.env.contains("GRAFT_DEBUG_WRITE")) {
-          e.printStackTrace()
-          Seq("spark.sql.parquet.writeLegacyFormat", "spark.sql.parquet.outputTimestampType",
-            "spark.sql.parquet.fieldId.write.enabled",
-            "spark.sql.parquet.annotateVariantLogicalType",
-            "spark.sql.parquet.variant.annotateLogicalType",
-            "parquet.compression", "parquet.write.support.class")
-            .foreach(k => System.err.println(s"[wpd-debug] $k = ${conf.get(k)}"))
-        }
-        try { dir.getFileSystem(conf).delete(dir, true); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-        (name, None, nFields, Some(s"${e.getClass.getName}: ${e.getMessage}"))
-    }
+    summary.toDF("table_name", "n_rows", "n_cols", "error").orderBy("table_name")
   }
 
   /** Extract + write everything the reference CLI writes (cli.py:101-130):
