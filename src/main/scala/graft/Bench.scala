@@ -70,7 +70,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.defaultCpus
     // default 5 (r7 ran 3): q15/x01-x04 medians sat 1.5-2x above their
     // min from first-rep drift even with interleaving; two more reps
     // cost ~2 min and make the headline median steady-state

@@ -25,14 +25,25 @@ object GraftSession {
       if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
     } catch { case scala.util.control.NonFatal(_) => 0L }
 
+  /** The one CPU default of Verify, Bench, Profile and PlanDump:
+    * `SPARK_GRAFT_CPUS` when it is set, otherwise the host's processor
+    * count.
+    */
+  def defaultCpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+
+  private def positiveInt(s: String): Option[Int] =
+    scala.util.Try(s.trim.toInt).toOption.filter(_ > 0)
+
   /** Core count parsed defensively (r18, ADVICE r17): the master string
     * interpolates `cpus` verbatim (so "local[*]"-style values still
     * build a session), but every NUMERIC use — shuffle partitions, the
-    * width derivation — falls back to the host's processor count
+    * width derivation — falls back to [[defaultCpus]] (and to the
+    * host's processor count if that is not a positive number either)
     * instead of throwing NumberFormatException at session build.
     */
   private[graft] def parseCpus(cpus: String): Int =
-    scala.util.Try(cpus.trim.toInt).toOption.filter(_ > 0)
+    positiveInt(cpus).orElse(positiveInt(defaultCpus))
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Pre-coalesce shuffle width derived FROM INPUT SIZE (r17, guide §2.2:

@@ -11,7 +11,7 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("/tmp/graft_plans")
     val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
     new java.io.File(outDir).mkdirs()
-    val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), Some(sfDir))
+    val spark = GraftSession.create(GraftSession.defaultCpus, Some(sfDir))
     names.foreach { n =>
       try {
         val df = SparkEntry.queries(n)(spark, sfDir)

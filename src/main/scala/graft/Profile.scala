@@ -10,7 +10,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.create(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), Some(sfDir))
+    val spark = GraftSession.create(GraftSession.defaultCpus, Some(sfDir))
     def run(name: String): (Double, String) = {
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, sfDir)

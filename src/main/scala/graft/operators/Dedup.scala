@@ -899,8 +899,7 @@ object Dedup {
   private def semanticPairsWithCodebook(e: DataFrame, codebook: DataFrame,
       minCosine: Double, assignReplicas: Int, maxCellSize: Int): DataFrame = {
     val s = e.sparkSession
-    val assigned = Similarity.assignCells(e,
-      codebook.select(col("cell"), col("centroid").as("seed_emb")), assignReplicas)
+    val assigned = Similarity.assignCells(e, codebook, assignReplicas)
     val buckets = cappedIdBuckets(assigned.select(col("cell"), col("vec_id")),
       Seq("cell"), "vec_id", maxCellSize.toLong, minSize = 2L)
     bucketPairs(buckets)
@@ -1176,16 +1175,25 @@ object Dedup {
     * doc_id with a doc-bounded collect. Two aggregation shuffles plus
     * the join — all mergeable, no skewed window anywhere.
     *
-    * NULL lines carry no content to deduplicate and are dropped (their
-    * digest joins nothing); a document consisting ONLY of null lines
+    * NULL lines carry no content to deduplicate and are dropped (before
+    * the keep-first group); a document consisting ONLY of null lines
     * drops with them — spec-pinned, so callers with nullable line
     * sources coalesce first if empty-doc rows must survive.
+    *
+    * Integral ids must lie in [[docPosKey]]'s domain: a negative
+    * `doc`/`pos` (or one past 2^31 / 2^32) fails the query with the
+    * "keep-first long-encoding domain exceeded" error — spec-pinned, a
+    * loud error, never a silent reorder. Non-integral ids have no limit.
     */
   def lineDedup(lines: DataFrame, docCol: String = "doc_id",
       posCol: String = "line_no", lineCol: String = "line"): DataFrame = {
     val l = lines.select(Cols.q(docCol).as("__doc"), Cols.q(posCol).as("__pos"),
       Cols.q(lineCol).as("__line"))
       .withColumn("__h", md5(col("__line").cast("binary")))
+      // a null line has a null digest: drop it before the keep-first
+      // group and the join-back on both key paths (else the left join
+      // keeps it and it counts in n_lines)
+      .filter(col("__h").isNotNull)
     // r18: integral (doc, pos) → keep-first as min(LONG) instead of
     // min(struct) so the distinct-line aggregation HASH-aggregates
     // (see [[docPosKey]]); __keep compares the same encoded key, so
@@ -1429,6 +1437,12 @@ object Dedup {
     * equi-join on the gram hash is AQE-skew-handled; covered-position
     * expansion is bounded by minTokens × duplicated windows; the
     * final assembly is doc-keyed joins. Never doc × doc anywhere.
+    *
+    * An integral `doc_id` must lie in [0, 2^31): a negative one on a
+    * doc of at least `minTokens` tokens fails the query with the
+    * "keep-first long-encoding domain exceeded" error ([[docPosKey]];
+    * spec-pinned, a loud error, never a silent reorder). Non-integral
+    * ids have no limit.
     *
     * Reference analog: none (the extractor's fuzzy_dedup
     * (datapackage.py:524-533) drops whole duplicate ROWS); this is

@@ -43,15 +43,6 @@ object ProductQuantization {
   private def K = Similarity.K
   private def NumQueries = Similarity.NumQueries
 
-  /** Unit-normalize an `Array[Float]` vector column (zero vectors pass
-    * through unchanged rather than dividing by zero): the native fused
-    * `graft_unit` — one codegen'd loop per row. (A `transform` lambda
-    * formulation re-evaluated its norm subtree per ELEMENT — O(dim^2)
-    * interpreted work on every index-build row.)
-    */
-  private def unit(s: SparkSession, vecCol: Column): Column =
-    graft.functions.UnitVector.unit(s, vecCol)
-
   /** Split a vector column into `m` contiguous subvectors. Explicit
     * integer division: a dimension not divisible by `m` produces
     * truncated subDim slices here, null codes from `graft_pq_encode`,
@@ -84,16 +75,18 @@ object ProductQuantization {
         lit(s" but the query was built with m=$m"))))
 
   /** (vec_id, embedding original, unit) from any embeddings frame.
-    * `normalize = false` passes the raw vector through as `unit` — the
-    * residual-PQ path (s06) quantizes residuals, which live in the
-    * already-normalized space and must NOT be re-normalized.
+    * `unit` is the native fused `graft_unit` (zero vectors pass through
+    * unchanged; one codegen'd loop per row — a `transform` lambda
+    * re-evaluated its norm subtree per ELEMENT). `normalize = false`
+    * passes the raw vector through as `unit` — the residual-PQ path
+    * (s06) quantizes residuals, which live in the already-normalized
+    * space and must NOT be re-normalized.
     */
-  private def withUnit(emb: DataFrame, idCol: String, vecCol: String,
+  private def withUnit(emb: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding",
       normalize: Boolean = true): DataFrame = {
-    val s = emb.sparkSession
     val v = Cols.q(vecCol)
     emb.select(Cols.q(idCol).as("vec_id"), v.as("embedding"),
-      (if (normalize) unit(s, v) else v).as("unit"))
+      (if (normalize) graft.functions.UnitVector.unit(emb.sparkSession, v) else v).as("unit"))
   }
 
   /** Public helper: (vec_id, embedding) with each vector unit-length —
@@ -184,64 +177,63 @@ object ProductQuantization {
         PqEncode.encode(s, col("unit"), col("cb"), col("cb_m")).as("codes"))
   }
 
-  /** Per-query ADC lookup tables: (q_id, q_emb original, lut) where
-    * lut[s*kCodes + c] = |query_sub_s - centroid(s, c)|^2, so the ADC
-    * sum over a row's codes is the exact squared L2 between the query
-    * and that row's reconstruction. queries x m x kCodes rows — tiny,
-    * built against the broadcast codebook.
+  /** ADC lookup tables, one per `keys` group of the query frame `q`
+    * (vec_id for s05; vec_id x probed cell for s06): (keys, q_emb
+    * original, lut) with lut[s*kCodes + c] = |vec_sub_s - centroid(s,
+    * c)|^2, so the ADC sum over a row's codes is the exact squared L2
+    * between `vec` and that row's reconstruction. keys x m x kCodes
+    * rows — tiny, built against the broadcast codebook.
     */
-  private def queryLuts(q: DataFrame, codebook: DataFrame, m: Int): DataFrame = {
+  private def queryLuts(q: DataFrame, keys: Seq[String], vec: Column, codebook: DataFrame,
+      m: Int): DataFrame = {
     val s = q.sparkSession
-    q.select(col("vec_id"), col("embedding"),
-        posexplode(subVectors(col("unit"), m)).as(Seq("sub", "qsub")))
-      .join(broadcast(codebook), Seq("sub"))
-      .select(col("vec_id"), col("embedding"), col("sub"), col("cell"),
-        L2Squared.l2sq(s, col("qsub"), col("centroid")).as("d"))
-      .groupBy("vec_id")
+    val k = keys.map(col)
+    q.select(k ++ Seq(col("embedding"), posexplode(subVectors(vec, m)).as(Seq("sub", "qsub"))): _*)
+      .join(broadcast(codebook.select(col("sub"), col("cell").as("code"),
+        col("centroid").as("pq_centroid"))), Seq("sub"))
+      .select(k ++ Seq(col("embedding"), col("sub"), col("code"),
+        L2Squared.l2sq(s, col("qsub"), col("pq_centroid")).as("d")): _*)
+      .groupBy(k: _*)
       .agg(any_value(col("embedding")).as("q_emb"),
-        array_sort(collect_list(struct(col("sub"), col("cell"), col("d"))))
+        array_sort(collect_list(struct(col("sub"), col("code"), col("d"))))
           .getField("d").cast("array<float>").as("lut"))
   }
 
-  /** Shortlist the `shortlist` lowest ADC distances per query
-    * (WindowGroupLimit pushes partial limits into the shuffle), then
-    * rescore exactly: the tiny broadcast shortlist joins back to the
-    * float corpus and `graft_cosine` scores the originals.
+  /** Shortlist -> exact rescore: the `shortlist` lowest approximate
+    * distances `adist` per query, then the tiny broadcast shortlist
+    * joins back to the float corpus and `graft_cosine` scores the
+    * originals against `queryEmb` (vec_id, q_emb) for the final top-k.
     */
-  private def shortlistRescore(corpus: DataFrame, cand: DataFrame,
-      queryEmb: DataFrame, k: Int, shortlist: Int): DataFrame = {
+  private def rescore(corpus: DataFrame, cand: DataFrame, queryEmb: DataFrame,
+      k: Int, shortlist: Int): DataFrame = {
     val s = corpus.sparkSession
     // a null ADC distance (inconsistent geometry, e.g. dim not
     // divisible by m) must never enter the shortlist: with every
     // distance null the result is EMPTY — a visible failure — instead
     // of an arbitrary subset rescored into plausible-looking neighbors
-    val w = Window.partitionBy("q_id").orderBy(col("adist").asc, col("n_id").asc)
-    val short = cand.filter(col("adist").isNotNull)
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= shortlist)
-      .select(col("q_id"), col("n_id"))
-    val rescored = corpus
+    val short = Similarity.ranked(cand.filter(col("adist").isNotNull), "adist",
+      ascending = true, shortlist).select(col("q_id"), col("n_id"))
+    Similarity.topK(corpus
       .join(broadcast(short), col("vec_id") === col("n_id"))
-      .join(broadcast(queryEmb.select(col("q_id").as("qid2"), col("q_emb"))),
+      .join(broadcast(queryEmb.select(col("vec_id").as("qid2"), col("q_emb"))),
         col("q_id") === col("qid2"))
       .select(col("q_id"), col("n_id"),
-        CosineSimilarity.cosine(s, col("q_emb"), col("embedding")).as("cosine"))
-    Similarity.topK(rescored, k)
+        CosineSimilarity.cosine(s, col("q_emb"), col("embedding")).as("cosine")), k)
   }
+
+  /** Guarded ADC distance of a candidate pair: the corpus row's codes
+    * against the query's LUT. */
+  private def pairAdc(s: SparkSession, m: Int): Column =
+    guardedAdc(s, col("b.codes"), col("a.lut"), m).as("adist")
 
   /** ADC scan -> shortlist -> exact rescore. The scan streams the CODE
     * table once per query batch (broadcast LUTs, m lookups per row).
     */
-  private def pqTopK(corpus: DataFrame, encoded: DataFrame, luts: DataFrame,
-      m: Int, k: Int, shortlist: Int): DataFrame = {
-    val s = corpus.sparkSession
-    val cand = encoded
-      .crossJoin(broadcast(luts.select(col("vec_id").as("q_id"), col("lut"))))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        guardedAdc(s, col("codes"), col("lut"), m).as("adist"))
-    shortlistRescore(corpus, cand,
-      luts.select(col("vec_id").as("q_id"), col("q_emb")), k, shortlist)
+  private def pqTopK(corpus: DataFrame, encoded: DataFrame, q: DataFrame,
+      codebook: DataFrame, m: Int, k: Int, shortlist: Int): DataFrame = {
+    val luts = queryLuts(q, Seq("vec_id"), col("unit"), codebook, m)
+    rescore(corpus, Similarity.candidates(luts, encoded, Nil, pairAdc(corpus.sparkSession, m)),
+      luts, k, shortlist)
   }
 
   /** Library form: PQ ANN over any embeddings frame with a trained
@@ -253,12 +245,9 @@ object ProductQuantization {
     */
   def annPq(emb: DataFrame, queries: DataFrame, codebook: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding", k: Int = K,
-      shortlist: Int = Shortlist, m: Int = M): DataFrame = {
-    pqTopK(Similarity.normalized(emb, idCol, vecCol),
-      pqEncode(emb, codebook, idCol, vecCol),
-      queryLuts(withUnit(queries, idCol, vecCol), codebook, m),
-      m, k, shortlist)
-  }
+      shortlist: Int = Shortlist, m: Int = M): DataFrame =
+    pqTopK(Similarity.normalized(emb, idCol, vecCol), pqEncode(emb, codebook, idCol, vecCol),
+      withUnit(queries, idCol, vecCol), codebook, m, k, shortlist)
 
   /** s05: gate binding — codebook trained (2 Lloyd rounds) and corpus
     * encoded once per session (SharedIndex), queries vec_id < 10.
@@ -275,9 +264,7 @@ object ProductQuantization {
       pqEncode(e, codebook)
     }
     pqTopK(Similarity.normalized(e, "vec_id", "embedding"), encoded,
-      queryLuts(withUnit(e.filter(col("vec_id") < NumQueries), "vec_id", "embedding"),
-        codebook, M),
-      M, K, Shortlist)
+      withUnit(e.filter(col("vec_id") < NumQueries)), codebook, M, K, Shortlist)
   }
 
   // ----- IVF-PQ (s06): coarse cells + PQ-encoded residuals -----
@@ -304,10 +291,7 @@ object ProductQuantization {
   def trainIvfPqCodebook(emb: DataFrame, coarse: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding", m: Int = M,
       kCodes: Int = KCodes, iterations: Int = 2): DataFrame = {
-    val u = withUnit(emb, idCol, vecCol)
-    val assigned = Similarity.assignCells(
-      u.select(col("vec_id"), col("unit").as("embedding")),
-      coarse.select(col("cell"), col("centroid").as("seed_emb")), replicas = 1)
+    val assigned = Similarity.assignCells(unitVectors(emb, idCol, vecCol), coarse, replicas = 1)
     trainPqCodebook(
       assigned.join(broadcast(coarse), Seq("cell"))
         .select(col("vec_id"), residualOf(col("embedding"), col("centroid")).as("residual")),
@@ -325,10 +309,7 @@ object ProductQuantization {
       idCol: String = "vec_id", vecCol: String = "embedding",
       replicas: Int = AssignReplicas): DataFrame = {
     val s = emb.sparkSession
-    val u = withUnit(emb, idCol, vecCol)
-    Similarity.assignCells(
-        u.select(col("vec_id"), col("unit").as("embedding")),
-        coarse.select(col("cell"), col("centroid").as("seed_emb")), replicas)
+    Similarity.assignCells(unitVectors(emb, idCol, vecCol), coarse, replicas)
       .join(broadcast(coarse), Seq("cell"))
       .crossJoin(broadcast(flatCodebook(pqCodebook)))
       .select(col("vec_id"), col("cell"),
@@ -351,52 +332,29 @@ object ProductQuantization {
   def annIvfPq(emb: DataFrame, queries: DataFrame, coarse: DataFrame,
       pqCodebook: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding",
       k: Int = K, numProbes: Int = NumProbes, shortlist: Int = Shortlist,
-      m: Int = M): DataFrame = {
+      m: Int = M): DataFrame =
     ivfPqTopK(Similarity.normalized(emb, idCol, vecCol),
       ivfPqEncode(emb, coarse, pqCodebook, idCol, vecCol),
       withUnit(queries, idCol, vecCol), coarse, pqCodebook, k, numProbes, shortlist, m)
-  }
 
   private def ivfPqTopK(corpus: DataFrame, encoded: DataFrame, q: DataFrame,
       coarse: DataFrame, pqCodebook: DataFrame, k: Int, numProbes: Int,
       shortlist: Int, m: Int): DataFrame = {
-    val s = corpus.sparkSession
-    // each query's numProbes nearest coarse cells, carrying the cell
-    // centroid for the residual LUT (tiny: queries x cells)
-    val pw = Window.partitionBy("q_id").orderBy(col("c").desc, col("cell").asc)
-    val probed = q.crossJoin(broadcast(coarse))
-      .select(col("vec_id").as("q_id"), col("embedding"), col("unit"), col("cell"),
-        col("centroid"),
-        CosineSimilarity.cosine(s, col("unit"), col("centroid")).as("c"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= numProbes)
     // one LUT per (query, probed cell): the query's residual vs that
-    // cell, against the residual PQ codebook (queries x probes x m x
-    // kCodes rows — still tiny, still broadcast)
-    val pq = pqCodebook.select(col("sub"), col("cell").as("code"),
-      col("centroid").as("pq_centroid"))
-    val luts = probed
-      .select(col("q_id"), col("embedding"), col("cell"),
-        posexplode(subVectors(residualOf(col("unit"), col("centroid")), m))
-          .as(Seq("sub", "qsub")))
-      .join(broadcast(pq), Seq("sub"))
-      .select(col("q_id"), col("embedding"), col("cell"), col("sub"), col("code"),
-        L2Squared.l2sq(s, col("qsub"), col("pq_centroid")).as("d"))
-      .groupBy("q_id", "cell")
-      .agg(any_value(col("embedding")).as("q_emb"),
-        array_sort(collect_list(struct(col("sub"), col("code"), col("d"))))
-          .getField("d").cast("array<float>").as("lut"))
-    val cand = encoded
-      .join(broadcast(luts.select(col("q_id"), col("cell"), col("lut"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        guardedAdc(s, col("codes"), col("lut"), m).as("adist"))
-      // multi-assignment: a pair met in several probed cells keeps its
-      // best (lowest) reconstruction distance
-      .groupBy("q_id", "n_id").agg(min(col("adist")).as("adist"))
-    shortlistRescore(corpus, cand,
-      luts.groupBy("q_id").agg(any_value(col("q_emb")).as("q_emb")), k, shortlist)
+    // cell's centroid, against the residual PQ codebook
+    val luts = queryLuts(Similarity.probeCells(q, coarse, numProbes, "unit"),
+      Seq("vec_id", "cell"), residualOf(col("unit"), col("centroid")), pqCodebook, m)
+    val cand = Similarity.candidates(luts, encoded, Seq("cell"), pairAdc(corpus.sparkSession, m))
+    rescore(corpus, Similarity.best(cand, "adist", ascending = true),
+      luts.groupBy("vec_id").agg(any_value(col("q_emb")).as("q_emb")), k, shortlist)
   }
+
+  /** The s06/s11 coarse codebook: Lloyd-trained on the unit corpus,
+    * session-cached once for both gates. */
+  private def sharedCoarse(s: SparkSession, dir: String, e: DataFrame): DataFrame =
+    SharedIndex(s, dir, "ivfpq_coarse") {
+      Similarity.trainIvfCodebook(unitVectors(e), numCells = NumCells)
+    }
 
   /** s06: gate binding of the IVF-PQ path — coarse codebook Lloyd-
     * trained on the unit corpus, residual PQ codebook and code store
@@ -406,9 +364,7 @@ object ProductQuantization {
     */
   def s06AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val coarse = SharedIndex(s, dir, "ivfpq_coarse") {
-      Similarity.trainIvfCodebook(unitVectors(e), numCells = NumCells)
-    }
+    val coarse = sharedCoarse(s, dir, e)
     val pqCb = SharedIndex(s, dir, "ivfpq_codebook") {
       trainIvfPqCodebook(e, coarse)
     }
@@ -416,8 +372,7 @@ object ProductQuantization {
       ivfPqEncode(e, coarse, pqCb)
     }
     ivfPqTopK(Similarity.normalized(e, "vec_id", "embedding"), encoded,
-      withUnit(e.filter(col("vec_id") < NumQueries), "vec_id", "embedding"),
-      coarse, pqCb, K, NumProbes, Shortlist, M)
+      withUnit(e.filter(col("vec_id") < NumQueries)), coarse, pqCb, K, NumProbes, Shortlist, M)
   }
 
   // ----- SQ8 (s10): symmetric int8 scalar quantization -----
@@ -430,11 +385,9 @@ object ProductQuantization {
     * ANN pass streams; encode is map-only in the scan projection.
     */
   def sq8Encode(emb: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val s = emb.sparkSession
+      vecCol: String = "embedding"): DataFrame =
     withUnit(emb, idCol, vecCol)
-      .select(col("vec_id"), Sq8Encode.encode(s, col("unit")).as("codes"))
-  }
+      .select(col("vec_id"), Sq8Encode.encode(emb.sparkSession, col("unit")).as("codes"))
 
   /** Asymmetric SQ8 scan -> shortlist -> exact rescore: codes stay
     * int8, queries stay float (`graft_sq8_dot`), the top `shortlist`
@@ -445,18 +398,15 @@ object ProductQuantization {
     * SQ recipe (e.g. FAISS's SQ8 index family).
     */
   private def sq8TopK(corpus: DataFrame, encoded: DataFrame, q: DataFrame,
-      k: Int, shortlist: Int): DataFrame = {
-    val s = corpus.sparkSession
-    val cand = encoded
-      .crossJoin(broadcast(q.select(col("vec_id").as("q_id"), col("unit").as("q_unit"))))
-      .filter(col("vec_id") =!= col("q_id"))
-      // shortlistRescore ranks an ascending DISTANCE; negate the dot
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        (-Sq8Dot.dot(s, col("codes"), col("q_unit"))).as("adist"))
-    shortlistRescore(corpus, cand,
-      q.select(col("vec_id").as("q_id"), col("embedding").as("q_emb")),
-      k, shortlist)
-  }
+      k: Int, shortlist: Int): DataFrame =
+    rescore(corpus, Similarity.candidates(q, encoded, Nil, pairSq8(corpus.sparkSession)),
+      q.select(col("vec_id"), col("embedding").as("q_emb")), k, shortlist)
+
+  /** Approximate SQ8 distance of a candidate pair: the negated int8 dot
+    * of the corpus codes with the float query unit vector (rescore ranks
+    * an ascending distance). */
+  private def pairSq8(s: SparkSession): Column =
+    (-Sq8Dot.dot(s, col("b.codes"), col("a.unit"))).as("adist")
 
   /** Library form: SQ8 ANN over any embeddings frame. Encodes the
     * corpus in this invocation; long-lived callers persist
@@ -482,8 +432,7 @@ object ProductQuantization {
       sq8Encode(e)
     }
     sq8TopK(Similarity.normalized(e, "vec_id", "embedding"), encoded,
-      withUnit(e.filter(col("vec_id") < NumQueries), "vec_id", "embedding"),
-      K, Shortlist)
+      withUnit(e.filter(col("vec_id") < NumQueries)), K, Shortlist)
   }
 
   // ----- IVF-SQ8 (s11): coarse cells + int8 codes -----
@@ -497,15 +446,10 @@ object ProductQuantization {
     */
   def ivfSq8Encode(emb: DataFrame, coarse: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      replicas: Int = AssignReplicas): DataFrame = {
-    val s = emb.sparkSession
-    val u = withUnit(emb, idCol, vecCol)
-    Similarity.assignCells(
-        u.select(col("vec_id"), col("unit").as("embedding")),
-        coarse.select(col("cell"), col("centroid").as("seed_emb")), replicas)
+      replicas: Int = AssignReplicas): DataFrame =
+    Similarity.assignCells(unitVectors(emb, idCol, vecCol), coarse, replicas)
       .select(col("vec_id"), col("cell"),
-        Sq8Encode.encode(s, col("embedding")).as("codes"))
-  }
+        Sq8Encode.encode(emb.sparkSession, col("embedding")).as("codes"))
 
   /** Probed-cell SQ8 scan -> shortlist -> exact rescore: queries keep
     * full float precision against the int8 cell stores (asymmetric),
@@ -517,24 +461,12 @@ object ProductQuantization {
     */
   private def ivfSq8TopK(corpus: DataFrame, encoded: DataFrame, q: DataFrame,
       coarse: DataFrame, k: Int, numProbes: Int, shortlist: Int): DataFrame = {
-    val s = corpus.sparkSession
-    val pw = Window.partitionBy("q_id").orderBy(col("c").desc, col("cell").asc)
-    val probed = q.crossJoin(broadcast(coarse))
-      .select(col("vec_id").as("q_id"), col("embedding"), col("unit"), col("cell"),
-        CosineSimilarity.cosine(s, col("unit"), col("centroid")).as("c"))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= numProbes)
-    val cand = encoded
-      .join(broadcast(probed.select(col("q_id"), col("cell"), col("unit"))), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"),
-        (-Sq8Dot.dot(s, col("codes"), col("unit"))).as("adist"))
-      // multi-assignment: a pair met in several probed cells scores
-      // identically (global-scale codes) — min dedups
-      .groupBy("q_id", "n_id").agg(min(col("adist")).as("adist"))
-    shortlistRescore(corpus, cand,
-      probed.groupBy("q_id").agg(any_value(col("embedding")).as("q_emb")),
-      k, shortlist)
+    val probed = Similarity.probeCells(q, coarse, numProbes, "unit")
+    // multi-assignment: a pair met in several probed cells scores
+    // identically (global-scale codes) — best dedups
+    val cand = Similarity.candidates(probed, encoded, Seq("cell"), pairSq8(corpus.sparkSession))
+    rescore(corpus, Similarity.best(cand, "adist", ascending = true),
+      probed.groupBy("vec_id").agg(any_value(col("embedding")).as("q_emb")), k, shortlist)
   }
 
   /** Library form: IVF-SQ8 ANN with a caller-trained coarse codebook
@@ -553,14 +485,11 @@ object ProductQuantization {
     */
   def s11AnnIvfSq8(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val coarse = SharedIndex(s, dir, "ivfpq_coarse") {
-      Similarity.trainIvfCodebook(unitVectors(e), numCells = NumCells)
-    }
+    val coarse = sharedCoarse(s, dir, e)
     val encoded = SharedIndex(s, dir, "ivfsq8_codes") {
       ivfSq8Encode(e, coarse)
     }
     ivfSq8TopK(Similarity.normalized(e, "vec_id", "embedding"), encoded,
-      withUnit(e.filter(col("vec_id") < NumQueries), "vec_id", "embedding"),
-      coarse, K, NumProbes, Shortlist)
+      withUnit(e.filter(col("vec_id") < NumQueries)), coarse, K, NumProbes, Shortlist)
   }
 }

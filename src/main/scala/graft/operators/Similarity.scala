@@ -20,6 +20,9 @@ import graft.functions.{CosineSimilarity, HyperplaneBuckets}
   * coarse-quantizer cells) are the scale paths: each query only scores
   * its buckets'/cells' candidates. Pair scoring uses the native
   * codegen'd `graft_cosine` expression (functions/CosineSimilarity.scala).
+  * Every top-k variant (and ProductQuantization's) is one pipeline of
+  * plain functions — [[candidates]] -> [[best]] -> [[ranked]] — that
+  * differs per variant only in its join keys and score column.
   */
 object Similarity {
 
@@ -29,16 +32,67 @@ object Similarity {
   private[operators] def normalized(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(Cols.q(idCol).as("vec_id"), Cols.q(vecCol).as("embedding"))
 
-  /** Per-query top-k by exact cosine from a scored candidate frame
-    * (q_id, n_id, cosine): rank window with WindowGroupLimit partial
-    * pushdown, deterministic tie-break on n_id.
+  // ----- the shared top-k pipeline: candidates -> best -> ranked -----
+  // Every ANN top-k here and in ProductQuantization (which adds the
+  // shortlist rescore) composes these functions; a path differs only in
+  // its join keys and its score column.
+
+  /** Candidate pairs (q_id, n_id, score): the broadcast `queries` side
+    * equi-joined to `corpus` on `keys` (no keys = every pair), never a
+    * row with itself. `score` reads the query side as `a`, the corpus
+    * side as `b`.
     */
-  private[operators] def topK(cand: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("n_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+  private[operators] def candidates(queries: DataFrame, corpus: DataFrame,
+      keys: Seq[String], score: Column): DataFrame =
+    broadcast(queries.as("a"))
+      .join(corpus.as("b"), (keys.map(k => col(s"a.$k") === col(s"b.$k")) :+
+        (col("a.vec_id") =!= col("b.vec_id"))).reduce(_ && _))
+      .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"), score)
+
+  /** One score per (q_id, n_id) where a pair can meet more than once
+    * (LSH tables, multi-assigned IVF cells, Hamming chunks): the
+    * best-ranked one — min for a distance (`ascending`), max for a
+    * similarity — through a map-side-partial aggregate.
+    */
+  private[operators] def best(cand: DataFrame, score: String, ascending: Boolean): DataFrame =
+    cand.groupBy("q_id", "n_id")
+      .agg((if (ascending) min(col(score)) else max(col(score))).as(score))
+
+  /** Per-query cut at `n`: `rank` = row_number over q_id by (score,
+    * n_id), so ties break on n_id; the rank filter is pushed into the
+    * shuffle as a WindowGroupLimit partial top-n.
+    */
+  private[operators] def ranked(cand: DataFrame, score: String, ascending: Boolean,
+      n: Int): DataFrame = {
+    val w = Window.partitionBy("q_id")
+      .orderBy(if (ascending) col(score).asc else col(score).desc, col("n_id").asc)
+    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= n)
+  }
+
+  /** Final per-query top-k by exact cosine: (q_id, rank, n_id, cosine
+    * rounded to 6 places), ordered by q_id, rank.
+    */
+  private[operators] def topK(cand: DataFrame, k: Int): DataFrame =
+    ranked(cand, "cosine", ascending = false, k)
       .select(col("q_id"), col("rank"), col("n_id"), round(col("cosine"), 6).as("cosine"))
       .orderBy("q_id", "rank")
+
+  /** Exact cosine of a candidate pair's embeddings. */
+  private def pairCosine(s: SparkSession): Column =
+    CosineSimilarity.cosine(s, col("a.embedding"), col("b.embedding")).as("cosine")
+
+  /** Each query's `numProbes` nearest cells of `coarse` (cell, centroid)
+    * by the cosine of its `vec` column, ties to the lower cell: the
+    * query's columns plus (cell, centroid). Tiny: queries x cells.
+    */
+  private[operators] def probeCells(queries: DataFrame, coarse: DataFrame, numProbes: Int,
+      vec: String = "embedding"): DataFrame = {
+    val w = Window.partitionBy("vec_id").orderBy(col("__c").desc, col("cell").asc)
+    queries.crossJoin(broadcast(coarse.select("cell", "centroid")))
+      .withColumn("__c", CosineSimilarity.cosine(queries.sparkSession, col(vec), col("centroid")))
+      .withColumn("__pr", row_number().over(w))
+      .filter(col("__pr") <= numProbes)
+      .drop("__c", "__pr")
   }
 
   /** Brute-force cosine top-k over any embeddings frame: the query side
@@ -47,17 +101,9 @@ object Similarity {
     * correctness baseline the approximate variants are measured against.
     */
   def annBruteforce(emb: DataFrame, queries: DataFrame, idCol: String = "vec_id",
-      vecCol: String = "embedding", k: Int = K): DataFrame = {
-    val s = emb.sparkSession
-    val e = normalized(emb, idCol, vecCol)
-    val q = normalized(queries, idCol, vecCol)
-    topK(
-      broadcast(q.as("a"))
-        .join(e.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"),
-          CosineSimilarity.cosine(s, col("a.embedding"), col("b.embedding")).as("cosine")),
-      k)
-  }
+      vecCol: String = "embedding", k: Int = K): DataFrame =
+    topK(candidates(normalized(queries, idCol, vecCol), normalized(emb, idCol, vecCol), Nil,
+      pairCosine(emb.sparkSession)), k)
 
   /** s01: gate binding of [[annBruteforce]] with queries vec_id < 10. */
   def s01AnnBruteforce(s: SparkSession, dir: String): DataFrame = {
@@ -78,21 +124,10 @@ object Similarity {
       posexplode(HyperplaneBuckets.buckets(e.sparkSession, col("embedding"),
         numTables, planesPerTable)).as(Seq("tbl", "bucket")))
 
-  /** Candidate join + exact rescore from bucketed corpus/query stores:
-    * candidates share a bucket in any table; `max` dedups across tables.
-    */
-  private def lshTopK(bucketed: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val s = bucketed.sparkSession
-    topK(
-      broadcast(queries.as("a"))
-        .join(bucketed.as("b"),
-          col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"),
-          CosineSimilarity.cosine(s, col("a.embedding"), col("b.embedding")).as("cosine"))
-        .groupBy("q_id", "n_id").agg(max(col("cosine")).as("cosine")),
-      k)
-  }
+  /** Candidates share a bucket in any table; `best` dedups across tables. */
+  private def lshTopK(bucketed: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    topK(best(candidates(queries, bucketed, Seq("tbl", "bucket"),
+      pairCosine(bucketed.sparkSession)), "cosine", ascending = false), k)
 
   /** Random-hyperplane LSH ANN over any embeddings frame (library form;
     * the caller may persist the input — the corpus is bucketed once per
@@ -133,14 +168,6 @@ object Similarity {
   private[operators] val NumProbes = 12
   private[operators] val AssignReplicas = 3
 
-  /** Per-(vector, cell) cosine scores against the seed table — map-only
-    * over the corpus (broadcast nested-loop of the tiny seed side).
-    */
-  private def cellScores(e: DataFrame, seeds: DataFrame): DataFrame =
-    e.crossJoin(broadcast(seeds))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        CosineSimilarity.cosine(e.sparkSession, col("embedding"), col("seed_emb")).as("c"))
-
   /** `numCells` deterministic seed vectors: the smallest `xxhash64`
     * of the id, tie-broken on the id. A hash order is a uniform sample
     * of the corpus whatever the caller's id assignment — the previous
@@ -152,7 +179,7 @@ object Similarity {
     */
   private def ivfSeeds(e: DataFrame, numCells: Int): DataFrame =
     e.orderBy(xxhash64(col("vec_id")), col("vec_id")).limit(numCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("seed_emb"))
+      .select(col("vec_id").as("cell"), col("embedding").as("centroid"))
 
   /** IVF (inverted-file) ANN over any embeddings frame — the
     * coarse-quantizer alternative to hyperplane LSH. Cells are defined
@@ -192,8 +219,9 @@ object Similarity {
       vecCol: String = "embedding", k: Int = K, numCells: Int = NumCells,
       numProbes: Int = NumProbes, assignReplicas: Int = AssignReplicas): DataFrame = {
     val e = normalized(emb, idCol, vecCol)
-    annIvfCore(e, normalized(queries, idCol, vecCol), ivfSeeds(e, numCells),
-      k, numProbes, assignReplicas)
+    val seeds = ivfSeeds(e, numCells)
+    ivfTopK(assignCells(e, seeds, assignReplicas), normalized(queries, idCol, vecCol), seeds,
+      numProbes, k)
   }
 
   /** [[annIvf]] with a caller-supplied coarse quantizer: `codebook` is a
@@ -205,10 +233,11 @@ object Similarity {
   def annIvfWithCodebook(emb: DataFrame, queries: DataFrame, codebook: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "cell", centroidCol: String = "centroid", k: Int = K,
-      numProbes: Int = NumProbes, assignReplicas: Int = AssignReplicas): DataFrame =
-    annIvfCore(normalized(emb, idCol, vecCol), normalized(queries, idCol, vecCol),
-      codebook.select(Cols.q(cellCol).as("cell"), Cols.q(centroidCol).as("seed_emb")),
-      k, numProbes, assignReplicas)
+      numProbes: Int = NumProbes, assignReplicas: Int = AssignReplicas): DataFrame = {
+    val cb = cells(codebook, cellCol, centroidCol)
+    ivfTopK(assignCells(normalized(emb, idCol, vecCol), cb, assignReplicas),
+      normalized(queries, idCol, vecCol), cb, numProbes, k)
+  }
 
   /** Predicate-constrained (filtered) vector search, exact form:
     * brute-force cosine top-k over the subset of the corpus satisfying
@@ -240,10 +269,9 @@ object Similarity {
       numProbes: Int = NumProbes, assignReplicas: Int = AssignReplicas): DataFrame = {
     val e = normalized(emb, idCol, vecCol)
     val allowed = emb.filter(predicate).select(Cols.q(idCol).as("vec_id"))
-    val seeds = codebook.select(col("cell"), col("centroid").as("seed_emb"))
-    val assigned = assignCells(e, seeds, assignReplicas)
+    val assigned = assignCells(e, codebook, assignReplicas)
       .join(allowed, Seq("vec_id"), "left_semi")
-    ivfTopK(assigned, probes(normalized(queries, idCol, vecCol), seeds, numProbes), k)
+    ivfTopK(assigned, normalized(queries, idCol, vecCol), codebook, numProbes, k)
   }
 
   /** s12: gate binding of exact [[annFiltered]] — queries vec_id < 10
@@ -254,6 +282,15 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
     annFiltered(e, e.filter(col("vec_id") < NumQueries), col("label") % 2 === 0)
   }
+
+  /** Hash-sampled coarse quantizer as a caller-ownable (cell, centroid)
+    * codebook — [[ivfSeeds]] exposed for the [[ivfIndex]]/[[ivfSearch]]
+    * build/probe split: the untrained baseline every IVF deployment
+    * starts from (and what [[trainIvfCodebook]] initializes with).
+    */
+  def sampledCodebook(emb: DataFrame, numCells: Int = NumCells,
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    ivfSeeds(normalized(emb, idCol, vecCol), numCells)
 
   /** Train an IVF coarse quantizer: hash-sampled init ([[ivfSeeds]])
     * refined by `iterations` Lloyd rounds — assign every vector to its
@@ -274,16 +311,6 @@ object Similarity {
     * materializes ([[IterativeCheckpoint]] — flat storage however many
     * rounds run).
     */
-  /** Hash-sampled coarse quantizer as a caller-ownable (cell, centroid)
-    * codebook — [[ivfSeeds]] exposed for the [[ivfIndex]]/[[ivfSearch]]
-    * build/probe split: the untrained baseline every IVF deployment
-    * starts from (and what [[trainIvfCodebook]] initializes with).
-    */
-  def sampledCodebook(emb: DataFrame, numCells: Int = NumCells,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfSeeds(normalized(emb, idCol, vecCol), numCells)
-      .select(col("cell"), col("seed_emb").as("centroid"))
-
   def trainIvfCodebook(emb: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding",
       numCells: Int = NumCells, iterations: Int = 2): DataFrame = {
     val e = normalized(emb, idCol, vecCol)
@@ -298,7 +325,7 @@ object Similarity {
         .groupBy("cell", "pos").agg(avg(col("v")).as("m"))
         .groupBy("cell")
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).getField("m")
-          .cast("array<float>").as("seed_emb")))
+          .cast("array<float>").as("centroid")))
       val means = meansGen.df
       val seedsGen = IterativeCheckpoint(means
         .unionByName(seeds.join(means.select("cell"), Seq("cell"), "left_anti")))
@@ -309,7 +336,7 @@ object Similarity {
       prevSeedsGen = Some(seedsGen)
       seeds = seedsGen.df
     }
-    seeds.select(col("cell"), col("seed_emb").as("centroid"))
+    seeds
   }
 
   /** (vec_id, embedding, cell) with each vector in its `replicas`
@@ -334,20 +361,20 @@ object Similarity {
     */
   private[operators] def assignCells(e: DataFrame, seeds: DataFrame, replicas: Int): DataFrame = {
     val s = e.sparkSession
-    val packed = seeds.agg(collect_list(struct(col("cell"), col("seed_emb"))).as("__seeds"))
+    val packed = seeds.agg(collect_list(struct(col("cell"), col("centroid"))).as("__seeds"))
     e.crossJoin(broadcast(packed))
       .select(col("vec_id"), col("embedding"),
         explode(slice(reverse(array_sort(transform(col("__seeds"), sd =>
             struct(
-              CosineSimilarity.cosine(s, col("embedding"), sd.getField("seed_emb")).as("c"),
+              CosineSimilarity.cosine(s, col("embedding"), sd.getField("centroid")).as("c"),
               sd.getField("cell").as("cell"))))),
           1, replicas)).as("__cs"))
       .select(col("vec_id"), col("embedding"), col("__cs.cell").as("cell"))
   }
 
-  private def annIvfCore(e: DataFrame, q: DataFrame, seeds: DataFrame, k: Int,
-      numProbes: Int, assignReplicas: Int): DataFrame =
-    ivfTopK(assignCells(e, seeds, assignReplicas), probes(q, seeds, numProbes), k)
+  /** A caller's (cellCol, centroidCol) codebook as (cell, centroid). */
+  private def cells(codebook: DataFrame, cellCol: String, centroidCol: String): DataFrame =
+    codebook.select(Cols.q(cellCol).as("cell"), Cols.q(centroidCol).as("centroid"))
 
   /** BUILD half of the deployment split: the IVF cell assignment
     * `(vec_id, embedding, cell)` for a caller-supplied codebook —
@@ -359,8 +386,7 @@ object Similarity {
   def ivfIndex(emb: DataFrame, codebook: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", cellCol: String = "cell",
       centroidCol: String = "centroid", assignReplicas: Int = AssignReplicas): DataFrame =
-    assignCells(normalized(emb, idCol, vecCol),
-      codebook.select(Cols.q(cellCol).as("cell"), Cols.q(centroidCol).as("seed_emb")),
+    assignCells(normalized(emb, idCol, vecCol), cells(codebook, cellCol, centroidCol),
       assignReplicas)
 
   /** PROBE half of the deployment split: top-k over a prebuilt
@@ -371,34 +397,17 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "cell", centroidCol: String = "centroid",
       k: Int = K, numProbes: Int = NumProbes): DataFrame =
-    ivfTopK(index,
-      probes(normalized(queries, idCol, vecCol),
-        codebook.select(Cols.q(cellCol).as("cell"), Cols.q(centroidCol).as("seed_emb")),
-        numProbes),
-      k)
+    ivfTopK(index, normalized(queries, idCol, vecCol), cells(codebook, cellCol, centroidCol),
+      numProbes, k)
 
-  /** Each query's numProbes nearest cells (tiny: queries x cells). */
-  private def probes(q: DataFrame, seeds: DataFrame, numProbes: Int): DataFrame = {
-    val probeW = Window.partitionBy("vec_id").orderBy(col("c").desc, col("cell").asc)
-    cellScores(q, seeds)
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= numProbes)
-      .select(col("vec_id"), col("embedding"), col("cell"))
-  }
-
-  private def ivfTopK(assigned: DataFrame, probed: DataFrame, k: Int): DataFrame = {
-    val s = assigned.sparkSession
-    topK(
-      broadcast(probed.as("a"))
-        .join(assigned.as("b"),
-          col("a.cell") === col("b.cell") && col("a.vec_id") =!= col("b.vec_id"))
-        .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"),
-          CosineSimilarity.cosine(s, col("a.embedding"), col("b.embedding")).as("cosine"))
-        // multi-assignment means a pair can meet in several probed
-        // cells; max dedups (cosines are identical per pair)
-        .groupBy("q_id", "n_id").agg(max(col("cosine")).as("cosine")),
-      k)
-  }
+  /** Probed-cell candidates from an `assigned` (vec_id, embedding, cell)
+    * store, exact cosine; `best` dedups the pairs that met in several
+    * probed cells (multi-assignment).
+    */
+  private def ivfTopK(assigned: DataFrame, queries: DataFrame, coarse: DataFrame,
+      numProbes: Int, k: Int): DataFrame =
+    topK(best(candidates(probeCells(queries, coarse, numProbes), assigned, Seq("cell"),
+      pairCosine(assigned.sparkSession)), "cosine", ascending = false), k)
 
   /** s03: gate binding of [[annIvf]] with the session-cached cell
     * assignment. rows-only oracle (seed choice is engine-local);
@@ -412,7 +421,7 @@ object Similarity {
     val assigned = SharedIndex(s, dir, "ivf_assignment") {
       assignCells(e, seeds, AssignReplicas)
     }
-    ivfTopK(assigned, probes(e.filter(col("vec_id") < NumQueries), seeds, NumProbes), K)
+    ivfTopK(assigned, e.filter(col("vec_id") < NumQueries), seeds, NumProbes, K)
   }
 
   /** s04: gate binding of the TRAINED-quantizer ANN path —
@@ -751,18 +760,19 @@ object Similarity {
     */
   def hammingKnn(codes: DataFrame, queries: DataFrame, idCol: String = "vec_id",
       codeCol: String = "code", k: Int = K): DataFrame = {
-    val c = codes.select(Cols.q(idCol).as("vec_id"), Cols.q(codeCol).as("code"))
-    val q = queries.select(Cols.q(idCol).as("vec_id"), Cols.q(codeCol).as("code"))
-    val cand = broadcast(q.as("a"))
-      .join(c.as("b"), col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"),
-        bit_count(col("a.code").bitwiseXOR(col("b.code"))).as("hamming"))
-    val w = Window.partitionBy("q_id").orderBy(col("hamming").asc, col("n_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    def coded(df: DataFrame) = df.select(Cols.q(idCol).as("vec_id"), Cols.q(codeCol).as("code"))
+    hammingTopK(candidates(coded(queries), coded(codes), Nil, pairHamming), k)
+  }
+
+  /** XOR+POPCNT distance of a candidate pair's codes. */
+  private def pairHamming: Column =
+    bit_count(col("a.code").bitwiseXOR(col("b.code"))).as("hamming")
+
+  /** Per-query top-k by ascending Hamming distance (not rounded). */
+  private def hammingTopK(cand: DataFrame, k: Int): DataFrame =
+    ranked(cand, "hamming", ascending = true, k)
       .select(col("q_id"), col("rank"), col("n_id"), col("hamming"))
       .orderBy("q_id", "rank")
-  }
 
   /** Chunk-pruned Hamming top-k — the scale path when even the 8-byte
     * scan is too much per query: codes explode to `nChunks` 16-bit
@@ -792,18 +802,8 @@ object Similarity {
     val corpus = chunked(codes)
       .withColumn("__r", row_number().over(wcap))
       .filter(col("__r") <= maxBucketSize).drop("__r")
-    val cand = broadcast(chunked(queries).as("a"))
-      .join(corpus.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.key") === col("b.key") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"),
-        bit_count(col("a.code").bitwiseXOR(col("b.code"))).as("hamming"))
-      .groupBy("q_id", "n_id").agg(min(col("hamming")).as("hamming"))
-    val w = Window.partitionBy("q_id").orderBy(col("hamming").asc, col("n_id").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("n_id"), col("hamming"))
-      .orderBy("q_id", "rank")
+    hammingTopK(best(candidates(chunked(queries), corpus, Seq("chunk", "key"), pairHamming),
+      "hamming", ascending = true), k)
   }
 
   /** s13: gate binding — sign-binarized embeddings (48 bits), exact

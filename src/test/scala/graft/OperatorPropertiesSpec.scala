@@ -132,6 +132,19 @@ class OperatorPropertiesSpec extends SparkSpec {
     assert(ent(1L)._2.nonEmpty)
   }
 
+  test("keep-first dedup: a negative integral doc id is a loud domain error") {
+    def message(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+        .mkString(" | ")
+    val lines = Seq((-1L, 0L, "a"), (2L, 0L, "a")).toDF("doc_id", "line_no", "line")
+    val ld = intercept[Exception](Dedup.lineDedup(lines).collect())
+    assert(message(ld).contains("domain exceeded"), message(ld))
+    val docs = Seq((-5, "one two three four five six seven eight nine"),
+      (3, "one two three four five six seven eight nine")).toDF("doc_id", "text")
+    val sd = intercept[Exception](Dedup.substringDedup(docs).collect())
+    assert(message(sd).contains("domain exceeded"), message(sd))
+  }
+
   test("agg/sketch state: compaction order cannot change the rollup") {
     val r = rnd(13)
     val rows = (0 until 600).map(_ =>

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Engine-side invariants for the ANN/similarity family at 1000x
 (5M vectors) — the r15 decade-up artifact's independent checks, run in
-DuckDB over the graft.AnnScale parquet dumps (CHECK_sf100_ann.txt).
+DuckDB over the parquet dumps of the graft.AnnScale runner (since
+removed; its recorded results are CHECK_sf100_ann.txt).
 
 The sf100e corpus is sf10's 200k embeddings replicated 25x with vec_id
 offsets — and sf10 is ITSELF sf0.1's 2000 vectors replicated 100x
