@@ -36,13 +36,18 @@ object XbrlExtract {
     * like the reference CLI's positional arguments (cli.py:28-32).
     *
     * Every table is a map-only projection of ONE grouped fact store
-    * ([[FactTableBuilder.groupedStore]]), so all N tables cost one
-    * corpus aggregation, not N. The store is materialized here, eagerly,
-    * by [[checkpointed]]: each table's plan then scans a leaf RDD
-    * instead of re-planning and re-shipping the parse-and-aggregate
-    * lineage in its task binary. The tables themselves stay lazy until
-    * a sink runs them — `graft.Main` writes them all in one batched job
-    * through [[XbrlSinks.writeParquetPooled]].
+    * ([[FactTableBuilder.groupedStore]]), built inside the tasks that
+    * parse the filings: parse + store is ONE Spark job with no exchange.
+    * The store is materialized here, eagerly, by [[checkpointed]]: each
+    * table's plan then scans a leaf RDD instead of re-planning and
+    * re-shipping the parse lineage in its task binary. The tables
+    * themselves stay lazy until a sink runs them — `graft.Main` writes
+    * them all in one batched job through [[XbrlSinks.writeParquetPooled]].
+    *
+    * A filing that arrives twice (the same archive passed twice, or two
+    * entries with one stem) throws an `IllegalArgumentException` naming
+    * it before any job runs; the names come from the archives' central
+    * directories and the file scans' indexes, already read on the driver.
     */
   def extract(
       spark: SparkSession,
@@ -60,24 +65,38 @@ object XbrlExtract {
     }
 
     val parsed = filings.map(FilingSource.fromPath(spark, _))
-    def pattern(df: DataFrame): DataFrame =
-      instancePattern.fold(df)(p => df.filter(col("filing_name").rlike(p)))
-    val facts = pattern(parsed.map(_.facts.toDF()).reduce(_ union _))
-      .as[graft.xbrl.RawFact](org.apache.spark.sql.Encoders.product[graft.xbrl.RawFact])
-    val contexts = pattern(parsed.map(_.contexts.toDF()).reduce(_ union _))
-      .as[graft.xbrl.XbrlContext](org.apache.spark.sql.Encoders.product[graft.xbrl.XbrlContext])
-    val meta = pattern(parsed.map(_.meta).reduce(_ unionByName _))
+    try {
+      // same matching as `rlike`: a find anywhere in the name
+      val selected = instancePattern.map(java.util.regex.Pattern.compile)
+        .fold(parsed.flatMap(_.names))(p => parsed.flatMap(_.names).filter(p.matcher(_).find()))
+      val repeated = selected.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
+      if (repeated.nonEmpty)
+        throw new IllegalArgumentException(
+          s"filing(s) given more than once: ${repeated.toSeq.sorted.mkString(", ")}")
 
-    val (store, releaseStore) = checkpointed(
-      FactTableBuilder.groupedStore(schemas, facts, contexts, meta))
-    val tables = schemas.map(s =>
-      s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
-    val stats = FactTableBuilder.stats(spark, schemas, facts, contexts, meta)
-    ExtractOutput(taxonomies, schemas, tables, stats,
-      release = () => {
-        releaseStore()
+      def pattern(df: DataFrame): DataFrame =
+        instancePattern.fold(df)(p => df.filter(col("filing_name").rlike(p)))
+      val facts = pattern(parsed.map(_.facts.toDF()).reduce(_ union _))
+        .as[graft.xbrl.RawFact](org.apache.spark.sql.Encoders.product[graft.xbrl.RawFact])
+      val contexts = pattern(parsed.map(_.contexts.toDF()).reduce(_ union _))
+        .as[graft.xbrl.XbrlContext](org.apache.spark.sql.Encoders.product[graft.xbrl.XbrlContext])
+      val meta = pattern(parsed.map(_.meta).reduce(_ unionByName _))
+
+      val (store, releaseStore) = checkpointed(
+        pattern(FactTableBuilder.groupedStore(schemas, parsed)))
+      val tables = schemas.map(s =>
+        s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
+      val stats = FactTableBuilder.stats(spark, schemas, facts, contexts, meta)
+      ExtractOutput(taxonomies, schemas, tables, stats,
+        release = () => {
+          releaseStore()
+          parsed.foreach(_.unpersist())
+        })
+    } catch {
+      case scala.util.control.NonFatal(e) =>
         parsed.foreach(_.unpersist())
-      })
+        throw e
+    }
   }
 
   /** `df` materialized now by `localCheckpoint`, and the function that
@@ -87,14 +106,19 @@ object XbrlExtract {
     * the checkpointed RDD under the result's plan, which the returned
     * function unpersists. Local checkpoint blocks cannot be recomputed:
     * an executor lost with them fails the jobs reading them (reliable
-    * `checkpoint()` is the durable edition of the same move).
+    * `checkpoint()` is the durable edition of the same move). If
+    * materializing fails, the blocks are freed before the error
+    * propagates.
     */
   private[graft] def checkpointed(df: DataFrame): (DataFrame, () => Unit) = {
-    val cp = df.localCheckpoint()
+    val cp = df.localCheckpoint(eager = false)
     val rdds = cp.queryExecution.logical.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
-    (cp, () => rdds.foreach(_.unpersist(blocking = false)))
+    val release = () => rdds.foreach(_.unpersist(blocking = false))
+    try rdds.foreach(_.count())
+    catch { case scala.util.control.NonFatal(e) => release(); throw e }
+    (cp, release)
   }
 
   /** Upper-bound per-table row counts from the shared store in ONE job:
@@ -178,7 +202,7 @@ object XbrlExtract {
     XbrlSinks.datapackageParquetJson(schemas, formNumber,
       tableNames = Some(schemas.map(_.name).toSet))
     val (st, releaseStore) = store.fold(checkpointed(FactTableBuilder.groupedStore(
-      schemas, parsed.facts, parsed.contexts, parsed.meta)))(s => (s, () => ()))
+      schemas, Seq(parsed))))(s => (s, () => ()))
     def row(t: TableSchema, result: Either[String, Long]): (String, Option[Long], Int, Option[String]) =
       (t.name, result.toOption, t.fields.size, result.left.toOption)
     val summary =

@@ -95,8 +95,8 @@ object XbrlQueries {
       // r18 (guide §3.3 "materialising an intermediate truncates the
       // plan", §5 localCheckpoint): the store feeds 255+ independent
       // per-table jobs per x05 run, and EVERY one of those jobs
-      // re-serialized the store's full lineage (zip parse → dedup agg →
-      // map agg → joins) into its task binary on the single-threaded
+      // re-serialized the store's full lineage (zip parse onward) into
+      // its task binary on the single-threaded
       // DAGScheduler event loop — measured r18: 255 pooled noop builds
       // over the plain persisted store 4.1–6.0 s vs 1.3 s over the
       // checkpointed one, identical rows. localCheckpoint materializes
@@ -105,8 +105,7 @@ object XbrlQueries {
       // leaf RDD. A cluster deployment with lineage-sensitive fault
       // tolerance uses reliable checkpoint()/write-back instead — same
       // §3.3 move, durable edition.
-      FactTableBuilder.groupedStore(tables, fs.facts, fs.contexts, fs.meta)
-        .localCheckpoint()
+      FactTableBuilder.groupedStore(tables, Seq(fs)).localCheckpoint()
     }
 
   /** x01: distributed parse of the ferc1 2021 filings archive — one

@@ -2,7 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType}
 
+import graft.sources.ParsedFilings
 import graft.xbrl.{RawFact, TableSchema, XbrlBaseType, XbrlContext}
 
 /** Fact-table construction (SURVEY.md §2.2 `xbrl_fact_table` /
@@ -16,12 +18,14 @@ import graft.xbrl.{RawFact, TableSchema, XbrlBaseType, XbrlContext}
   *  2. context filter: no dimension outside the table's axes
   *     (check_dimensions, instance.py:131-133 — facts missing an axis
   *     are totals; facts with extra axes belong to another table);
-  *  3. exact duplicate drop on the TYPED value (datapackage.py:437);
+  *  3. exact duplicate drop on the TYPED value (datapackage.py:437) and
   *  4. fuzzy numeric dedup: among conflicting duplicate fact ids keep
   *     the highest-precision value (fuzzy_dedup, datapackage.py:548-575;
   *     where the reference raises on unresolvable conflicts we resolve
   *     deterministically by (precision, value) and keep going — a 100 TB
-  *     job cannot die on one filer's typo);
+  *     job cannot die on one filer's typo). Both are one pick of the
+  *     highest (precision, typed value) per fact id: exact duplicates
+  *     are identical candidates, so the pick collapses them;
   *  5. pivot long -> wide with the FIXED column list from the schema
   *     (never discovered from data — one shuffle, no discovery job);
   *  6. context PK columns with missing axes filled as "total"
@@ -33,45 +37,48 @@ import graft.xbrl.{RawFact, TableSchema, XbrlBaseType, XbrlContext}
   * Shuffle budget: facts and contexts co-partition on (filing_name,
   * c_id) for the join; the dedup aggregation and the pivot reuse that
   * same partitioning, so the whole build is ONE exchange per side plus a
-  * broadcast. This is the property that holds at 1000 executors: adding
-  * filings adds partitions, never coordination.
+  * broadcast. The all-tables [[groupedStore]] needs none: every step is
+  * keyed by filing, so it runs inside the tasks that parse the filings.
+  * This is the property that holds at 1000 executors: adding filings
+  * adds partitions, never coordination.
   */
 object FactTableBuilder {
 
-  /** Steps 3.–4. over a `(filing_name, c_id, name, value)` frame, given
-    * a (name → frictionless type) map: canonical typed value, exact
-    * duplicate drop, highest-precision conflict resolution. Shared by
-    * the per-table long store and the all-tables grouped store.
+  /** Canonical typed value of fact `name`'s raw `value`, as a string, so
+    * "5" and "5.0" in a number column are exact duplicates
+    * (CONVERT_DTYPES before drop_duplicates). try_cast: a malformed value
+    * (filer typo) nulls that fact instead of killing the job under ANSI
+    * mode. Large name lists plan as InSet.
     */
-  private def dedupFacts(f: DataFrame, typeOf: Map[String, String]): DataFrame = {
-    val names = typeOf.keys.toSeq
-    val numberNames = names.filter(n => typeOf(n) == "number")
-    val intNames = names.filter(n => Set("integer", "year").contains(typeOf(n)))
-    val boolNames = names.filter(n => typeOf(n) == "boolean")
+  private def typedValue(name: Column, value: Column, typeOf: Map[String, String]): Column = {
+    def named(types: String*) = typeOf.collect { case (n, t) if types.contains(t) => n }.toSeq
+    when(name.isin(named("number"): _*), value.try_cast(DoubleType).cast(StringType))
+      .when(name.isin(named("integer", "year"): _*), value.try_cast(LongType).cast(StringType))
+      .when(name.isin(named("boolean"): _*), value.try_cast(BooleanType).cast(StringType))
+      .otherwise(value)
+  }
 
-    // canonical typed value as string, so "5" and "5.0" in a number
-    // column are exact duplicates (CONVERT_DTYPES before drop_duplicates).
-    // try_cast: a malformed value (filer typo) nulls that fact instead of
-    // killing the job under ANSI mode. Large name lists plan as InSet.
-    val tv =
-      when(col("name").isin(numberNames: _*), expr("try_cast(value AS DOUBLE)").cast("string"))
-        .when(col("name").isin(intNames: _*), expr("try_cast(value AS BIGINT)").cast("string"))
-        .when(col("name").isin(boolNames: _*), expr("try_cast(value AS BOOLEAN)").cast("string"))
-        .otherwise(col("value"))
-
-    // decimal precision of a numeric value (0..5, 6 = more precise),
-    // for the fuzzy-dedup resolution order
-    val vd = expr("try_cast(tv AS DOUBLE)")
+  /** Decimal precision of a typed value (0..5, 6 = more precise, -1 = not
+    * numeric), the fuzzy-dedup resolution order.
+    */
+  private def precision(tv: Column): Column = {
+    val vd = tv.try_cast(DoubleType)
     val prec = (0 to 5).foldRight(lit(6): Column) { (p, acc) =>
       when(round(vd, p) === vd, lit(p)).otherwise(acc)
     }
+    when(vd.isNotNull, prec).otherwise(lit(-1))
+  }
 
-    f.withColumn("tv", tv)
-      .dropDuplicates("filing_name", "c_id", "name", "tv")
-      .withColumn("prec", when(vd.isNotNull, prec).otherwise(lit(-1)))
+  /** Steps 3.–4. over a `(filing_name, c_id, name, value)` frame, given
+    * a (name → frictionless type) map: one row per fact id holding its
+    * highest-(precision, typed value) candidate. The per-table long
+    * store's path; [[resolveFactmap]] is the grouped store's.
+    */
+  private def dedupFacts(f: DataFrame, typeOf: Map[String, String]): DataFrame =
+    f.withColumn("tv", typedValue(col("name"), col("value"), typeOf))
+      .withColumn("prec", precision(col("tv")))
       .groupBy("filing_name", "c_id", "name")
       .agg(max_by(col("tv"), struct(col("prec"), col("tv"))).as("tv"))
-  }
 
   /** Steps 1.–4. as a reusable long store: the table's facts filtered,
     * typed, exact-deduped, and conflict-resolved — one row per surviving
@@ -171,22 +178,33 @@ object FactTableBuilder {
   /** ONE grouped fact store serving EVERY table build — the full-corpus
     * extract's scale shape. `build()` per table re-runs a wide pivot
     * aggregation (fine for one table; 255 independent agg+join jobs for
-    * the whole corpus, where per-table planning/codegen dominates at
-    * small scale and 255 corpus passes dominate at large scale). This
-    * store instead aggregates the corpus ONCE: per (filing, c_id), the
+    * the whole corpus). The store instead holds, per (filing, c_id), the
     * deduped facts as one `name → tv` map plus the context's PK fields
-    * and the broadcast publication_time — after which EVERY table is a
+    * and the rssfeed publication_time — after which EVERY table is a
     * cheap filter + map-lookup projection over the same frame
-    * ([[buildFromStore]]), no per-table shuffle at all. The map (and
-    * its collect_list buffer) is bounded by the taxonomy's column count
-    * per context — taxonomy-sized, never corpus-scaled, so the
-    * collect-before-cap house rule doesn't apply here. Persist the
-    * result before fanning out table builds (XbrlExtract does).
+    * ([[buildFromStore]]), no per-table shuffle at all. The map is
+    * bounded by the taxonomy's column count per context —
+    * taxonomy-sized, never corpus-scaled. Materialize the result before
+    * fanning out table builds (XbrlExtract checkpoints it).
     *
-    * Total shuffle budget for a FULL 255-table extract: the store's
-    * dedup aggregation + map collection + one context join — three
-    * exchanges over the corpus, once — versus 2×255 with per-table
-    * `build()`.
+    * Every step is keyed by filing, so the store is built where each
+    * filing is parsed ([[ParsedFilings.contextFacts]]) and resolved by
+    * one map-only projection: parse + store is one job with NO exchange
+    * over the corpus, however many tables are built from it.
+    */
+  def groupedStore(schemas: Seq[TableSchema], filings: Seq[ParsedFilings]): DataFrame = {
+    require(filings.nonEmpty, "groupedStore needs at least one parsed input")
+    val typeOf = globalTypes(schemas)
+    resolveFactmap(
+      filings.map(_.contextFacts(typeOf.keySet).toDF()).reduce(_ union _), typeOf)
+  }
+
+  /** The same store from the flat long tables, for callers holding only
+    * `facts`, `contexts` and `meta` (needs filing_name,
+    * publication_time): one group by (filing_name, c_id) plus the
+    * context join rebuild the per-context rows [[groupedStore]] gets
+    * from the parse, and the same resolution follows. Two exchanges and
+    * the broadcast meta join, where the filing-local form has none.
     */
   def groupedStore(
       schemas: Seq[TableSchema],
@@ -194,29 +212,48 @@ object FactTableBuilder {
       contexts: Dataset[XbrlContext],
       meta: DataFrame): DataFrame = {
     val typeOf = globalTypes(schemas)
-    val deduped = dedupFacts(
-      facts.toDF()
-        .filter(col("name").isin(typeOf.keys.toSeq: _*))
-        .select("filing_name", "c_id", "name", "value"),
-      typeOf)
-    // at most one row per (filing, c_id, name) after dedup, so the map
-    // collection cannot hit duplicate-key errors by construction
-    deduped
+    val byContext = facts.toDF()
+      .filter(col("name").isin(typeOf.keys.toSeq: _*))
       .groupBy("filing_name", "c_id")
-      .agg(map_from_entries(collect_list(struct(col("name"), col("tv")))).as("factmap"))
+      .agg(collect_list(struct(col("name"), col("value"))).as("facts"))
       .join(contexts.toDF()
         .select("filing_name", "c_id", "entity_id", "start_date", "end_date",
           "instant", "dims"),
         Seq("filing_name", "c_id"))
       .join(broadcast(meta.select(col("filing_name"), col("publication_time"))),
         Seq("filing_name"), "left")
+    resolveFactmap(byContext, typeOf)
+  }
+
+  /** Per-context rows (`facts`: array of (name, value)) → the store:
+    * each context's facts resolved into `factmap` by one map-only
+    * projection. The context's array is typed and ranked with the same
+    * builders `dedupFacts` uses, sorted once by (name, prec, tv), and the
+    * last entry of each name run kept — the highest (prec, tv) per name,
+    * O(k log k) per context. `get` (not `element_at`, which throws past
+    * the end under ANSI mode) reads the next entry.
+    */
+  private def resolveFactmap(byContext: DataFrame, typeOf: Map[String, String]): DataFrame = {
+    val typed = transform(col("facts"), f =>
+      struct(f("name").as("name"), typedValue(f("name"), f("value"), typeOf).as("tv")))
+    val ranked = transform(typed, f =>
+      struct(f("name").as("name"), precision(f("tv")).as("prec"), f("tv").as("tv")))
+    byContext
+      .withColumn("facts", sort_array(ranked))
+      .withColumn("facts", filter(col("facts"), (f, i) =>
+        coalesce(get(col("facts"), i + 1)("name") =!= f("name"), lit(true))))
+      .select(col("filing_name"), col("c_id"),
+        map_from_entries(transform(col("facts"), f => struct(f("name"), f("tv")))).as("factmap"),
+        col("entity_id"), col("start_date"), col("end_date"), col("instant"), col("dims"),
+        col("publication_time"))
   }
 
   /** One output table from the shared [[groupedStore]]: period filter,
     * dimension-subset filter, `total` axis fill, map-lookup projection
     * per schema column, typed cast, all-null-row drop — a map-only
     * filter-projection, no aggregation, no join. Semantically identical
-    * to [[build]] (FactTableSpec pins the equivalence on real filings).
+    * to [[build]] (FactTableSpec pins the equivalence on real filings,
+    * GroupedStoreSpec on generated seasons for all 255 tables).
     */
   def buildFromStore(schema: TableSchema, store: DataFrame): DataFrame = {
     val isInstant = schema.periodType == "instant"

@@ -12,17 +12,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.XbrlInstanceParser.ParsedInstance
-import graft.xbrl.{RawFact, XbrlContext}
+import graft.xbrl.{ContextFacts, FactValue, RawFact, XbrlContext}
 
 /** Filing enumeration + distributed parse (SURVEY.md §2.2
   * `xbrl_instances_from_zip`; reference instance.py:411-484).
   *
   * Shape for scale: the archive's central directory and rssfeed JSON are
   * metadata — read once on the driver (bytes proportional to #filings,
-  * not data size). The filings themselves are parsed in executors: a
-  * Dataset of entry names is partitioned across the cluster and each task
-  * opens the archive (which lives on shared storage) and streams only its
-  * own entries. Nothing filing-sized ever moves through the driver.
+  * not data size). The filings themselves are parsed in executors: the
+  * entry names are parallelized straight into tasks (a scan, no
+  * exchange) and each task opens the archive (which lives on shared
+  * storage) and reads only its own entries. Nothing filing-sized ever
+  * moves through the driver.
   */
 object FilingSource {
 
@@ -81,26 +82,36 @@ object FilingSource {
     finally zf.close()
   }
 
-  /** Distributed parse of every filing in a zip archive. */
+  /** Distributed parse of every filing in a zip archive. Each entry is
+    * read whole before it is parsed, so an entry that cannot be read
+    * (truncated or corrupt) is told apart from a malformed filing: it
+    * fails the job with an `IOException` naming the archive and the
+    * entry, where a malformed filing is skipped.
+    */
   def fromZip(spark: SparkSession, zipPath: String, factPrefix: String = "ferc"): ParsedFilings = {
     import spark.implicits._
     val entries = listEntries(zipPath)
     val info = readRssfeed(zipPath)
+    val slices = math.min(entries.size, spark.sparkContext.defaultParallelism).max(1)
     val parsed = spark
-      .createDataset(entries)
-      .repartition(math.min(entries.size, spark.sparkContext.defaultParallelism).max(1))
+      .createDataset(spark.sparkContext.parallelize(entries, slices))
       .mapPartitions { names =>
-        // one archive handle per task; each task streams only its entries
+        // one archive handle per task; each task reads only its entries
         val zf = new ZipFile(zipPath)
-        val out = names.flatMap { entryName =>
-          val in = zf.getInputStream(zf.getEntry(entryName))
-          try parseOrSkip(stem(entryName), in, factPrefix)
-          finally in.close()
-        }.toVector
-        zf.close()
-        out.iterator
+        try names.flatMap { entryName =>
+          val bytes =
+            try {
+              val in = zf.getInputStream(zf.getEntry(entryName))
+              try in.readAllBytes() finally in.close()
+            } catch {
+              case e: java.io.IOException =>
+                throw new java.io.IOException(s"cannot read entry $entryName of $zipPath: $e", e)
+            }
+          parseOrSkip(stem(entryName), new java.io.ByteArrayInputStream(bytes), factPrefix)
+        }.toVector.iterator
+        finally zf.close()
       }
-    new ParsedFilings(spark, parsed, info)
+    new ParsedFilings(spark, parsed, info, entries.map(stem))
   }
 
   /** Distributed parse of a directory of `.xbrl` files (no rssfeed, so
@@ -123,15 +134,18 @@ object FilingSource {
     */
   private def fromBinaryFiles(spark: SparkSession, path: String, factPrefix: String): ParsedFilings = {
     import spark.implicits._
-    val parsed = spark.read.format("binaryFile")
+    val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.xbrl")
       .load(path)
+    val parsed = files
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .mapPartitions(_.flatMap { case (p, bytes) =>
         parseOrSkip(stem(p), new java.io.ByteArrayInputStream(bytes), factPrefix)
       })
-    new ParsedFilings(spark, parsed, Map.empty)
+    // the scan's file index, already listed on the driver
+    val names = files.inputFiles.toSeq.map(f => stem(new java.net.URI(f).getPath))
+    new ParsedFilings(spark, parsed, Map.empty, names)
   }
 
   /** Dispatch one filing input by its type — the reference CLI accepts
@@ -154,14 +168,19 @@ object FilingSource {
 }
 
 /** Parsed filings exposed as the three long tables the fact-table builder
-  * consumes. The parsed Dataset is persisted (MEMORY_AND_DISK) because
-  * facts/contexts/meta are three projections of one expensive parse;
-  * call `unpersist()` when the downstream tables are materialized.
+  * consumes, and as the per-context rows ([[contextFacts]]) the grouped
+  * fact store is built from. The parsed Dataset is persisted
+  * (MEMORY_AND_DISK) because these are projections of one expensive
+  * parse; call `unpersist()` when the downstream tables are materialized.
+  * `names` are the filing names the driver read while listing the input
+  * (archive central directory or file index) — one per filing entry,
+  * repeats included.
   */
 class ParsedFilings(
     spark: SparkSession,
     val parsed: Dataset[ParsedInstance],
-    info: Map[String, FilingSource.FilingInfo]) {
+    info: Map[String, FilingSource.FilingInfo],
+    val names: Seq[String]) {
   import spark.implicits._
 
   parsed.persist(StorageLevel.MEMORY_AND_DISK)
@@ -169,6 +188,24 @@ class ParsedFilings(
   def facts: Dataset[RawFact] = parsed.flatMap(_.facts)
 
   def contexts: Dataset[XbrlContext] = parsed.flatMap(_.contexts)
+
+  /** Each filing's facts named in `factNames`, grouped by context in the
+    * task that parses the filing: one row per context holding at least
+    * one such fact, with the context's fields and the rssfeed
+    * publication_time (from the driver's map, rows proportional to
+    * #filings) attached. A filing's facts and contexts arrive in the same
+    * parsed row, so this is a map-only step — no exchange, no join.
+    */
+  def contextFacts(factNames: Set[String]): Dataset[ContextFacts] = {
+    val published = info.map { case (n, i) => n -> i.publication_time }
+    parsed.flatMap { p =>
+      val byContext = p.facts.filter(f => factNames(f.name)).groupBy(_.c_id)
+      val pub = published.getOrElse(p.filing_name, null)
+      p.contexts.flatMap(c => byContext.get(c.c_id).map(fs => ContextFacts(
+        p.filing_name, c.c_id, fs.map(f => FactValue(f.name, f.value)),
+        c.entity_id, c.start_date, c.end_date, c.instant, c.dims, pub)))
+    }
+  }
 
   /** Filing-level metadata: publication_time/taxonomy_version from the
     * rssfeed (driver-side, broadcast-joined), report_date and fact-id

@@ -23,10 +23,10 @@ import graft.sources.XbrlInstanceParser.ParsedInstance
 object XbrlStream {
 
   /** One streamed long-store row: a fact joined to its context
-    * ROW-LOCALLY at parse time. The batch `groupedStore` pays a corpus
-    * exchange for this facts×contexts join; the stream gets it free
-    * because a filing's facts and contexts arrive inside the same
-    * parsed row. Sink this append-mode to shared storage and run the
+    * ROW-LOCALLY at parse time — free, because a filing's facts and
+    * contexts arrive inside the same parsed row (the batch
+    * `groupedStore` groups them the same way, in the parse task).
+    * Sink this append-mode to shared storage and run the
     * batch table builds over the accumulated store on the cadence the
     * datapackage needs — latest-filing-wins and the 255-table pivot
     * are corpus-wide decisions, deliberately batch.

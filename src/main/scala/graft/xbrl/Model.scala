@@ -38,6 +38,24 @@ case class XbrlContext(
     instant: Boolean,
     dims: Map[String, String])
 
+/** One fact's concept name and raw value, as grouped under its context. */
+case class FactValue(name: String, value: String)
+
+/** One context of one filing with the facts reported against it and the
+  * filing's rssfeed publication_time: the unit the grouped fact store
+  * resolves into one `name -> value` map.
+  */
+case class ContextFacts(
+    filing_name: String,
+    c_id: String,
+    facts: Seq[FactValue],
+    entity_id: String,
+    start_date: String,
+    end_date: String,
+    instant: Boolean,
+    dims: Map[String, String],
+    publication_time: java.sql.Timestamp)
+
 /** Filing-level metadata from the archive's rssfeed JSON + parsed facts.
   * Reference: instance.py:411-451 (instances_from_zip), report_date logic
   * at instance.py:294-304.

@@ -1,0 +1,232 @@
+package graft
+
+import java.io.File
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.CollectionConverters._
+import scala.sys.process._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{array_sort, col, map_entries}
+
+import graft.plans.{FactTableBuilder, FactTableSchema}
+import graft.sources.{FilingSource, TaxonomyParser}
+
+/** The grouped fact store built where each filing is parsed, on seasons
+  * the repository generates (`perfbench/gen_xbrl.py`): the fixture twin
+  * of FactTableSpec's real-filing equivalence over all 255 tables, the
+  * job and plan shape of `XbrlExtract.extract` (parse + store in one
+  * job, no exchange), and the two bad inputs that must fail loudly — a
+  * filing that arrives twice and a truncated archive entry.
+  */
+class GroupedStoreSpec extends SparkSpec {
+
+  private def season(seed: Int, filings: Int): String = {
+    val dir = Files.createTempDirectory(s"graft_store_season_$seed").toString
+    val gen = Seq("python3", "perfbench/gen_xbrl.py", "--seed", seed.toString,
+      "--filings", filings.toString, "--out", dir)
+    assert(gen.! === 0, s"generator failed: ${gen.mkString(" ")}")
+    dir
+  }
+
+  private lazy val small = season(17, 4)
+  private lazy val tenFilings = season(23, 10)
+
+  private def zip(dir: String) = s"$dir/ferc1-xbrl-2021.zip"
+  private def taxonomy(dir: String) = s"$dir/ferc1-xbrl-taxonomies.zip"
+
+  /** Rows as sorted strings, `factmap` as its entries sorted by name. */
+  private def rows(df: DataFrame): Seq[String] = {
+    val cols = df.columns.toSeq.map(c =>
+      if (c == "factmap") array_sort(map_entries(col(c))).as(c) else col(c))
+    df.select(cols: _*).collect().map(_.toString).sorted.toSeq
+  }
+
+  test("buildFromStore over the filing-local store matches build() for all 255 tables; the flat form's store is equal") {
+    val tables = FactTableSchema.fromTaxonomies(TaxonomyParser.parseArchive(taxonomy(small)))
+    assert(tables.size === 255)
+    val parsed = FilingSource.fromZip(spark, zip(small))
+    val local = FactTableBuilder.groupedStore(tables, Seq(parsed)).persist()
+    val flat = FactTableBuilder.groupedStore(
+      tables, parsed.facts, parsed.contexts, parsed.meta).persist()
+    try {
+      assert(local.columns.toSeq === flat.columns.toSeq)
+      val storeRows = rows(local)
+      assert(storeRows.nonEmpty)
+      assert(storeRows === rows(flat), "the two groupers drifted apart")
+      // 255 independent small comparisons: four at a time
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val sizes = Future.traverse(tables) { t =>
+        Future {
+          val fromLocal = FactTableBuilder.buildFromStore(t, local)
+          val oracle = FactTableBuilder.build(t, parsed.facts, parsed.contexts, parsed.meta)
+          assert(fromLocal.columns.toSeq === oracle.columns.toSeq, t.name)
+          val got = rows(fromLocal)
+          assert(got === rows(oracle), s"${t.name}: store vs per-table build")
+          got.size
+        }
+      }
+      val nonEmpty = try Await.result(sizes, Duration(20, "min")).count(_ > 0)
+        finally pool.shutdown()
+      assert(nonEmpty > 200, s"only $nonEmpty of 255 tables hold rows: the equivalence proves little")
+    } finally {
+      local.unpersist()
+      flat.unpersist()
+      parsed.unpersist()
+    }
+  }
+
+  /** Ids of the jobs `body` starts on this thread, read after the
+    * listener bus has delivered every event posted before a marker job.
+    */
+  private def jobsOf(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"graft-store-spec-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val started = new ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        started.add(Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull -> js.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "extract")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!started.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(started.asScala.exists(_._1 == marker), "listener never saw the marker job")
+      started.asScala.collect { case (g, id) if g == group => id }.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("extract runs parse + store as ONE Spark job, and the store plan has no exchange") {
+    var out: XbrlExtract.ExtractOutput = null
+    val jobs = jobsOf {
+      out = XbrlExtract.extract(spark, Seq(zip(tenFilings)), taxonomy(tenFilings))
+    }
+    try {
+      assert(jobs.size === 1, s"jobs started by extract: $jobs")
+      assert(out.tables.size === 255)
+    } finally out.release()
+
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val tables = FactTableSchema.fromTaxonomies(TaxonomyParser.parseArchive(taxonomy(tenFilings)))
+    val parsed = FilingSource.fromZip(spark, zip(tenFilings))
+    val key = "spark.sql.adaptive.enabled"
+    val aqe = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val plan = FactTableBuilder.groupedStore(tables, Seq(parsed)).queryExecution.executedPlan
+      val exchanges = plan.collect { case e: Exchange => e }
+      assert(exchanges.isEmpty, s"${exchanges.size} exchanges\n$plan")
+      val parseScans = plan.collect {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+      }
+      assert(parseScans.size === 1, s"expected one scan of the persisted parse\n$plan")
+    } finally {
+      spark.conf.set(key, aqe)
+      parsed.unpersist()
+    }
+  }
+
+  private def copyZip(from: String, to: Path)(
+      edit: (java.util.zip.ZipEntry, Array[Byte], java.util.zip.ZipOutputStream) => Unit): String = {
+    val zf = new java.util.zip.ZipFile(from)
+    val out = new java.util.zip.ZipOutputStream(Files.newOutputStream(to))
+    try zf.entries().asScala.foreach { e =>
+      val bytes = zf.getInputStream(e).readAllBytes()
+      out.putNextEntry(new java.util.zip.ZipEntry(e.getName))
+      out.write(bytes)
+      out.closeEntry()
+      edit(e, bytes, out)
+    } finally { out.close(); zf.close() }
+    to.toString
+  }
+
+  test("a filing that arrives twice fails loudly, naming it") {
+    val names = FilingSource.listEntries(zip(small)).map(FilingSource.stem)
+    val twice = intercept[IllegalArgumentException] {
+      XbrlExtract.extract(spark, Seq(zip(small), zip(small)), taxonomy(small))
+    }
+    names.foreach(n => assert(twice.getMessage.contains(n), twice.getMessage))
+
+    // two entries with one stem inside one archive
+    val first = FilingSource.listEntries(zip(small)).head
+    val dir = Files.createTempDirectory("graft_dup_stem")
+    val dup = copyZip(zip(small), dir.resolve("ferc1-xbrl-2021.zip")) { (e, bytes, out) =>
+      if (e.getName == first) {
+        out.putNextEntry(new java.util.zip.ZipEntry(s"resubmitted/$first"))
+        out.write(bytes)
+        out.closeEntry()
+      }
+    }
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val sameStem = intercept[IllegalArgumentException] {
+      XbrlExtract.extract(spark, Seq(dup), taxonomy(small))
+    }
+    assert(sameStem.getMessage.contains(FilingSource.stem(first)), sameStem.getMessage)
+    names.tail.foreach(n => assert(!sameStem.getMessage.contains(n), sameStem.getMessage))
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted)
+
+    // a directory of filings and one of its files, named by the scan's file index
+    val filingDir = Files.createTempDirectory("graft_dup_dir")
+    val zf = new java.util.zip.ZipFile(zip(small))
+    try FilingSource.listEntries(zip(small)).foreach(e =>
+      Files.write(filingDir.resolve(e), zf.getInputStream(zf.getEntry(e)).readAllBytes()))
+    finally zf.close()
+    val dirAndFile = intercept[IllegalArgumentException] {
+      XbrlExtract.extract(spark, Seq(filingDir.toString, filingDir.resolve(first).toString),
+        taxonomy(small))
+    }
+    assert(dirAndFile.getMessage.contains(FilingSource.stem(first)), dirAndFile.getMessage)
+    names.tail.foreach(n => assert(!dirAndFile.getMessage.contains(n), dirAndFile.getMessage))
+    // a non-filing beside a filing of the same stem is not a repeat: the
+    // file index applies the scan's `*.xbrl` glob
+    Files.write(filingDir.resolve(s"${FilingSource.stem(first)}.json"), "{}".getBytes)
+    XbrlExtract.extract(spark, Seq(filingDir.toString), taxonomy(small)).release()
+  }
+
+  /** `src` with entry `name`'s compressed data cut to half its length:
+    * the sizes in its local and central headers say half, the bytes
+    * after stay as unreferenced slack, so the archive still opens and
+    * lists and only reading that entry fails.
+    */
+  private def truncateEntry(src: String, name: String, dst: Path): String = {
+    val b = Files.readAllBytes(new File(src).toPath)
+    def u16(i: Int) = (b(i) & 0xff) | (b(i + 1) & 0xff) << 8
+    def u32(i: Int) = u16(i) | u16(i + 2) << 16
+    def put32(i: Int, v: Int): Unit = (0 until 4).foreach(k => b(i + k) = (v >>> (8 * k)).toByte)
+    val nameBytes = name.getBytes("UTF-8")
+    val cen = (0 until b.length - 46).find { i =>
+      u32(i) == 0x02014b50 && u16(i + 28) == nameBytes.length &&
+        java.util.Arrays.equals(b.slice(i + 46, i + 46 + nameBytes.length), nameBytes)
+    }.getOrElse(fail(s"no central directory record for $name"))
+    val loc = u32(cen + 42)
+    val half = u32(cen + 20) / 2
+    put32(cen + 20, half)
+    put32(loc + 18, half)
+    Files.write(dst, b).toString
+  }
+
+  test("a truncated archive entry fails extract with an IOException naming the entry") {
+    val entry = FilingSource.listEntries(zip(small)).last
+    val dir = Files.createTempDirectory("graft_truncated")
+    val bad = truncateEntry(zip(small), entry, dir.resolve("ferc1-xbrl-2021.zip"))
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[Exception] {
+      XbrlExtract.extract(spark, Seq(bad), taxonomy(small))
+    }
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    val named = chain.collectFirst { case io: java.io.IOException if io.getMessage.contains(entry) => io }
+    assert(named.isDefined, s"no IOException naming $entry in:\n${chain.mkString("\n")}")
+    assert(named.get.getMessage.contains(bad), named.get.getMessage)
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted)
+  }
+}

@@ -586,26 +586,23 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("x05 shape: the grouped store aggregates the corpus once, per-table builds are map-only") {
-    // the full-extract path (x05 / writeParquetDatapackage): ONE store
-    // — dedup agg + map agg + context join over the persisted parse —
-    // then every one of the 255 tables is a filter-projection over the
-    // persisted store with ZERO exchanges of its own. This is the
-    // budget that scales: O(1) corpus aggregations for the whole
-    // datapackage, not O(tables).
+  test("x05 shape: the grouped store is built in the parse tasks, per-table builds are map-only") {
+    // the full-extract path (x05 / writeParquetDatapackage): ONE store,
+    // grouped and resolved inside the tasks that parse the filings —
+    // no exchange at all — then every one of the 255 tables is a
+    // filter-projection over the persisted store with ZERO exchanges
+    // of its own. This is the budget that scales: no corpus
+    // coordination for the whole datapackage.
     val fs = XbrlQueries.sharedParse(spark)
     val schemas = XbrlQueries.tableSchemas
     // audit the store's own plan UNPERSISTED (persisting hides it
     // inside an InMemoryRelation the walker doesn't enter)
-    val storePlan = graft.plans.FactTableBuilder.groupedStore(
-      schemas, fs.facts, fs.contexts, fs.meta)
-    assert(shuffles(storePlan) <= 5,
+    val storePlan = graft.plans.FactTableBuilder.groupedStore(schemas, Seq(fs))
+    assert(shuffles(storePlan) === 0,
       s"${shuffles(storePlan)} exchanges\n${storePlan.queryExecution.executedPlan}")
-    assert(inMemoryScans(storePlan) >= 2,
-      s"expected facts+contexts from the persisted parse\n${storePlan.queryExecution.executedPlan}")
-    val store = graft.plans.FactTableBuilder.groupedStore(
-        schemas, fs.facts, fs.contexts, fs.meta)
-      .persist()
+    assert(inMemoryScans(storePlan) === 1,
+      s"expected one scan of the persisted parse\n${storePlan.queryExecution.executedPlan}")
+    val store = graft.plans.FactTableBuilder.groupedStore(schemas, Seq(fs)).persist()
     try {
       val picks = Seq(
         schemas.find(_.name == "identification_001_duration").get,
