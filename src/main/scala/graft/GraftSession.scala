@@ -25,7 +25,7 @@ object GraftSession {
       if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
     } catch { case scala.util.control.NonFatal(_) => 0L }
 
-  /** The one CPU default of Verify, Bench, Profile and PlanDump:
+  /** The one CPU default of Main, Verify, Bench, Profile and PlanDump:
     * `SPARK_GRAFT_CPUS` when it is set, otherwise the host's processor
     * count.
     */

@@ -14,10 +14,13 @@ import graft.sinks.XbrlSinks
   *     [--duckdb-path P] [--cpus N] \
   *     [--loglevel LEVEL] [--logfile PATH] [--batch-size N]
   *
-  * Writes `<out>/fercN_xbrl/<table>.parquet/` parquet directories, the
+  * Writes, through [[XbrlExtract.writeDatapackage]],
+  * `<out>/fercN_xbrl/<table>.parquet/` parquet directories, the
   * sqlite-style descriptor `<out>/fercN_xbrl_datapackage.json`, the
   * parquet descriptor `<out>/fercN_xbrl/datapackage.json`
-  * (cli.py:211-236), and `<out>/fercN_xbrl_taxonomy_metadata.json`.
+  * (cli.py:211-236), and `<out>/fercN_xbrl_taxonomy_metadata.json`;
+  * a table that fails to write fails the run with an `IOException`
+  * naming it, after the descriptors of the tables that landed.
   * `--jdbc-url` additionally loads every table through Spark's JDBC
   * writer — the reference's SQLite/DuckDB load (cli.py:112-126);
   * `--sqlite-path` / `--duckdb-path` (the reference's own flag names,
@@ -46,7 +49,7 @@ object Main {
       instancePattern: Option[String] = None,
       jdbcUrl: Option[String] = None,
       // numeric: GraftSession sizes spark.sql.shuffle.partitions from it
-      cpus: String = Runtime.getRuntime.availableProcessors().toString,
+      cpus: String = GraftSession.defaultCpus,
       logLevel: Option[String] = None,
       logFile: Option[String] = None,
       batchSize: Option[Int] = None)
@@ -135,15 +138,9 @@ object Main {
     try {
       val out = XbrlExtract.extract(spark, args.filings, args.taxonomy,
         args.formNumber, args.requestedTables, args.instancePattern)
-      val n = args.formNumber
-      val tablesDir = s"${args.outputDir}/ferc${n}_xbrl"
-      XbrlSinks.writeParquetPooled(out.tables, tablesDir)
-      XbrlSinks.writeString(s"${args.outputDir}/ferc${n}_xbrl_datapackage.json",
-        XbrlSinks.datapackageJson(out.schemas, tablesDir, n, Some(out.tables.keySet)))
-      XbrlSinks.writeString(s"$tablesDir/datapackage.json",
-        XbrlSinks.datapackageParquetJson(out.schemas, n, Some(out.tables.keySet)))
-      XbrlSinks.writeString(s"${args.outputDir}/ferc${n}_xbrl_taxonomy_metadata.json",
-        XbrlSinks.metadataJson(out.taxonomies))
+      val tablesDir = s"${args.outputDir}/ferc${args.formNumber}_xbrl"
+      XbrlSinks.requireWritten(XbrlExtract.writeDatapackage(out.taxonomies, out.schemas,
+        out.tables, args.outputDir, args.formNumber))
       args.jdbcUrl.foreach(url => XbrlSinks.writeJdbc(out.tables, url))
       out.release()
       log.info(s"wrote ${out.tables.size} tables to $tablesDir")

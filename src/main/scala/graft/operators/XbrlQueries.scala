@@ -47,37 +47,48 @@ object XbrlQueries {
     * the same persisted parse, so parsing (and caching) the archive once
     * per JVM mirrors how a real deployment would share the long tables.
     * Bounded (a bench/test JVM holds a handful of sessions, never more):
-    * beyond [[MaxSessions]] the oldest entry is unpersisted and dropped,
-    * and [[invalidate]] releases a session's parse eagerly.
+    * beyond [[MaxSessions]] the oldest entry is released and dropped,
+    * and [[invalidate]] releases a session's entry eagerly.
     */
   private val MaxSessions = 4
   private val filingsCache =
-    scala.collection.mutable.LinkedHashMap.empty[SparkSession, graft.sources.ParsedFilings]
+    scala.collection.mutable.LinkedHashMap.empty[SparkSession, Entry]
 
-  private def filings(s: SparkSession): graft.sources.ParsedFilings = synchronized {
+  /** A session's parse and, once x05 has asked for it, the grouped fact
+    * store checkpointed from it with the function that frees the store's
+    * blocks — released together.
+    */
+  private final class Entry(val parsed: graft.sources.ParsedFilings) {
+    var store: Option[(DataFrame, () => Unit)] = None
+    def release(): Unit = { store.foreach(_._2()); parsed.unpersist() }
+  }
+
+  private def entry(s: SparkSession): Entry = synchronized {
     // explicit get/evict/put (never mutate inside getOrElseUpdate's
     // by-name default); evict stopped sessions first so a live session's
     // persisted parse is only dropped as a last resort
     filingsCache.get(s) match {
-      case Some(parsed) => parsed
+      case Some(e) => e
       case None =>
         while (filingsCache.size >= MaxSessions) {
           val victim = filingsCache.keys.find(_.sparkContext.isStopped)
             .getOrElse(filingsCache.head._1)
           filingsCache.remove(victim).foreach { old =>
             // unpersist on a stopped context throws; the blocks are gone
-            if (!victim.sparkContext.isStopped) old.unpersist()
+            if (!victim.sparkContext.isStopped) old.release()
           }
         }
-        val parsed = FilingSource.fromZip(s, requireArchive("ferc1-xbrl-2021.zip"))
-        filingsCache.put(s, parsed)
-        parsed
+        val e = new Entry(FilingSource.fromZip(s, requireArchive("ferc1-xbrl-2021.zip")))
+        filingsCache.put(s, e)
+        e
     }
   }
 
-  /** Release the parsed-filings store a session holds. */
+  private def filings(s: SparkSession): graft.sources.ParsedFilings = entry(s).parsed
+
+  /** Release the parsed filings and the grouped store a session holds. */
   def invalidate(s: SparkSession): Unit = synchronized {
-    filingsCache.remove(s).foreach(_.unpersist())
+    filingsCache.remove(s).foreach(_.release())
   }
 
   /** Test hooks (PlanAuditSpec pins x05's per-table plans against the
@@ -86,27 +97,22 @@ object XbrlQueries {
   private[graft] def sharedParse(s: SparkSession): graft.sources.ParsedFilings = filings(s)
   private[graft] def tableSchemas: Seq[TableSchema] = tables
 
-  /** The session-cached grouped fact store x05 writes from (dev/test
-    * hook — same SharedIndex entry the gate query uses).
+  /** The grouped fact store x05 writes from, built on x05's first call
+    * in a session (x01-x04 never build it) inside the tasks that parse
+    * the filings, as `XbrlExtract.extract` builds it, and held in the
+    * session's entry beside the parse. The store feeds 255 per-table
+    * plans per x05 run; `XbrlExtract.checkpointed` materializes it and
+    * truncates its lineage, so each plan ships a scan of a leaf RDD, not
+    * the parse lineage (r18 measured 255 pooled noop builds 4.1–6.0 s
+    * over the plain persisted store vs 1.3 s over the checkpointed one).
     */
-  private[graft] def sharedStore(s: SparkSession): DataFrame =
-    SharedIndex(s, "xbrl", "grouped_fact_store") {
-      val fs = filings(s)
-      // r18 (guide §3.3 "materialising an intermediate truncates the
-      // plan", §5 localCheckpoint): the store feeds 255+ independent
-      // per-table jobs per x05 run, and EVERY one of those jobs
-      // re-serialized the store's full lineage (zip parse onward) into
-      // its task binary on the single-threaded
-      // DAGScheduler event loop — measured r18: 255 pooled noop builds
-      // over the plain persisted store 4.1–6.0 s vs 1.3 s over the
-      // checkpointed one, identical rows. localCheckpoint materializes
-      // the 8k-row store eagerly and replaces the lineage with the
-      // checkpoint blocks, so each per-table job ships a scan of a
-      // leaf RDD. A cluster deployment with lineage-sensitive fault
-      // tolerance uses reliable checkpoint()/write-back instead — same
-      // §3.3 move, durable edition.
-      FactTableBuilder.groupedStore(tables, Seq(fs)).localCheckpoint()
-    }
+  private[graft] def sharedStore(s: SparkSession): DataFrame = synchronized {
+    val e = entry(s)
+    if (e.store.isEmpty)
+      e.store = Some(graft.XbrlExtract.checkpointed(
+        FactTableBuilder.groupedStore(tables, Seq(e.parsed))))
+    e.store.get._1
+  }
 
   /** x01: distributed parse of the ferc1 2021 filings archive — one
     * summary row per filing (context/fact counts by period type,
@@ -191,52 +197,25 @@ object XbrlQueries {
 
   /** x05: the reference's HEADLINE job, whole and measured — extract
     * every table of the merged ferc1 taxonomy from the 2021 archive and
-    * write the complete parquet datapackage (all 255 tables + validated
-    * descriptor + taxonomy metadata), the reference's actual CLI
-    * workload end to end (xbrl.py:86-140 + cli.py:101-130). One summary
-    * row per table with its written row/column counts; every table is a
-    * map-only filter-projection over the session-cached grouped fact
-    * store (built once from the ONE persisted parse — the archive is
-    * never re-parsed, the corpus never re-aggregated), and counts ride
-    * the write jobs via `observe`. Output lands under java.io.tmpdir
-    * (or GRAFT_X05_OUT), scoped `<base>/<applicationId>/run_<n>` —
-    * x05 is a WRITE workload by design, and the per-app per-run scope
-    * keeps concurrent JVMs out of each other's output and gives every
-    * bench rep a FRESH directory (r8's [7.9, 22.9] rep spread tracked
-    * overwrite pressure on 255 parquet dirs, not plan shape). The
-    * previous run's directory is removed after each run, bounding tmp
-    * usage at ~2 datapackages.
+    * write the complete parquet datapackage (all 255 tables, both
+    * validated descriptors, taxonomy metadata) through
+    * `XbrlExtract.writeDatapackage`, the writer `graft.Main` uses, in
+    * Main's layout (xbrl.py:86-140 + cli.py:101-130). One summary row
+    * per table `(table_name, n_rows, n_cols, error)`: a failed table is
+    * its row's error, the others still write. Every table is a map-only
+    * filter-projection over the session's grouped fact store
+    * ([[sharedStore]]: built once from the ONE persisted parse — the
+    * archive is never re-parsed, the corpus never re-aggregated), and
+    * counts are taken as the rows are written. Output lands under
+    * java.io.tmpdir (or GRAFT_X05_OUT), scoped
+    * `<base>/<applicationId>/run_<n>` — x05 is a WRITE workload by
+    * design, and the per-app per-run scope keeps concurrent JVMs out of
+    * each other's output and gives every bench rep a FRESH directory
+    * (r8's [7.9, 22.9] rep spread tracked overwrite pressure on 255
+    * parquet dirs, not plan shape). The previous run's directory is
+    * removed after each run, bounding tmp usage at ~2 datapackages.
     */
   private val x05Runs = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** File-sizing row estimates for the shared grouped store — computed
-    * once per session beside the store itself (the same SharedIndex
-    * discipline: the estimate is index METADATA of the cached store,
-    * 255 numbers, not a query result) instead of re-running the
-    * explode+distinct estimation pass on every x05 write run.
-    */
-  // keyed by (session, store REFERENCE) — r18, ADVICE r17: the estimate
-  // is metadata OF a specific store instance; keying by session alone
-  // could serve stale file-sizing counts if the session-cached store
-  // were ever rebuilt within one session. Same identity as the
-  // SharedIndex entry the store comes from, so the two cannot diverge.
-  private val rowEstimatesCache = scala.collection.mutable.LinkedHashMap
-    .empty[(SparkSession, org.apache.spark.sql.DataFrame), Map[String, Long]]
-
-  private def rowEstimates(s: SparkSession, store: org.apache.spark.sql.DataFrame):
-      Map[String, Long] = synchronized {
-    rowEstimatesCache.get((s, store)) match {
-      case Some(m) => m
-      case None =>
-        while (rowEstimatesCache.size >= MaxSessions)
-          rowEstimatesCache.remove(
-            rowEstimatesCache.keys.find(_._1.sparkContext.isStopped)
-              .getOrElse(rowEstimatesCache.head._1))
-        val m = graft.XbrlExtract.estimateTableRows(s, tables, store)
-        rowEstimatesCache.put((s, store), m)
-        m
-    }
-  }
 
   private def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
@@ -249,18 +228,19 @@ object XbrlQueries {
     val scope = s"$base/${s.sparkContext.applicationId}"
     val run = x05Runs.incrementAndGet()
     val store = sharedStore(s)
-    // pool sized to the session's cores (floor 16): the per-table jobs
-    // are single-task writes over the tiny cached store, so the pool
-    // width IS the write concurrency — 16 on a 32-core session left
-    // half the cores idle (measured r17: 255 writes 6.2-7.2 s at 16 vs
-    // 5.4-5.8 s at 32; guide §2.6 overlap independent jobs)
-    val summary = graft.XbrlExtract.writeParquetDatapackage(
-      s, taxonomies, tables, filings(s), s"$scope/run_$run",
-      poolSize = math.max(16, s.sparkContext.defaultParallelism),
-      store = Some(store), rowEstimates = Some(rowEstimates(s, store)))
-    // writes are complete here (the datapackage writer awaits its jobs):
+    // pool sized to the session's cores (floor 16): the pool plans the
+    // 255 tables before the one write job, so its width is the planning
+    // concurrency (guide §2.6 overlap independent work)
+    val written = graft.XbrlExtract.writeDatapackage(taxonomies, tables,
+      tables.map(t => t.name -> FactTableBuilder.buildFromStore(t, store)).toMap,
+      s"$scope/run_$run", poolSize = math.max(16, s.sparkContext.defaultParallelism))
+    // writes are complete here (the datapackage writer awaits its job):
     // drop the predecessor so repeat runs don't accumulate
     if (run > 1) deleteRecursively(new java.io.File(s"$scope/run_${run - 1}"))
-    summary
+    import s.implicits._
+    tables.map { t =>
+      val r = written(t.name)
+      (t.name, r.toOption, t.fields.size, r.left.toOption)
+    }.toDF("table_name", "n_rows", "n_cols", "error").orderBy("table_name")
   }
 }

@@ -26,9 +26,9 @@ import graft.xbrl.{Concept, TableSchema, Taxonomy}
 /** Output sinks + descriptors (SURVEY.md §2.2 `xbrl_write`; reference
   * cli.py:101-130, xbrl.py:257-281).
   *
-  * Tables write through Spark's native writers — parquet is the lake
-  * format (partitionable, predicate-pushable at 100 TB), CSV for
-  * interchange, JDBC for the reference's SQLite/DuckDB use case (tested
+  * Tables write through Spark — parquet is the lake format
+  * (partitionable, predicate-pushable at 100 TB), one file per table in
+  * one batched job; JDBC for the reference's SQLite/DuckDB use case (tested
   * on embedded Derby; any JDBC driver on the classpath works the same
   * way). The datapackage descriptor and taxonomy metadata JSON mirror
   * the reference's Frictionless output field-for-field.
@@ -38,17 +38,10 @@ object XbrlSinks {
   /** Each table lands at `<outDir>/<name>.parquet` — a Spark parquet
     * directory whose name carries the suffix so the layout agrees with
     * the datapackage descriptor's `path` (the reference CLI writes
-    * literal `<table>.parquet` files; cli.py:211-230).
-    */
-  def writeParquet(tables: Map[String, DataFrame], outDir: String): Unit =
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-    }
-
-  /** [[writeParquet]]'s layout through the batched writer
-    * ([[writeSingleFileTables]]): one `part-*.parquet` plus `_SUCCESS`
-    * per table, every table in ONE Spark job. `graft.Main` writes
-    * through this; x05's datapackage writer shares the same batch.
+    * literal `<table>.parquet` files; cli.py:211-230) — through the
+    * batched writer ([[writeSingleFileTables]]): one `part-*.parquet`
+    * plus `_SUCCESS` per table, every table in ONE Spark job.
+    * `graft.XbrlExtract.writeDatapackage` shares the same batch.
     *
     * Fail-fast: if any table fails to plan or write, this throws an
     * exception naming every failed table (the tables that succeeded
@@ -57,17 +50,32 @@ object XbrlSinks {
     */
   def writeParquetPooled(tables: Map[String, DataFrame], outDir: String,
       poolSize: Int = 8,
-      timeout: Duration = Duration(30, "min")): Unit = {
-    if (tables.isEmpty) return
-    val spark = tables.head._2.sparkSession
-    val results = onPool(spark, poolSize, timeout, "parquet write") { (group, ec) =>
-      writeSingleFileTables(spark, tables.toSeq.map { case (n, df) => n -> (() => df) },
-        outDir, group)(ec)
+      timeout: Duration = Duration(30, "min")): Unit =
+    requireWritten(writeTables(tables, outDir, poolSize, timeout))
+
+  /** [[writeSingleFileTables]] of `tables` into `outDir` on a pool of
+    * `poolSize` threads, bounded by `timeout` ([[onPool]]): each
+    * table's row count, or the error that stopped it.
+    */
+  private[graft] def writeTables(tables: Map[String, DataFrame], outDir: String,
+      poolSize: Int, timeout: Duration): Map[String, Either[String, Long]] =
+    if (tables.isEmpty) Map.empty
+    else {
+      val spark = tables.head._2.sparkSession
+      onPool(spark, poolSize, timeout, "parquet write") { (group, ec) =>
+        writeSingleFileTables(spark, tables.toSeq.map { case (n, df) => n -> (() => df) },
+          outDir, group)(ec)
+      }.toMap
     }
+
+  /** Throws an `IOException` naming every table of `results` that
+    * failed to write.
+    */
+  private[graft] def requireWritten(results: Map[String, Either[String, Long]]): Unit = {
     val failed = results.collect { case (name, Left(err)) => s"$name ($err)" }
     if (failed.nonEmpty)
       throw new java.io.IOException(
-        s"${failed.size} of ${tables.size} tables failed to write: ${failed.sorted.mkString("; ")}")
+        s"${failed.size} of ${results.size} tables failed to write: ${failed.toSeq.sorted.mkString("; ")}")
   }
 
   /** Runs `body` on a fresh pool of `poolSize` driver threads and waits
@@ -249,11 +257,6 @@ object XbrlSinks {
   /** A table's error, as its summary row's `error` field carries it. */
   private[graft] def describe(e: Throwable): String = s"${e.getClass.getName}: ${e.getMessage}"
 
-  def writeCsv(tables: Map[String, DataFrame], outDir: String): Unit =
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").option("header", "true").csv(s"$outDir/$name")
-    }
-
   /** JDBC load — the analog of the reference's SQLite `to_sql` replace
     * (cli.py:110-118).
     */
@@ -295,55 +298,42 @@ object XbrlSinks {
     * Validates schema consistency before serializing.
     */
   def datapackageJson(schemas: Seq[TableSchema], dbUri: String, formNumber: Int = 1,
-      tableNames: Option[Set[String]] = None): String = {
-    validateSchemas(schemas, tableNames)
-    def field(f: graft.xbrl.TableField) = ordered(
-      "name" -> f.name, "title" -> f.title, "type" -> f.schemaType,
-      "format" -> "default", "description" -> f.description)
-    val resources = schemas.map { t =>
-      ordered(
-        "path" -> dbUri,
-        "profile" -> "tabular-data-resource",
-        "name" -> t.name,
-        "dialect" -> ordered("table" -> t.name),
-        "title" -> t.title,
-        "description" -> t.description,
-        "format" -> "sqlite",
-        "mediatype" -> "application/vnd.sqlite3",
-        "schema" -> ordered(
-          "fields" -> t.fields.map(field).asJava,
-          "primary_key" -> t.primaryKey.asJava))
-    }
-    val pkg = ordered(
-      "profile" -> "tabular-data-package",
-      "name" -> s"ferc$formNumber-extracted-xbrl",
-      "title" -> "Ferc1 data extracted from XBRL filings",
-      "resources" -> resources.asJava)
-    new ObjectMapper().writerWithDefaultPrettyPrinter().writeValueAsString(pkg)
-  }
+      tableNames: Option[Set[String]] = None): String =
+    descriptor(schemas, formNumber, tableNames, sqlite = true, _ => dbUri)
 
   /** Parquet-flavored descriptor — the reference's converted datapackage
     * for its parquet output (cli.py:211-230): each resource points at
     * `<name>.parquet` with parquet format/mediatype and no dialect.
     */
   def datapackageParquetJson(schemas: Seq[TableSchema], formNumber: Int = 1,
-      tableNames: Option[Set[String]] = None): String = {
+      tableNames: Option[Set[String]] = None): String =
+    descriptor(schemas, formNumber, tableNames, sqlite = false, t => s"${t.name}.parquet")
+
+  /** The one body of both descriptors: a sqlite resource carries a
+    * `dialect` naming its table, a parquet one does not.
+    */
+  private def descriptor(schemas: Seq[TableSchema], formNumber: Int,
+      tableNames: Option[Set[String]], sqlite: Boolean, path: TableSchema => String): String = {
     validateSchemas(schemas, tableNames)
     def field(f: graft.xbrl.TableField) = ordered(
       "name" -> f.name, "title" -> f.title, "type" -> f.schemaType,
       "format" -> "default", "description" -> f.description)
+    val (format, mediatype) =
+      if (sqlite) ("sqlite", "application/vnd.sqlite3")
+      else ("parquet", "application/vnd.apache.parquet")
     val resources = schemas.map { t =>
-      ordered(
-        "path" -> s"${t.name}.parquet",
+      val dialect = if (sqlite) Seq("dialect" -> ordered("table" -> t.name)) else Nil
+      ordered(Seq[(String, Object)](
+        "path" -> path(t),
         "profile" -> "tabular-data-resource",
-        "name" -> t.name,
+        "name" -> t.name) ++ dialect ++ Seq[(String, Object)](
         "title" -> t.title,
         "description" -> t.description,
-        "format" -> "parquet",
-        "mediatype" -> "application/vnd.apache.parquet",
+        "format" -> format,
+        "mediatype" -> mediatype,
         "schema" -> ordered(
           "fields" -> t.fields.map(field).asJava,
-          "primary_key" -> t.primaryKey.asJava))
+          "primary_key" -> t.primaryKey.asJava)): _*)
     }
     val pkg = ordered(
       "profile" -> "tabular-data-package",

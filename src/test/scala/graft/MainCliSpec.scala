@@ -13,9 +13,10 @@ import org.apache.spark.sql.functions.{col, lit, raise_error, when}
   * `truth.json`): every requested table written as one part file plus
   * `_SUCCESS` with the planted row count, both datapackage descriptors
   * listing exactly the requested tables, and every block the extraction
-  * persisted or checkpointed freed again once the run is over. The
-  * datapackage writer shares Main's batched table writer but keeps its
-  * own contract: a failed table is an error row, not a throw.
+  * persisted or checkpointed freed again once the run is over. Main's
+  * writer, `XbrlExtract.writeDatapackage`, reports a failed table as its
+  * error and lists only the tables that landed; its descriptors are
+  * pinned field by field.
   */
 class MainCliSpec extends SparkSpec {
 
@@ -64,51 +65,90 @@ class MainCliSpec extends SparkSpec {
     assert(Files.isRegularFile(Paths.get(s"$out/ferc1_xbrl_taxonomy_metadata.json")))
   }
 
-  private lazy val taxonomies =
-    graft.sources.TaxonomyParser.parseArchive(s"$data/ferc1-xbrl-taxonomies.zip")
-  private lazy val schemas = graft.plans.FactTableSchema.fromTaxonomies(taxonomies)
-    .filter(t => requested.contains(t.name))
+  /** The requested tables extracted from the season; `release()` them. */
+  private def extracted() = XbrlExtract.extract(spark, Seq(s"$data/ferc1-xbrl-2021.zip"),
+    s"$data/ferc1-xbrl-taxonomies.zip", requestedTables = Some(requested.toSet))
 
-  /** Summary rows of one datapackage write of the requested tables. */
-  private def datapackage(out: String, targetRowsPerFile: Long = 4000000L,
-      buildTable: (graft.xbrl.TableSchema, org.apache.spark.sql.DataFrame) =>
-        org.apache.spark.sql.DataFrame = graft.plans.FactTableBuilder.buildFromStore) = {
-    val parsed = graft.sources.FilingSource.fromPath(spark, s"$data/ferc1-xbrl-2021.zip")
-    try XbrlExtract.writeParquetDatapackage(spark, taxonomies, schemas, parsed, out,
-      targetRowsPerFile = targetRowsPerFile, buildTable = buildTable).collect()
-    finally parsed.unpersist()
-  }
-
-  test("writeParquetDatapackage contains a failed table as its error row; the descriptor lists the rest") {
+  test("writeDatapackage: a failed table is its error, both descriptors list the rest") {
     val broken = requested.maxBy(expected) // rows to fail on
     val out = Files.createTempDirectory("graft_datapackage").toString
-    val summary = datapackage(out, buildTable = (t, store) => {
-      val df = graft.plans.FactTableBuilder.buildFromStore(t, store)
-      if (t.name != broken) df
-      else df.withColumn("entity_id", when(col("entity_id").isNotNull,
+    val ex = extracted()
+    val results = try {
+      val failing = ex.tables(broken).withColumn("entity_id", when(col("entity_id").isNotNull,
         raise_error(lit("planted failure"))).otherwise(col("entity_id")))
-    })
-    val byName = summary.map(r => r.getString(0) -> r).toMap
-    assert(byName.keySet === requested.toSet)
-    assert(byName(broken).isNullAt(1) && byName(broken).getString(3).contains("planted failure"))
-    for (t <- requested if t != broken) {
-      assert(byName(t).getLong(1) === expected(t), t)
-      assert(byName(t).isNullAt(3), byName(t))
-    }
-    assert(!new File(s"$out/tables/$broken.parquet").exists())
-    assert(resources(s"$out/datapackage.json") === requested.toSet - broken)
+      XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables.updated(broken, failing), out)
+    } finally ex.release()
+    assert(results.keySet === requested.toSet)
+    assert(results(broken).left.exists(_.contains("planted failure")), results(broken))
+    for (t <- requested if t != broken) assert(results(t) === Right(expected(t)), t)
+    assert(!new File(s"$out/ferc1_xbrl/$broken.parquet").exists())
+    for (t <- requested if t != broken)
+      assert(spark.read.parquet(s"$out/ferc1_xbrl/$t.parquet").count() === expected(t), t)
+    for (d <- Seq(s"$out/ferc1_xbrl/datapackage.json", s"$out/ferc1_xbrl_datapackage.json"))
+      assert(resources(d) === requested.toSet - broken, d)
+    assert(Files.isRegularFile(Paths.get(s"$out/ferc1_xbrl_taxonomy_metadata.json")))
   }
 
-  test("writeParquetDatapackage splits a table past targetRowsPerFile into several files") {
-    val big = requested.maxBy(expected)
-    val target = expected(big) / 3 + 1
-    val out = Files.createTempDirectory("graft_datapackage_sized").toString
-    val summary = datapackage(out, targetRowsPerFile = target)
-    assert(summary.forall(_.isNullAt(3)), summary.mkString("; "))
-    assert(summary.map(r => r.getString(0) -> r.getLong(1)).toMap === expected)
-    val parts = new File(s"$out/tables/$big.parquet").listFiles()
-      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-    assert(parts > 1, s"$big: ${expected(big)} rows at $target a file")
-    assert(spark.read.parquet(s"$out/tables/$big.parquet").count() === expected(big))
+  test("writeDatapackage past its timeout throws and writes no descriptor") {
+    val out = Files.createTempDirectory("graft_datapackage_timeout").toString
+    val ex = extracted()
+    try intercept[java.util.concurrent.TimeoutException] {
+      XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables, out,
+        timeout = scala.concurrent.duration.Duration(1, "ms"))
+    } finally ex.release()
+    for (d <- Seq("ferc1_xbrl/datapackage.json", "ferc1_xbrl_datapackage.json",
+        "ferc1_xbrl_taxonomy_metadata.json"))
+      assert(!Files.exists(Paths.get(s"$out/$d")), d)
+  }
+
+  test("both datapackage descriptors carry every field of the season's schemas") {
+    val schemas = graft.plans.FactTableSchema.fromTaxonomies(
+      graft.sources.TaxonomyParser.parseArchive(s"$data/ferc1-xbrl-taxonomies.zip"))
+      .filter(t => requested.contains(t.name))
+    assert(schemas.size === requested.size)
+    val names = Some(schemas.map(_.name).toSet)
+    def read(json: String) = new ObjectMapper().readTree(json)
+    val sqlite = read(graft.sinks.XbrlSinks.datapackageJson(schemas, "/data/ferc2_xbrl", 2, names))
+    val parquet = read(graft.sinks.XbrlSinks.datapackageParquetJson(schemas, 2, names))
+    def keys(n: com.fasterxml.jackson.databind.JsonNode) = n.fieldNames().asScala.toSeq
+    for (root <- Seq(sqlite, parquet)) {
+      assert(keys(root) === Seq("profile", "name", "title", "resources"))
+      assert(root.get("profile").textValue === "tabular-data-package")
+      assert(root.get("name").textValue === "ferc2-extracted-xbrl")
+      assert(root.get("title").textValue === "Ferc1 data extracted from XBRL filings")
+      val resources = root.get("resources").elements().asScala.toSeq
+      assert(resources.map(_.get("name").textValue) === schemas.map(_.name))
+      for ((r, t) <- resources.zip(schemas)) {
+        assert(r.get("profile").textValue === "tabular-data-resource", t.name)
+        assert(r.get("title").textValue === t.title, t.name)
+        assert(r.get("description").textValue === t.description, t.name)
+        val schema = r.get("schema")
+        assert(keys(schema) === Seq("fields", "primary_key"), t.name)
+        assert(schema.get("primary_key").elements().asScala.map(_.textValue).toSeq === t.primaryKey)
+        val fields = schema.get("fields").elements().asScala.toSeq
+        assert(fields.size === t.fields.size, t.name)
+        for ((f, tf) <- fields.zip(t.fields)) {
+          assert(keys(f) === Seq("name", "title", "type", "format", "description"), t.name)
+          assert(f.get("name").textValue === tf.name && f.get("title").textValue === tf.title &&
+            f.get("type").textValue === tf.schemaType && f.get("format").textValue === "default" &&
+            f.get("description").textValue === tf.description, s"${t.name}.${tf.name}")
+        }
+      }
+    }
+    for ((r, t) <- sqlite.get("resources").elements().asScala.toSeq.zip(schemas)) {
+      assert(keys(r) === Seq("path", "profile", "name", "dialect", "title", "description",
+        "format", "mediatype", "schema"), t.name)
+      assert(r.get("path").textValue === "/data/ferc2_xbrl", t.name)
+      assert(keys(r.get("dialect")) === Seq("table") && r.get("dialect").get("table").textValue === t.name)
+      assert(r.get("format").textValue === "sqlite" &&
+        r.get("mediatype").textValue === "application/vnd.sqlite3", t.name)
+    }
+    for ((r, t) <- parquet.get("resources").elements().asScala.toSeq.zip(schemas)) {
+      assert(keys(r) === Seq("path", "profile", "name", "title", "description",
+        "format", "mediatype", "schema"), t.name)
+      assert(r.get("path").textValue === s"${t.name}.parquet", t.name)
+      assert(r.get("format").textValue === "parquet" &&
+        r.get("mediatype").textValue === "application/vnd.apache.parquet", t.name)
+    }
   }
 }

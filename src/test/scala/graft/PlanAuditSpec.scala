@@ -587,7 +587,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("x05 shape: the grouped store is built in the parse tasks, per-table builds are map-only") {
-    // the full-extract path (x05 / writeParquetDatapackage): ONE store,
+    // the full-extract path (x05 / XbrlExtract.extract): ONE store,
     // grouped and resolved inside the tasks that parse the filings —
     // no exchange at all — then every one of the 255 tables is a
     // filter-projection over the persisted store with ZERO exchanges

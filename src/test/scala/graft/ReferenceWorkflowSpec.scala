@@ -26,32 +26,33 @@ class ReferenceWorkflowSpec extends SparkSpec {
 
   test("full extract -> parquet datapackage -> latest-filing-wins, end to end") {
     val dir = Files.createTempDirectory("graft_workflow").toString
-    val out = XbrlExtract.extractToParquet(
+    val out = XbrlExtract.extract(
       spark,
       Seq(archive("ferc1-xbrl-2021.zip")),
-      archive("ferc1-xbrl-taxonomies.zip"),
-      dir)
+      archive("ferc1-xbrl-taxonomies.zip"))
     try {
+      graft.sinks.XbrlSinks.requireWritten(
+        XbrlExtract.writeDatapackage(out.taxonomies, out.schemas, out.tables, dir))
       // the whole datapackage landed: every taxonomy table + descriptor
       // + metadata (255 = the reference's own regression count)
       assert(out.tables.size === 255)
       val root = new ObjectMapper().readTree(
-        Files.readString(Paths.get(s"$dir/datapackage.json")))
+        Files.readString(Paths.get(s"$dir/ferc1_xbrl/datapackage.json")))
       assert(root.get("resources").size === 255)
-      assert(Files.exists(Paths.get(s"$dir/taxonomy_metadata.json")))
+      assert(Files.exists(Paths.get(s"$dir/ferc1_xbrl_taxonomy_metadata.json")))
       // descriptor <-> layout parity: the resource list and the written
       // table directories must match EXACTLY (a silently-skipped table
       // would leave a descriptor entry with no data behind it)
       val described = root.get("resources").elements().asScala
         .map(_.get("name").asText).toSet
-      val written = new java.io.File(s"$dir/tables").listFiles()
+      val written = new java.io.File(s"$dir/ferc1_xbrl").listFiles()
         .filter(_.isDirectory).map(_.getName.stripSuffix(".parquet")).toSet
       assert(described === written)
       assert(described === out.tables.keySet)
 
       // downstream consumption path: read a written table back and run
       // the PUDL latest-filing-wins dedup on its PK grain
-      val ident = spark.read.parquet(s"$dir/tables/identification_001_duration.parquet")
+      val ident = spark.read.parquet(s"$dir/ferc1_xbrl/identification_001_duration.parquet")
       assert(ident.count() === 10L) // one row per 2021 filing
       val w = Window.partitionBy("entity_id", "start_date", "end_date")
         .orderBy(col("publication_time").desc, col("filing_name").desc)
@@ -276,6 +277,8 @@ class ReferenceWorkflowSpec extends SparkSpec {
     assert(a.formNumber === 2)
     assert(a.batchSize === Some(16))
     assert(a.cpus === "8")
+    // without -w, the one CPU default of every main
+    assert(Main.parse(List("filings.zip"), Main.Args()).cpus === GraftSession.defaultCpus)
     // --workers is the reference's long spelling of -w
     val b = Main.parse(
       List("filings.zip", "--taxonomy", "tax.zip", "--output-dir", "/tmp/o",

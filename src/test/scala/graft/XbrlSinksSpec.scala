@@ -39,7 +39,7 @@ class XbrlSinksSpec extends SparkSpec {
 
   test("parquet sink round-trips the identification table") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    XbrlSinks.writeParquet(out.tables.view.filterKeys(_ == "identification_001_duration").toMap, dir)
+    XbrlSinks.writeParquetPooled(out.tables.view.filterKeys(_ == "identification_001_duration").toMap, dir)
     val back = spark.read.parquet(s"$dir/identification_001_duration.parquet")
     assert(back.count() === 10L)
     assert(back.filter(col("report_date") === "2022-04-13").count() >= 1L)
@@ -49,115 +49,79 @@ class XbrlSinksSpec extends SparkSpec {
     new java.io.File(dir).listFiles().filter(f =>
       f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
 
-  test("writeParquetDatapackage writes tables + descriptors with observe-exact counts") {
+  /** The requested tables of a fresh extraction; `release()` them. */
+  private def extracted() = XbrlExtract.extract(
+    spark,
+    Seq(s"$dataDir/ferc1-xbrl-2021.zip"),
+    s"$dataDir/ferc1-xbrl-taxonomies.zip",
+    requestedTables = Some(requested))
+
+  test("writeDatapackage writes tables + descriptors with exact counts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_x05_scoped").toString
-    val taxonomies = graft.sources.TaxonomyParser.parseArchive(
-      s"$dataDir/ferc1-xbrl-taxonomies.zip")
-    val schemas = graft.plans.FactTableSchema.fromTaxonomies(taxonomies)
-      .filter(t => requested.contains(t.name))
-    val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
+    val ex = extracted()
     try {
-      val summary = XbrlExtract.writeParquetDatapackage(
-        spark, taxonomies, schemas, parsed, dir).collect()
-      assert(summary.map(_.getString(0)).toSet === requested)
-      // the observe-piggybacked counts must equal what actually landed,
-      // and n_cols the written width; nothing failed
-      summary.foreach { r =>
-        val back = spark.read.parquet(s"$dir/tables/${r.getString(0)}.parquet")
-        assert(back.count() === r.getLong(1), r.getString(0))
-        assert(back.columns.length === r.getInt(2), r.getString(0))
-        assert(r.isNullAt(3), s"${r.getString(0)}: ${r.getString(3)}")
+      val summary = XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables, dir)
+      assert(summary.keySet === requested)
+      // the counts taken while writing must equal what actually landed,
+      // and the written width the schema's; nothing failed
+      summary.foreach { case (name, result) =>
+        assert(result.isRight, s"$name: $result")
+        val back = spark.read.parquet(s"$dir/ferc1_xbrl/$name.parquet")
+        assert(back.count() === result.toOption.get, name)
+        assert(back.columns.length === ex.schemas.find(_.name == name).get.fields.size, name)
         // ferc1-sized tables keep the reference's one-file-per-table
-        // layout under the size-aware default
-        assert(partFiles(s"$dir/tables/${r.getString(0)}.parquet").length === 1, r.getString(0))
+        // layout
+        assert(partFiles(s"$dir/ferc1_xbrl/$name.parquet").length === 1, name)
       }
-      assert(summary.find(_.getString(0) == "identification_001_duration")
-        .get.getLong(1) === 10L)
+      assert(summary("identification_001_duration") === Right(10L))
       val root = new ObjectMapper().readTree(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/datapackage.json")))
+        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/ferc1_xbrl/datapackage.json")))
       val resources = root.get("resources").elements()
       val names = Iterator.continually(resources)
         .takeWhile(_.hasNext).map(_.next().get("name").asText()).toSet
       assert(names === requested)
       assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/taxonomy_metadata.json")))
-    } finally parsed.unpersist()
+        java.nio.file.Paths.get(s"$dir/ferc1_xbrl_taxonomy_metadata.json")))
+    } finally ex.release()
   }
 
   test("datapackage write contains a failed table: others report, descriptor lists only written tables") {
     val dir = java.nio.file.Files.createTempDirectory("graft_x05_contained").toString
-    val taxonomies = graft.sources.TaxonomyParser.parseArchive(
-      s"$dataDir/ferc1-xbrl-taxonomies.zip")
-    val schemas = graft.plans.FactTableSchema.fromTaxonomies(taxonomies)
-      .filter(t => requested.contains(t.name))
-    val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
+    val ex = extracted()
     val poison = "energy_storage_operations_small_plants_419_duration"
     try {
-      val summary = XbrlExtract.writeParquetDatapackage(
-        spark, taxonomies, schemas, parsed, dir,
-        buildTable = (t, st) =>
-          if (t.name == poison) throw new RuntimeException("injected table failure")
-          else graft.plans.FactTableBuilder.buildFromStore(t, st)).collect()
-      // the failure is NAMED in its summary row; the other table still
+      // fails on its one row, whatever rows the real table has
+      val failing = spark.range(1).select(raise_error(lit("injected table failure")).as("entity_id"))
+      val summary = XbrlExtract.writeDatapackage(
+        ex.taxonomies, ex.schemas, ex.tables.updated(poison, failing), dir)
+      // the failure is NAMED in its result; the other table still
       // wrote and reports its counts
-      assert(summary.length === 2)
-      val failed = summary.find(_.getString(0) == poison).get
-      assert(failed.isNullAt(1))
-      assert(failed.getString(3).contains("injected table failure"))
-      val ok = summary.find(_.getString(0) == "identification_001_duration").get
-      assert(ok.getLong(1) === 10L && ok.isNullAt(3))
-      assert(spark.read.parquet(s"$dir/tables/identification_001_duration.parquet").count() === 10L)
+      assert(summary.size === 2)
+      assert(summary(poison).left.exists(_.contains("injected table failure")), summary(poison))
+      assert(summary("identification_001_duration") === Right(10L))
+      assert(spark.read.parquet(s"$dir/ferc1_xbrl/identification_001_duration.parquet").count() === 10L)
       // the descriptor, written after the jobs, must reference ONLY the
       // table that actually landed
       val root = new ObjectMapper().readTree(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/datapackage.json")))
+        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/ferc1_xbrl/datapackage.json")))
       val described = root.get("resources").elements()
       val names = Iterator.continually(described)
         .takeWhile(_.hasNext).map(_.next().get("name").asText()).toSet
       assert(names === Set("identification_001_duration"))
-    } finally parsed.unpersist()
+    } finally ex.release()
   }
 
   test("datapackage write timeout cancels in-flight jobs and writes no descriptor") {
     val dir = java.nio.file.Files.createTempDirectory("graft_x05_timeout").toString
-    val taxonomies = graft.sources.TaxonomyParser.parseArchive(
-      s"$dataDir/ferc1-xbrl-taxonomies.zip")
-    val schemas = graft.plans.FactTableSchema.fromTaxonomies(taxonomies)
-      .filter(t => requested.contains(t.name))
-    val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
+    val ex = extracted()
     try {
       intercept[java.util.concurrent.TimeoutException] {
-        XbrlExtract.writeParquetDatapackage(
-          spark, taxonomies, schemas, parsed, dir,
-          timeout = scala.concurrent.duration.Duration(1, "ms"),
-          buildTable = (t, st) => {
-            Thread.sleep(2000)
-            graft.plans.FactTableBuilder.buildFromStore(t, st)
-          })
+        XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables, dir,
+          timeout = scala.concurrent.duration.Duration(1, "ms"))
       }
       assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/datapackage.json")))
-    } finally parsed.unpersist()
-  }
-
-  test("size-aware write parallelism: a table past targetRowsPerFile writes >1 file") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_x05_sized").toString
-    val taxonomies = graft.sources.TaxonomyParser.parseArchive(
-      s"$dataDir/ferc1-xbrl-taxonomies.zip")
-    val schemas = graft.plans.FactTableSchema.fromTaxonomies(taxonomies)
-      .filter(_.name == "identification_001_duration")
-    val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
-    try {
-      // 10 rows with a 4-row file target: the same mechanism that keeps
-      // small tables at one file splits a "mega" table (relative to the
-      // target) into ceil(10/4)=3 files without any manual lever
-      val summary = XbrlExtract.writeParquetDatapackage(
-        spark, taxonomies, schemas, parsed, dir, targetRowsPerFile = 4L).collect()
-      assert(summary.head.getLong(1) === 10L)
-      val files = partFiles(s"$dir/tables/identification_001_duration.parquet")
-      assert(files.length > 1, files.map(_.getName).mkString(","))
-      assert(spark.read.parquet(s"$dir/tables/identification_001_duration.parquet").count() === 10L)
-    } finally parsed.unpersist()
+        java.nio.file.Paths.get(s"$dir/ferc1_xbrl/datapackage.json")))
+    } finally ex.release()
   }
 
   test("jdbc sink loads into embedded Derby") {
