@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.Tables
 import graft.functions.CosineSimilarity
 
@@ -50,15 +51,20 @@ object Dedup {
     */
   private[operators] val MaxShingleDF = 200L
 
-  /** Shingle-bucket plan over any normalized `(doc_id, text)` frame: one
-    * row per distinct word-3-gram shingle with the sorted list of doc_ids
-    * containing it, DF-capped by filtering on the bucket size (one
-    * shuffle; the cap costs nothing extra). Candidate pairs come from
-    * in-bucket array combinations, which beats a shingle self-join: the
-    * exploded store shuffles ONCE (groupBy shingle) instead of twice
-    * (both join sides), and pair generation is a codegen'd array
-    * comprehension per bucket row.
+  /** The capped bucket store in FLAT form (one row per id, hot keys
+    * dropped by the same window count) — for consumers that pair via a
+    * codegen'd self-join instead of the list explode
+    * ([[Similarity.knnFromBuckets]]).
     */
+  private[operators] def cappedFlatBuckets(df: DataFrame, keys: Seq[String],
+      cap: Long, minSize: Long): DataFrame = {
+    val keyCols = keys.map(col)
+    val w = Window.partitionBy(keyCols: _*)
+    df.withColumn("__n", count(lit(1)).over(w))
+      .filter(col("__n") <= cap && col("__n") >= minSize)
+      .drop("__n")
+  }
+
   /** (key..., ids) buckets with the size cap enforced BEFORE the list
     * aggregation: a window count over the bucket key decides the cap,
     * and only surviving rows reach the list-collect. The one-pass
@@ -74,20 +80,6 @@ object Dedup {
     * additionally drops singleton buckets when the only consumer is
     * pair generation.
     */
-  /** The capped bucket store in FLAT form (one row per id, hot keys
-    * dropped by the same window count) — for consumers that pair via a
-    * codegen'd self-join instead of the list explode
-    * ([[Similarity.knnFromBuckets]]).
-    */
-  private[operators] def cappedFlatBuckets(df: DataFrame, keys: Seq[String],
-      cap: Long, minSize: Long): DataFrame = {
-    val keyCols = keys.map(col)
-    val w = Window.partitionBy(keyCols: _*)
-    df.withColumn("__n", count(lit(1)).over(w))
-      .filter(col("__n") <= cap && col("__n") >= minSize)
-      .drop("__n")
-  }
-
   private[operators] def cappedIdBuckets(df: DataFrame, keys: Seq[String], idCol: String,
       cap: Long, minSize: Long): DataFrame = {
     val keyCols = keys.map(col)
@@ -95,25 +87,54 @@ object Dedup {
       .groupBy(keyCols: _*).agg(sort_array(collect_list(col(idCol))).as("ids"))
   }
 
-  private[operators] def buildShingleBuckets(docs: DataFrame): DataFrame = {
+  /** Per-doc distinct word-3-gram shingles over any normalized
+    * `(doc_id, text)` frame: `(doc_id, shingles)` for every doc of at
+    * least 3 space-split tokens — the one shingle store every
+    * shingle-based operator here explodes (buckets, contamination,
+    * novelty), signs ([[minhashIndex]]) or folds
+    * ([[contaminationFlagsAgainstBloom]]). Native `word_shingles` keeps
+    * the scan inside whole-stage codegen (the transform/concat_ws
+    * lambda formulation drops the stage to interpreted mode — it was
+    * most of d02's runtime); `array_distinct` dedups each doc's
+    * shingles INSIDE the scan (bounded by doc length), so the exploded
+    * (doc, shingle) rows are unique by construction and need no
+    * distinct aggregation.
+    *
+    * `out` shapes the set in the same projection. An explode must sit
+    * there, on the set expression itself: over a projected column,
+    * Spark infers a non-empty filter for the generator and pushes it
+    * below the projection, so every doc's shingle set would be built
+    * twice.
+    */
+  private def docShingles(docs: DataFrame,
+      out: Column => Column = _.as("shingles")): DataFrame = {
     val s = docs.sparkSession
-    // native word_shingles keeps the scan inside whole-stage codegen
-    // (the transform/concat_ws lambda formulation drops the stage to
-    // interpreted mode — it was most of d02's runtime); array_distinct
-    // dedups each doc's shingles INSIDE the scan (bounded by doc
-    // length), so (doc, shingle) rows are unique by construction and
-    // the bucket build needs no distinct aggregation. minSize stays 1:
-    // singleton buckets carry no pairs but DO define each doc's
-    // capped-universe shingle count (the Jaccard denominator).
-    cappedIdBuckets(
-      docs
-        .withColumn("tokens", split(col("text"), " "))
-        .filter(size(col("tokens")) >= 3)
-        .select(col("doc_id"),
-          explode(array_distinct(
-            graft.functions.WordShingles.shingles(s, col("tokens"), 3))).as("shingle")),
-      Seq("shingle"), "doc_id", MaxShingleDF, minSize = 1L)
+    docs
+      .withColumn("tokens", split(col("text"), " "))
+      .filter(size(col("tokens")) >= 3)
+      .select(col("doc_id"),
+        out(array_distinct(graft.functions.WordShingles.shingles(s, col("tokens"), 3))))
   }
+
+  /** [[docShingles]] exploded: one `(doc_id, shingle)` row per distinct
+    * shingle per doc.
+    */
+  private def shingleRows(docs: DataFrame): DataFrame =
+    docShingles(docs, sh => explode(sh).as("shingle"))
+
+  /** Shingle-bucket plan over any normalized `(doc_id, text)` frame: one
+    * row per distinct word-3-gram shingle with the sorted list of doc_ids
+    * containing it, DF-capped by filtering on the bucket size (one
+    * shuffle; the cap costs nothing extra). Candidate pairs come from
+    * in-bucket array combinations, which beats a shingle self-join: the
+    * exploded store shuffles ONCE (groupBy shingle) instead of twice
+    * (both join sides), and pair generation is a codegen'd array
+    * comprehension per bucket row. minSize stays 1: singleton buckets
+    * carry no pairs but DO define each doc's capped-universe shingle
+    * count (the Jaccard denominator).
+    */
+  private def buildShingleBuckets(docs: DataFrame): DataFrame =
+    cappedIdBuckets(shingleRows(docs), Seq("shingle"), "doc_id", MaxShingleDF, minSize = 1L)
 
   /** Session-cached shingle buckets for the standard `documents` table,
     * shared by d02/d03.
@@ -122,18 +143,6 @@ object Dedup {
     SharedIndex(s, dir, "shingle_buckets") {
       buildShingleBuckets(normalized(Tables.documents(s, dir), "doc_id", "text"))
     }
-
-  /** (doc_id, shingle) long store and per-doc shingle counts over the
-    * capped universe, derived from the buckets.
-    */
-  private def shingledFrom(buckets: DataFrame): (DataFrame, DataFrame) = {
-    val exploded = buckets.select(col("shingle"), explode(col("ids")).as("doc_id"))
-    val sizes = exploded.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    (exploded, sizes)
-  }
-
-  private[operators] def shingled(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    shingledFrom(shingleBuckets(s, dir))
 
   /** Per-doc sorted shingle arrays over the capped universe, inverted
     * from the bucket store: candidate verification intersects two
@@ -163,10 +172,21 @@ object Dedup {
           |  (x, i) -> transform(slice(ids, i + 2, size(ids)), y -> struct(x AS d1, y AS d2))))""".stripMargin)).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
 
-  /** Top-K Jaccard pairs given a shingle-bucket store: common-count via
-    * one aggregation over in-bucket pairs, |A∪B| = |A|+|B|-common.
+  /** Capped-universe Jaccard of a pair row `(common, n1, n2)`:
+    * |A∩B| / (|A|+|B|-|A∩B|), rounded to 6 places.
     */
-  private def jaccardTopK(buckets: DataFrame, topK: Int): DataFrame = {
+  private val jaccard: Column =
+    round(col("common").cast("double") / (col("n1") + col("n2") - col("common")), 6)
+
+  /** Top-K overlap pairs given a shingle-bucket store — the one body of
+    * d02 (Jaccard) and d13 (containment): common-count via one
+    * aggregation over in-bucket pairs, each side's capped-universe size
+    * joined on, then `score` (over `common`, `n1`, `n2`) named `name`
+    * and ranked (score desc, d1, d2). `keep` names the pair columns
+    * emitted between `(d1, d2)` and the score.
+    */
+  private def overlapTopK(buckets: DataFrame, topK: Int, name: String, score: Column,
+      keep: String*): DataFrame = {
     val sizes = buckets.select(explode(col("ids")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     val common = bucketPairs(buckets)
@@ -175,11 +195,16 @@ object Dedup {
     common
       .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n_shingles", "n1"), "d1")
       .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n_shingles", "n2"), "d2")
-      .select(col("d1"), col("d2"),
-        round(col("common").cast("double") / (col("n1") + col("n2") - col("common")), 6).as("jaccard"))
-      .orderBy(col("jaccard").desc, col("d1").asc, col("d2").asc)
+      .select((Seq("d1", "d2") ++ keep).map(col) :+ score.as(name): _*)
+      .orderBy(col(name).desc, col("d1").asc, col("d2").asc)
       .limit(topK)
   }
+
+  /** Top-K Jaccard pairs given a shingle-bucket store,
+    * |A∪B| = |A|+|B|-common.
+    */
+  private def jaccardTopK(buckets: DataFrame, topK: Int): DataFrame =
+    overlapTopK(buckets, topK, "jaccard", jaccard)
 
   /** N-gram Jaccard near-dup pairs over any documents frame (library
     * form; the caller may persist the input — the shingle index is built
@@ -213,20 +238,9 @@ object Dedup {
     * shingle blocking, same exchanges; only the final map-side formula
     * differs, so the 100 TB story is d02's.
     */
-  private def containmentTopK(buckets: DataFrame, topK: Int): DataFrame = {
-    val sizes = buckets.select(explode(col("ids")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    val common = bucketPairs(buckets)
-      .groupBy("d1", "d2")
-      .agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n_shingles", "n1"), "d1")
-      .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n_shingles", "n2"), "d2")
-      .select(col("d1"), col("d2"), col("common"), col("n1"), col("n2"),
-        round(col("common").cast("double") / least(col("n1"), col("n2")), 6).as("containment"))
-      .orderBy(col("containment").desc, col("d1").asc, col("d2").asc)
-      .limit(topK)
-  }
+  private def containmentTopK(buckets: DataFrame, topK: Int): DataFrame =
+    overlapTopK(buckets, topK, "containment",
+      round(col("common").cast("double") / least(col("n1"), col("n2")), 6), "common", "n1", "n2")
 
   /** Containment near-dup pairs over any documents frame (library form
     * of d13; see [[containmentTopK]]).
@@ -373,34 +387,24 @@ object Dedup {
   def d07DupClusters(s: SparkSession, dir: String): DataFrame =
     dupClusters(d02NgramJaccard(s, dir))
 
-  /** Deterministic MinHash coefficients (seeded splitmix64-style mix, all
-    * < P31 so (a*x + b) stays well inside a long — no ANSI overflow).
-    */
-  private val P31 = graft.functions.MinHash64.P31
+  /** Signature width: the native `graft_minhash64` components. */
   private val NumHashes = 64
-  // single source of truth with the native graft_minhash64 expression:
-  // the SQL-composed and in-row signature paths must stay bit-identical
-  private val minhashCoeffs: Seq[(Long, Long)] = graft.functions.MinHash64.coeffs
 
-  /** MinHash signature plan from a shingle-bucket store: one aggregation
-    * producing all 64 mins (64 codegen'd agg columns — single shuffle,
-    * no 64x explode).
+  /** Signature arrays `(doc_id, sig: array<long>[64])` derived MAP-ONLY
+    * from per-doc `(doc_id, shingles)` sets via the native
+    * `graft_minhash64` — the explode + 64-min-agg re-aggregation this
+    * replaces cost a corpus exchange for what is a scalar function of
+    * each doc's set (min over a set equals min over the exploded
+    * multiset, so the values are bit-identical and DedupSpec pins it).
+    * The one signature format of d03 (capped-universe sets) and d12
+    * (raw [[docShingles]]). Both hand in non-empty sets only (a doc of
+    * >= 3 tokens has a shingle), so every signature is non-null — no
+    * null filter, which Spark would push below this projection and so
+    * compute every signature twice.
     */
-  /** d03's wide signature frame `(doc_id, m0..m63)` derived MAP-ONLY
-    * from the per-doc capped-universe shingle sets via the native
-    * `graft_minhash64` — the explode + 64-min-agg re-aggregation of the
-    * bucket store this replaces cost a second corpus exchange for what
-    * is a scalar function of each doc's set (min over a set equals min
-    * over the exploded multiset, so the values are bit-identical and
-    * the d02-equality specs pin it).
-    */
-  private def sigsFromSets(sets: DataFrame): DataFrame = {
-    val s = sets.sparkSession
-    sets
-      .withColumn("sig", graft.functions.MinHash64.sig(s, col("shingles")))
-      .select(col("doc_id") +:
-        (0 until NumHashes).map(i => col("sig")(i).as(s"m$i")): _*)
-  }
+  private def sigsFromSets(sets: DataFrame): DataFrame =
+    sets.select(col("doc_id"), graft.functions.MinHash64.sig(sets.sparkSession,
+      col("shingles")).as("sig"))
 
   /** Session-cached signatures for the standard table: repeated d03 runs
     * reuse one build, itself map-only over the cached shingle sets.
@@ -431,13 +435,7 @@ object Dedup {
     * long store is re-joined or re-aggregated.
     */
   private def minhashLshTopK(sets: DataFrame, sigs: DataFrame, topK: Int): DataFrame = {
-    val bandCols = (0 until NumBands).map { bnd =>
-      val cols = (0 until RowsPerBand).map(r => col(s"m${bnd * RowsPerBand + r}"))
-      struct(lit(bnd).as("band"), xxhash64(cols: _*).as("bucket"))
-    }
-    val lshBuckets = cappedIdBuckets(
-      sigs.select(col("doc_id"), explode(array(bandCols: _*)).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket")),
+    val lshBuckets = cappedIdBuckets(sigBands(sigs),
       Seq("band", "bucket"), "doc_id", MaxLshBucket, minSize = 2L)
     val cand = bucketPairs(lshBuckets).distinct()
     cand
@@ -450,8 +448,7 @@ object Dedup {
       // near-dups (the exploded-store formulation dropped them in its
       // inner join)
       .filter(col("common") >= 1)
-      .select(col("d1"), col("d2"),
-        round(col("common").cast("double") / (col("n1") + col("n2") - col("common")), 6).as("jaccard"))
+      .select(col("d1"), col("d2"), jaccard.as("jaccard"))
       .orderBy(col("jaccard").desc, col("d1").asc, col("d2").asc)
       .limit(topK)
   }
@@ -667,6 +664,14 @@ object Dedup {
       .limit(topK)
   }
 
+  /** The embeddings table's row count, computed AT MOST ONCE per
+    * (session, dir) and shared by every gate that corpus-sizes its LSH
+    * geometry (d08's fine store, s08's knn store): geometry sizing
+    * must not prepend one full-scan counting job per operator.
+    */
+  private[operators] def embeddingsCount(s: SparkSession, dir: String): Long =
+    SharedCount(s, dir, "embeddings_rows")(Tables.embeddings(s, dir).count())
+
   /** d08: gate binding of [[embeddingLshPairs]] with its own
     * session-cached fine (8x8) bucket store. The synthetic embeddings
     * are near-orthogonal (max pairwise cosine ~0.5), so the gate
@@ -676,14 +681,6 @@ object Dedup {
     * values and proves ~100% recall on planted near-identical vectors
     * (the regime the fine blocking is tuned for).
     */
-  /** The embeddings table's row count, computed AT MOST ONCE per
-    * (session, dir) and shared by every gate that corpus-sizes its LSH
-    * geometry (d08's fine store, s08's knn store): geometry sizing
-    * must not prepend one full-scan counting job per operator.
-    */
-  private[operators] def embeddingsCount(s: SparkSession, dir: String): Long =
-    SharedCount(s, dir, "embeddings_rows")(Tables.embeddings(s, dir).count())
-
   def d08EmbeddingLsh(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     // cache only the bucket assignment: the rescore re-joins the source
@@ -704,6 +701,28 @@ object Dedup {
   def d05EmbeddingCosine(s: SparkSession, dir: String): DataFrame =
     embeddingDedupPairs(Tables.embeddings(s, dir))
 
+  /** Per-doc shingle-hit rollup from a `(doc_id, shingle)` store and
+    * its hit subset: `(doc_id, n_shingles, n_hit)` for every doc of the
+    * store, `n_hit` 0 where none hit — the one rollup of d06, d10 and
+    * d17. One count agg per side and a doc-keyed left join.
+    */
+  private def hitRollup(cs: DataFrame, hits: DataFrame): DataFrame = {
+    val sizes = cs.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
+    val hitCounts = hits.groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
+    sizes.join(hitCounts, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("n_shingles"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
+  }
+
+  /** Per-doc contamination from [[hitRollup]]: fraction of each doc's
+    * distinct shingles flagged, top-K most contaminated.
+    */
+  private def contaminationRollup(cs: DataFrame, hits: DataFrame, topK: Int): DataFrame =
+    hitRollup(cs, hits)
+      .select(col("doc_id"), col("n_shingles"), col("n_hit").as("n_contaminated"),
+        round(col("n_hit").cast("double") / col("n_shingles"), 6).as("contamination"))
+      .orderBy(col("contamination").desc, col("doc_id").asc)
+      .limit(topK)
+
   /** Benchmark-contamination check over any corpus/benchmark frames:
     * for each corpus doc, the fraction of its distinct word-3-gram
     * shingles that appear ANYWHERE in the benchmark set — the standard
@@ -715,38 +734,10 @@ object Dedup {
     * broadcasts it while the corpus shingle store streams map-side —
     * one aggregation per side, one equi-join, never doc x doc pairs.
     */
-  /** Per-doc distinct word-3-gram store shared by the contamination
-    * checks: (doc_id, shingle), one row per distinct shingle per doc.
-    */
-  private def contaminationShingles(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val s = df.sparkSession
-    normalized(df, idCol, textCol)
-      .withColumn("tokens", split(col("text"), " "))
-      .filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(graft.functions.WordShingles.shingles(s, col("tokens"), 3))).as("shingle"))
-  }
-
-  /** Per-doc contamination rollup from the corpus shingle store and a
-    * (doc_id, shingle) hit subset: fraction of each doc's distinct
-    * shingles flagged.
-    */
-  private def contaminationRollup(cs: DataFrame, hits: DataFrame, topK: Int): DataFrame = {
-    val sizes = cs.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    val hitCounts = hits.groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
-    sizes.join(hitCounts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_shingles"),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-        round(coalesce(col("n_contaminated"), lit(0L)).cast("double") / col("n_shingles"), 6)
-          .as("contamination"))
-      .orderBy(col("contamination").desc, col("doc_id").asc)
-      .limit(topK)
-  }
-
   def contaminationCheck(corpus: DataFrame, benchmark: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", topK: Int = 100): DataFrame = {
-    val cs = contaminationShingles(corpus, idCol, textCol)
-    val bs = contaminationShingles(benchmark, idCol, textCol).select("shingle").distinct()
+    val cs = shingleRows(normalized(corpus, idCol, textCol))
+    val bs = shingleRows(normalized(benchmark, idCol, textCol)).select("shingle").distinct()
     contaminationRollup(cs, cs.join(bs, Seq("shingle")), topK)
   }
 
@@ -775,8 +766,8 @@ object Dedup {
   def contaminationCheckBloom(corpus: DataFrame, benchmark: DataFrame,
       idCol: String = "doc_id", textCol: String = "text", topK: Int = 100,
       expectedItems: Long = 1000000L, fpp: Double = 0.01): DataFrame = {
-    val cs = contaminationShingles(corpus, idCol, textCol)
-    val bloom = contaminationShingles(benchmark, idCol, textCol)
+    val cs = shingleRows(normalized(corpus, idCol, textCol))
+    val bloom = shingleRows(normalized(benchmark, idCol, textCol))
       .agg(graft.functions.BloomSketch.bloomAgg(corpus.sparkSession,
         xxhash64(col("shingle")), expectedItems, fpp).as("bloom"))
     contaminationRollup(cs,
@@ -795,7 +786,7 @@ object Dedup {
   def benchmarkBloom(benchmark: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", expectedItems: Long = 1000000L,
       fpp: Double = 0.01): Array[Byte] =
-    contaminationShingles(benchmark, idCol, textCol)
+    shingleRows(normalized(benchmark, idCol, textCol))
       .agg(graft.functions.BloomSketch.bloomAgg(benchmark.sparkSession,
         xxhash64(col("shingle")), expectedItems, fpp).as("bloom"))
       .head.getAs[Array[Byte]](0)
@@ -811,13 +802,8 @@ object Dedup {
     */
   def contaminationFlagsAgainstBloom(docs: DataFrame, bloomBytes: Array[Byte],
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.BloomSketch.register(s)
-    normalized(docs, idCol, textCol)
-      .withColumn("tokens", split(col("text"), " "))
-      .filter(size(col("tokens")) >= 3)
-      .withColumn("shingles",
-        array_distinct(graft.functions.WordShingles.shingles(s, col("tokens"), 3)))
+    graft.functions.BloomSketch.register(docs.sparkSession)
+    docShingles(normalized(docs, idCol, textCol))
       .select(col("doc_id"),
         size(col("shingles")).cast("long").as("n_shingles"),
         aggregate(col("shingles"), lit(0L), (acc, sh) =>
@@ -1008,39 +994,28 @@ object Dedup {
     * global cap, without touching any document text.
     */
   def indexFromSigs(sigs: DataFrame, maxBucketSize: Long = MaxLshBucket): DataFrame =
-    cappedFlatBuckets(
-      sigBands(sigs).select(col("band"), col("bucket"), col("ds.doc_id").as("doc_id")),
-      Seq("band", "bucket"), maxBucketSize, minSize = 1L)
+    cappedFlatBuckets(sigBands(sigs), Seq("band", "bucket"), maxBucketSize, minSize = 1L)
 
-  /** Raw-shingle signature arrays: `(doc_id, sig: array<long>[64])`.
-    * MAP-ONLY: the native `graft_minhash64` expression folds all 64
-    * components inside the scan row, so building an index — or signing
-    * an ingest batch — costs zero exchanges (the explode + 64-min-agg
-    * formulation this replaces shuffled the whole shingle store;
-    * DedupSpec pins the two bit-identical).
+  /** Raw-shingle signature arrays: [[sigsFromSets]] over each doc's own
+    * [[docShingles]]. MAP-ONLY, so building an index — or signing an
+    * ingest batch — costs zero exchanges.
     */
-  private def buildSigArrays(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val s = docs.sparkSession
-    normalized(docs, idCol, textCol)
-      .filter(col("text").isNotNull)
-      .withColumn("tokens", split(col("text"), " "))
-      .filter(size(col("tokens")) >= 3)
-      .select(col("doc_id"), graft.functions.MinHash64.sig(s,
-        graft.functions.WordShingles.shingles(s, col("tokens"), 3)).as("sig"))
-      .filter(col("sig").isNotNull)
-  }
+  private def buildSigArrays(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    sigsFromSets(docShingles(normalized(docs, idCol, textCol)))
 
-  /** `(ds: struct(doc_id, sig), band, bucket)` — d03's banding derived
-    * map-only from compact signature arrays.
+  /** `(doc_id, band, bucket)` — the 16x4 LSH banding of d03 and d12,
+    * map-only from signature arrays: one row per band, the bucket id
+    * `xxhash64` over the band's four components. Only the id rides on,
+    * so no signature array reaches the bucket exchange.
     */
   private def sigBands(sigs: DataFrame): DataFrame =
-    sigs.select(struct(col("doc_id"), col("sig")).as("ds"),
+    sigs.select(col("doc_id"),
         explode(array((0 until NumBands).map { b =>
           struct(lit(b).as("band"),
             xxhash64((b * RowsPerBand until (b + 1) * RowsPerBand)
               .map(i => col("sig")(i)): _*).as("bucket"))
         }: _*)).as("bb"))
-      .select(col("ds"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
   /** Near-dup matches of a NEW batch against an existing [[minhashIndex]]
     * — the incremental-ingest flavor of d03: history is touched only
@@ -1129,31 +1104,61 @@ object Dedup {
 
   // ----- d14: C4-style line-level dedup (sub-document granularity) ---
 
-  /** (doc, pos) encoded into ONE bounded long — `doc << 32 | pos`,
-    * strictly monotone in the (doc, pos) lexicographic order over the
-    * guarded domain 0 <= doc < 2^31, 0 <= pos < 2^32 — so the
-    * keep-first `min(struct(doc, pos))` aggregations (d14/d18) become
-    * `min(LONG)`: a fixed-width agg buffer that HASH-aggregates
-    * instead of forcing the exploded occurrence stream through
-    * Sort + SortAggregate (a var-width struct buffer cannot hash —
-    * r18, guide §5, VERDICT r17 #4). The domain guard fails LOUDLY
-    * (raise_error with the offending pair) on the row that exceeds
-    * it, never silently mis-orders. Callers gate on integral id/pos
-    * column types and keep the struct path otherwise.
+  /** Keep-first over occurrences at `(doc, pos)` — the one helper
+    * d14 and d18 share, and the one place the order key is picked by
+    * the id types:
+    *   - integral doc and pos: `doc << 32 | pos`, ONE bounded long,
+    *     strictly monotone in the (doc, pos) lexicographic order over
+    *     the guarded domain 0 <= doc < 2^31, 0 <= pos < 2^32 — so the
+    *     keep-first min is `min(LONG)`: a fixed-width agg buffer that
+    *     HASH-aggregates instead of forcing the exploded occurrence
+    *     stream through Sort + SortAggregate (a var-width struct buffer
+    *     cannot hash — r18, guide §5, VERDICT r17 #4). Outside the
+    *     domain the query fails LOUDLY ("keep-first long-encoding domain
+    *     exceeded" with the offending pair), never silently mis-orders;
+    *   - otherwise `struct(doc, pos)`, with no limit.
+    *
+    * A null doc or pos has no place in the order: on both paths it
+    * fails the query with "keep-first null (doc, pos)" and the pair
+    * spelled out — never a silent drop of the line it would have kept.
+    *
+    * `key` is an expression, evaluated wherever the caller projects it
+    * (d14 compares it in the join-back, d18 projects it before its
+    * exchange); `decode` inverts it to `(doc, pos)`.
     */
-  private def docPosKey(doc: Column, pos: Column): Column =
-    when(doc.cast("long").between(0L, 2147483647L) &&
-        pos.cast("long").between(0L, 4294967295L),
-      shiftleft(doc.cast("long"), 32) + pos.cast("long"))
-      .otherwise(raise_error(concat(
-        lit("keep-first long-encoding domain exceeded: (doc, pos) = ("),
-        doc.cast("string"), lit(", "), pos.cast("string"),
-        lit(") outside [0, 2^31) x [0, 2^32)"))))
+  private final class KeepFirst(occ: DataFrame, doc: String, pos: String) {
+    private val (docType, posType) = (occ.schema(doc).dataType, occ.schema(pos).dataType)
+    private val integral = Seq(docType, posType).forall {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    private val (d, p) = (col(doc), col(pos))
+    private val pair = concat(lit("(doc, pos) = ("), coalesce(d.cast("string"), lit("NULL")),
+      lit(", "), coalesce(p.cast("string"), lit("NULL")), lit(")"))
+    private val guarded =
+      when(d.isNull || p.isNull, raise_error(concat(lit("keep-first null (doc, pos): "), pair)))
 
-  private def isIntegral(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-    case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-         org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
-    case _ => false
+    val key: Column =
+      if (integral)
+        guarded.when(d.cast("long").between(0L, 2147483647L) &&
+            p.cast("long").between(0L, 4294967295L),
+          shiftleft(d.cast("long"), 32) + p.cast("long"))
+          .otherwise(raise_error(concat(lit("keep-first long-encoding domain exceeded: "), pair,
+            lit(" outside [0, 2^31) x [0, 2^32)"))))
+      else guarded.otherwise(struct(d, p))
+
+    def decode(k: Column): (Column, Column) =
+      if (integral) (shiftright(k, 32).cast(docType), k.bitwiseAND(lit(4294967295L)).cast(posType))
+      else (k.getField(doc), k.getField(pos))
+
+    /** `(h, __kf)`: the min key `k` per hash `h` of `keyed`, among
+      * hashes seen at least twice (guide §3.2 — a unique hash is
+      * trivially its own first, so the table a caller joins back
+      * shrinks from every distinct hash to the duplicated ones).
+      */
+    def firsts(keyed: DataFrame, h: String, k: Column = key): DataFrame =
+      keyed.groupBy(h).agg(min(k).as("__kf"), count(lit(1)).as("__c"))
+        .filter(col("__c") >= 2L).drop("__c")
   }
 
   /** Global keep-first line deduplication over an exploded
@@ -1180,10 +1185,12 @@ object Dedup {
     * drops with them — spec-pinned, so callers with nullable line
     * sources coalesce first if empty-doc rows must survive.
     *
-    * Integral ids must lie in [[docPosKey]]'s domain: a negative
+    * Integral ids must lie in [[KeepFirst]]'s domain: a negative
     * `doc`/`pos` (or one past 2^31 / 2^32) fails the query with the
     * "keep-first long-encoding domain exceeded" error — spec-pinned, a
     * loud error, never a silent reorder. Non-integral ids have no limit.
+    * A null `doc` or `pos` on a non-null line fails the query with the
+    * "keep-first null (doc, pos)" error on either key path.
     */
   def lineDedup(lines: DataFrame, docCol: String = "doc_id",
       posCol: String = "line_no", lineCol: String = "line"): DataFrame = {
@@ -1194,30 +1201,11 @@ object Dedup {
       // group and the join-back on both key paths (else the left join
       // keeps it and it counts in n_lines)
       .filter(col("__h").isNotNull)
-    // r18: integral (doc, pos) → keep-first as min(LONG) instead of
-    // min(struct) so the distinct-line aggregation HASH-aggregates
-    // (see [[docPosKey]]); __keep compares the same encoded key, so
-    // the surviving occurrence set is identical. Non-integral ids
-    // keep the struct path. The firsts frame keeps only digests with
-    // >= 2 occurrences (guide §3.2 — a unique line is trivially its
-    // own first, decided by the LEFT join's null instead of a
-    // corpus-sized join build side; identical __keep per row).
-    val (firsts, keyCmp) =
-      if (isIntegral(l.schema("__doc").dataType) && isIntegral(l.schema("__pos").dataType)) {
-        val k = docPosKey(col("__doc"), col("__pos"))
-        (l.groupBy(col("__h")).agg(min(k).as("__kf"), count(lit(1)).as("__c"))
-          .filter(col("__c") >= 2L).drop("__c"),
-          col("__kf").isNull || k === col("__kf"))
-      } else {
-        (l.groupBy(col("__h"))
-          .agg(min(struct(col("__doc"), col("__pos"))).as("__first"),
-            count(lit(1)).as("__c"))
-          .filter(col("__c") >= 2L).drop("__c"),
-          col("__first").isNull ||
-            (col("__doc") === col("__first.__doc") && col("__pos") === col("__first.__pos")))
-      }
-    l.join(firsts, Seq("__h"), "left")
-      .withColumn("__keep", keyCmp)
+    // a line is kept where its key is its digest's first; a digest
+    // seen once has no firsts row, so the LEFT join's null keeps it
+    val kf = new KeepFirst(l, "__doc", "__pos")
+    l.join(kf.firsts(l, "__h"), Seq("__h"), "left")
+      .withColumn("__keep", col("__kf").isNull || kf.key === col("__kf"))
       .groupBy(col("__doc").as("doc_id"))
       .agg(
         count(lit(1)).as("n_lines"),
@@ -1394,17 +1382,13 @@ object Dedup {
     */
   def ngramNovelty(corpus: DataFrame, reference: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val cs = contaminationShingles(corpus, idCol, textCol)
-    val rs = contaminationShingles(reference, idCol, textCol)
-      .select("shingle").distinct()
-    val sizes = cs.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
-    val seen = cs.join(rs, Seq("shingle"))
-      .groupBy("doc_id").agg(count(lit(1)).as("__seen"))
-    sizes.join(seen, Seq("doc_id"), "left")
+    val cs = shingleRows(normalized(corpus, idCol, textCol))
+    val rs = shingleRows(normalized(reference, idCol, textCol)).select("shingle").distinct()
+    hitRollup(cs, cs.join(rs, Seq("shingle")))
       .select(col("doc_id"), col("n_shingles"),
-        (col("n_shingles") - coalesce(col("__seen"), lit(0L))).as("n_novel"),
-        round((col("n_shingles") - coalesce(col("__seen"), lit(0L)))
-          .cast("double") / col("n_shingles"), 6).as("novelty"))
+        (col("n_shingles") - col("n_hit")).as("n_novel"),
+        round((col("n_shingles") - col("n_hit")).cast("double") / col("n_shingles"), 6)
+          .as("novelty"))
   }
 
   /** Exact-substring span-REMOVAL dedup (the Lee et al. 2022
@@ -1440,9 +1424,10 @@ object Dedup {
     *
     * An integral `doc_id` must lie in [0, 2^31): a negative one on a
     * doc of at least `minTokens` tokens fails the query with the
-    * "keep-first long-encoding domain exceeded" error ([[docPosKey]];
+    * "keep-first long-encoding domain exceeded" error ([[KeepFirst]];
     * spec-pinned, a loud error, never a silent reorder). Non-integral
-    * ids have no limit.
+    * ids have no limit. A null `doc_id` on such a doc fails it with the
+    * "keep-first null (doc, pos)" error.
     *
     * Reference analog: none (the extractor's fuzzy_dedup
     * (datapackage.py:524-533) drops whole duplicate ROWS); this is
@@ -1472,28 +1457,10 @@ object Dedup {
     // materializing every token as a row (measured ~1.4x slower at
     // sf0.1; identical output)
     //
-    // r18 (guide §5, VERDICT r17 #4): an integral doc_id encodes
-    // (doc_id, pos) into ONE bounded long — doc_id << 32 | pos, strictly
-    // monotone in the (doc_id, pos) lexicographic order over the guarded
-    // domain 0 <= doc_id < 2^31, 1 <= pos < 2^32 — so keep-first becomes
-    // min(LONG): a fixed-width agg buffer that HASH-aggregates instead
-    // of forcing the whole exploded gram stream through Sort +
-    // SortAggregate (a var-width struct buffer cannot hash). The domain
-    // guard fails LOUDLY (raise_error with the offending pair) the row
-    // it is exceeded, never silently mis-orders. The occurrence⋈first
-    // exchanges also shrink: both sides now carry (gh, one long) and
-    // doc/pos decode AFTER the join (guide §2.3 — shuffle keys, not
-    // payloads). Non-integral ids keep the struct path unchanged.
-    // r18 #2 (guide §3.2 — reduce the join's build side): only ghs with
-    // >= 2 occurrences can produce a non-first occurrence, and for a
-    // unique gh the sole occurrence IS the min, so the old `__k != __kf`
-    // filter dropped it anyway. Keeping only duplicated ghs in the
-    // firsts frame (count rides the same hash agg) makes the INNER join
-    // produce the identical row set while the build side shrinks from
-    // every-distinct-gram to the duplicated fraction — at sf0.1 that is
-    // what keeps the join broadcastable, and at 100 TB it is what keeps
-    // the sort-merge fallback's small side proportional to actual
-    // duplication instead of the corpus.
+    // The keep-first key ([[KeepFirst]]) is projected BEFORE the
+    // exchange: for integral ids both the agg and the occurrence⋈first
+    // join carry (gh, one long), and doc/pos decode AFTER the join
+    // (guide §2.3 — shuffle keys, not payloads).
     // r18 #3 (guide §2.4 — two operations keyed the same way share one
     // exchange): the keep-first agg and the occurrence⋈first probe both
     // consume the gram stream keyed by gh. Without the explicit
@@ -1505,33 +1472,18 @@ object Dedup {
     // (ReusedExchange in the executed plan): the grams hash ONCE, and
     // at 100 TB — where the dup side outgrows broadcast and the join
     // becomes sort-merge, shuffling the occurrence stream anyway — the
-    // exchange this adds is the one the join already needed.
-    val idType = base.schema("doc_id").dataType
-    val coveredStarts = if (isIntegral(idType)) {
-      val keyed = grams.select(col("gh"),
-        docPosKey(col("doc_id"), col("pos")).as("__k"))
-        .repartition(col("gh"))
-      val firsts = keyed.groupBy("gh")
-        .agg(min(col("__k")).as("__kf"), count(lit(1)).as("__c"))
-        .filter(col("__c") >= 2L).drop("__c")
-      keyed.join(firsts, Seq("gh"))
-        .filter(col("__k") =!= col("__kf"))
-        .select(shiftright(col("__k"), 32).cast(idType).as("doc_id"),
-          col("__k").bitwiseAND(lit(4294967295L)).as("pos"))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_set(col("pos"))).as("__starts"))
-    } else {
-      val g2 = grams.repartition(col("gh"))
-      val firsts = g2.groupBy("gh")
-        .agg(min(struct(col("doc_id"), col("pos"))).as("first"),
-          count(lit(1)).as("__c"))
-        .filter(col("__c") >= 2L).drop("__c")
-      g2.join(firsts, Seq("gh"))
-        .filter(col("doc_id") =!= col("first.doc_id") ||
-          col("pos") =!= col("first.pos"))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_set(col("pos"))).as("__starts"))
-    }
+    // exchange this adds is the one the join already needed. The INNER
+    // join against the duplicated-gh firsts yields exactly the
+    // non-first occurrences once the key filter runs: a unique gh's
+    // sole occurrence IS its min.
+    val kf = new KeepFirst(grams, "doc_id", "pos")
+    val keyed = grams.select(col("gh"), kf.key.as("__k")).repartition(col("gh"))
+    val (startDoc, startPos) = kf.decode(col("__k"))
+    val coveredStarts = keyed.join(kf.firsts(keyed, "gh", col("__k")), Seq("gh"))
+      .filter(col("__k") =!= col("__kf"))
+      .select(startDoc.as("doc_id"), startPos.as("pos"))
+      .groupBy("doc_id")
+      .agg(sort_array(collect_set(col("pos"))).as("__starts"))
     // in-row assembly is O(|starts| + |tokens|): the sorted window
     // starts merge into disjoint covered intervals via shifted-zip
     // boundary detection (a start opens an interval iff the previous

@@ -524,77 +524,34 @@ object Text {
     * [[bpeEncode]] the full corpus: encoding carries the whole table
     * in one native expression and is map-only at any merge count.
     * LibraryApiSpec pins the composition over a q20 sample.
+    *
+    * BATCHED merge rounds (`batch` > 1): each driver round-trip selects
+    * up to `batch` SYMBOL-DISJOINT merges from the ranked pair counts
+    * and applies them in one vocabulary pass, cutting the round-trips
+    * (and Spark jobs) from `nMerges` to ≈`nMerges/batch` — the knob
+    * that matters when a realistic vocabulary costs thousands of tiny
+    * jobs at one merge each. What stays exact: merging (a,b) only
+    * changes adjacent-pair counts involving `a` or `b`, so every pair
+    * chosen under the disjointness rule (no shared lhs/rhs/merged
+    * symbol within the batch) has a count unaffected by its
+    * batch-mates — each recorded `pair_count` is the true corpus count
+    * at its own application point, and the batch applies
+    * order-independently. What changes vs pure greedy (`batch` = 1, the
+    * default and the t12 gate): a batch cannot pick a pair INVOLVING a
+    * symbol created earlier in the same batch (greedy rank order
+    * interleaves those), so the learned table can deviate from
+    * Sennrich rank order — TextSpec gates that trade on tokens at a
+    * real budget, and SURVEY §5 has the measured adjudication
+    * (wall-clock vs table fidelity) against the train-on-sample recipe.
+    * The candidate ranking, the greedy disjoint-prefix selection and
+    * the fold order are all total-ordered, so a batched table is
+    * partition- and rerun-independent too.
     */
   def bpeTrain(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      nMerges: Int = 10, minPairCount: Long = 2L): DataFrame = {
+      nMerges: Int = 10, minPairCount: Long = 2L, batch: Int = 1): DataFrame = {
     require(nMerges > 0, "bpeTrain needs nMerges > 0")
     require(minPairCount >= 1L, "bpeTrain needs minPairCount >= 1")
-    val sp = docs.sparkSession
-    import sp.implicits._
-    val vocab = normalized(docs, idCol, textCol)
-      .select(explode(expr("filter(split(text, ' '), x -> x != '')")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("n"))
-      .select(initialSyms(col("word")).as("syms"), col("n"))
-    var gen = IterativeCheckpoint(vocab)
-    var merges = Vector.empty[(Int, String, String, String, Long)]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
-      val best = gen.df
-        .select(col("n"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1).as("l"),
-          slice(col("syms"), lit(2), size(col("syms")) - 1).as("r"))).as("p"))
-        .groupBy(col("p.l").as("lhs"), col("p.r").as("rhs"))
-        .agg(sum(col("n")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(1).collect()
-      if (best.isEmpty || best(0).getLong(2) < minPairCount) done = true
-      else {
-        val (a, b, c) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        merges :+= ((rank, a, b, a + b, c))
-        val next = IterativeCheckpoint(
-          gen.df.withColumn("syms", mergeFold(col("syms"), a, b)))
-        gen.release()
-        gen = next
-        rank += 1
-      }
-    }
-    gen.release()
-    merges.toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-      .orderBy("merge_rank")
-  }
-
-  /** [[bpeTrain]] with BATCHED merge rounds: each driver round-trip
-    * selects up to `batch` SYMBOL-DISJOINT merges from the ranked pair
-    * counts and applies them in one vocabulary pass, cutting the
-    * round-trips (and Spark jobs) from `nMerges` to ≈`nMerges/batch` —
-    * the knob that matters when a realistic vocabulary costs thousands
-    * of tiny jobs at one merge each.
-    *
-    * What stays exact: merging (a,b) only changes adjacent-pair counts
-    * involving `a` or `b`, so every pair chosen under the disjointness
-    * rule (no shared lhs/rhs/merged symbol within the batch) has a
-    * count unaffected by its batch-mates — each recorded `pair_count`
-    * is the true corpus count at its own application point, and the
-    * batch applies order-independently. What changes vs pure greedy:
-    * a batch cannot pick a pair INVOLVING a symbol created earlier in
-    * the same batch (greedy rank order interleaves those), so the
-    * learned table can deviate from Sennrich rank order — gate that
-    * trade with the spec corpus comparison in TextSpec, and see SURVEY
-    * §5 for the measured adjudication (wall-clock vs table fidelity)
-    * against the default train-on-sample recipe. `batch = 1` IS
-    * [[bpeTrain]], pinned bit-for-bit in the spec.
-    *
-    * Determinism: the candidate ranking, the greedy disjoint-prefix
-    * selection, and the fold order are all total-ordered, so the table
-    * is partition- and rerun-independent like the greedy trainer's.
-    */
-  def bpeTrainBatched(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", nMerges: Int = 10, minPairCount: Long = 2L,
-      batch: Int = 16): DataFrame = {
-    require(nMerges > 0, "bpeTrainBatched needs nMerges > 0")
-    require(minPairCount >= 1L, "bpeTrainBatched needs minPairCount >= 1")
-    require(batch >= 1, "bpeTrainBatched needs batch >= 1")
+    require(batch >= 1, "bpeTrain needs batch >= 1")
     val sp = docs.sparkSession
     import sp.implicits._
     val vocab = normalized(docs, idCol, textCol)
@@ -921,7 +878,8 @@ object Text {
     // every partition folds its own rows, the driver merges partials.
     //
     // The arithmetic replicates the SQL agg it replaced BIT-EXACTLY:
-    // same left-fold dot product, Math.exp sigmoid, same double
+    // same left-fold dot product, StrictMath.exp sigmoid (Spark's
+    // `exp`; the Math.exp intrinsic can differ in the last ulp), same double
     // product x_j * r, the same Cast(double → DECIMAL(30,15))
     // per-element quantization (java.math.BigDecimal.valueOf is the
     // same shortest-decimal-representation semantics, HALF_UP at scale
@@ -932,8 +890,8 @@ object Text {
     // (zip_with pads the weights with null → null dot → null products)
     // contributes only to n; a row SHORTER than d fails loudly (the
     // old element_at(x, j+1) threw under ANSI). TextSpec pins
-    // partition-independence and the t13 gate output is EXCEPT-ALL
-    // pinned against the pre-change dump.
+    // partition-independence and bit-equal weights against the SQL
+    // aggregate on a random frame with all of those rows.
     val data = feats
       .select(Cols.q(featuresCol).as("x"), Cols.q(labelCol).cast("double").as("y"))
       .rdd.map { r =>
@@ -960,7 +918,7 @@ object Text {
               var dot = 0.0
               var i = 0
               while (i < d) { dot += xs(i) * ws(i); i += 1 }
-              val rr = 1.0 / (1.0 + math.exp(-dot)) - y
+              val rr = 1.0 / (1.0 + StrictMath.exp(-dot)) - y
               var j = 0
               while (j < d) {
                 acc(j) = acc(j).add(java.math.BigDecimal.valueOf(xs(j) * rr)

@@ -145,6 +145,38 @@ class OperatorPropertiesSpec extends SparkSpec {
     assert(message(sd).contains("domain exceeded"), message(sd))
   }
 
+  test("keep-first dedup: a null doc or pos is a loud named error on both key paths") {
+    def message(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+        .mkString(" | ")
+    def assertNullError(run: => Any, pair: String): Unit = {
+      val e = intercept[Exception](run)
+      assert(message(e).contains(s"keep-first null (doc, pos): (doc, pos) = $pair"), message(e))
+    }
+    // integral ids (the long key) and string ids (the struct key); the
+    // null occurrence is the first of a shared line, so a silent drop
+    // would lose the line everywhere
+    val intLines = Seq[(Option[Long], Option[Long], String)]((Some(1L), Some(0L), "a"),
+      (Some(2L), Some(0L), "a"), (None, Some(0L), "b"), (Some(3L), Some(0L), "b"))
+      .toDF("doc_id", "line_no", "line")
+    assertNullError(Dedup.lineDedup(intLines).collect(), "(NULL, 0)")
+    val intPos = Seq[(Option[Long], Option[Long], String)]((Some(1L), None, "a"),
+      (Some(2L), Some(0L), "a")).toDF("doc_id", "line_no", "line")
+    assertNullError(Dedup.lineDedup(intPos).collect(), "(1, NULL)")
+    val strLines = Seq[(String, Option[Long], String)](("b", Some(0L), "x"),
+      (null, Some(0L), "y"), ("a", Some(0L), "y"), ("a", Some(1L), "z"))
+      .toDF("doc_id", "line_no", "line")
+    assertNullError(Dedup.lineDedup(strLines).collect(), "(NULL, 0)")
+    val strPos = Seq[(String, Option[Long], String)](("a", None, "y"), ("b", Some(0L), "y"))
+      .toDF("doc_id", "line_no", "line")
+    assertNullError(Dedup.lineDedup(strPos).collect(), "(a, NULL)")
+    val text = "one two three four five six seven eight nine"
+    val intDocs = Seq[(Option[Long], String)]((None, text), (Some(3L), text)).toDF("doc_id", "text")
+    assertNullError(Dedup.substringDedup(intDocs).collect(), "(NULL, 1)")
+    val strDocs = Seq[(String, String)]((null, text), ("c", text)).toDF("doc_id", "text")
+    assertNullError(Dedup.substringDedup(strDocs).collect(), "(NULL, 1)")
+  }
+
   test("agg/sketch state: compaction order cannot change the rollup") {
     val r = rnd(13)
     val rows = (0 until 600).map(_ =>
