@@ -2,170 +2,42 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{BloomSketch, BottomKSketch, CosineSimilarity, GkQuantile, MisraGries, DctPhash, FastRound, Fingerprint, HyperplaneBuckets, L2Squared, MinHash64, NfcNormalize, PqAdc, PqEncode, ShannonEntropy, SimHash, Sq8Dot, Sq8Encode, UnitVector, WinnowPrints, WordShingles}
+import graft.functions._
 
 /** Spark extensions entry point: lets any session pick up graft's native
-  * expressions at build time via
+  * SQL functions at build time via
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * (or `.withExtensions(new GraftExtensions)`), so SQL users get
-  * `graft_cosine` without touching the Scala API. The imperative
-  * `CosineSimilarity.register(spark)` path stays for sessions that
-  * already exist.
+  * `graft_cosine` and the rest without touching the Scala API, in
+  * derived sessions (`spark.newSession()`) too.
+  *
+  * Every function is declared once, as an entry of its object's
+  * `functions` table ([[SqlFunction]]); this injects every entry of
+  * every table, and each object's `register(spark)` registers its own
+  * entries in a session that already exists. The two paths cannot
+  * drift. `graft_shingles_<k>` is injected for k = 2, 3, 4;
+  * `WordShingles.shingles` registers any other width on demand.
+  * `graft_lm_score_<key>` / `graft_bpe_encode_<key>` are not injected:
+  * they are keyed on a driver-held model (LmModel / BpeModel) and only
+  * exist bound to one, via their Column-API entry points.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      CosineSimilarity.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHash(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_fingerprint"),
-      new ExpressionInfo(classOf[Fingerprint].getName, "graft_fingerprint"),
-      (children: Seq[Expression]) => Fingerprint(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hyperplane_buckets"),
-      new ExpressionInfo(classOf[HyperplaneBuckets].getName, "graft_hyperplane_buckets"),
-      HyperplaneBuckets.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head)))
-    // shingle width is baked into the function name (the expression is
-    // unary); k=3 is the width the dedup family standardizes on
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles_3"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles_3"),
-      (children: Seq[Expression]) => WordShingles(children.head, 3)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "graft_l2sq"),
-      L2Squared.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      PqEncode.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
-      PqAdc.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_unit"),
-      new ExpressionInfo(classOf[UnitVector].getName, "graft_unit"),
-      UnitVector.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowPrints].getName, "graft_winnow"),
-      WinnowPrints.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_round"),
-      new ExpressionInfo(classOf[FastRound].getName, "graft_round"),
-      FastRound.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dct_phash"),
-      new ExpressionInfo(classOf[DctPhash].getName, "graft_dct_phash"),
-      (children: Seq[Expression]) => DctPhash(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash64"),
-      new ExpressionInfo(classOf[MinHash64].getName, "graft_minhash64"),
-      (children: Seq[Expression]) => MinHash64(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sq8_encode"),
-      new ExpressionInfo(classOf[Sq8Encode].getName, "graft_sq8_encode"),
-      Sq8Encode.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sq8_dot"),
-      new ExpressionInfo(classOf[Sq8Dot].getName, "graft_sq8_dot"),
-      Sq8Dot.builder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[ShannonEntropy].getName, "graft_entropy"),
-      ShannonEntropy.builder))
-    // graft_lm_score_<key> / graft_bpe_encode_<key> are deliberately
-    // NOT injected here: they are content-keyed on a driver-held model
-    // (LmModel / BpeModel) and only exist bound to one, via their
-    // Column-API entry points.
-    // Spark's own runtime-filter bloom sketch surfaced for SQL users:
-    // graft_bloom_agg(xxhash64(v), items, bits) builds the filter,
-    // graft_might_contain((SELECT bloom FROM b), xxhash64(v)) probes it
-    // (the probe side requires a constant/scalar-subquery bloom, same
-    // as the internal expression). Column API: functions/BloomSketch.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      BloomSketch.aggBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      BloomSketch.containsBuilder))
-    // mergeable GK quantile-sketch state for SQL users (r12):
-    // graft_gk_agg(v, eps) builds state, graft_gk_merge(state)
-    // compacts/rolls up, graft_gk_quantiles(state, array(...)) serves.
-    // Column API: functions/GkQuantile, operators/QuantileSketch.
-    ext.injectFunction((
-      FunctionIdentifier("graft_gk_agg"),
-      new ExpressionInfo(classOf[GkQuantile.GkQuantileAgg].getName, "graft_gk_agg"),
-      GkQuantile.aggBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gk_merge"),
-      new ExpressionInfo(classOf[GkQuantile.GkMergeAgg].getName, "graft_gk_merge"),
-      GkQuantile.mergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_gk_quantiles"),
-      new ExpressionInfo(classOf[GkQuantile.GkQuantilesExpr].getName, "graft_gk_quantiles"),
-      GkQuantile.quantilesBuilder))
-    // Misra-Gries heavy-hitters state for SQL users (r12):
-    // graft_mg_agg(item, k) builds state, graft_mg_merge(state)
-    // compacts/rolls up, graft_mg_topk(state, topK) serves items with
-    // deterministic [count_lo, count_hi] bounds. Column API:
-    // functions/MisraGries, operators/HeavyHitters.
-    ext.injectFunction((
-      FunctionIdentifier("graft_mg_agg"),
-      new ExpressionInfo(classOf[MisraGries.MgAgg].getName, "graft_mg_agg"),
-      MisraGries.aggBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_mg_merge"),
-      new ExpressionInfo(classOf[MisraGries.MgMergeAgg].getName, "graft_mg_merge"),
-      MisraGries.mergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_mg_topk"),
-      new ExpressionInfo(classOf[MisraGries.MgTopK].getName, "graft_mg_topk"),
-      MisraGries.topkBuilder))
-    // Bottom-k (KMV) distinct sketch for SQL users (r13):
-    // graft_bk_agg(key, k) builds state, graft_bk_merge(state)
-    // compacts/rolls up, graft_bk_distinct(state) serves the count
-    // estimate, graft_bk_sample(state, m) the m hash-smallest distinct
-    // keys. Column API: functions/BottomKSketch, operators/BottomKSample.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bk_agg"),
-      new ExpressionInfo(classOf[BottomKSketch.BkAgg].getName, "graft_bk_agg"),
-      BottomKSketch.aggBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bk_merge"),
-      new ExpressionInfo(classOf[BottomKSketch.BkMergeAgg].getName, "graft_bk_merge"),
-      BottomKSketch.mergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bk_distinct"),
-      new ExpressionInfo(classOf[BottomKSketch.BkDistinct].getName, "graft_bk_distinct"),
-      BottomKSketch.distinctBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bk_sample"),
-      new ExpressionInfo(classOf[BottomKSketch.BkSample].getName, "graft_bk_sample"),
-      BottomKSketch.sampleBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bk_overlap"),
-      new ExpressionInfo(classOf[BottomKSketch.BkOverlap].getName, "graft_bk_overlap"),
-      BottomKSketch.overlapBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name), f.info, f.builder))
+    }
+}
+
+object GraftExtensions {
+
+  /** Every graft SQL function, one entry per name. */
+  val functions: Seq[SqlFunction] = Seq[SqlFunctions](
+    CosineSimilarity, SimHash, Fingerprint, HyperplaneBuckets, NfcNormalize,
+    L2Squared, PqEncode, PqAdc, UnitVector, WinnowPrints, FastRound, DctPhash,
+    MinHash64, Sq8Encode, Sq8Dot, ShannonEntropy, BloomSketch, GkQuantile,
+    MisraGries, BottomKSketch, WeightedReservoir, AvHeader, MediaHeader
+  ).flatMap(_.functions) ++ WordShingles.functions
 }

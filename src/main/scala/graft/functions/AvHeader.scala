@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -60,7 +59,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * CTEs). Reference analog: none — beyond-reference training-data
   * surface (in-repo template: functions/MediaHeader.scala, m06).
   */
-object AvHeader {
+object AvHeader extends SqlFunctions {
 
   /** Chunk/box-walk cap: real headers hold a handful of chunks; a
     * corrupt length chain stops here instead of looping.
@@ -475,26 +474,13 @@ object AvHeader {
       copy(child = newChild)
   }
 
-  private def unary(name: String, cls: Class[_], mk: Expression => Expression): (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      new ExpressionInfo(cls.getName, name),
-      { children =>
-        require(children.size == 1, s"$name expects (payload): got ${children.size}")
-        mk(children.head)
-      })
-
-  def register(spark: SparkSession): Unit = {
-    Seq(
-      unary("graft_av_format", classOf[AvFormat], AvFormat.apply),
-      unary("graft_av_sample_rate", classOf[AvSampleRate], AvSampleRate.apply),
-      unary("graft_av_channels", classOf[AvChannels], AvChannels.apply),
-      unary("graft_av_bits", classOf[AvBits], AvBits.apply),
-      unary("graft_av_duration_ms", classOf[AvDurationMs], AvDurationMs.apply),
-      unary("graft_av_frame_count", classOf[AvFrameCount], AvFrameCount.apply)
-    ).foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-  }
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_av_format", classOf[AvFormat], "payload", 1)(c => AvFormat(c(0))),
+    SqlFunction("graft_av_sample_rate", classOf[AvSampleRate], "payload", 1)(c => AvSampleRate(c(0))),
+    SqlFunction("graft_av_channels", classOf[AvChannels], "payload", 1)(c => AvChannels(c(0))),
+    SqlFunction("graft_av_bits", classOf[AvBits], "payload", 1)(c => AvBits(c(0))),
+    SqlFunction("graft_av_duration_ms", classOf[AvDurationMs], "payload", 1)(c => AvDurationMs(c(0))),
+    SqlFunction("graft_av_frame_count", classOf[AvFrameCount], "payload", 1)(c => AvFrameCount(c(0))))
 
   import org.apache.spark.sql.functions.call_function
 

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Cast}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Bloom-filter membership sketch as a first-class library surface,
@@ -22,35 +22,18 @@ import org.apache.spark.util.sketch.BloomFilter
   * d06 formulation must distinct-shuffle and then broadcast the whole
   * member set.
   */
-object BloomSketch {
+object BloomSketch extends SqlFunctions {
 
-  private[graft] val aggBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 3,
-      s"graft_bloom_agg expects 3 arguments (hash, estimatedItems, numBits): got ${children.size}")
-    // SQL integer literals arrive as INT; the aggregate requires
-    // BIGINT for both sizing args (a foldable Cast stays foldable)
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.LongType
-    new BloomFilterAggregate(children(0),
-      Cast(children(1), LongType), Cast(children(2), LongType))
-  }
-
-  private[graft] val containsBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_might_contain expects 2 arguments (bloom, hash): got ${children.size}")
-    BloomFilterMightContain(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-      aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-      containsBuilder)
-  }
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_bloom_agg", classOf[BloomFilterAggregate],
+        "hash, estimatedItems, numBits", 3) { c =>
+      // SQL integer literals arrive as INT; the aggregate requires
+      // BIGINT for both sizing args (a foldable Cast stays foldable)
+      new BloomFilterAggregate(c(0), Cast(c(1), LongType), Cast(c(2), LongType))
+    },
+    SqlFunction("graft_might_contain", classOf[BloomFilterMightContain], "bloom, hash", 2) {
+      c => BloomFilterMightContain(c(0), c(1))
+    })
 
   /** Aggregate a LongType hash column (use `xxhash64(value)`) into a
     * serialized Bloom filter sized for `expectedItems` at `fpp`.

@@ -7,10 +7,8 @@ import java.security.MessageDigest
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -47,7 +45,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * fully DuckDB-oracled, the only sketch in the family whose served
   * numbers an independent engine reproduces value-for-value.
   *
-  * Three expressions, registered like the GK/MG families:
+  * Expressions, declared in `functions` like the GK/MG families:
   *  - `graft_bk_agg(key, k)`        — keys → one binary state
   *  - `graft_bk_merge(state)`       — binary states → merged state
   *  - `graft_bk_distinct(state)`    — state → bigint distinct estimate
@@ -56,7 +54,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reference analog: none — beyond-reference training-data surface.
   */
-object BottomKSketch {
+object BottomKSketch extends SqlFunctions {
 
   private val FormatVersion: Byte = 1
 
@@ -122,7 +120,7 @@ object BottomKSketch {
     val pairs: mutable.TreeSet[(Long, String)] = mutable.TreeSet.empty(PairOrdering)
 
     def insert(key: String): Unit = {
-      // k=0 is the BkMergeAgg capacity sentinel (holds no pairs); guard
+      // k=0 is the merge aggregate's capacity sentinel (holds no pairs); guard
       // so the eviction branch can never hit pairs.last on an empty set
       // (r14 ADVICE — same latent trap as WrSummary)
       if (k <= 0) return
@@ -199,6 +197,20 @@ object BottomKSketch {
     s
   }
 
+  /** The bottom-k state's codec. The empty state is the capacity-0
+    * sentinel: a merge adopts k from the first state it meets. The
+    * merge is set union, so any merge tree yields the identical state.
+    */
+  private[graft] object Codec extends SketchCodec[BkSummary] {
+    val family = "bk"
+    def empty: BkSummary = new BkSummary(0)
+    private def isEmpty(s: BkSummary) = s.k == 0 && s.pairs.isEmpty
+    def merge(a: BkSummary, b: BkSummary): BkSummary =
+      if (isEmpty(a)) b else if (isEmpty(b)) a else a.merge(b)
+    def serialize(s: BkSummary): Array[Byte] = serializeSummary(s)
+    def deserialize(bytes: Array[Byte]): BkSummary = deserializeSummary(bytes)
+  }
+
   /** `graft_bk_agg(key string, k)` → binary bottom-k state. Null keys
     * are skipped (null is not a member of the distinct domain).
     */
@@ -207,14 +219,12 @@ object BottomKSketch {
       k: Int,
       mutableAggBufferOffset: Int = 0,
       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[BkSummary]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
+    extends SketchAgg[BkSummary] with UnaryLike[Expression] {
 
     require(k >= 2, s"k must be >= 2 (the KMV estimator needs k-1 >= 1): $k")
 
+    override protected def codec: SketchCodec[BkSummary] = Codec
     override def inputTypes = Seq(StringType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
     override def prettyName: String = "graft_bk_agg"
 
     override def createAggregationBuffer(): BkSummary = new BkSummary(k)
@@ -225,63 +235,11 @@ object BottomKSketch {
       buffer
     }
 
-    override def merge(buffer: BkSummary, input: BkSummary): BkSummary =
-      buffer.merge(input)
-
-    override def eval(buffer: BkSummary): Any = serializeSummary(buffer)
-    override def serialize(buffer: BkSummary): Array[Byte] = serializeSummary(buffer)
-    override def deserialize(bytes: Array[Byte]): BkSummary = deserializeSummary(bytes)
-
     override def withNewMutableAggBufferOffset(nOff: Int): BkAgg =
       copy(mutableAggBufferOffset = nOff)
     override def withNewInputAggBufferOffset(nOff: Int): BkAgg =
       copy(inputAggBufferOffset = nOff)
     override protected def withNewChildInternal(newChild: Expression): BkAgg =
-      copy(child = newChild)
-  }
-
-  /** `graft_bk_merge(state binary)` → merged binary state — the
-    * compaction aggregate. Set-union semantics: any merge tree yields
-    * the identical state.
-    */
-  case class BkMergeAgg(
-      child: Expression,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[BkSummary]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
-
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    override def prettyName: String = "graft_bk_merge"
-
-    // k adopts from the first merged state (capacity 0 sentinel)
-    override def createAggregationBuffer(): BkSummary = new BkSummary(0)
-
-    private def mergeInto(buffer: BkSummary, s: BkSummary): BkSummary =
-      if (buffer.k == 0 && buffer.pairs.isEmpty) s
-      else if (s.k == 0 && s.pairs.isEmpty) buffer
-      else buffer.merge(s)
-
-    override def update(buffer: BkSummary, input: InternalRow): BkSummary = {
-      val v = child.eval(input)
-      if (v == null) buffer
-      else mergeInto(buffer, deserializeSummary(v.asInstanceOf[Array[Byte]]))
-    }
-
-    override def merge(buffer: BkSummary, input: BkSummary): BkSummary =
-      mergeInto(buffer, input)
-
-    override def eval(buffer: BkSummary): Any = serializeSummary(buffer)
-    override def serialize(buffer: BkSummary): Array[Byte] = serializeSummary(buffer)
-    override def deserialize(bytes: Array[Byte]): BkSummary = deserializeSummary(bytes)
-
-    override def withNewMutableAggBufferOffset(nOff: Int): BkMergeAgg =
-      copy(mutableAggBufferOffset = nOff)
-    override def withNewInputAggBufferOffset(nOff: Int): BkMergeAgg =
-      copy(inputAggBufferOffset = nOff)
-    override protected def withNewChildInternal(newChild: Expression): BkMergeAgg =
       copy(child = newChild)
   }
 
@@ -414,74 +372,26 @@ object BottomKSketch {
       copy(left = newLeft, right = newRight)
   }
 
-  private def foldableInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a foldable integer literal")
-    e.eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be a foldable integer literal, got $other")
-    }
-  }
-
-  private[graft] val aggBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_bk_agg expects (key, k): got ${children.size}")
-    val k = foldableInt(children(1), "graft_bk_agg k")
-    require(k >= 2, s"graft_bk_agg k must be >= 2: $k")
-    BkAgg(children(0), k).toAggregateExpression()
-  }
-
-  private[graft] val mergeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1,
-      s"graft_bk_merge expects (state): got ${children.size}")
-    BkMergeAgg(children(0)).toAggregateExpression()
-  }
-
-  private[graft] val distinctBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1,
-      s"graft_bk_distinct expects (state): got ${children.size}")
-    BkDistinct(children(0))
-  }
-
-  private[graft] val overlapBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_bk_overlap expects (stateA, stateB): got ${children.size}")
-    BkOverlap(children(0), children(1))
-  }
-
-  private[graft] val sampleBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_bk_sample expects (state, m): got ${children.size}")
-    if (children(1).foldable) {
-      val m = foldableInt(children(1), "graft_bk_sample m")
-      require(m >= 1, s"graft_bk_sample m must be >= 1: $m")
-    }
-    BkSample(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bk_agg"),
-      new ExpressionInfo(classOf[BkAgg].getName, "graft_bk_agg"),
-      aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bk_merge"),
-      new ExpressionInfo(classOf[BkMergeAgg].getName, "graft_bk_merge"),
-      mergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bk_distinct"),
-      new ExpressionInfo(classOf[BkDistinct].getName, "graft_bk_distinct"),
-      distinctBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bk_sample"),
-      new ExpressionInfo(classOf[BkSample].getName, "graft_bk_sample"),
-      sampleBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_bk_overlap"),
-      new ExpressionInfo(classOf[BkOverlap].getName, "graft_bk_overlap"),
-      overlapBuilder)
-  }
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_bk_agg", classOf[BkAgg], "key, k", 2) { c =>
+      val k = SqlFunction.foldableInt(c(1), "graft_bk_agg k")
+      require(k >= 2, s"graft_bk_agg k must be >= 2: $k")
+      BkAgg(c(0), k).toAggregateExpression()
+    },
+    SketchMergeAgg.function(Codec),
+    SqlFunction("graft_bk_distinct", classOf[BkDistinct], "state", 1) {
+      c => BkDistinct(c(0))
+    },
+    SqlFunction("graft_bk_sample", classOf[BkSample], "state, m", 2) { c =>
+      if (c(1).foldable) {
+        val m = SqlFunction.foldableInt(c(1), "graft_bk_sample m")
+        require(m >= 1, s"graft_bk_sample m must be >= 1: $m")
+      }
+      BkSample(c(0), c(1))
+    },
+    SqlFunction("graft_bk_overlap", classOf[BkOverlap], "stateA, stateB", 2) {
+      c => BkOverlap(c(0), c(1))
+    })
 
   import org.apache.spark.sql.functions.{call_function, lit}
 

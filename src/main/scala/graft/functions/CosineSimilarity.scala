@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -94,27 +94,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object CosineSimilarity {
+object CosineSimilarity extends SqlFunctions {
 
-  /** Arity-checked registry builder (the PqEncode pattern): a
-    * wrong-arity SQL call gets a clear error, never an
-    * IndexOutOfBoundsException from inside analyzer resolution.
-    */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => CosineSimilarity(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_cosine takes 2 arguments (vector, vector), got ${other.size}")
-  }
-
-  /** Register `graft_cosine` in the session's FunctionRegistry so both
-    * SQL (`SELECT graft_cosine(x, y)`) and the Column API resolve it.
-    * Idempotent; called by every operator that uses `cosine`.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_cosine", classOf[CosineSimilarity], "vector, vector", 2) {
+      c => CosineSimilarity(c(0), c(1))
+    })
 
   /** Column-API entry point (resolves through the FunctionRegistry). */
   def cosine(spark: SparkSession, a: Column, b: Column): Column = {

@@ -55,7 +55,7 @@ case class DctPhash(child: Expression)
     copy(child = newChild)
 }
 
-object DctPhash {
+object DctPhash extends SqlFunctions {
 
   /** Resample target: the standard 32x32 pHash working raster. */
   private final val N = 32
@@ -157,10 +157,6 @@ object DctPhash {
     org.apache.spark.sql.functions.call_function("graft_dct_phash", payload)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dct_phash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DctPhash].getName, "graft_dct_phash"),
-      (children: Seq[Expression]) => DctPhash(children.head))
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_dct_phash", classOf[DctPhash], "payload", 1)(c => DctPhash(c(0))))
 }

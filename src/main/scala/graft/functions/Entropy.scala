@@ -2,8 +2,7 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
@@ -88,21 +87,14 @@ case class ShannonEntropy(child: Expression)
     copy(child = newChild)
 }
 
-object ShannonEntropy {
+object ShannonEntropy extends SqlFunctions {
 
   private[functions] val log2 = StrictMath.log(2.0)
 
-  val builder: Seq[Expression] => Expression = {
-    case Seq(v) => ShannonEntropy(v)
-    case other => throw new IllegalArgumentException(
-      s"graft_entropy takes 1 argument (symbol array), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_entropy"),
-      new ExpressionInfo(classOf[ShannonEntropy].getName, "graft_entropy"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_entropy", classOf[ShannonEntropy], "symbol array", 1) {
+      c => ShannonEntropy(c(0))
+    })
 
   def entropy(spark: SparkSession, syms: Column): Column = {
     register(spark)

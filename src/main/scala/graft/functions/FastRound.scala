@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 import org.apache.spark.sql.{Column, SparkSession}
@@ -52,7 +52,7 @@ case class FastRound(child: Expression, scale: Int)
     copy(child = newChild)
 }
 
-object FastRound {
+object FastRound extends SqlFunctions {
 
   /** Shared by interpreted eval and codegen (one body, no drift).
     * The fallback zone around .5 fractional parts scales with ulp(p):
@@ -73,19 +73,13 @@ object FastRound {
     else math.floor(p + 0.5) / pow10
   }
 
-  /** Arity/type-checked registry builder (the PqEncode pattern). */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, Literal(s: Int, IntegerType)) => FastRound(a, s)
-    case other => throw new IllegalArgumentException(
-      "graft_round takes (double_expr, literal int scale), got " +
-        other.map(_.dataType.simpleString).mkString(", "))
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_round"),
-      new ExpressionInfo(classOf[FastRound].getName, "graft_round"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_round", classOf[FastRound], "double_expr, literal int scale", 2) {
+      case Seq(a, Literal(s: Int, IntegerType)) => FastRound(a, s)
+      case other => throw new IllegalArgumentException(
+        "graft_round takes (double_expr, literal int scale), got " +
+          other.map(_.dataType.simpleString).mkString(", "))
+    })
 
   /** Column-API entry point (resolves through the FunctionRegistry). */
   def round6(spark: SparkSession, c: Column): Column = roundAt(spark, c, 6)

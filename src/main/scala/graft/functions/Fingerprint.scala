@@ -44,7 +44,7 @@ case class Fingerprint(child: Expression)
     copy(child = newChild)
 }
 
-object Fingerprint {
+object Fingerprint extends SqlFunctions {
 
   private val Mod = 72057594037927936L // 2^56
 
@@ -88,10 +88,6 @@ object Fingerprint {
     org.apache.spark.sql.functions.call_function("graft_fingerprint", text)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_fingerprint"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[Fingerprint].getName, "graft_fingerprint"),
-      (children: Seq[Expression]) => Fingerprint(children.head))
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_fingerprint", classOf[Fingerprint], "text", 1)(c => Fingerprint(c(0))))
 }

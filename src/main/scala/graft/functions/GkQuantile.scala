@@ -3,12 +3,10 @@ package graft.functions
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, QuantileSummaries}
 import org.apache.spark.sql.functions.{array, call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
@@ -30,9 +28,11 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * confidence interval; the state is still O((1/ε)·log(ε·n)) tuples —
   * a few KB per group at any corpus size.
   *
-  * Three expressions, registered like the BloomSketch family:
+  * Three expressions, declared in `functions`:
   *  - `graft_gk_agg(value, relErr)`  — raw doubles → one binary state
   *  - `graft_gk_merge(state)`        — binary states → merged state
+  *    (the shared [[SketchMergeAgg]]; GK merge is error-preserving:
+  *    merging ε-summaries yields an ε-summary)
   *  - `graft_gk_quantiles(state, probs)` — state → array<double>
   *
   * The serialized form is a versioned little-endian layout owned by
@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
   * m×(value, g, delta)) so persisted state outlives Spark's internal
   * (non-stable) aggregate-buffer encoding.
   */
-object GkQuantile {
+object GkQuantile extends SqlFunctions {
 
   private val FormatVersion: Byte = 1
 
@@ -99,6 +99,20 @@ object GkQuantile {
     }
   }
 
+  /** The GK state's codec: [[mergeSummaries]] over the versioned
+    * byte format. The empty state carries the default ε, which a merge
+    * with any non-empty state drops.
+    */
+  private[graft] object Codec extends SketchCodec[QuantileSummaries] {
+    val family = "gk"
+    def empty: QuantileSummaries = new QuantileSummaries(
+      QuantileSummaries.defaultCompressThreshold, QuantileSummaries.defaultRelativeError)
+    def merge(a: QuantileSummaries, b: QuantileSummaries): QuantileSummaries =
+      mergeSummaries(a, b)
+    def serialize(s: QuantileSummaries): Array[Byte] = serializeSummary(s)
+    def deserialize(bytes: Array[Byte]): QuantileSummaries = deserializeSummary(bytes)
+  }
+
   /** `graft_gk_agg(value double, relErr)` → binary GK state. Null
     * values are skipped (a group of all nulls yields the empty state,
     * count 0 — its quantiles serve as null).
@@ -108,15 +122,13 @@ object GkQuantile {
       relativeError: Double,
       mutableAggBufferOffset: Int = 0,
       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[QuantileSummaries]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
+    extends SketchAgg[QuantileSummaries] with UnaryLike[Expression] {
 
     require(relativeError > 0 && relativeError < 1,
       s"relativeError must be in (0, 1): $relativeError")
 
+    override protected def codec: SketchCodec[QuantileSummaries] = Codec
     override def inputTypes = Seq(DoubleType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
     override def prettyName: String = "graft_gk_agg"
 
     override def createAggregationBuffer(): QuantileSummaries =
@@ -130,73 +142,11 @@ object GkQuantile {
       else buffer.insert(v.asInstanceOf[Double])
     }
 
-    override def merge(buffer: QuantileSummaries,
-        input: QuantileSummaries): QuantileSummaries =
-      mergeSummaries(buffer, input)
-
-    override def eval(buffer: QuantileSummaries): Any =
-      serializeSummary(buffer)
-
-    override def serialize(buffer: QuantileSummaries): Array[Byte] =
-      serializeSummary(buffer)
-
-    override def deserialize(bytes: Array[Byte]): QuantileSummaries =
-      deserializeSummary(bytes)
-
     override def withNewMutableAggBufferOffset(n: Int): GkQuantileAgg =
       copy(mutableAggBufferOffset = n)
     override def withNewInputAggBufferOffset(n: Int): GkQuantileAgg =
       copy(inputAggBufferOffset = n)
     override protected def withNewChildInternal(newChild: Expression): GkQuantileAgg =
-      copy(child = newChild)
-  }
-
-  /** `graft_gk_merge(state binary)` → merged binary GK state — the
-    * compaction aggregate: same-key states from any number of appends
-    * re-merge to ONE state whose rank guarantee still holds (GK merge
-    * is error-preserving: merging ε-summaries yields an ε-summary).
-    */
-  case class GkMergeAgg(
-      child: Expression,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[QuantileSummaries]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
-
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    override def prettyName: String = "graft_gk_merge"
-
-    override def createAggregationBuffer(): QuantileSummaries =
-      new QuantileSummaries(QuantileSummaries.defaultCompressThreshold,
-        QuantileSummaries.defaultRelativeError)
-
-    override def update(buffer: QuantileSummaries,
-        input: InternalRow): QuantileSummaries = {
-      val v = child.eval(input)
-      if (v == null) buffer
-      else mergeSummaries(buffer, deserializeSummary(v.asInstanceOf[Array[Byte]]))
-    }
-
-    override def merge(buffer: QuantileSummaries,
-        input: QuantileSummaries): QuantileSummaries =
-      mergeSummaries(buffer, input)
-
-    override def eval(buffer: QuantileSummaries): Any =
-      serializeSummary(buffer)
-
-    override def serialize(buffer: QuantileSummaries): Array[Byte] =
-      serializeSummary(buffer)
-
-    override def deserialize(bytes: Array[Byte]): QuantileSummaries =
-      deserializeSummary(bytes)
-
-    override def withNewMutableAggBufferOffset(n: Int): GkMergeAgg =
-      copy(mutableAggBufferOffset = n)
-    override def withNewInputAggBufferOffset(n: Int): GkMergeAgg =
-      copy(inputAggBufferOffset = n)
-    override protected def withNewChildInternal(newChild: Expression): GkMergeAgg =
       copy(child = newChild)
   }
 
@@ -236,50 +186,15 @@ object GkQuantile {
       copy(left = newLeft, right = newRight)
   }
 
-  private[graft] val aggBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_gk_agg expects (value, relativeError): got ${children.size}")
-    require(children(1).foldable,
-      "graft_gk_agg relativeError must be a foldable numeric literal")
-    // SQL numeric literals arrive as DECIMAL (0.01 -> Decimal(3,2)),
-    // the Column API passes a Double — accept any numeric
-    val relErr = children(1).eval() match {
-      case d: Double => d
-      case f: Float => f.toDouble
-      case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case n: Number => n.doubleValue()
-      case other => throw new IllegalArgumentException(
-        s"graft_gk_agg relativeError must be a foldable numeric literal, got $other")
-    }
-    GkQuantileAgg(children(0), relErr).toAggregateExpression()
-  }
-
-  private[graft] val mergeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1,
-      s"graft_gk_merge expects (state): got ${children.size}")
-    GkMergeAgg(children(0)).toAggregateExpression()
-  }
-
-  private[graft] val quantilesBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_gk_quantiles expects (state, probs): got ${children.size}")
-    GkQuantilesExpr(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_gk_agg"),
-      new ExpressionInfo(classOf[GkQuantileAgg].getName, "graft_gk_agg"),
-      aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_gk_merge"),
-      new ExpressionInfo(classOf[GkMergeAgg].getName, "graft_gk_merge"),
-      mergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_gk_quantiles"),
-      new ExpressionInfo(classOf[GkQuantilesExpr].getName, "graft_gk_quantiles"),
-      quantilesBuilder)
-  }
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_gk_agg", classOf[GkQuantileAgg], "value, relativeError", 2) { c =>
+      val relErr = SqlFunction.foldableDouble(c(1), "graft_gk_agg relativeError")
+      GkQuantileAgg(c(0), relErr).toAggregateExpression()
+    },
+    SketchMergeAgg.function(Codec),
+    SqlFunction("graft_gk_quantiles", classOf[GkQuantilesExpr], "state, probs", 2) {
+      c => GkQuantilesExpr(c(0), c(1))
+    })
 
   /** Aggregate a double column into one serialized ε-approximate GK
     * state. Mergeable: partitions fold locally and the shuffle carries

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
@@ -95,7 +95,7 @@ case class HyperplaneBuckets(child: Expression, numTables: Int, planesPerTable: 
     copy(child = newChild)
 }
 
-object HyperplaneBuckets {
+object HyperplaneBuckets extends SqlFunctions {
 
   val Dim = 64
   val NumTables = 8
@@ -156,30 +156,15 @@ object HyperplaneBuckets {
       lit(numTables), lit(planesPerTable))
   }
 
-  private def intArg(e: Expression, what: String): Int =
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"graft_hyperplane_buckets: $what must be an integer literal")
-    else e.eval() match {
-      case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"graft_hyperplane_buckets: $what must be an integer literal, got $other")
-    }
-
-  /** Shared registry builder (FunctionRegistry + SparkSessionExtensions):
-    * `graft_hyperplane_buckets(emb)` for the default 8x4 config, or
+  /** `graft_hyperplane_buckets(emb)` for the default 8x4 config, or
     * `(emb, numTables, planesPerTable)` with integer-literal config.
     */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(e) => HyperplaneBuckets(e)
-    case Seq(e, t, p) =>
-      HyperplaneBuckets(e, intArg(t, "numTables"), intArg(p, "planesPerTable"))
-    case other => throw new IllegalArgumentException(
-      s"graft_hyperplane_buckets takes 1 or 3 arguments, got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_hyperplane_buckets"),
-      new ExpressionInfo(classOf[HyperplaneBuckets].getName, "graft_hyperplane_buckets"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_hyperplane_buckets", classOf[HyperplaneBuckets],
+        "embedding[, numTables, planesPerTable]", 1, 3) {
+      case Seq(e) => HyperplaneBuckets(e)
+      case Seq(e, t, p) => HyperplaneBuckets(e,
+        SqlFunction.foldableInt(t, "graft_hyperplane_buckets numTables"),
+        SqlFunction.foldableInt(p, "graft_hyperplane_buckets planesPerTable"))
+    })
 }

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,7 +48,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * training-data surface (the reference's media handling is out of
   * scope entirely).
   */
-object MediaHeader {
+object MediaHeader extends SqlFunctions {
 
   /** JPEG segment-walk cap: a real header holds a handful of segments;
     * a malicious/corrupt length chain stops here instead of looping.
@@ -231,25 +230,12 @@ object MediaHeader {
       copy(child = newChild)
   }
 
-  private def unary(name: String, cls: Class[_], mk: Expression => Expression): (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier(name),
-      // the CONCRETE expression class, so DESCRIBE FUNCTION reports the
-      // real implementing class for each of the three functions
-      new ExpressionInfo(cls.getName, name),
-      { children =>
-        require(children.size == 1, s"$name expects (payload): got ${children.size}")
-        mk(children.head)
-      })
-
-  def register(spark: SparkSession): Unit = {
-    Seq(
-      unary("graft_media_format", classOf[MediaFormat], MediaFormat.apply),
-      unary("graft_media_width", classOf[MediaWidth], MediaWidth.apply),
-      unary("graft_media_height", classOf[MediaHeight], MediaHeight.apply)
-    ).foreach { case (id, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-    }
-  }
+  // the CONCRETE expression class, so DESCRIBE FUNCTION reports the
+  // real implementing class for each of the three functions
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_media_format", classOf[MediaFormat], "payload", 1)(c => MediaFormat(c(0))),
+    SqlFunction("graft_media_width", classOf[MediaWidth], "payload", 1)(c => MediaWidth(c(0))),
+    SqlFunction("graft_media_height", classOf[MediaHeight], "payload", 1)(c => MediaHeight(c(0))))
 
   import org.apache.spark.sql.functions.call_function
 

@@ -59,7 +59,7 @@ case class MinHash64(child: Expression)
     copy(child = newChild)
 }
 
-object MinHash64 {
+object MinHash64 extends SqlFunctions {
 
   private val Seed = 42L // Spark's xxhash64 default seed
   val P31 = 2147483647L // 2^31 - 1: a*x+b stays well inside a long
@@ -118,10 +118,6 @@ object MinHash64 {
     org.apache.spark.sql.functions.call_function("graft_minhash64", shingles)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash64"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHash64].getName, "graft_minhash64"),
-      (children: Seq[Expression]) => MinHash64(children.head))
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_minhash64", classOf[MinHash64], "shingles", 1)(c => MinHash64(c(0))))
 }

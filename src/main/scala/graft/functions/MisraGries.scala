@@ -6,10 +6,8 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -37,13 +35,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * frequent" without knowing them in advance — the top-domain /
   * hot-key / dominant-template question a corpus pipeline asks first.
   *
-  * Three expressions, registered like the GK family:
+  * Three expressions, declared in `functions` like the GK family:
   *  - `graft_mg_agg(item, k)`      — items → one binary state
   *  - `graft_mg_merge(state)`      — binary states → merged state
   *  - `graft_mg_topk(state, topK)` — state → array<struct<item,
   *    count_lo, count_hi>> sorted (count_lo desc, item asc)
   */
-object MisraGries {
+object MisraGries extends SqlFunctions {
 
   private val FormatVersion: Byte = 1
 
@@ -125,6 +123,19 @@ object MisraGries {
     s
   }
 
+  /** The MG state's codec. The empty state is the capacity-0
+    * sentinel: a merge adopts k from the first state it meets.
+    */
+  private[graft] object Codec extends SketchCodec[MgSummary] {
+    val family = "mg"
+    def empty: MgSummary = new MgSummary(0)
+    private def isEmpty(s: MgSummary) = s.k == 0 && s.n == 0L
+    def merge(a: MgSummary, b: MgSummary): MgSummary =
+      if (isEmpty(a)) b else if (isEmpty(b)) a else a.merge(b)
+    def serialize(s: MgSummary): Array[Byte] = serializeSummary(s)
+    def deserialize(bytes: Array[Byte]): MgSummary = deserializeSummary(bytes)
+  }
+
   /** `graft_mg_agg(item string, k)` → binary MG state. Null items are
     * skipped (they are not a frequency class).
     */
@@ -133,14 +144,12 @@ object MisraGries {
       k: Int,
       mutableAggBufferOffset: Int = 0,
       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MgSummary]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
+    extends SketchAgg[MgSummary] with UnaryLike[Expression] {
 
     require(k >= 1, s"k must be >= 1: $k")
 
+    override protected def codec: SketchCodec[MgSummary] = Codec
     override def inputTypes = Seq(StringType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
     override def prettyName: String = "graft_mg_agg"
 
     override def createAggregationBuffer(): MgSummary = new MgSummary(k)
@@ -151,63 +160,11 @@ object MisraGries {
       buffer
     }
 
-    override def merge(buffer: MgSummary, input: MgSummary): MgSummary =
-      buffer.merge(input)
-
-    override def eval(buffer: MgSummary): Any = serializeSummary(buffer)
-    override def serialize(buffer: MgSummary): Array[Byte] = serializeSummary(buffer)
-    override def deserialize(bytes: Array[Byte]): MgSummary = deserializeSummary(bytes)
-
     override def withNewMutableAggBufferOffset(nOff: Int): MgAgg =
       copy(mutableAggBufferOffset = nOff)
     override def withNewInputAggBufferOffset(nOff: Int): MgAgg =
       copy(inputAggBufferOffset = nOff)
     override protected def withNewChildInternal(newChild: Expression): MgAgg =
-      copy(child = newChild)
-  }
-
-  /** `graft_mg_merge(state binary)` → merged binary MG state — the
-    * compaction aggregate; the Agarwal et al. rule keeps the error
-    * bound at ⌊n_total/(k+1)⌋ at any re-compaction depth.
-    */
-  case class MgMergeAgg(
-      child: Expression,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[MgSummary]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
-
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    override def prettyName: String = "graft_mg_merge"
-
-    // k adopts from the first merged state (capacity 0 sentinel)
-    override def createAggregationBuffer(): MgSummary = new MgSummary(0)
-
-    private def mergeInto(buffer: MgSummary, s: MgSummary): MgSummary =
-      if (buffer.k == 0 && buffer.n == 0L) s
-      else if (s.k == 0 && s.n == 0L) buffer
-      else buffer.merge(s)
-
-    override def update(buffer: MgSummary, input: InternalRow): MgSummary = {
-      val v = child.eval(input)
-      if (v == null) buffer
-      else mergeInto(buffer, deserializeSummary(v.asInstanceOf[Array[Byte]]))
-    }
-
-    override def merge(buffer: MgSummary, input: MgSummary): MgSummary =
-      mergeInto(buffer, input)
-
-    override def eval(buffer: MgSummary): Any = serializeSummary(buffer)
-    override def serialize(buffer: MgSummary): Array[Byte] = serializeSummary(buffer)
-    override def deserialize(bytes: Array[Byte]): MgSummary = deserializeSummary(bytes)
-
-    override def withNewMutableAggBufferOffset(nOff: Int): MgMergeAgg =
-      copy(mutableAggBufferOffset = nOff)
-    override def withNewInputAggBufferOffset(nOff: Int): MgMergeAgg =
-      copy(inputAggBufferOffset = nOff)
-    override protected def withNewChildInternal(newChild: Expression): MgMergeAgg =
       copy(child = newChild)
   }
 
@@ -249,56 +206,22 @@ object MisraGries {
       copy(left = newLeft, right = newRight)
   }
 
-  private[graft] val aggBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_mg_agg expects (item, k): got ${children.size}")
-    require(children(1).foldable, "graft_mg_agg k must be a foldable integer literal")
-    val k = children(1).eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"graft_mg_agg k must be a foldable integer literal, got $other")
-    }
-    MgAgg(children(0), k).toAggregateExpression()
-  }
-
-  private[graft] val mergeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1,
-      s"graft_mg_merge expects (state): got ${children.size}")
-    MgMergeAgg(children(0)).toAggregateExpression()
-  }
-
-  private[graft] val topkBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_mg_topk expects (state, topK): got ${children.size}")
-    // SQL callers bypass mgTopK's require — enforce the same contract
-    // here when the literal is foldable (the only supported form)
-    if (children(1).foldable) {
-      val k = children(1).eval() match {
-        case i: Int => i
-        case l: Long => l.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_mg_topk topK must be an integer literal, got $other")
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_mg_agg", classOf[MgAgg], "item, k", 2) {
+      c => MgAgg(c(0), SqlFunction.foldableInt(c(1), "graft_mg_agg k")).toAggregateExpression()
+    },
+    // the Agarwal et al. rule keeps the error bound at ⌊n_total/(k+1)⌋
+    // at any re-compaction depth
+    SketchMergeAgg.function(Codec),
+    SqlFunction("graft_mg_topk", classOf[MgTopK], "state, topK", 2) { c =>
+      // SQL callers bypass mgTopK's require — enforce the same contract
+      // here when the literal is foldable (the only supported form)
+      if (c(1).foldable) {
+        val k = SqlFunction.foldableInt(c(1), "graft_mg_topk topK")
+        require(k >= 1, s"graft_mg_topk topK must be >= 1: $k")
       }
-      require(k >= 1, s"graft_mg_topk topK must be >= 1: $k")
-    }
-    MgTopK(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_mg_agg"),
-      new ExpressionInfo(classOf[MgAgg].getName, "graft_mg_agg"),
-      aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_mg_merge"),
-      new ExpressionInfo(classOf[MgMergeAgg].getName, "graft_mg_merge"),
-      mergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_mg_topk"),
-      new ExpressionInfo(classOf[MgTopK].getName, "graft_mg_topk"),
-      topkBuilder)
-  }
+      MgTopK(c(0), c(1))
+    })
 
   import org.apache.spark.sql.functions.{call_function, lit}
 

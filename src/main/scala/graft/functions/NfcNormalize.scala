@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -39,7 +39,7 @@ case class NfcNormalize(child: Expression)
     copy(child = newChild)
 }
 
-object NfcNormalize {
+object NfcNormalize extends SqlFunctions {
 
   import java.text.Normalizer
 
@@ -58,9 +58,6 @@ object NfcNormalize {
     org.apache.spark.sql.functions.call_function("graft_nfc", text)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "graft_nfc"),
-      (children: Seq[Expression]) => NfcNormalize(children.head))
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_nfc", classOf[NfcNormalize], "text", 1)(c => NfcNormalize(c(0))))
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
@@ -81,23 +80,10 @@ case class L2Squared(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object L2Squared {
+object L2Squared extends SqlFunctions {
 
-  /** Shared registry builder with an arity check (the PqEncode pattern):
-    * a wrong-arity SQL call gets a clear error, not an
-    * IndexOutOfBoundsException from inside analyzer resolution.
-    */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(a, b) => L2Squared(a, b)
-    case other => throw new IllegalArgumentException(
-      s"graft_l2sq takes 2 arguments (vector, vector), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2Squared].getName, "graft_l2sq"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_l2sq", classOf[L2Squared], "vector, vector", 2)(c => L2Squared(c(0), c(1))))
 
   def l2sq(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)
@@ -160,20 +146,10 @@ case class UnitVector(child: Expression)
     copy(child = newChild)
 }
 
-object UnitVector {
+object UnitVector extends SqlFunctions {
 
-  /** Arity-checked registry builder (see [[L2Squared.builder]]). */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(v) => UnitVector(v)
-    case other => throw new IllegalArgumentException(
-      s"graft_unit takes 1 argument (vector), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_unit"),
-      new ExpressionInfo(classOf[UnitVector].getName, "graft_unit"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_unit", classOf[UnitVector], "vector", 1)(c => UnitVector(c(0))))
 
   def unit(spark: SparkSession, vec: Column): Column = {
     register(spark)
@@ -264,23 +240,12 @@ case class PqEncode(first: Expression, second: Expression, third: Expression)
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
-object PqEncode {
+object PqEncode extends SqlFunctions {
 
-  /** Shared registry builder (FunctionRegistry + SparkSessionExtensions)
-    * with an arity check — a 2-argument SQL call gets a clear error,
-    * not an IndexOutOfBoundsException from inside resolution.
-    */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(e, cb, m) => PqEncode(e, cb, m)
-    case other => throw new IllegalArgumentException(
-      s"graft_pq_encode takes 3 arguments (embedding, codebook, m), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_pq_encode", classOf[PqEncode], "embedding, codebook, m", 3) {
+      c => PqEncode(c(0), c(1), c(2))
+    })
 
   /** `m` is a COLUMN so callers can derive it from the codebook row
     * itself (operators/ProductQuantization.flatCodebook does) — the
@@ -370,20 +335,10 @@ case class PqAdc(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object PqAdc {
+object PqAdc extends SqlFunctions {
 
-  /** Arity-checked registry builder (see [[L2Squared.builder]]). */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(codes, lut) => PqAdc(codes, lut)
-    case other => throw new IllegalArgumentException(
-      s"graft_pq_adc takes 2 arguments (codes, lut), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "graft_pq_adc"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_pq_adc", classOf[PqAdc], "codes, lut", 2)(c => PqAdc(c(0), c(1))))
 
   def adc(spark: SparkSession, codes: Column, lut: Column): Column = {
     register(spark)

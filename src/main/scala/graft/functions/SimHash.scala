@@ -48,7 +48,7 @@ case class SimHash(child: Expression)
     copy(child = newChild)
 }
 
-object SimHash {
+object SimHash extends SqlFunctions {
 
   private val Seed = 42L // Spark's xxhash64 default seed
 
@@ -91,10 +91,6 @@ object SimHash {
     org.apache.spark.sql.functions.call_function("graft_simhash", text)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_simhash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[SimHash].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHash(children.head))
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_simhash", classOf[SimHash], "text", 1)(c => SimHash(c(0))))
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType}
@@ -73,19 +72,12 @@ case class Sq8Encode(child: Expression)
     copy(child = newChild)
 }
 
-object Sq8Encode {
+object Sq8Encode extends SqlFunctions {
 
-  val builder: Seq[Expression] => Expression = {
-    case Seq(v) => Sq8Encode(v)
-    case other => throw new IllegalArgumentException(
-      s"graft_sq8_encode takes 1 argument (unit float vector), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sq8_encode"),
-      new ExpressionInfo(classOf[Sq8Encode].getName, "graft_sq8_encode"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_sq8_encode", classOf[Sq8Encode], "unit float vector", 1) {
+      c => Sq8Encode(c(0))
+    })
 
   def encode(spark: SparkSession, vec: Column): Column = {
     register(spark)
@@ -155,19 +147,12 @@ case class Sq8Dot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object Sq8Dot {
+object Sq8Dot extends SqlFunctions {
 
-  val builder: Seq[Expression] => Expression = {
-    case Seq(c, v) => Sq8Dot(c, v)
-    case other => throw new IllegalArgumentException(
-      s"graft_sq8_dot takes 2 arguments (codes, unit float vector), got ${other.size}")
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_sq8_dot"),
-      new ExpressionInfo(classOf[Sq8Dot].getName, "graft_sq8_dot"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_sq8_dot", classOf[Sq8Dot], "codes, unit float vector", 2) {
+      c => Sq8Dot(c(0), c(1))
+    })
 
   def dot(spark: SparkSession, codes: Column, query: Column): Column = {
     register(spark)

@@ -7,12 +7,10 @@ import java.security.MessageDigest
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -51,7 +49,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * a CHANGED weight is two entries — pass a stable per-row weight
   * (chars, tokens, bytes), not a mutable metric.
   *
-  * Expressions, registered like the bottom-k family:
+  * Expressions, declared in `functions` like the bottom-k family:
   *  - `graft_wr_agg(id, weight, k)` — rows → one binary state
   *  - `graft_wr_merge(state)`       — binary states → merged state
   *  - `graft_wr_sample(state, m)`   — state → array<struct<wkey, id,
@@ -59,7 +57,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Reference analog: none — beyond-reference training-data surface.
   */
-object WeightedReservoir {
+object WeightedReservoir extends SqlFunctions {
 
   private val FormatVersion: Byte = 1
 
@@ -126,7 +124,7 @@ object WeightedReservoir {
       mutable.TreeSet.empty(EntryOrdering)
 
     def insert(id: String, weight: Double): Unit = {
-      // k=0 is the WrMergeAgg capacity sentinel, which holds no entries
+      // k=0 is the merge aggregate's capacity sentinel, which holds no entries
       // by definition; without this guard the eviction branch would call
       // entries.last on an empty TreeSet (r14 ADVICE — latent, since
       // mergeInto special-cases the sentinel, but no caller should be
@@ -189,6 +187,21 @@ object WeightedReservoir {
     s
   }
 
+  /** The reservoir state's codec. The empty state is the capacity-0
+    * sentinel: a merge adopts k from the first state it meets, and a
+    * merge over no states serializes an empty state that serves an
+    * empty sample. The merge is set union.
+    */
+  private[graft] object Codec extends SketchCodec[WrSummary] {
+    val family = "wr"
+    def empty: WrSummary = new WrSummary(0)
+    private def isEmpty(s: WrSummary) = s.k == 0 && s.entries.isEmpty
+    def merge(a: WrSummary, b: WrSummary): WrSummary =
+      if (isEmpty(a)) b else if (isEmpty(b)) a else a.merge(b)
+    def serialize(s: WrSummary): Array[Byte] = serializeSummary(s)
+    def deserialize(bytes: Array[Byte]): WrSummary = deserializeSummary(bytes)
+  }
+
   /** `graft_wr_agg(id string, weight double, k)` → binary state. Rows
     * with a null id or null weight are skipped (no identity / no mass).
     */
@@ -198,14 +211,12 @@ object WeightedReservoir {
       k: Int,
       mutableAggBufferOffset: Int = 0,
       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[WrSummary]
-    with ImplicitCastInputTypes with BinaryLike[Expression] {
+    extends SketchAgg[WrSummary] with BinaryLike[Expression] {
 
     require(k >= 1, s"k must be >= 1: $k")
 
+    override protected def codec: SketchCodec[WrSummary] = Codec
     override def inputTypes = Seq(StringType, DoubleType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
     override def prettyName: String = "graft_wr_agg"
 
     override def createAggregationBuffer(): WrSummary = new WrSummary(k)
@@ -220,13 +231,6 @@ object WeightedReservoir {
       buffer
     }
 
-    override def merge(buffer: WrSummary, input: WrSummary): WrSummary =
-      buffer.merge(input)
-
-    override def eval(buffer: WrSummary): Any = serializeSummary(buffer)
-    override def serialize(buffer: WrSummary): Array[Byte] = serializeSummary(buffer)
-    override def deserialize(bytes: Array[Byte]): WrSummary = deserializeSummary(bytes)
-
     override def withNewMutableAggBufferOffset(nOff: Int): WrAgg =
       copy(mutableAggBufferOffset = nOff)
     override def withNewInputAggBufferOffset(nOff: Int): WrAgg =
@@ -234,51 +238,6 @@ object WeightedReservoir {
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): WrAgg =
       copy(left = newLeft, right = newRight)
-  }
-
-  /** `graft_wr_merge(state binary)` → merged binary state — the
-    * compaction aggregate. Set-union semantics; the k=0 sentinel of an
-    * empty merge serializes an empty state that serves an empty sample.
-    */
-  case class WrMergeAgg(
-      child: Expression,
-      mutableAggBufferOffset: Int = 0,
-      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[WrSummary]
-    with ImplicitCastInputTypes with UnaryLike[Expression] {
-
-    override def inputTypes = Seq(BinaryType)
-    override def dataType: DataType = BinaryType
-    override def nullable: Boolean = false
-    override def prettyName: String = "graft_wr_merge"
-
-    // k adopts from the first merged state (capacity 0 sentinel)
-    override def createAggregationBuffer(): WrSummary = new WrSummary(0)
-
-    private def mergeInto(buffer: WrSummary, s: WrSummary): WrSummary =
-      if (buffer.k == 0 && buffer.entries.isEmpty) s
-      else if (s.k == 0 && s.entries.isEmpty) buffer
-      else buffer.merge(s)
-
-    override def update(buffer: WrSummary, input: InternalRow): WrSummary = {
-      val v = child.eval(input)
-      if (v == null) buffer
-      else mergeInto(buffer, deserializeSummary(v.asInstanceOf[Array[Byte]]))
-    }
-
-    override def merge(buffer: WrSummary, input: WrSummary): WrSummary =
-      mergeInto(buffer, input)
-
-    override def eval(buffer: WrSummary): Any = serializeSummary(buffer)
-    override def serialize(buffer: WrSummary): Array[Byte] = serializeSummary(buffer)
-    override def deserialize(bytes: Array[Byte]): WrSummary = deserializeSummary(bytes)
-
-    override def withNewMutableAggBufferOffset(nOff: Int): WrMergeAgg =
-      copy(mutableAggBufferOffset = nOff)
-    override def withNewInputAggBufferOffset(nOff: Int): WrMergeAgg =
-      copy(inputAggBufferOffset = nOff)
-    override protected def withNewChildInternal(newChild: Expression): WrMergeAgg =
-      copy(child = newChild)
   }
 
   private val SampleStruct = StructType(Seq(
@@ -312,54 +271,20 @@ object WeightedReservoir {
       copy(left = newLeft, right = newRight)
   }
 
-  private def foldableInt(e: Expression, what: String): Int = {
-    require(e.foldable, s"$what must be a foldable integer literal")
-    e.eval() match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case other => throw new IllegalArgumentException(
-        s"$what must be a foldable integer literal, got $other")
-    }
-  }
-
-  private[graft] val aggBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 3,
-      s"graft_wr_agg expects (id, weight, k): got ${children.size}")
-    val k = foldableInt(children(2), "graft_wr_agg k")
-    require(k >= 1, s"graft_wr_agg k must be >= 1: $k")
-    WrAgg(children(0), children(1), k).toAggregateExpression()
-  }
-
-  private[graft] val mergeBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 1,
-      s"graft_wr_merge expects (state): got ${children.size}")
-    WrMergeAgg(children(0)).toAggregateExpression()
-  }
-
-  private[graft] val sampleBuilder: Seq[Expression] => Expression = { children =>
-    require(children.size == 2,
-      s"graft_wr_sample expects (state, m): got ${children.size}")
-    if (children(1).foldable) {
-      val m = foldableInt(children(1), "graft_wr_sample m")
-      require(m >= 1, s"graft_wr_sample m must be >= 1: $m")
-    }
-    WrSample(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_wr_agg"),
-      new ExpressionInfo(classOf[WrAgg].getName, "graft_wr_agg"),
-      aggBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_wr_merge"),
-      new ExpressionInfo(classOf[WrMergeAgg].getName, "graft_wr_merge"),
-      mergeBuilder)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_wr_sample"),
-      new ExpressionInfo(classOf[WrSample].getName, "graft_wr_sample"),
-      sampleBuilder)
-  }
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_wr_agg", classOf[WrAgg], "id, weight, k", 3) { c =>
+      val k = SqlFunction.foldableInt(c(2), "graft_wr_agg k")
+      require(k >= 1, s"graft_wr_agg k must be >= 1: $k")
+      WrAgg(c(0), c(1), k).toAggregateExpression()
+    },
+    SketchMergeAgg.function(Codec),
+    SqlFunction("graft_wr_sample", classOf[WrSample], "state, m", 2) { c =>
+      if (c(1).foldable) {
+        val m = SqlFunction.foldableInt(c(1), "graft_wr_sample m")
+        require(m >= 1, s"graft_wr_sample m must be >= 1: $m")
+      }
+      WrSample(c(0), c(1))
+    })
 
   import org.apache.spark.sql.functions.{call_function, lit}
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -110,34 +110,18 @@ case class WinnowPrints(child: Expression, w: Int, window: Int)
     copy(child = newChild)
 }
 
-object WinnowPrints {
+object WinnowPrints extends SqlFunctions {
 
   private val digest = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
       java.security.MessageDigest.getInstance("MD5")
   }
 
-  private def intArg(e: Expression, what: String): Int =
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"graft_winnow: $what must be an integer literal")
-    else e.eval() match {
-      case n: Number => n.intValue()
-      case other => throw new IllegalArgumentException(
-        s"graft_winnow: $what must be an integer literal, got $other")
-    }
-
-  /** Shared registry builder: `graft_winnow(text, w, window)`. */
-  val builder: Seq[Expression] => Expression = {
-    case Seq(t, w, win) => WinnowPrints(t, intArg(w, "w"), intArg(win, "window"))
-    case other => throw new IllegalArgumentException(
-      s"graft_winnow takes 3 arguments (text, w, window), got ${other.size}")
-  }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowPrints].getName, "graft_winnow"),
-      builder)
+  val functions: Seq[SqlFunction] = Seq(
+    SqlFunction("graft_winnow", classOf[WinnowPrints], "text, w, window", 3) {
+      c => WinnowPrints(c(0), SqlFunction.foldableInt(c(1), "graft_winnow w"),
+        SqlFunction.foldableInt(c(2), "graft_winnow window"))
+    })
 
   def winnow(spark: org.apache.spark.sql.SparkSession,
       text: org.apache.spark.sql.Column, w: Int, window: Int): org.apache.spark.sql.Column = {

@@ -108,15 +108,19 @@ object WordShingles {
     org.apache.spark.sql.functions.call_function(s"graft_shingles_$k", tokens)
   }
 
-  /** Registers width-specific names (`graft_shingles_3`); the width is
-    * part of the operator's schema, not a data-dependent argument.
+  /** The width-specific name `graft_shingles_<k>`; the width is part
+    * of the operator's schema, not a data-dependent argument.
     */
-  def register(spark: SparkSession, widths: Seq[Int] = Seq(2, 3, 4)): Unit =
-    widths.foreach { k =>
-      spark.sessionState.functionRegistry.registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(s"graft_shingles_$k"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[WordShingles].getName, s"graft_shingles_$k"),
-        (children: Seq[Expression]) => WordShingles(children.head, k))
-    }
+  def function(k: Int): SqlFunction =
+    SqlFunction(s"graft_shingles_$k", classOf[WordShingles], "tokens", 1)(c => WordShingles(c(0), k))
+
+  private val DefaultWidths = Seq(2, 3, 4)
+
+  /** The widths every session gets; [[shingles]] registers any other
+    * width on demand.
+    */
+  val functions: Seq[SqlFunction] = DefaultWidths.map(function)
+
+  def register(spark: SparkSession, widths: Seq[Int] = DefaultWidths): Unit =
+    SqlFunction.register(spark, widths.map(function))
 }

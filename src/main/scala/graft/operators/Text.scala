@@ -1336,9 +1336,26 @@ object Text {
     */
   def bm25FromTf(tfRaw: DataFrame, queries: DataFrame,
       queryIdCol: String = "query_id", queryTextCol: String = "query_text",
-      k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): DataFrame = {
-    require(k1 > 0 && b >= 0 && b <= 1 && topK >= 1,
-      s"bm25 needs k1 > 0, b in [0,1], topK >= 1: k1=$k1 b=$b topK=$topK")
+      k1: Double = 1.2, b: Double = 0.75, topK: Int = 10): DataFrame =
+    bm25Runs(tfRaw, queries, Seq((k1, b)), queryIdCol, queryTextCol, topK).head
+
+  /** One BM25 run per `(k1, b)` over ONE index derivation from the tf
+    * states: tf/dl/df/avgdl derive once, the per-(query, doc)
+    * contribution pass carries one score column per parameterization,
+    * one aggregation sums them all, and the per-param rank windows
+    * share the single (query_id) exchange. A single pair keeps the
+    * plain `__c` / `score` / `rank` columns; an ensemble numbers them.
+    */
+  private def bm25Runs(tfRaw: DataFrame, queries: DataFrame,
+      params: Seq[(Double, Double)], queryIdCol: String, queryTextCol: String,
+      topK: Int): Seq[DataFrame] = {
+    params.foreach { case (k1, b) =>
+      require(k1 > 0 && b >= 0 && b <= 1 && topK >= 1,
+        s"bm25 needs k1 > 0, b in [0,1], topK >= 1: k1=$k1 b=$b topK=$topK")
+    }
+    val one = params.size == 1
+    def cCol(i: Int) = if (one) "__c" else s"__c$i"
+    def run(stem: String, i: Int) = if (one) stem else s"__$stem$i"
     val tf = bm25TfCompact(tfRaw)
     val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -1350,26 +1367,34 @@ object Text {
       .select(Cols.q(queryIdCol).as("query_id"),
         explode(expr(s"filter(split(`$queryTextCol`, ' '), x -> x != '')")).as("term"))
       .distinct()
-    val contrib = tf
-      .join(broadcast(qterms), Seq("term"))
-      .join(dl, Seq("doc_id"))
-      .join(df, Seq("term"))
-      .crossJoin(broadcast(stats))
-      .withColumn("__c", round(
-        log(lit(1.0) + (col("__n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-          * (col("tf").cast("double") * lit(k1 + 1.0))
-          / (col("tf").cast("double") +
-            lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("__avgdl"))),
-        6).cast("decimal(28,6)"))
+    // the idf/tf expression spelled once (shared with the oracle)
+    def c(k1: Double, b: Double) = round(
+      log(lit(1.0) + (col("__n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
+        * (col("tf").cast("double") * lit(k1 + 1.0))
+        / (col("tf").cast("double") +
+          lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("__avgdl"))),
+      6).cast("decimal(28,6)")
+    val contrib = params.zipWithIndex.foldLeft(
+      tf.join(broadcast(qterms), Seq("term"))
+        .join(dl, Seq("doc_id"))
+        .join(df, Seq("term"))
+        .crossJoin(broadcast(stats))) { case (acc, ((k1, b), i)) =>
+      acc.withColumn(cCol(i), c(k1, b))
+    }
+    val scoreAggs = params.indices.map(i =>
+      sum(col(cCol(i))).cast("decimal(28,6)").cast("double").as(run("score", i))) :+
+      count(lit(1)).as("n_matched")
     val scored = contrib.groupBy("query_id", "doc_id")
-      .agg(sum(col("__c")).cast("decimal(28,6)").cast("double").as("score"),
-        count(lit(1)).as("n_matched"))
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("query_id"), col("rank"), col("doc_id"), col("score"),
-        col("n_matched"))
-      .orderBy("query_id", "rank")
+      .agg(scoreAggs.head, scoreAggs.tail: _*)
+    val ranked = params.indices.foldLeft(scored) { (acc, i) =>
+      acc.withColumn(run("rank", i), row_number().over(
+        Window.partitionBy("query_id").orderBy(col(run("score", i)).desc, col("doc_id").asc)))
+    }
+    params.indices.map(i =>
+      ranked.filter(col(run("rank", i)) <= topK)
+        .select(col("query_id"), col(run("rank", i)).as("rank"), col("doc_id"),
+          col(run("score", i)).as("score"), col("n_matched"))
+        .orderBy("query_id", "rank"))
   }
 
   /** The t23 gate's fixed probe queries — three retrieval intents over
@@ -1449,17 +1474,13 @@ object Text {
   }
 
   /** Several BM25 parameterizations over ONE shared index derivation —
-    * the r17 restatement of the two-independent-runs ensemble: tf/dl/
-    * df/avgdl derive once, the per-(query, doc) contribution pass
-    * carries one score column PER parameterization, one aggregation
-    * sums them all, and the per-param rank windows share the single
-    * (query_id) exchange. Before this the ensemble planned each run
-    * from scratch — two corpus tokenizations and twin dl/df/stats
-    * subtrees (70 Exchange nodes in the t25 plan; guide §2.4 "two
-    * operations keyed the same way can share one exchange"). Each
-    * returned run is value-identical to `bm25Rank(docs, queries, k1,
-    * b, topK)` — same rounded contributions, same decimal fold, same
-    * (score desc, doc_id) ranking — verified row-for-row at the gate.
+    * the r17 restatement of the two-independent-runs ensemble (which
+    * planned each run from scratch: two corpus tokenizations and twin
+    * dl/df/stats subtrees, 70 Exchange nodes in the t25 plan; guide
+    * §2.4 "two operations keyed the same way can share one exchange").
+    * Each returned run is value-identical to `bm25Rank(docs, queries,
+    * k1, b, topK)`: both are calls of the one body over the same tf
+    * states.
     */
   def bm25RankEnsemble(docs: DataFrame, queries: DataFrame,
       params: Seq[(Double, Double)],
@@ -1467,50 +1488,8 @@ object Text {
       queryIdCol: String = "query_id", queryTextCol: String = "query_text",
       topK: Int = 10): Seq[DataFrame] = {
     require(params.nonEmpty, "bm25RankEnsemble needs at least one (k1, b)")
-    params.foreach { case (k1, b) =>
-      require(k1 > 0 && b >= 0 && b <= 1 && topK >= 1,
-        s"bm25 needs k1 > 0, b in [0,1], topK >= 1: k1=$k1 b=$b topK=$topK")
-    }
-    val tf = bm25TfCompact(bm25TfStates(docs, idCol, textCol))
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = dl.agg(count(lit(1)).as("__n"), sum(col("dl")).as("__toks"))
-      .select(col("__n"),
-        (col("__toks").cast("double") / col("__n").cast("double")).as("__avgdl"))
-    val qterms = queries
-      .select(Cols.q(queryIdCol).as("query_id"),
-        explode(expr(s"filter(split(`$queryTextCol`, ' '), x -> x != '')")).as("term"))
-      .distinct()
-    // identical idf/tf expression per param (shared spelling with
-    // bm25FromTf and the oracle), one column each over the SAME rows
-    def c(k1: Double, b: Double) = round(
-      log(lit(1.0) + (col("__n") - col("df") + lit(0.5)) / (col("df") + lit(0.5)))
-        * (col("tf").cast("double") * lit(k1 + 1.0))
-        / (col("tf").cast("double") +
-          lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("__avgdl"))),
-      6).cast("decimal(28,6)")
-    val contrib = params.zipWithIndex.foldLeft(
-      tf.join(broadcast(qterms), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .join(df, Seq("term"))
-        .crossJoin(broadcast(stats))) { case (acc, ((k1, b), i)) =>
-      acc.withColumn(s"__c$i", c(k1, b))
-    }
-    val scoreAggs = params.indices.map(i =>
-      sum(col(s"__c$i")).cast("decimal(28,6)").cast("double").as(s"__score$i")) :+
-      count(lit(1)).as("n_matched")
-    val scored = contrib.groupBy("query_id", "doc_id")
-      .agg(scoreAggs.head, scoreAggs.tail: _*)
-    // all rank windows share the one (query_id) hash partitioning
-    val ranked = params.indices.foldLeft(scored) { (acc, i) =>
-      acc.withColumn(s"__rank$i", row_number().over(
-        Window.partitionBy("query_id").orderBy(col(s"__score$i").desc, col("doc_id").asc)))
-    }
-    params.indices.map(i =>
-      ranked.filter(col(s"__rank$i") <= topK)
-        .select(col("query_id"), col(s"__rank$i").as("rank"), col("doc_id"),
-          col(s"__score$i").as("score"), col("n_matched"))
-        .orderBy("query_id", "rank"))
+    bm25Runs(bm25TfStates(docs, idCol, textCol), queries, params,
+      queryIdCol, queryTextCol, topK)
   }
 
   /** Ranked-retrieval quality metrics (nDCG@k / MRR / precision@k /

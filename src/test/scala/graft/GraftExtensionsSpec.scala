@@ -100,6 +100,27 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("every function-table entry is injected: its name resolves in a derived session") {
+    val names = GraftExtensions.functions.map(_.name)
+    assert(names.size === 44 && names.distinct.size === names.size, names.mkString(", "))
+    val derived = spark.newSession()
+    val missing = names.filterNot(n => derived.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
+  }
+
+  test("every function-table entry refuses one argument too many with an argument-count message") {
+    val derived = spark.newSession()
+    for (f <- GraftExtensions.functions) {
+      val nulls = Seq.fill(f.arities.max + 1)("NULL").mkString(", ")
+      val e = intercept[Exception](derived.sql(s"SELECT ${f.name}($nulls)").collect())
+      val chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => Option(t.getMessage).exists(_.contains("argument"))),
+        s"${f.name}: ${chain.map(_.getMessage).mkString(" | ")}")
+      assert(!chain.exists(t => t.isInstanceOf[IndexOutOfBoundsException] ||
+        t.isInstanceOf[NoSuchElementException]), f.name)
+    }
+  }
+
   test("the bloom sketch SQL pair builds and probes through a scalar subquery") {
     val derived = spark.newSession()
     derived.sql("SELECT explode(sequence(1, 100)) AS v")
