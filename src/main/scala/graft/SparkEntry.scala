@@ -1298,36 +1298,38 @@ object SparkEntry {
     // variance is ANCHORED (r10): ssd = Σ(v−m)² folded exactly about
     // the quantized mean m, served as ssd/n − δ² with δ = mean − m —
     // the same two-pass form the engine folds, so no catastrophic
-    // cancellation on either side
+    // cancellation on either side. n counts values, groups match
+    // null-safe, and every row is served (null value → null scores)
     "q28_zscore_normalize" ->
       """WITH q AS (
         |  SELECT event_id, event_type, CAST(value AS DECIMAL(12,2)) AS v FROM events
         |), a AS (
-        |  SELECT event_type, COUNT(*) AS n,
+        |  SELECT event_type, COUNT(v) AS n,
         |    CAST(SUM(v) AS DOUBLE) AS s1,
         |    CAST(MIN(v) AS DOUBLE) AS vmin,
         |    CAST(MAX(v) AS DOUBLE) AS vmax,
-        |    CAST(CAST(SUM(v) AS DOUBLE) / COUNT(*) AS DECIMAL(12,2)) AS m
+        |    CAST(CAST(SUM(v) AS DOUBLE) / COUNT(v) AS DECIMAL(12,2)) AS m
         |  FROM q GROUP BY 1
         |), sd AS (
         |  SELECT q.event_type,
         |    CAST(SUM(CAST((v - m) * 100 AS DECIMAL(19,0))
         |           * CAST((v - m) * 100 AS DECIMAL(19,0))) AS DOUBLE) AS ssd
-        |  FROM q JOIN a USING (event_type) GROUP BY 1
+        |  FROM q JOIN a ON q.event_type IS NOT DISTINCT FROM a.event_type
+        |  GROUP BY 1
         |), st AS (
         |  SELECT a.*, sd.ssd,
         |    s1 / n - CAST(m AS DOUBLE) AS delta
-        |  FROM a JOIN sd USING (event_type)
+        |  FROM a JOIN sd ON a.event_type IS NOT DISTINCT FROM sd.event_type
         |)
         |SELECT q.event_id, q.event_type,
         |  CASE WHEN ssd / 10000.0 / n - delta * delta > 0
         |    THEN round((CAST(v AS DOUBLE) - s1 / n)
         |      / sqrt(ssd / 10000.0 / n - delta * delta), 6)
-        |    ELSE 0.0 END AS value_z,
+        |    WHEN v IS NOT NULL AND n IS NOT NULL THEN 0.0 END AS value_z,
         |  CASE WHEN vmax > vmin
         |    THEN round((CAST(v AS DOUBLE) - vmin) / (vmax - vmin), 6)
-        |    ELSE 0.0 END AS value_minmax
-        |FROM q JOIN st USING (event_type)
+        |    WHEN v IS NOT NULL AND n IS NOT NULL THEN 0.0 END AS value_minmax
+        |FROM q LEFT JOIN st ON q.event_type IS NOT DISTINCT FROM st.event_type
         |ORDER BY event_id""".stripMargin,
 
     // the state detour must be invisible: the oracle aggregates the
@@ -2121,7 +2123,7 @@ object SparkEntry {
         |           * CAST((v2 - m2) * 100 AS DECIMAL(19,0))) AS DOUBLE) AS sp12,
         |    CAST(SUM(CAST((v2 - m2) * 100 AS DECIMAL(19,0))
         |           * CAST((v2 - m2) * 100 AS DECIMAL(19,0))) AS DOUBLE) AS sp22
-        |  FROM v JOIN a2 ON v.g = a2.g
+        |  FROM v JOIN a2 ON v.g IS NOT DISTINCT FROM a2.g
         |  GROUP BY v.g
         |), dd AS (
         |  SELECT a2.g, n,
@@ -2129,7 +2131,7 @@ object SparkEntry {
         |    s1 / n - CAST(m1 AS DOUBLE) AS d1,
         |    s2 / n - CAST(m2 AS DOUBLE) AS d2,
         |    sp00, sp01, sp02, sp11, sp12, sp22
-        |  FROM a2 JOIN sp ON a2.g = sp.g
+        |  FROM a2 JOIN sp ON a2.g IS NOT DISTINCT FROM sp.g
         |), c AS (
         |  SELECT g, n,
         |    sp00 / 10000.0 / n - d0 * d0 AS c00,
@@ -3173,12 +3175,14 @@ object SparkEntry {
         |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
 
     // the q28 anchored-moment discipline applied bivariate: exact
-    // DECIMAL products about quantized anchors, δ-corrected at serve
+    // DECIMAL products about quantized anchors, δ-corrected at serve;
+    // listwise null deletion, as in the engine
     "q41_group_regression" ->
       """WITH v AS (
         |  SELECT l_returnflag AS g, CAST(l_quantity AS DECIMAL(12,2)) AS x,
         |    CAST(l_extendedprice AS DECIMAL(12,2)) AS y
         |  FROM lineitem
+        |  WHERE l_quantity IS NOT NULL AND l_extendedprice IS NOT NULL
         |), a AS (
         |  SELECT g, COUNT(*) AS n, CAST(SUM(x) AS DOUBLE) AS sx,
         |    CAST(SUM(y) AS DOUBLE) AS sy
@@ -3195,7 +3199,7 @@ object SparkEntry {
         |           * CAST((y - my) * 100 AS DECIMAL(19,0))) AS DOUBLE) AS syy,
         |    CAST(SUM(CAST((x - mx) * 100 AS DECIMAL(19,0))
         |           * CAST((y - my) * 100 AS DECIMAL(19,0))) AS DOUBLE) AS sxy
-        |  FROM v JOIN a2 ON v.g = a2.g
+        |  FROM v JOIN a2 ON v.g IS NOT DISTINCT FROM a2.g
         |  GROUP BY 1, 2, 3, 4, 5, 6
         |), f AS (
         |  SELECT g, n, sx, sy, sxx, syy, sxy,

@@ -671,59 +671,101 @@ object Relational {
     applyNormalization(df, normalizationStats(df, groupCol, valueCol),
       idCol, groupCol, valueCol)
 
+  /** The anchored group moments of `cols` (quantized to DECIMAL(12,2))
+    * — the one fold behind [[normalizationStats]] (q28),
+    * [[groupRegression]] (q41) and [[corrMatrix]] (q57). Rows with a
+    * null in any of `cols` are dropped first (listwise deletion: every
+    * moment shares one `n`, and `n` counts values, never null rows).
+    *
+    * Numerics (r10): the one-pass `Σxy/n − mean_x·mean_y` form
+    * catastrophically cancels for groups with large mean and tiny
+    * spread (both terms ~mean², their difference ~the covariance —
+    * doubles can flip a variance ≤ 0 or inflate it). So the moments
+    * are anchored: a first agg folds `n` and the exact decimal sums
+    * `__s$i`, each mean quantizes to an exact decimal anchor
+    * `__m$i = CAST(__s$i/n AS DECIMAL(12,2))` (inside the value
+    * range, so the ANSI cast cannot overflow), the anchors join back by
+    * a null-safe BROADCAST, and a second agg folds, for each `(i, j)`
+    * of `pairs`, `__sp_i_j = Σ (v_i − m_i)(v_j − m_j)` in integer
+    * centi-units. [[anchoredCov]] serves `__sp_i_j/10^4/n − δ_i·δ_j`
+    * with `δ = mean − anchor` ≤ half an anchor ulp: small same-
+    * magnitude terms, no cancellation of large ones. The anchor
+    * columns (and `extraAnchorAggs`, aggregates over the `__v$i`
+    * columns) are constant per group, so they ride the second agg as
+    * grouping keys — no extra join to reassemble the row. Both aggs
+    * are map-side folds into tiny per-group partials; the corpus never
+    * shuffles.
+    *
+    * Integer units: a scale-4 decimal sum past 2^53 scaled units
+    * double-rounds through DuckDB's decimal→double cast against the
+    * JVM's one-rounding BigDecimal (seen on q57's price variance at
+    * sf0.01); an integral DECIMAL(38,0) converts in one rounding on
+    * both engines, and the 10^4 de-scaling happens in IEEE doubles.
+    * Each product multiplies in LONG (r17: the moments pass 2.0 → 1.3 s
+    * warm at sf0.1), falling back to an exact DECIMAL(19,0) product
+    * when the long one overflows (a deviation past ~3.04e7 — the
+    * DECIMAL(12,2) domain reaches 2e10): the same integers summed in
+    * the same type, so the fold is exact on the whole domain and
+    * bit-identical to an all-decimal fold. The DuckDB oracles mirror
+    * it expression for expression.
+    *
+    * Output: (group, n, __s$i.., extra anchors.., __m$i.., __sp_i_j..),
+    * sums and products as doubles.
+    */
+  private def anchoredMoments(df: DataFrame, groupCol: String,
+      cols: Seq[String], pairs: Seq[(Int, Int)],
+      extraAnchorAggs: Seq[Column] = Nil): DataFrame = {
+    val idx = cols.indices
+    val vals = df.select(q(groupCol).as("group") +:
+        cols.zipWithIndex.map { case (c, i) => q(c).cast(D).as(s"__v$i") }: _*)
+      .filter(idx.map(i => col(s"__v$i").isNotNull).reduce(_ && _))
+    val anchorAggs = count(lit(1)).as("n") +:
+      idx.map(i => sum(col(s"__v$i")).cast("double").as(s"__s$i")) ++: extraAnchorAggs
+    val anchors = idx.foldLeft(
+      vals.groupBy("group").agg(anchorAggs.head, anchorAggs.tail: _*)) {
+      (a, i) => a.withColumn(s"__m$i", (col(s"__s$i") / col("n")).cast(D))
+    }
+    def units(i: Int) = (col(s"__v$i") - col(s"__m$i")) * 100
+    val momentAggs = pairs.map { case (i, j) =>
+      sum(coalesce(try_multiply(units(i).cast("long"), units(j).cast("long")),
+          units(i).cast("decimal(19,0)") * units(j).cast("decimal(19,0)"))
+        .cast("decimal(38,0)")).cast("double").as(s"__sp_${i}_$j")
+    }
+    vals.join(broadcast(anchors.withColumnRenamed("group", "__ga")),
+        col("group") <=> col("__ga"))
+      .groupBy(anchors.columns.map(col).toSeq: _*)
+      .agg(momentAggs.head, momentAggs.tail: _*)
+  }
+
+  /** The δ-corrected population covariance of columns `i`, `j` over an
+    * [[anchoredMoments]] row.
+    */
+  private def anchoredCov(i: Int, j: Int): Column = {
+    def d(k: Int) = col(s"__s$k") / col("n") - col(s"__m$k").cast("double")
+    col(s"__sp_${i}_$j") / lit(10000.0) / col("n") - d(i) * d(j)
+  }
+
   /** The exact-decimal group moments [[zscoreNormalize]] folds — split
     * out so the stats can be TRAINED on a reference corpus or batch
     * snapshot and SERVED elsewhere ([[applyNormalization]], the
-    * streaming normalize gate): (group, n, s1, m, ssd, vmin, vmax)
-    * with every sum folded exactly in decimal before the double cast.
-    *
-    * Numerics (r10): the one-pass `s2/n − mean²` form catastrophically
-    * cancels for groups with large mean and tiny spread (both terms
-    * ~mean², their difference ~variance — doubles can flip it ≤ 0 or
-    * inflate it). So the variance is anchored: a first pass folds the
-    * exact decimal sum, the group's mean is quantized to an exact
-    * decimal anchor `m = CAST(s1/n AS DECIMAL)`, and a second pass
-    * folds `ssd = Σ(v − m)²` EXACTLY in decimal (v and m share the
-    * value scale, so each square is exact). The served variance is
-    * then `ssd/n − δ²` with `δ = mean − m` ≤ half an ulp of the
-    * anchor scale — two small same-magnitude terms, no cancellation
-    * of large ones. Both passes are map-side scans into tiny per-group
-    * aggs (the anchor joins back by BROADCAST); the corpus is never
-    * shuffled, which is what matters at scale — a second scan is cheap,
-    * a lost z-score sign is not. The whole fold stays deterministic
-    * under any partitioning and is mirrored expression-for-expression
-    * in the DuckDB oracle.
+    * streaming normalize gate): (group, n, s1, vmin, vmax, m, ssd),
+    * the one-column [[anchoredMoments]] fold (`m` its anchor, `ssd`
+    * its anchored Σ(v − m)² in squared centi-units) plus the group's
+    * min and max. Null values are not counted.
     */
   def normalizationStats(df: DataFrame, groupCol: String,
-      valueCol: String): DataFrame = {
-    val vals = df.select(q(groupCol).as("group"), q(valueCol).cast(D).as("__v"))
-    val anchors = vals.groupBy("group").agg(
-        count(lit(1)).as("n"),
-        sum(col("__v")).cast("double").as("s1"),
-        min(col("__v")).cast("double").as("vmin"),
-        max(col("__v")).cast("double").as("vmax"))
-      // the anchor stays within [vmin, vmax] of the same decimal type,
-      // so the ANSI cast can never overflow
-      .withColumn("m", (col("s1") / col("n")).cast(D))
-    // the anchor columns are constant per group, so carrying them as
-    // grouping keys folds everything into the second agg — no extra
-    // join (and no extra exchange) to reassemble the stats row
-    // integer-unit fold (the q57/q41 lesson): the scale-4 ssd sum
-    // passes 2^53 scaled units around sf10, where DuckDB's
-    // decimal→double cast double-rounds vs the JVM's one-rounding
-    // BigDecimal; integral decimals convert identically everywhere,
-    // and the 10^4 de-scaling happens in IEEE doubles on both engines
-    // (applyNormalization divides ssd by 10^4 before serving)
-    vals.join(broadcast(anchors), "group")
-      .groupBy("group", "n", "s1", "vmin", "vmax", "m").agg(
-        sum(((col("__v") - col("m")) * 100).cast("decimal(19,0)") *
-            ((col("__v") - col("m")) * 100).cast("decimal(19,0)"))
-          .cast("double").as("ssd"))
-  }
+      valueCol: String): DataFrame =
+    anchoredMoments(df, groupCol, Seq(valueCol), Seq((0, 0)),
+        Seq(min(col("__v0")).cast("double").as("vmin"),
+          max(col("__v0")).cast("double").as("vmax")))
+      .select(col("group"), col("n"), col("__s0").as("s1"), col("vmin"),
+        col("vmax"), col("__m0").as("m"), col("__sp_0_0").as("ssd"))
 
   /** Serve side of [[zscoreNormalize]]: apply precomputed
     * [[normalizationStats]] to any frame (batch or stream) — a
     * broadcast join plus map-only formulas, stateless by construction.
+    * Every row is kept: a null value, a null group (matched null-safe)
+    * or a group without a stats row scores null.
     */
   def applyNormalization(df: DataFrame, stats: DataFrame, idCol: String,
       groupCol: String, valueCol: String): DataFrame = {
@@ -731,17 +773,18 @@ object Relational {
       q(valueCol).cast(D).as("__v"))
     val vd = col("__v").cast("double")
     val mean = col("s1") / col("n")
-    // anchored variance (see normalizationStats): δ = mean − anchor is
+    // anchored variance (see anchoredMoments): δ = mean − anchor is
     // tiny by construction, so neither term is a near-cancelling square
     val delta = mean - col("m").cast("double")
     val variance = col("ssd") / lit(10000.0) / col("n") - delta * delta
-    base.join(broadcast(stats), col("__g") === col("group"))
+    val scored = vd.isNotNull && col("n").isNotNull
+    base.join(broadcast(stats), col("__g") <=> col("group"), "left")
       .select(col("__id").as(idCol), col("__g").as(groupCol),
         when(variance > 0.0, round((vd - mean) / sqrt(variance), 6))
-          .otherwise(0.0).as("value_z"),
+          .when(scored, 0.0).as("value_z"),
         when(col("vmax") > col("vmin"),
           round((vd - col("vmin")) / (col("vmax") - col("vmin")), 6))
-          .otherwise(0.0).as("value_minmax"))
+          .when(scored, 0.0).as("value_minmax"))
   }
 
   /** q28: gate binding of [[zscoreNormalize]] on `events.value` per
@@ -1174,6 +1217,19 @@ object Relational {
       .select(col("group"), col("quantile"),
         round(col("__vlo") + col("frac") * (col("__vhi") - col("__vlo")), 6)
           .as("value"))
+  }
+
+  /** [[exactQuantiles]] pivoted to one row per group: column `name`
+    * holds the quantile at `q`, for each `(q, name)` of `cuts` — the
+    * per-group-tiny fence/edge frame the q38/q51/q56 serves broadcast.
+    */
+  private def quantilePivot(df: DataFrame, groupCol: String, valueCol: String,
+      cuts: Seq[(Double, String)]): DataFrame = {
+    val pivot = cuts.map { case (qq, name) =>
+      max(when(col("quantile") === qq, col("value"))).as(name)
+    }
+    exactQuantiles(df, groupCol, valueCol, cuts.map(_._1))
+      .groupBy(col("group")).agg(pivot.head, pivot.tail: _*)
   }
 
   /** q30: gate binding of [[exactQuantiles]] on `events.value` per
@@ -1631,10 +1687,7 @@ object Relational {
     */
   def iqrOutliers(df: DataFrame, groupCol: String, valueCol: String,
       mult: Double = 1.5): DataFrame = {
-    val fences = exactQuantiles(df, groupCol, valueCol, Seq(0.25, 0.75))
-      .groupBy("group")
-      .agg(max(when(col("quantile") === 0.25, col("value"))).as("q1"),
-        max(when(col("quantile") === 0.75, col("value"))).as("q3"))
+    val fences = quantilePivot(df, groupCol, valueCol, Seq(0.25 -> "q1", 0.75 -> "q3"))
       .withColumn("lo_fence", col("q1") - lit(mult) * (col("q3") - col("q1")))
       .withColumn("hi_fence", col("q3") + lit(mult) * (col("q3") - col("q1")))
     df.select(q(groupCol).as("group"),
@@ -1757,62 +1810,24 @@ object Relational {
   /** Per-group bivariate statistics — covariance, Pearson correlation,
     * and the OLS regression line (slope + intercept) of y on x — the
     * relationship profile none of the univariate family measures.
-    * Numerically ANCHORED like q28: raw Σxy/Σx²/Σy² forms cancel
-    * catastrophically for large-mean/small-spread data, so the second
-    * pass folds exact DECIMAL products about quantized per-group
-    * anchors (δ-corrected at serve time: cov = Σ(x−mx)(y−my)/n −
-    * δx·δy with both δ tiny by construction). Scale shape: two
-    * mergeable group aggs with the anchor frame broadcast between
-    * them (the corpus never shuffles), constant-x/constant-y groups
-    * yield null correlation/slope rather than a 0/0.
+    * The moments are the two-column [[anchoredMoments]] fold over
+    * (x,x), (y,y), (x,y); rows with a null x or y are dropped, and
+    * constant-x/constant-y groups yield null correlation/slope rather
+    * than a 0/0.
     */
   def groupRegression(df: DataFrame, groupCol: String, xCol: String,
       yCol: String): DataFrame = {
-    val vals = df.select(q(groupCol).as("group"),
-        q(xCol).cast(D).as("__x"), q(yCol).cast(D).as("__y"))
-      .filter(col("__x").isNotNull && col("__y").isNotNull)
-    val anchors = vals.groupBy("group").agg(
-        count(lit(1)).as("n"),
-        sum(col("__x")).cast("double").as("sx"),
-        sum(col("__y")).cast("double").as("sy"))
-      .withColumn("mx", (col("sx") / col("n")).cast(D))
-      .withColumn("my", (col("sy") / col("n")).cast(D))
-    // integer-unit folds (the q57 lesson): a scale-4 decimal sum past
-    // 2^53 scaled units double-rounds through DuckDB's decimal→double
-    // cast vs the JVM's one-rounding BigDecimal; integral decimals
-    // convert identically everywhere, and the 10^4 de-scaling happens
-    // in IEEE doubles on both engines. r17: per-row products multiply
-    // in LONG (factors bounded by the value domain, not data volume —
-    // see corrMatrix), only the volume-driven SUM runs in
-    // DECIMAL(38,0); same integers, same sum type, bit-identical,
-    // ~1.5x cheaper per row.
-    def u(c: org.apache.spark.sql.Column) = (c * 100).cast("long")
-    def uSum(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      sum((a * b).cast("decimal(38,0)"))
-    val moments = vals.join(broadcast(anchors), "group")
-      .groupBy(col("group"), col("n"), col("sx"), col("sy"),
-        col("mx"), col("my"))
-      .agg(
-        uSum(u(col("__x") - col("mx")), u(col("__x") - col("mx")))
-          .cast("double").as("sxx"),
-        uSum(u(col("__y") - col("my")), u(col("__y") - col("my")))
-          .cast("double").as("syy"),
-        uSum(u(col("__x") - col("mx")), u(col("__y") - col("my")))
-          .cast("double").as("sxy"))
-    val dx = col("sx") / col("n") - col("mx").cast("double")
-    val dy = col("sy") / col("n") - col("my").cast("double")
-    val cxx = col("sxx") / lit(10000.0) / col("n") - dx * dx
-    val cyy = col("syy") / lit(10000.0) / col("n") - dy * dy
-    val cxy = col("sxy") / lit(10000.0) / col("n") - dx * dy
+    val (cxx, cyy, cxy) = (anchoredCov(0, 0), anchoredCov(1, 1), anchoredCov(0, 1))
     val beta = cxy / cxx
-    moments.select(col("group"), col("n"),
-      round(cxy, 6).as("cov"),
-      when(cxx > 0.0 && cyy > 0.0, round(cxy / sqrt(cxx * cyy), 6))
-        .as("corr"),
-      when(cxx > 0.0, round(beta, 6)).as("beta"),
-      when(cxx > 0.0,
-        round(col("sy") / col("n") - beta * (col("sx") / col("n")), 6))
-        .as("alpha"))
+    anchoredMoments(df, groupCol, Seq(xCol, yCol), Seq((0, 0), (1, 1), (0, 1)))
+      .select(col("group"), col("n"),
+        round(cxy, 6).as("cov"),
+        when(cxx > 0.0 && cyy > 0.0, round(cxy / sqrt(cxx * cyy), 6))
+          .as("corr"),
+        when(cxx > 0.0, round(beta, 6)).as("beta"),
+        when(cxx > 0.0,
+          round(col("__s1") / col("n") - beta * (col("__s0") / col("n")), 6))
+          .as("alpha"))
   }
 
   /** q41: gate binding of [[groupRegression]] — quantity vs extended
@@ -2274,10 +2289,8 @@ object Relational {
     val v = df.select(q(groupCol).as("__g2"), q(idCol).as("__id"),
       q(valueCol).cast(D).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-    val fences = exactQuantiles(df, groupCol, valueCol, Seq(loQ, hiQ))
-      .groupBy(col("group"))
-      .agg(max(when(col("quantile") === loQ, col("value"))).as("lo_fence"),
-        max(when(col("quantile") === hiQ, col("value"))).as("hi_fence"))
+    val fences = quantilePivot(df, groupCol, valueCol,
+      Seq(loQ -> "lo_fence", hiQ -> "hi_fence"))
     v.join(broadcast(fences), col("__g2") === col("group"))
       .select(col("__g2").as(groupCol), col("__id").as(idCol),
         col("__v").as(valueCol),
@@ -2592,42 +2605,54 @@ object Relational {
     * all bit-identical IEEE; ln differs by ≤1 ulp across libm
     * implementations, invisible at the 6dp gate rounding.
     *
-    * Scale shape: one global min/max agg (broadcast back — the side
+    * Scale shape: one global min/max agg ([[timeHalves]] — the side
     * split is then in-scan), the reference histogram agg (mergeable,
-    * ONE window exchange over per-group DISTINCT values), the edge
-    * frame pivoted to groups×(bins−1) and broadcast for a MAP-ONLY
-    * bin assignment (no per-row join fanout, no corpus shuffle), and
-    * one (group, bin) count agg whose map-side combine caps partial
-    * rows at groups×bins×2 per partition. The corpus never shuffles.
+    * ONE window exchange over per-group DISTINCT values), the
+    * [[referenceEdges]] frame pivoted to groups×(bins−1) and broadcast
+    * for a MAP-ONLY bin assignment (no per-row join fanout, no corpus
+    * shuffle), and one (group, bin) count agg whose map-side combine
+    * caps partial rows at groups×bins×2 per partition. The corpus never
+    * shuffles. The arithmetic is [[psiServe]].
     */
   def psiDrift(df: DataFrame, groupCol: String, valueCol: String,
       tsCol: String, bins: Int = 10, eps: Double = 1e-6): DataFrame = {
-    require(bins >= 2, s"need at least 2 bins, got $bins")
-    require(eps > 0, s"eps must be positive, got $eps")
-    val base = df.select(q(groupCol).as("__g2"), q(tsCol).as("__ts"),
+    val sided = timeHalves(df.select(q(groupCol).as("__g2"), q(tsCol).as("__ts"),
         q(valueCol).cast(D).cast("double").as("__v"))
-      .filter(col("__v").isNotNull && col("__ts").isNotNull)
+      .filter(col("__v").isNotNull && col("__ts").isNotNull))
+    val edges = referenceEdges(sided.filter(col("__ref")), "__g2", "__v", bins)
+    val counts = assignBins(sided, edges, bins - 1)
+      .groupBy(col("__g2"), col("bin"))
+      .agg(refCount.as("n_ref"), curCount.as("n_cur"))
+    psiServe(counts, "__g2", eps).withColumnRenamed("__g2", groupCol)
+  }
+
+  /** `base` (with a non-null `__ts`) tagged with `__ref`: true in the
+    * first half of its `__ts` span (`ts ≤ lo + (hi − lo) div 2`), false
+    * in the second — the reference/current split of q56, q59 and q60.
+    * The span is one global min/max agg broadcast back, so the split is
+    * in-scan.
+    */
+  private def timeHalves(base: DataFrame): DataFrame = {
     val span = base.agg(min(col("__ts")).as("__lo"), max(col("__ts")).as("__hi"))
       .select(expr("__lo + ((__hi - __lo) div 2)").as("__mid"))
-    val sided = base.crossJoin(broadcast(span))
-      .withColumn("__side",
-        when(col("__ts") <= col("__mid"), lit("ref")).otherwise(lit("cur")))
-    val qs = (1 until bins).map(_.toDouble / bins)
-    val edges = exactQuantiles(
-      sided.filter(col("__side") === "ref"), "__g2", "__v", qs)
-    val edgeCols = qs.zipWithIndex.map { case (qq, i) =>
-      max(when(col("quantile") === qq, col("value"))).as(s"__b$i")
-    }
-    val wide = edges.groupBy(col("group")).agg(edgeCols.head, edgeCols.tail: _*)
-    val binned = sided.join(broadcast(wide), col("__g2") === col("group"))
-      .withColumn("bin", qs.indices
-        .map(i => when(col("__v") >= col(s"__b$i"), 1).otherwise(0))
-        .reduce(_ + _))
-    val counts = binned.groupBy(col("__g2"), col("bin"))
-      .agg(sum(when(col("__side") === "ref", 1L).otherwise(0L)).as("n_ref"),
-        sum(when(col("__side") === "cur", 1L).otherwise(0L)).as("n_cur"))
-    val wg = Window.partitionBy(col("__g2"))
-    val withP = counts
+    base.crossJoin(broadcast(span)).withColumn("__ref", col("__ts") <= col("__mid"))
+  }
+
+  /** Exact per-side row counts over a [[timeHalves]] frame. */
+  private val refCount = sum(when(col("__ref"), 1L).otherwise(0L)).cast("long")
+  private val curCount = sum(when(col("__ref"), 0L).otherwise(1L)).cast("long")
+
+  /** The PSI serve over a resolved (group, bin, n_ref, n_cur) count
+    * frame — shared by the batch [[psiDrift]] and the state serve
+    * [[psiFromCounts]], so a maintained monitor serves the same bits
+    * the gate query computes: groups with an empty current side are
+    * excluded, and p's are single divisions of exact counts.
+    */
+  private def psiServe(counts: DataFrame, groupCol: String,
+      eps: Double): DataFrame = {
+    require(eps > 0, s"eps must be positive, got $eps")
+    val wg = Window.partitionBy(q(groupCol))
+    counts
       .withColumn("__nr", sum(col("n_ref")).over(wg))
       .withColumn("__nc", sum(col("n_cur")).over(wg))
       .filter(col("__nc") > 0)
@@ -2637,13 +2662,37 @@ object Relational {
         (greatest(col("__pc"), lit(eps)) - greatest(col("__pr"), lit(eps))) *
           log(greatest(col("__pc"), lit(eps)) / greatest(col("__pr"), lit(eps))))
       .withColumn("__dterm", abs(col("__pc") - col("__pr")))
-    withP.select(col("__g2").as(groupCol), col("bin"),
-      col("n_ref").cast("long").as("n_ref"), col("n_cur").cast("long").as("n_cur"),
-      round(col("__pr"), 6).as("p_ref"), round(col("__pc"), 6).as("p_cur"),
-      round(col("__pterm"), 6).as("psi_term"),
-      round(sum(col("__pterm")).over(wg), 6).as("psi"),
-      round(lit(0.5) * sum(col("__dterm")).over(wg), 6).as("tvd"))
+      .select(q(groupCol), col("bin"),
+        col("n_ref").cast("long").as("n_ref"), col("n_cur").cast("long").as("n_cur"),
+        round(col("__pr"), 6).as("p_ref"), round(col("__pc"), 6).as("p_cur"),
+        round(col("__pterm"), 6).as("psi_term"),
+        round(sum(col("__pterm")).over(wg), 6).as("psi"),
+        round(lit(0.5) * sum(col("__dterm")).over(wg), 6).as("tvd"))
   }
+
+  /** Full outer join of a reference and a current count frame on
+    * `keys`, each side's count `n` zero-filled into `refOut`/`curOut`:
+    * a key seen on one side only counts 0 on the other, the rows the
+    * single-agg batch paths produce.
+    */
+  private def zeroFilled(ref: DataFrame, cur: DataFrame, keys: Seq[String],
+      n: Column, refOut: String, curOut: String): DataFrame = {
+    def side(df: DataFrame, as: String) =
+      df.select(keys.map(q) :+ n.cast("long").as(as): _*)
+    side(ref, "__rn").join(side(cur, "__cn"), keys, "full_outer")
+      .select(keys.map(q) ++ Seq(coalesce(col("__rn"), lit(0L)).as(refOut),
+        coalesce(col("__cn"), lit(0L)).as(curOut)): _*)
+  }
+
+  /** `vals` (group `__g2`, value `__v`) joined to a wide edge frame
+    * by broadcast, with `bin = Σ (v ≥ __b$i)` over its `nb` edges.
+    * Groups without an edge row drop.
+    */
+  private def assignBins(vals: DataFrame, edges: DataFrame, nb: Int): DataFrame =
+    vals.join(broadcast(edges), col("__g2") === col("group"))
+      .withColumn("bin", (0 until nb)
+        .map(i => when(col("__v") >= col(s"__b$i"), 1).otherwise(0))
+        .reduce(_ + _))
 
   /** q56: gate binding of [[psiDrift]] — events.value drift per event
     * type, second time-half scored against the first's deciles. Fully
@@ -2673,12 +2722,8 @@ object Relational {
   def referenceEdges(df: DataFrame, groupCol: String, valueCol: String,
       bins: Int = 10): DataFrame = {
     require(bins >= 2, s"need at least 2 bins, got $bins")
-    val qs = (1 until bins).map(_.toDouble / bins)
-    val edgeCols = qs.zipWithIndex.map { case (qq, i) =>
-      max(when(col("quantile") === qq, col("value"))).as(s"__b$i")
-    }
-    exactQuantiles(df, groupCol, valueCol, qs)
-      .groupBy(col("group")).agg(edgeCols.head, edgeCols.tail: _*)
+    quantilePivot(df, groupCol, valueCol,
+      (1 until bins).map(b => b.toDouble / bins -> s"__b${b - 1}"))
   }
 
   /** Mergeable per-(group, bin) counts of `df` against FIXED edges —
@@ -2691,13 +2736,9 @@ object Relational {
       edges: DataFrame): DataFrame = {
     val nb = edges.columns.count(_.startsWith("__b"))
     require(nb >= 1, "edges frame carries no __b columns — not a referenceEdges output")
-    df.select(q(groupCol).as("__g2"),
+    assignBins(df.select(q(groupCol).as("__g2"),
         q(valueCol).cast(D).cast("double").as("__v"))
-      .filter(col("__v").isNotNull)
-      .join(broadcast(edges), col("__g2") === col("group"))
-      .withColumn("bin", (0 until nb)
-        .map(i => when(col("__v") >= col(s"__b$i"), 1).otherwise(0))
-        .reduce(_ + _))
+      .filter(col("__v").isNotNull), edges, nb)
       .groupBy(col("__g2").as(groupCol), col("bin"))
       .agg(count(lit(1)).cast("long").as("n"))
   }
@@ -2712,74 +2753,30 @@ object Relational {
   /** Group-wise correlation matrix over N columns — the feature-
     * analysis staple before a training run (which engineered features
     * are redundant, which co-vary with the target per segment):
-    * every pair's covariance and Pearson correlation from ONE pass of
-    * anchored moments, generalizing q41's bivariate fold. Rows with
-    * ANY null among the requested columns are dropped (listwise
-    * deletion — the one convention where every pair shares the same
-    * n; per-pair deletion would need a count per pair and gives a
-    * non-PSD matrix). Diagonal rows carry variances (corr = 1 where
-    * variance is positive); a zero-variance column yields null corr
-    * against everything, flagged rather than NaN.
-    *
-    * The q41/q28 cancellation discipline, N-column form: a first
-    * mergeable agg takes exact DECIMAL sums, means re-quantize to
-    * DECIMAL anchors and broadcast back, and the second mergeable agg
-    * folds EXACT DECIMAL products of anchored deviations — the
-    * catastrophic cancellation of raw Σxy − nμxμy never happens, and
-    * every moment is engine-bit-identical. Both aggs are one shuffle
-    * of partials keyed by group; the N(N+1)/2 pair columns ride ONE
-    * aggregation (no per-pair pass), and the matrix assembles by a
-    * map-only explode of the single wide row per group.
+    * every pair's covariance and Pearson correlation from the
+    * N-column [[anchoredMoments]] fold over all N(N+1)/2 pairs (one
+    * aggregation, no per-pair pass). Rows with ANY null among the
+    * requested columns are dropped (listwise deletion — the one
+    * convention where every pair shares the same n; per-pair deletion
+    * would need a count per pair and gives a non-PSD matrix). Diagonal
+    * rows carry variances (corr = 1 where variance is positive); a
+    * zero-variance column yields null corr against everything, flagged
+    * rather than NaN. The matrix assembles by a map-only explode of the
+    * single wide row per group.
     */
   def corrMatrix(df: DataFrame, groupCol: String,
       valueCols: Seq[String]): DataFrame = {
     require(valueCols.size >= 2, "corrMatrix needs at least two columns")
     val idx = valueCols.indices
-    val vals = df.select(q(groupCol).as("group") +:
-        valueCols.zipWithIndex.map { case (c, i) => q(c).cast(D).as(s"__v$i") }: _*)
-      .filter(idx.map(i => col(s"__v$i").isNotNull).reduce(_ && _))
-    val anchorAggs = count(lit(1)).as("n") +:
-      idx.map(i => sum(col(s"__v$i")).cast("double").as(s"__s$i"))
-    val anchors = idx.foldLeft(
-      vals.groupBy("group").agg(anchorAggs.head, anchorAggs.tail: _*)) {
-      (a, i) => a.withColumn(s"__m$i", (col(s"__s$i") / col("n")).cast(D))
-    }
     val pairs = for { i <- idx; j <- idx if i <= j } yield (i, j)
-    // deviation products fold in INTEGER units (scale-0 DECIMAL): a
-    // scale-4 decimal sum past 2^53 scaled units double-rounds through
-    // some engines' decimal→double cast (observed: DuckDB vs the JVM's
-    // correctly-rounded BigDecimal on the price variance at sf0.01);
-    // an integral decimal converts in ONE rounding everywhere, and the
-    // 10^4 de-scaling happens in IEEE doubles on both engines.
-    // r17: the per-row PRODUCT multiplies in LONG (each factor is an
-    // exact integer of centi-units — bounded by the VALUE domain, not
-    // the data volume, so the product fits 2^63 at any corpus size);
-    // only the SUM runs in DECIMAL(38,0), where volume-driven overflow
-    // lives. Same integers summed in the same type → bit-identical
-    // results (verified value-for-value against the decimal-product
-    // fold and the unchanged oracle), but the hot loop does one long
-    // multiply instead of a BigDecimal multiply: the moments pass
-    // measured 2.0 → 1.3 s warm at sf0.1 (guide §1.2 per-task work).
-    val momentAggs = pairs.map { case (i, j) =>
-      sum((((col(s"__v$i") - col(s"__m$i")) * 100).cast("long") *
-           ((col(s"__v$j") - col(s"__m$j")) * 100).cast("long")).cast("decimal(38,0)"))
-        .cast("double").as(s"__sp_${i}_$j")
-    }
-    val keys = col("group") +: col("n") +:
-      idx.flatMap(i => Seq(col(s"__s$i"), col(s"__m$i")))
-    val moments = vals.join(broadcast(anchors), "group")
-      .groupBy(keys: _*)
-      .agg(momentAggs.head, momentAggs.tail: _*)
-    def d(i: Int) = col(s"__s$i") / col("n") - col(s"__m$i").cast("double")
-    def cc(i: Int, j: Int) =
-      col(s"__sp_${i}_$j") / lit(10000.0) / col("n") - d(i) * d(j)
     val cells = pairs.map { case (i, j) =>
+      val (cij, cii, cjj) = (anchoredCov(i, j), anchoredCov(i, i), anchoredCov(j, j))
       struct(lit(valueCols(i)).as("col_x"), lit(valueCols(j)).as("col_y"),
-        round(cc(i, j), 6).as("cov"),
-        when(cc(i, i) > 0.0 && cc(j, j) > 0.0,
-          round(cc(i, j) / sqrt(cc(i, i) * cc(j, j)), 6)).as("corr"))
+        round(cij, 6).as("cov"),
+        when(cii > 0.0 && cjj > 0.0, round(cij / sqrt(cii * cjj), 6)).as("corr"))
     }
-    moments.select(col("group"), col("n"), explode(array(cells: _*)).as("m"))
+    anchoredMoments(df, groupCol, valueCols, pairs)
+      .select(col("group"), col("n"), explode(array(cells: _*)).as("m"))
       .select(col("group"), col("m.col_x"), col("m.col_y"), col("n"),
         col("m.cov"), col("m.corr"))
   }
@@ -2797,38 +2794,14 @@ object Relational {
 
   /** Score a current count frame against a reference count frame —
     * [[psiDrift]]'s serve with the counting factored out: bins
-    * observed on one side only zero-fill (the single-agg batch path
-    * produces exactly those rows), groups with an empty current side
-    * are excluded, and the eps-floored PSI / tvd arithmetic is
-    * IDENTICAL to the batch operator, so a maintained state serves
-    * the same numbers the gate query computes.
+    * observed on one side only zero-fill ([[zeroFilled]]), and the
+    * arithmetic IS the batch operator's [[psiServe]], so a maintained
+    * state serves the same numbers the gate query computes.
     */
   def psiFromCounts(refCounts: DataFrame, curCounts: DataFrame,
-      groupCol: String, eps: Double = 1e-6): DataFrame = {
-    require(eps > 0, s"eps must be positive, got $eps")
-    val joined = refCounts.select(q(groupCol), col("bin"), col("n").as("__rn"))
-      .join(curCounts.select(q(groupCol), col("bin"), col("n").as("__cn")),
-        Seq(groupCol, "bin"), "full_outer")
-      .withColumn("n_ref", coalesce(col("__rn"), lit(0L)))
-      .withColumn("n_cur", coalesce(col("__cn"), lit(0L)))
-    val wg = Window.partitionBy(q(groupCol))
-    joined
-      .withColumn("__nr", sum(col("n_ref")).over(wg))
-      .withColumn("__nc", sum(col("n_cur")).over(wg))
-      .filter(col("__nc") > 0)
-      .withColumn("__pr", col("n_ref").cast("double") / col("__nr").cast("double"))
-      .withColumn("__pc", col("n_cur").cast("double") / col("__nc").cast("double"))
-      .withColumn("__pterm",
-        (greatest(col("__pc"), lit(eps)) - greatest(col("__pr"), lit(eps))) *
-          log(greatest(col("__pc"), lit(eps)) / greatest(col("__pr"), lit(eps))))
-      .withColumn("__dterm", abs(col("__pc") - col("__pr")))
-      .select(q(groupCol), col("bin"),
-        col("n_ref").cast("long").as("n_ref"), col("n_cur").cast("long").as("n_cur"),
-        round(col("__pr"), 6).as("p_ref"), round(col("__pc"), 6).as("p_cur"),
-        round(col("__pterm"), 6).as("psi_term"),
-        round(sum(col("__pterm")).over(wg), 6).as("psi"),
-        round(lit(0.5) * sum(col("__dterm")).over(wg), 6).as("tvd"))
-  }
+      groupCol: String, eps: Double = 1e-6): DataFrame =
+    psiServe(zeroFilled(refCounts, curCounts, Seq(groupCol, "bin"), col("n"),
+      "n_ref", "n_cur"), groupCol, eps)
 
   /** Join-key skew profile — the pre-flight diagnostic run BEFORE a
     * big shuffle is trusted: the top-k heaviest values of a key column
@@ -2910,26 +2883,19 @@ object Relational {
     * contract (nothing to compare).
     *
     * Scale shape: the corpus collapses in ONE mergeable (category,
-    * side-counts) agg — category cardinality bounds everything after;
-    * the one-row side totals broadcast back, and the alphabet-bounded
-    * category frame takes a single-partition window for the statistic
-    * (bounded by construction, the q49 alphabet argument).
+    * side-counts) agg over the [[timeHalves]] split — category
+    * cardinality bounds everything after; the one-row side totals
+    * broadcast back, and the alphabet-bounded category frame takes a
+    * single-partition window for the statistic (bounded by
+    * construction, the q49 alphabet argument).
     */
   def chi2CategoricalDrift(df: DataFrame, catCol: String,
-      tsCol: String): DataFrame = {
-    val base = df.select(q(catCol).cast("string").as("category"),
+      tsCol: String): DataFrame =
+    chi2Cells(timeHalves(df.select(q(catCol).cast("string").as("category"),
         q(tsCol).as("__ts"))
-      .filter(col("__ts").isNotNull)
-    val span = base.agg(min(col("__ts")).as("__lo"), max(col("__ts")).as("__hi"))
-      .select(expr("__lo + ((__hi - __lo) div 2)").as("__mid"))
-    val counts = base.crossJoin(broadcast(span))
+      .filter(col("__ts").isNotNull))
       .groupBy(col("category"))
-      .agg(sum(when(col("__ts") <= col("__mid"), 1L).otherwise(0L))
-            .cast("long").as("n_ref"),
-        sum(when(col("__ts") > col("__mid"), 1L).otherwise(0L))
-            .cast("long").as("n_cur"))
-    chi2Cells(counts)
-  }
+      .agg(refCount.as("n_ref"), curCount.as("n_cur")))
 
   /** The chi-square arithmetic over a resolved (category, n_ref,
     * n_cur) frame — shared verbatim by the batch span-split path and
@@ -3002,21 +2968,14 @@ object Relational {
 
   /** Score a current category-count frame against a reference one —
     * [[chi2CategoricalDrift]]'s serve with the counting factored out:
-    * categories observed on one side only zero-fill (the single-agg
-    * batch path produces exactly those rows), and the cell arithmetic
-    * IS [[chi2Cells]], so a maintained state serves the same numbers
-    * the gate query computes.
+    * categories observed on one side only zero-fill ([[zeroFilled]]),
+    * and the cell arithmetic IS [[chi2Cells]], so a maintained state
+    * serves the same numbers the gate query computes.
     */
   def chi2FromCounts(refCounts: DataFrame,
-      curCounts: DataFrame): DataFrame = {
-    val joined = refCounts.select(col("category"), col("n").as("__rn"))
-      .join(curCounts.select(col("category"), col("n").as("__cn")),
-        Seq("category"), "full_outer")
-      .select(col("category"),
-        coalesce(col("__rn"), lit(0L)).as("n_ref"),
-        coalesce(col("__cn"), lit(0L)).as("n_cur"))
-    chi2Cells(joined)
-  }
+      curCounts: DataFrame): DataFrame =
+    chi2Cells(zeroFilled(refCounts, curCounts, Seq("category"), col("n"),
+      "n_ref", "n_cur"))
 
   /** Two-sample Kolmogorov–Smirnov statistic per group — the
     * distribution-SHAPE drift test completing the trio ([[psiDrift]]
@@ -3042,20 +3001,13 @@ object Relational {
     * a partial top-1 before the shuffle); output is one row per group.
     */
   def ksTest(df: DataFrame, groupCol: String, valueCol: String,
-      tsCol: String): DataFrame = {
-    val base = df.select(q(groupCol).as("__g2"), q(tsCol).as("__ts"),
+      tsCol: String): DataFrame =
+    ksServe(timeHalves(df.select(q(groupCol).as("__g2"), q(tsCol).as("__ts"),
         q(valueCol).cast(D).cast("double").as("__v"))
-      .filter(col("__v").isNotNull && col("__ts").isNotNull)
-    val span = base.agg(min(col("__ts")).as("__lo"), max(col("__ts")).as("__hi"))
-      .select(expr("__lo + ((__hi - __lo) div 2)").as("__mid"))
-    val h = base.crossJoin(broadcast(span))
+      .filter(col("__v").isNotNull && col("__ts").isNotNull))
       .groupBy(col("__g2"), col("__v"))
-      .agg(sum(when(col("__ts") <= col("__mid"), 1L).otherwise(0L))
-            .cast("long").as("__cr"),
-        sum(when(col("__ts") > col("__mid"), 1L).otherwise(0L))
-            .cast("long").as("__cc"))
-    ksServe(h).withColumnRenamed("group", groupCol)
-  }
+      .agg(refCount.as("__cr"), curCount.as("__cc")))
+      .withColumnRenamed("group", groupCol)
 
   /** The KS arithmetic over a resolved (__g2, __v, __cr, __cc)
     * side-count histogram — shared verbatim by the batch span-split
@@ -3083,21 +3035,15 @@ object Relational {
   /** KS served from two [[histogramStates]] frames — the drift trio's
     * third monitor riding the SAME maintained state as the quantile
     * monitor (one histogram per side, no extra state primitive):
-    * values observed on one side only zero-fill via the full outer
-    * join, and the arithmetic IS the batch operator's, so a monitor
+    * values observed on one side only zero-fill ([[zeroFilled]]), and
+    * the arithmetic IS the batch operator's [[ksServe]], so a monitor
     * folding per-batch histograms serves the same bits batch
     * [[ksTest]] computes when the sides coincide with the time split.
     */
   def ksFromHistograms(refHist: DataFrame, curHist: DataFrame): DataFrame = {
-    val joined = refHist.select(col("group").as("__g2"), col("__v"),
-        col("__c").cast("long").as("__rn"))
-      .join(curHist.select(col("group").as("__g2"), col("__v"),
-          col("__c").cast("long").as("__cn")),
-        Seq("__g2", "__v"), "full_outer")
-      .select(col("__g2"), col("__v"),
-        coalesce(col("__rn"), lit(0L)).as("__cr"),
-        coalesce(col("__cn"), lit(0L)).as("__cc"))
-    ksServe(joined)
+    def keyed(h: DataFrame) = h.withColumnRenamed("group", "__g2")
+    ksServe(zeroFilled(keyed(refHist), keyed(curHist), Seq("__g2", "__v"),
+      col("__c"), "__cr", "__cc"))
   }
 
   /** q60: gate binding of [[ksTest]] — events.value per event type,

@@ -397,6 +397,52 @@ class OperatorPropertiesSpec extends SparkSpec {
     assert(math.abs(b.getDouble(5) - 1.0) < 1e-2, s"alpha ${b.getDouble(5)}")
   }
 
+  test("groupRegression/corrMatrix: deviations past the LONG product range fold exactly") {
+    // about the anchor 5e7 the centi-unit deviations reach 5e9, whose
+    // square overflows a long; the moments must still equal an exact
+    // BigDecimal model
+    val rows = Seq((0.0, 1.0e8), (1.0e8, 0.0), (30000000.01, 12345678.9))
+    val df = rows.map { case (x, y) => ("g", x, y) }.toDF("g", "x", "y")
+    val xs = rows.map(r => BigDecimal(r._1))
+    val ys = rows.map(r => BigDecimal(r._2))
+    val n = BigDecimal(rows.size)
+    def cov(a: Seq[BigDecimal], b: Seq[BigDecimal]) = {
+      val (ma, mb) = (a.sum / n, b.sum / n)
+      (a.zip(b).map { case (u, v) => (u - ma) * (v - mb) }.sum / n).toDouble
+    }
+    val (vx, vy, cxy) = (cov(xs, xs), cov(ys, ys), cov(xs, ys))
+    // outputs round to 6 dp
+    def near(got: Double, want: Double, what: String) =
+      assert(math.abs(got - want) <= 5e-7 + 1e-12 * math.abs(want), s"$what: $got vs $want")
+    val r = Relational.groupRegression(df, "g", "x", "y").collect().head
+    assert(r.getLong(1) === 3L)
+    near(r.getDouble(2), cxy, "cov")
+    near(r.getDouble(3), cxy / math.sqrt(vx * vy), "corr")
+    near(r.getDouble(4), cxy / vx, "beta")
+    val cells = Relational.corrMatrix(df, "g", Seq("x", "y")).collect()
+      .map(c => (c.getString(1), c.getString(2)) -> c.getDouble(4)).toMap
+    near(cells(("x", "x")), vx, "var x")
+    near(cells(("y", "y")), vy, "var y")
+    near(cells(("x", "y")), cxy, "cov xy")
+  }
+
+  test("groupRegression/corrMatrix: a null group gets the row the same rows get under a key") {
+    val r = rnd(23)
+    val rows = (0 until 40).map(_ => (r.nextInt(10000) / 100.0, r.nextInt(10000) / 100.0))
+    val df = (rows.map { case (x, y) => (Option.empty[String], x, y) } ++
+      rows.map { case (x, y) => (Some("k"), x, y) }).toDF("g", "x", "y")
+    def byGroup(out: org.apache.spark.sql.DataFrame, keyCols: Int): Map[Seq[Any], Seq[Any]] =
+      out.collect().map(row => (Option(row.getString(0)) +: (1 until keyCols).map(row.get)) ->
+        row.toSeq.drop(keyCols)).toMap
+    val reg = byGroup(Relational.groupRegression(df, "g", "x", "y"), 1)
+    assert(reg.keySet === Set(Seq(None), Seq(Some("k"))), "the null group must not vanish")
+    assert(reg(Seq(None)) === reg(Seq(Some("k"))))
+    val cm = byGroup(Relational.corrMatrix(df, "g", Seq("x", "y")), 3)
+    assert(cm.size === 6)
+    for ((g, cells) <- cm if g.head == None)
+      assert(cells === cm(Some("k") +: g.tail), s"cell $g")
+  }
+
   test("meltWide: wide -> long -> pivot-back is the identity, nulls preserved by default") {
     val r = rnd(22)
     val rows = (0L until 200L).map(i =>

@@ -124,6 +124,33 @@ class RelationalSpec extends SparkSpec {
     assert(re === out)
   }
 
+  test("zscoreNormalize counts values, not rows: a null value leaves its group's z-scores as without it") {
+    import spark.implicits._
+    val df = Seq((1L, "a", Some(1.0)), (2L, "a", Some(3.0)), (3L, "a", None))
+      .toDF("id", "g", "v")
+    val out = Relational.zscoreNormalize(df, "id", "g", "v")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    // group a without the null row: mean 2, population sd 1
+    assert((out(1L).getDouble(2), out(2L).getDouble(2)) === ((-1.0, 1.0)))
+    assert((out(1L).getDouble(3), out(2L).getDouble(3)) === ((0.0, 1.0)))
+    // the null-value row is kept, unscored
+    assert(out.keySet === Set(1L, 2L, 3L))
+    assert(out(3L).isNullAt(2) && out(3L).isNullAt(3), out(3L).toString)
+    val stats = Relational.normalizationStats(df, "g", "v").collect()
+    assert(stats.map(_.getAs[Long]("n")).toSeq === Seq(2L))
+  }
+
+  test("zscoreNormalize keeps a null group's rows and scores them as under any other key") {
+    import spark.implicits._
+    val rows = Seq((1L, 1.0), (2L, 3.0), (3L, 4.0))
+    val df = (rows.map { case (id, v) => (id, Option.empty[String], v) } ++
+      rows.map { case (id, v) => (id + 10, Some("k"), v) }).toDF("id", "g", "v")
+    val out = Relational.zscoreNormalize(df, "id", "g", "v")
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(2), r.getDouble(3)))).toMap
+    assert(out.size === 6, "null-group rows must not vanish")
+    rows.foreach { case (id, _) => assert(out(id) === out(id + 10), s"id $id") }
+  }
+
   test("zscoreNormalize survives large mean with tiny spread (no cancellation)") {
     import spark.implicits._
     // mean ~1e9, sd 0.01: the one-pass s2/n − mean² form loses the

@@ -409,6 +409,27 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming normalize gate keeps a row of a group unseen at training, unscored") {
+    import graft.operators.Relational
+    implicit val ctx = spark.sqlContext
+    val ref = Seq((1L, "a", 1.0), (2L, "a", 3.0)).toDF("id", "g", "v")
+    val stats = Relational.normalizationStats(ref, "g", "v")
+    val input = MemoryStream[(Long, String, Double)]
+    val q = StreamingOps.normalizeGate(
+      input.toDF().toDF("id", "g", "v"), stats, "id", "g", "v")
+      .writeStream.format("memory").queryName("norm_gate_unseen").outputMode("append").start()
+    try {
+      input.addData((10L, "a", 3.0), (13L, "c", 5.0))
+      q.processAllAvailable()
+      val got = spark.table("norm_gate_unseen").collect().map(r => r.getLong(0) -> r).toMap
+      assert(got.keySet === Set(10L, 13L), "a row of an unseen group must not vanish")
+      assert(got(10L).getDouble(2) === 1.0 && got(10L).getDouble(3) === 1.0)
+      assert(got(13L).getString(1) === "c" && got(13L).isNullAt(2) && got(13L).isNullAt(3),
+        got(13L).toString)
+      assert(q.lastProgress.stateOperators.isEmpty, q.lastProgress.prettyJson)
+    } finally q.stop()
+  }
+
   test("streaming CDC apply: per-micro-batch cdcMerge maintains the table like sequential merges") {
     // the standard streaming maintenance loop: a CDC feed lands in
     // micro-batches, each applied to the maintained table with the
