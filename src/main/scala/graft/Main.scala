@@ -140,11 +140,11 @@ object Main {
         args.formNumber, args.requestedTables, args.instancePattern)
       val tablesDir = s"${args.outputDir}/ferc${args.formNumber}_xbrl"
       XbrlSinks.requireWritten(XbrlExtract.writeDatapackage(out.taxonomies, out.schemas,
-        out.tables, args.outputDir, args.formNumber))
+        out.store, args.outputDir, args.formNumber))
       args.jdbcUrl.foreach(url => XbrlSinks.writeJdbc(out.tables, url))
       out.release()
-      log.info(s"wrote ${out.tables.size} tables to $tablesDir")
-      println(s"[graft.Main] wrote ${out.tables.size} tables to $tablesDir")
+      log.info(s"wrote ${out.schemas.size} tables to $tablesDir")
+      println(s"[graft.Main] wrote ${out.schemas.size} tables to $tablesDir")
     } finally if (!preExisting) spark.stop()
   }
 }

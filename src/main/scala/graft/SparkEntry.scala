@@ -1432,7 +1432,7 @@ object SparkEntry {
         |  SELECT t2.event_type, quantile, frac,
         |    MAX(CASE WHEN r.r = lo_r THEN v END) AS vlo,
         |    MAX(CASE WHEN r.r = hi_r THEN v END) AS vhi
-        |  FROM t2 JOIN r ON r.event_type = t2.event_type
+        |  FROM t2 JOIN r ON r.event_type IS NOT DISTINCT FROM t2.event_type
         |    AND (r.r = lo_r OR r.r = hi_r)
         |  GROUP BY 1, 2, 3
         |), qv AS (
@@ -1453,7 +1453,7 @@ object SparkEntry {
         |  COUNT(*) AS n_values,
         |  CAST(SUM(CASE WHEN v.v < lo_fence THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
         |  CAST(SUM(CASE WHEN v.v > hi_fence THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-        |FROM v JOIN f2 ON v.event_type = f2.event_type
+        |FROM v JOIN f2 ON v.event_type IS NOT DISTINCT FROM f2.event_type
         |GROUP BY 1, 2, 3, 4, 5
         |ORDER BY v.event_type""".stripMargin,
 
@@ -1791,7 +1791,7 @@ object SparkEntry {
         |  SELECT t2.event_type, quantile, frac,
         |    MAX(CASE WHEN r.r = lo_r THEN v END) AS vlo,
         |    MAX(CASE WHEN r.r = hi_r THEN v END) AS vhi
-        |  FROM t2 JOIN r ON r.event_type = t2.event_type
+        |  FROM t2 JOIN r ON r.event_type IS NOT DISTINCT FROM t2.event_type
         |    AND (r.r = lo_r OR r.r = hi_r)
         |  GROUP BY 1, 2, 3
         |), qv AS (
@@ -1807,7 +1807,7 @@ object SparkEntry {
         |  least(greatest(v, lo_fence), hi_fence) AS winsorized,
         |  (v < lo_fence OR v > hi_fence) AS clipped,
         |  lo_fence, hi_fence
-        |FROM v JOIN f ON v.event_type = f.event_type
+        |FROM v JOIN f ON v.event_type IS NOT DISTINCT FROM f.event_type
         |ORDER BY v.event_type, event_id""".stripMargin,
 
     // counts, the deterministic (count DESC, label ASC) tie-break, and
@@ -1942,16 +1942,16 @@ object SparkEntry {
         |  SELECT r1.g, frac,
         |    MAX(CASE WHEN lo_r > cum - c AND lo_r <= cum THEN v END) AS vlo,
         |    MAX(CASE WHEN hi_r > cum - c AND hi_r <= cum THEN v END) AS vhi
-        |  FROM r1 JOIN t1 ON r1.g = t1.g
+        |  FROM r1 JOIN t1 ON r1.g IS NOT DISTINCT FROM t1.g
         |    AND ((lo_r > cum - c AND lo_r <= cum)
         |      OR (hi_r > cum - c AND hi_r <= cum))
         |  GROUP BY 1, 2
         |), med AS (
         |  SELECT g, round(vlo + frac * (vhi - vlo), 6) AS med FROM p1
         |), d AS (
-        |  SELECT v.g, v.id, v.v, med,
-        |    CAST(CAST(abs(v.v - med) AS DECIMAL(12,2)) AS DOUBLE) AS dev
-        |  FROM v JOIN med USING (g)
+        |  SELECT v.g, v.id, v.v, med.med,
+        |    CAST(CAST(abs(v.v - med.med) AS DECIMAL(12,2)) AS DOUBLE) AS dev
+        |  FROM v JOIN med ON v.g IS NOT DISTINCT FROM med.g
         |), h2 AS (
         |  SELECT g, dev, COUNT(*) AS c FROM d GROUP BY 1, 2
         |), r2 AS (
@@ -1970,7 +1970,7 @@ object SparkEntry {
         |  SELECT r2.g, frac,
         |    MAX(CASE WHEN lo_r > cum - c AND lo_r <= cum THEN dev END) AS vlo,
         |    MAX(CASE WHEN hi_r > cum - c AND hi_r <= cum THEN dev END) AS vhi
-        |  FROM r2 JOIN t2 ON r2.g = t2.g
+        |  FROM r2 JOIN t2 ON r2.g IS NOT DISTINCT FROM t2.g
         |    AND ((lo_r > cum - c AND lo_r <= cum)
         |      OR (hi_r > cum - c AND hi_r <= cum))
         |  GROUP BY 1, 2
@@ -1984,7 +1984,7 @@ object SparkEntry {
         |  CASE WHEN mad.mad = 0 THEN FALSE
         |    ELSE abs(round(0.6745 * (d.v - d.med) / mad.mad, 6)) > 3.5
         |    END AS is_outlier
-        |FROM d JOIN mad USING (g)
+        |FROM d JOIN mad ON d.g IS NOT DISTINCT FROM mad.g
         |ORDER BY event_type, event_id""".stripMargin,
 
     // reference-decile binning of both time halves; bin edges are the
@@ -2023,7 +2023,7 @@ object SparkEntry {
         |  SELECT r.g, quantile, frac,
         |    MAX(CASE WHEN lo_r > cum - c AND lo_r <= cum THEN v END) AS vlo,
         |    MAX(CASE WHEN hi_r > cum - c AND hi_r <= cum THEN v END) AS vhi
-        |  FROM r JOIN t ON r.g = t.g
+        |  FROM r JOIN t ON r.g IS NOT DISTINCT FROM t.g
         |    AND ((lo_r > cum - c AND lo_r <= cum)
         |      OR (hi_r > cum - c AND hi_r <= cum))
         |  GROUP BY 1, 2, 3
@@ -2053,7 +2053,7 @@ object SparkEntry {
         |    + (CASE WHEN v >= b6 THEN 1 ELSE 0 END)
         |    + (CASE WHEN v >= b7 THEN 1 ELSE 0 END)
         |    + (CASE WHEN v >= b8 THEN 1 ELSE 0 END) AS bin
-        |  FROM sided s JOIN wideb USING (g)
+        |  FROM sided s JOIN wideb ON s.g IS NOT DISTINCT FROM wideb.g
         |), counts AS (
         |  SELECT g, bin,
         |    CAST(SUM(CASE WHEN side = 'ref' THEN 1 ELSE 0 END) AS BIGINT)
@@ -3316,7 +3316,7 @@ object SparkEntry {
         |  SELECT t2.event_type, quantile, frac,
         |    MAX(CASE WHEN r.r = lo_r THEN v END) AS vlo,
         |    MAX(CASE WHEN r.r = hi_r THEN v END) AS vhi
-        |  FROM t2 JOIN r ON r.event_type = t2.event_type
+        |  FROM t2 JOIN r ON r.event_type IS NOT DISTINCT FROM t2.event_type
         |    AND (r.r = lo_r OR r.r = hi_r)
         |  GROUP BY 1, 2, 3
         |)
@@ -3349,7 +3349,7 @@ object SparkEntry {
         |  SELECT t2.event_type, quantile, frac,
         |    MAX(CASE WHEN r.r = lo_r THEN v END) AS vlo,
         |    MAX(CASE WHEN r.r = hi_r THEN v END) AS vhi
-        |  FROM t2 JOIN r ON r.event_type = t2.event_type
+        |  FROM t2 JOIN r ON r.event_type IS NOT DISTINCT FROM t2.event_type
         |    AND (r.r = lo_r OR r.r = hi_r)
         |  GROUP BY 1, 2, 3
         |)

@@ -10,27 +10,34 @@ import graft.xbrl.TableSchema
 
 /** Top-level extraction pipeline — the engine's analog of the
   * reference's `xbrl.extract` (xbrl.py:28-81): filings + taxonomy
-  * archive in, lazily-planned output tables + coverage stats out, with
-  * optional table filtering and instance-name pattern matching.
+  * archive in, the grouped fact store every output table is a
+  * projection of out, with optional table filtering and instance-name
+  * pattern matching.
   *
-  * Only the shared grouped fact store materializes up front; each
-  * table's plan runs when a sink writes it, as a map-only projection of
-  * that store. [[writeDatapackage]] is the load that follows: the
-  * tables, both datapackage descriptors and the taxonomy metadata.
+  * Only the store materializes up front. [[writeDatapackage]] is the
+  * load that follows: every table routed from the store in one Spark
+  * job, both datapackage descriptors and the taxonomy metadata.
   */
 object XbrlExtract {
 
   /** `release()` frees the shared grouped store's checkpoint blocks and
-    * the parsed filings backing `tables` — call it once every output
-    * table is materialized (long-lived callers; a CLI process exit
-    * releases implicitly).
+    * the parsed filings behind it — call it once every output table is
+    * materialized (long-lived callers; a CLI process exit releases
+    * implicitly).
     */
   case class ExtractOutput(
       taxonomies: Seq[graft.xbrl.Taxonomy],
       schemas: Seq[TableSchema],
-      tables: Map[String, DataFrame],
-      stats: DataFrame,
-      release: () => Unit = () => ())
+      store: DataFrame,
+      release: () => Unit = () => ()) {
+
+    /** Each table as a lazy [[FactTableBuilder.buildFromStore]] view of
+      * the store, for API callers and the JDBC sink; the datapackage
+      * write does not use them.
+      */
+    lazy val tables: Map[String, DataFrame] =
+      schemas.map(s => s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
+  }
 
   /** Each element of `filings` may be a zip archive, a directory of
     * `.xbrl` files, or a single `.xbrl` filing — dispatched per input
@@ -39,11 +46,11 @@ object XbrlExtract {
     * Every table is a map-only projection of ONE grouped fact store
     * ([[FactTableBuilder.groupedStore]]), built inside the tasks that
     * parse the filings: parse + store is ONE Spark job with no exchange.
-    * The store is materialized here, eagerly, by [[checkpointed]]: each
-    * table's plan then scans a leaf RDD instead of re-planning and
-    * re-shipping the parse lineage in its task binary. The tables
-    * themselves stay lazy until a sink runs them — `graft.Main` writes
-    * them all in one batched job through [[writeDatapackage]].
+    * The store is materialized here, eagerly, by [[checkpointed]]: a
+    * job over it then scans a leaf RDD instead of re-planning and
+    * re-shipping the parse lineage in its task binary. No table is
+    * planned here — `graft.Main` writes them all from the store through
+    * [[writeDatapackage]].
     *
     * A filing that arrives twice (the same archive passed twice, or two
     * entries with one stem) throws an `IllegalArgumentException` naming
@@ -75,20 +82,10 @@ object XbrlExtract {
         throw new IllegalArgumentException(
           s"filing(s) given more than once: ${repeated.toSeq.sorted.mkString(", ")}")
 
-      def pattern(df: DataFrame): DataFrame =
-        instancePattern.fold(df)(p => df.filter(col("filing_name").rlike(p)))
-      val facts = pattern(parsed.map(_.facts.toDF()).reduce(_ union _))
-        .as[graft.xbrl.RawFact](org.apache.spark.sql.Encoders.product[graft.xbrl.RawFact])
-      val contexts = pattern(parsed.map(_.contexts.toDF()).reduce(_ union _))
-        .as[graft.xbrl.XbrlContext](org.apache.spark.sql.Encoders.product[graft.xbrl.XbrlContext])
-      val meta = pattern(parsed.map(_.meta).reduce(_ unionByName _))
-
+      val grouped = FactTableBuilder.groupedStore(schemas, parsed)
       val (store, releaseStore) = checkpointed(
-        pattern(FactTableBuilder.groupedStore(schemas, parsed)))
-      val tables = schemas.map(s =>
-        s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
-      val stats = FactTableBuilder.stats(spark, schemas, facts, contexts, meta)
-      ExtractOutput(taxonomies, schemas, tables, stats,
+        instancePattern.fold(grouped)(p => grouped.filter(col("filing_name").rlike(p))))
+      ExtractOutput(taxonomies, schemas, store,
         release = () => {
           releaseStore()
           parsed.foreach(_.unpersist())
@@ -122,36 +119,37 @@ object XbrlExtract {
     (cp, release)
   }
 
-  /** The reference CLI's load (cli.py:101-130): every table of `tables`
-    * written as one parquet file at `<outputDir>/fercN_xbrl/<name>.parquet`
-    * (cli.py:211-230), all in ONE batched Spark job
-    * ([[XbrlSinks.writeSingleFileTables]]); then the parquet descriptor
-    * `fercN_xbrl/datapackage.json`, the sqlite-style descriptor
-    * `fercN_xbrl_datapackage.json` and `fercN_xbrl_taxonomy_metadata.json`.
-    * `graft.Main` and x05 both write through this.
+  /** The reference CLI's load (cli.py:101-130): every table of
+    * `schemas` written from the grouped fact store `store` as one
+    * parquet file at `<outputDir>/fercN_xbrl/<name>.parquet`
+    * (cli.py:211-230), all in ONE Spark job that routes each context to
+    * the tables that take it ([[XbrlSinks.writeRouted]]); then the
+    * parquet descriptor `fercN_xbrl/datapackage.json`, the sqlite-style
+    * descriptor `fercN_xbrl_datapackage.json` and
+    * `fercN_xbrl_taxonomy_metadata.json`. `graft.Main` and x05 both
+    * write through this.
     *
-    * Returns each table's row count, or the error that stopped it: a
-    * failed table never stops the others, and both descriptors list
-    * exactly the tables that landed, so they never reference missing or
-    * partial data. No descriptor is written if no table landed. If
-    * `timeout` expires, the in-flight write job is cancelled and this
-    * throws — again with no descriptor. A rerun into the same
+    * Returns each table's row count, or the error that stopped its
+    * write: a failed table never stops the others, and both descriptors
+    * list exactly the tables that landed, so they never reference
+    * missing or partial data. No descriptor is written if no table
+    * landed. If `timeout` expires, the in-flight write job is cancelled
+    * and this throws — again with no descriptor. A rerun into the same
     * `outputDir` replaces each table it writes.
     */
   def writeDatapackage(
       taxonomies: Seq[graft.xbrl.Taxonomy],
       schemas: Seq[TableSchema],
-      tables: Map[String, DataFrame],
+      store: DataFrame,
       outputDir: String,
       formNumber: Int = 1,
-      poolSize: Int = 8,
       timeout: scala.concurrent.duration.Duration =
         scala.concurrent.duration.Duration(30, "min")): Map[String, Either[String, Long]] = {
-    // validate the schema set before any table job runs (fail fast); the
+    // validate the schema set before the write job runs (fail fast); the
     // descriptors themselves are written only after the job
-    XbrlSinks.validateSchemas(schemas, Some(tables.keySet))
+    XbrlSinks.validateSchemas(schemas)
     val tablesDir = s"$outputDir/ferc${formNumber}_xbrl"
-    val results = XbrlSinks.writeTables(tables, tablesDir, poolSize, timeout)
+    val results = XbrlSinks.writeRouted(schemas, store, tablesDir, timeout)
     val written = results.collect { case (name, Right(_)) => name }.toSet
     if (written.nonEmpty) {
       val landed = schemas.filter(s => written(s.name))

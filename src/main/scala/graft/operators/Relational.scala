@@ -1209,7 +1209,7 @@ object Relational {
     def holds(r: org.apache.spark.sql.Column) =
       r > col("__cum") - col("__c") && r <= col("__cum")
     ranked.join(broadcast(targets),
-        col("group") === col("__g") &&
+        col("group") <=> col("__g") &&
           (holds(col("lo_r")) || holds(col("hi_r"))))
       .groupBy(col("group"), col("quantile"), col("frac"))
       .agg(max(when(holds(col("lo_r")), col("__v"))).as("__vlo"),
@@ -1693,7 +1693,7 @@ object Relational {
     df.select(q(groupCol).as("group"),
         q(valueCol).cast(D).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
-      .join(broadcast(fences), "group")
+      .join(broadcast(fences.withColumnRenamed("group", "__gf")), col("group") <=> col("__gf"))
       .groupBy(col("group"), col("q1"), col("q3"),
         col("lo_fence"), col("hi_fence"))
       .agg(count(lit(1)).as("n_values"),
@@ -2291,7 +2291,7 @@ object Relational {
       .filter(col("__v").isNotNull)
     val fences = quantilePivot(df, groupCol, valueCol,
       Seq(loQ -> "lo_fence", hiQ -> "hi_fence"))
-    v.join(broadcast(fences), col("__g2") === col("group"))
+    v.join(broadcast(fences), col("__g2") <=> col("group"))
       .select(col("__g2").as(groupCol), col("__id").as(idCol),
         col("__v").as(valueCol),
         least(greatest(col("__v"), col("lo_fence")), col("hi_fence"))
@@ -2560,11 +2560,11 @@ object Relational {
       .filter(col("__v").isNotNull)
     val med = exactQuantiles(df, groupCol, valueCol, Seq(0.5))
       .select(col("group").as("__gm"), col("value").as("__med"))
-    val withMed = v.join(broadcast(med), col("__g2") === col("__gm"))
+    val withMed = v.join(broadcast(med), col("__g2") <=> col("__gm"))
       .withColumn("__dev", abs(col("__v") - col("__med")).cast(D).cast("double"))
     val mad = exactQuantiles(withMed, "__g2", "__dev", Seq(0.5))
       .select(col("group").as("__gd"), col("value").as("__mad"))
-    withMed.join(broadcast(mad), col("__g2") === col("__gd"))
+    withMed.join(broadcast(mad), col("__g2") <=> col("__gd"))
       .withColumn("robust_z",
         when(col("__mad") === 0.0, lit(null).cast("double"))
           .otherwise(round(
@@ -2685,11 +2685,12 @@ object Relational {
   }
 
   /** `vals` (group `__g2`, value `__v`) joined to a wide edge frame
-    * by broadcast, with `bin = Σ (v ≥ __b$i)` over its `nb` edges.
-    * Groups without an edge row drop.
+    * by broadcast, null-safe (a null group is binned against its own
+    * edges), with `bin = Σ (v ≥ __b$i)` over its `nb` edges. Groups
+    * without an edge row drop.
     */
   private def assignBins(vals: DataFrame, edges: DataFrame, nb: Int): DataFrame =
-    vals.join(broadcast(edges), col("__g2") === col("group"))
+    vals.join(broadcast(edges), col("__g2") <=> col("group"))
       .withColumn("bin", (0 until nb)
         .map(i => when(col("__v") >= col(s"__b$i"), 1).otherwise(0))
         .reduce(_ + _))

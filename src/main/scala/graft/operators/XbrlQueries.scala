@@ -100,11 +100,10 @@ object XbrlQueries {
   /** The grouped fact store x05 writes from, built on x05's first call
     * in a session (x01-x04 never build it) inside the tasks that parse
     * the filings, as `XbrlExtract.extract` builds it, and held in the
-    * session's entry beside the parse. The store feeds 255 per-table
-    * plans per x05 run; `XbrlExtract.checkpointed` materializes it and
-    * truncates its lineage, so each plan ships a scan of a leaf RDD, not
-    * the parse lineage (r18 measured 255 pooled noop builds 4.1–6.0 s
-    * over the plain persisted store vs 1.3 s over the checkpointed one).
+    * session's entry beside the parse. Each x05 run routes all 255
+    * tables from it in one write job; `XbrlExtract.checkpointed`
+    * materializes it and truncates its lineage, so that job ships a
+    * scan of a leaf RDD, not the parse lineage.
     */
   private[graft] def sharedStore(s: SparkSession): DataFrame = synchronized {
     val e = entry(s)
@@ -202,11 +201,11 @@ object XbrlQueries {
     * `XbrlExtract.writeDatapackage`, the writer `graft.Main` uses, in
     * Main's layout (xbrl.py:86-140 + cli.py:101-130). One summary row
     * per table `(table_name, n_rows, n_cols, error)`: a failed table is
-    * its row's error, the others still write. Every table is a map-only
-    * filter-projection over the session's grouped fact store
-    * ([[sharedStore]]: built once from the ONE persisted parse — the
-    * archive is never re-parsed, the corpus never re-aggregated), and
-    * counts are taken as the rows are written. Output lands under
+    * its row's error, the others still write. Every table is routed
+    * from the session's grouped fact store in one job ([[sharedStore]]:
+    * built once from the ONE persisted parse — the archive is never
+    * re-parsed, the corpus never re-aggregated, no per-table plan is
+    * built), and counts are taken as the rows are written. Output lands under
     * java.io.tmpdir (or GRAFT_X05_OUT), scoped
     * `<base>/<applicationId>/run_<n>` — x05 is a WRITE workload by
     * design, and the per-app per-run scope keeps concurrent JVMs out of
@@ -227,13 +226,8 @@ object XbrlQueries {
       s"${System.getProperty("java.io.tmpdir")}/graft_x05_datapackage")
     val scope = s"$base/${s.sparkContext.applicationId}"
     val run = x05Runs.incrementAndGet()
-    val store = sharedStore(s)
-    // pool sized to the session's cores (floor 16): the pool plans the
-    // 255 tables before the one write job, so its width is the planning
-    // concurrency (guide §2.6 overlap independent work)
-    val written = graft.XbrlExtract.writeDatapackage(taxonomies, tables,
-      tables.map(t => t.name -> FactTableBuilder.buildFromStore(t, store)).toMap,
-      s"$scope/run_$run", poolSize = math.max(16, s.sparkContext.defaultParallelism))
+    val written = graft.XbrlExtract.writeDatapackage(taxonomies, tables, sharedStore(s),
+      s"$scope/run_$run")
     // writes are complete here (the datapackage writer awaits its job):
     // drop the predecessor so repeat runs don't accumulate
     if (run > 1) deleteRecursively(new java.io.File(s"$scope/run_${run - 1}"))

@@ -1,8 +1,13 @@
 package graft.plans
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{InterpretedUnsafeProjection, UnsafeProjection}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, MapType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.ParsedFilings
 import graft.xbrl.{RawFact, TableSchema, XbrlBaseType, XbrlContext}
@@ -40,7 +45,8 @@ import graft.xbrl.{RawFact, TableSchema, XbrlBaseType, XbrlContext}
   * broadcast. The all-tables [[groupedStore]] needs none: every step is
   * keyed by filing, so it runs inside the tasks that parse the filings.
   * This is the property that holds at 1000 executors: adding filings
-  * adds partitions, never coordination.
+  * adds partitions, never coordination. Every table of the store is
+  * then written from one scan of it ([[route]]), not one plan per table.
   */
 object FactTableBuilder {
 
@@ -282,6 +288,127 @@ object FactTableBuilder {
         axisCols.map { case (n, c) => c.as(n) } ++
         typedData: _*)
       .select(schema.primaryKey.map(col) ++ dataCols.map(c => col(c.name)): _*)
+  }
+
+  /** Where one output column of a routed table comes from. */
+  private sealed trait Source extends Serializable
+  /** A store column, by ordinal. */
+  private final case class StoreColumn(ordinal: Int) extends Source
+  /** A dimension value; `total` when the context lacks the axis. */
+  private final case class AxisColumn(axis: String) extends Source
+  /** A fact's canonical value, `try_cast` to the column's type. */
+  private final case class FactColumn(name: String) extends Source
+
+  /** One table as the router sees it: its period type, its axes, where
+    * each output column comes from, and the output schema
+    * [[buildFromStore]]'s plan has (names, types and nullability: an
+    * axis column is non-nullable, a store column keeps the store's
+    * field, a typed fact is nullable).
+    */
+  private final case class RoutedTable(name: String, instant: Boolean, axes: Set[String],
+      sources: Array[Source], schema: StructType) {
+    def facts: Seq[String] = sources.toSeq.collect { case FactColumn(n) => n }
+  }
+
+  private def routedTable(schema: TableSchema, store: StructType): RoutedTable = {
+    val instant = schema.periodType == "instant"
+    val axisType = store("dims").dataType.asInstanceOf[MapType].valueType
+    def fromStore(name: String, column: String) = {
+      val f = store(column)
+      StoreColumn(store.fieldIndex(column)) -> f.copy(name = name)
+    }
+    val pk = schema.primaryKey.map {
+      case n @ ("entity_id" | "filing_name" | "publication_time") => fromStore(n, n)
+      case n @ ("start_date" | "end_date") if !instant => fromStore(n, n)
+      case "date" if instant => fromStore("date", "end_date")
+      case a if schema.axes.contains(a) => AxisColumn(a) -> StructField(a, axisType, nullable = false)
+      case other => throw new IllegalArgumentException(
+        s"${schema.name}: primary key column $other is neither a context field nor an axis")
+    }
+    val data = schema.dataColumns.map(c =>
+      FactColumn(c.name) -> StructField(c.name, XbrlBaseType.sparkType(c.schemaType), nullable = true))
+    val all = pk ++ data
+    RoutedTable(schema.name, instant, schema.axes.toSet, all.map(_._1).toArray,
+      StructType(all.map(_._2)))
+  }
+
+  /** Every table of `schemas` from ONE map-only pass over the store:
+    * one row per (context, table that takes it), keyed by the table's
+    * position in `schemas` and already projected to that table's typed
+    * row. Returns each table's name and output schema, in `schemas`
+    * order, with the keyed rows.
+    *
+    * The rules are [[buildFromStore]]'s, tested in plain Scala against
+    * a driver-side index (fact name → the tables whose data columns
+    * carry it): the period matches, the context's dims are a subset of
+    * the table's axes, and at least one of the table's columns holds a
+    * non-null value. The projection is the same too — the store's PK
+    * fields, `total` for a missing axis, and Catalyst's `Cast` in TRY
+    * mode (what `try_cast` is) per data column — so every table's rows
+    * and schema equal its [[buildFromStore]] plan's (GroupedStoreSpec
+    * pins all 255). Each task builds a table's projection on first use:
+    * a bound expression is never shared between task threads.
+    *
+    * No per-table Catalyst plan is analysed or compiled: the cost is
+    * one scan of the store, whatever the table count.
+    */
+  def route(schemas: Seq[TableSchema], store: DataFrame)
+      : (Seq[(String, StructType)], RDD[(Int, InternalRow)]) = {
+    val storeSchema = store.schema
+    val tables = schemas.map(routedTable(_, storeSchema)).toArray
+    val byFact: Map[String, Array[Int]] = tables.indices
+      .flatMap(i => tables(i).facts.map(_ -> i))
+      .groupBy(_._1).map { case (n, ids) => n -> ids.map(_._2).toArray }
+    val Seq(factmapAt, instantAt, dimsAt) =
+      Seq("factmap", "instant", "dims").map(storeSchema.fieldIndex)
+    val timeZone = Some(store.sparkSession.sessionState.conf.sessionLocalTimeZone)
+    val total = UTF8String.fromString("total")
+
+    val routed = store.queryExecution.toRdd.mapPartitions { rows =>
+      val projections = new Array[UnsafeProjection](tables.length)
+      def projection(t: Int): UnsafeProjection = {
+        if (projections(t) == null) {
+          val fields = tables(t).schema.fields
+          projections(t) = InterpretedUnsafeProjection.createProjection(
+            tables(t).sources.toSeq.zipWithIndex.map {
+              case (FactColumn(_), j) =>
+                Cast(BoundReference(j, StringType, nullable = true), fields(j).dataType,
+                  timeZone, EvalMode.TRY)
+              case (_, j) => BoundReference(j, fields(j).dataType, fields(j).nullable)
+            })
+        }
+        projections(t)
+      }
+      rows.flatMap { row =>
+        if (row.isNullAt(factmapAt) || row.isNullAt(instantAt) || row.isNullAt(dimsAt)) Nil
+        else {
+          val facts = row.getMap(factmapAt)
+          val present = new java.util.HashMap[String, UTF8String]()
+          for (i <- 0 until facts.numElements() if !facts.valueArray().isNullAt(i))
+            present.put(facts.keyArray().getUTF8String(i).toString,
+              facts.valueArray().getUTF8String(i))
+          val dimMap = row.getMap(dimsAt)
+          val dims = (0 until dimMap.numElements()).map { i =>
+            dimMap.keyArray().getUTF8String(i).toString ->
+              (if (dimMap.valueArray().isNullAt(i)) total else dimMap.valueArray().getUTF8String(i))
+          }.toMap
+          val instant = row.getBoolean(instantAt)
+          val taking = present.keySet().toArray(Array.empty[String])
+            .flatMap(byFact.getOrElse(_, Array.empty[Int])).distinct
+            .filter(t => tables(t).instant == instant && dims.keys.forall(tables(t).axes))
+          taking.toSeq.map { t =>
+            val fields = tables(t).schema.fields
+            val values = tables(t).sources.zipWithIndex.map {
+              case (StoreColumn(ord), j) => row.get(ord, fields(j).dataType)
+              case (AxisColumn(axis), _) => dims.getOrElse(axis, total)
+              case (FactColumn(name), _) => present.get(name)
+            }
+            t -> (projection(t)(new GenericInternalRow(values)).copy(): InternalRow)
+          }
+        }
+      }
+    }
+    (tables.toSeq.map(t => t.name -> t.schema), routed)
   }
 
   /** Calculation-linkbase validation in LONG form: for each calc set

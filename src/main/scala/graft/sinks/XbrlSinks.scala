@@ -14,7 +14,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.spark.TaskContext
+import org.apache.spark.{HashPartitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
@@ -27,44 +28,89 @@ import graft.xbrl.{Concept, TableSchema, Taxonomy}
   * cli.py:101-130, xbrl.py:257-281).
   *
   * Tables write through Spark — parquet is the lake format
-  * (partitionable, predicate-pushable at 100 TB), one file per table in
-  * one batched job; JDBC for the reference's SQLite/DuckDB use case (tested
-  * on embedded Derby; any JDBC driver on the classpath works the same
-  * way). The datapackage descriptor and taxonomy metadata JSON mirror
-  * the reference's Frictionless output field-for-field.
+  * (partitionable, predicate-pushable at 100 TB), one file per table,
+  * the datapackage's tables routed from the fact store in one job; JDBC
+  * for the reference's SQLite/DuckDB use case (tested on embedded
+  * Derby; any JDBC driver on the classpath works the same way). The
+  * datapackage descriptor and taxonomy metadata JSON mirror the
+  * reference's Frictionless output field-for-field.
   */
 object XbrlSinks {
 
   /** Each table lands at `<outDir>/<name>.parquet` — a Spark parquet
     * directory whose name carries the suffix so the layout agrees with
     * the datapackage descriptor's `path` (the reference CLI writes
-    * literal `<table>.parquet` files; cli.py:211-230) — through the
-    * batched writer ([[writeSingleFileTables]]): one `part-*.parquet`
-    * plus `_SUCCESS` per table, every table in ONE Spark job.
-    * `graft.XbrlExtract.writeDatapackage` shares the same batch.
+    * literal `<table>.parquet` files; cli.py:211-230) — as one
+    * `part-*.parquet` plus `_SUCCESS`, each table in its own Spark job
+    * ([[writeTables]]). The datapackage writer routes its tables from
+    * the fact store instead ([[writeRouted]]) into the same layout.
     *
     * Fail-fast: if any table fails to plan or write, this throws an
     * exception naming every failed table (the tables that succeeded
     * stay written), so a caller writes no descriptor for a partial run.
-    * On a timeout the in-flight job is cancelled and this throws.
+    * On a timeout the in-flight jobs are cancelled and this throws.
     */
   def writeParquetPooled(tables: Map[String, DataFrame], outDir: String,
       poolSize: Int = 8,
       timeout: Duration = Duration(30, "min")): Unit =
     requireWritten(writeTables(tables, outDir, poolSize, timeout))
 
-  /** [[writeSingleFileTables]] of `tables` into `outDir` on a pool of
-    * `poolSize` threads, bounded by `timeout` ([[onPool]]): each
-    * table's row count, or the error that stopped it.
+  /** Each table of `tables` written into `outDir` in its own Spark job
+    * (one task: the plan coalesced to one partition), `poolSize` jobs at
+    * a time, bounded by `timeout` ([[onPool]]): each table's row count,
+    * or the error that stopped it — a table that fails to plan or write
+    * never stops the others.
     */
   private[graft] def writeTables(tables: Map[String, DataFrame], outDir: String,
       poolSize: Int, timeout: Duration): Map[String, Either[String, Long]] =
     if (tables.isEmpty) Map.empty
     else {
       val spark = tables.head._2.sparkSession
+      val sink = new TableSink(spark, outDir)
       onPool(spark, poolSize, timeout, "parquet write") { (group, ec) =>
-        writeSingleFileTables(spark, tables.toSeq.map { case (n, df) => n -> (() => df) },
-          outDir, group)(ec)
+        implicit val pool: ExecutionContext = ec
+        Future.traverse(tables.toSeq) { case (name, df) =>
+          Future {
+            try {
+              val rdd = df.queryExecution.toRdd
+              // a plan Catalyst proves empty has no partition, and still
+              // writes one empty file with its schema, as the SQL write
+              // command does
+              val one =
+                if (rdd.getNumPartitions == 0) spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+                else rdd.coalesce(1)
+              sink.write(Seq(name -> df.schema), one, group).head
+            } catch { case NonFatal(e) => name -> Left(describe(e)) }
+          }
+        }
+      }.toMap
+    }
+
+  /** The datapackage write: every table of `schemas` from the grouped
+    * fact store `store` in ONE Spark job. The map stage routes each
+    * context to the tables that take it
+    * ([[graft.plans.FactTableBuilder.route]]); a partition by table id
+    * gives every table exactly one write task — a table no context
+    * reaches writes one empty file with its schema. Bounded by
+    * `timeout` ([[onPool]]): on expiry the job is cancelled and this
+    * throws. Returns each table's row count, or the error that stopped
+    * its write; a failure of the routing stage fails the job, and this
+    * throws it.
+    */
+  private[graft] def writeRouted(schemas: Seq[TableSchema], store: DataFrame, outDir: String,
+      timeout: Duration): Map[String, Either[String, Long]] =
+    if (schemas.isEmpty) Map.empty
+    else {
+      val spark = store.sparkSession
+      val sink = new TableSink(spark, outDir)
+      val (tables, routed) = graft.plans.FactTableBuilder.route(schemas, store)
+      onPool(spark, 1, timeout, "parquet write") { (group, ec) =>
+        Future {
+          // an Int key k < n hashes to partition k: partition i is table i
+          val byTable = new ShuffledRDD[Int, InternalRow, InternalRow](
+            routed, new HashPartitioner(tables.size))
+          sink.write(tables, byTable.values, group)
+        }(ec)
       }.toMap
     }
 
@@ -102,78 +148,45 @@ object XbrlSinks {
     } finally pool.shutdown()
   }
 
-  /** Single-file parquet writes of many tables in ONE Spark job, each
-    * table at `<outDir>/<name>.parquet`: every table's plan compiles to
-    * its RDD on the pool (`toRdd.coalesce(1)`), the RDDs union into one
-    * job with one task per table, and each task writes its table
-    * through [[writeOneTable]]. One SQL write command per table cost
-    * ~235 ms of single-threaded driver constants each (stage creation,
-    * task-binary broadcast with a fresh serialized Hadoop conf) against
-    * ~80 ms of task time; one job pays them once.
-    *
-    * The driver clears each table dir once, before the job; a re-run
-    * into the same `outDir` therefore replaces the previous output.
-    * Returns, per table, its row count or the error that stopped it —
-    * a table that fails to plan or write never stops the others.
+  /** The parquet writes of one call into `outDir`: the write conf,
+    * broadcast once, and one part-file name per run, the same for every
+    * table and every attempt of its task — a retried or speculative
+    * attempt replaces, never adds.
     */
-  private[graft] def writeSingleFileTables(
-      spark: SparkSession,
-      tables: Seq[(String, () => DataFrame)],
-      outDir: String,
-      jobGroup: String)(implicit ec: ExecutionContext)
-      : Future[Seq[(String, Either[String, Long])]] = {
-    val conf = parquetWriteConf(spark)
-    val ext = CompressionCodecName.valueOf(conf.get("parquet.compression")).getExtension
-    val box = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
-    val planned = tables.map { case (name, build) =>
-      Future {
-        try {
-          val df = build()
-          val rdd = df.queryExecution.toRdd
-          // exactly one partition per table, so partition i is table i:
-          // a plan Catalyst proves empty has none, and still writes one
-          // empty file with its schema, as the SQL write command does
-          val one =
-            if (rdd.getNumPartitions == 0) spark.sparkContext.parallelize(Seq.empty[InternalRow], 1)
-            else rdd.coalesce(1)
-          Right((name, df.schema, one))
-        } catch { case NonFatal(e) => Left(name -> Left(describe(e))) }
-      }
-    }
-    Future.sequence(planned).map { ps =>
-      val failed = ps.collect { case Left(f) => f }
-      val built = ps.collect { case Right(b) => b }
-      // one file name per table and run, the same for every attempt of
-      // its task: a retried or speculative attempt replaces, never adds
-      val file = s"part-00000-${UUID.randomUUID()}-c000$ext.parquet"
-      val metas = built.map { case (name, schema, _) =>
+  private final class TableSink(spark: SparkSession, outDir: String) {
+    private val conf = parquetWriteConf(spark)
+    private val box = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    private val file = "part-00000-" + UUID.randomUUID() + "-c000" +
+      CompressionCodecName.valueOf(conf.get("parquet.compression")).getExtension + ".parquet"
+
+    /** One Spark job, tagged `jobGroup`, in which the task of partition
+      * i of `rows` writes table i of `tables` (name, schema) at
+      * `<outDir>/<name>.parquet` through [[writeOneTable]]. The driver
+      * clears each table dir first, so a re-run into the same `outDir`
+      * replaces the table. Returns each table's row count or error.
+      */
+    def write(tables: Seq[(String, StructType)], rows: RDD[InternalRow],
+        jobGroup: String): Seq[(String, Either[String, Long])] = {
+      val metas = tables.map { case (name, schema) =>
         TableFile(name, s"$outDir/$name.parquet", file, schema)
       }.toArray
       metas.foreach { m =>
         val dir = new Path(m.dir)
         dir.getFileSystem(conf).delete(dir, true)
       }
-      val written =
-        if (metas.isEmpty) Seq.empty
-        else {
-          spark.sparkContext.setJobGroup(jobGroup,
-            s"graft parquet write of ${metas.length} tables", interruptOnCancel = true)
-          spark.sparkContext.runJob(spark.sparkContext.union(built.map(_._3)),
-            (ctx: TaskContext, rows: Iterator[InternalRow]) =>
-              writeOneTable(metas(ctx.partitionId()), box.value.value, ctx.taskAttemptId(), rows))
-            .toSeq
-        }
-      if (written.length != metas.length)
-        throw new IllegalStateException(
-          s"parquet write job returned ${written.length} results for ${metas.length} tables")
-      failed ++ metas.map(_.name).zip(written)
+      val b = box
+      spark.sparkContext.setJobGroup(jobGroup,
+        s"graft parquet write of ${metas.length} tables", interruptOnCancel = true)
+      metas.map(_.name).toSeq.zip(spark.sparkContext.runJob(rows,
+        (ctx: TaskContext, it: Iterator[InternalRow]) =>
+          writeOneTable(metas(ctx.partitionId()), b.value.value, ctx.taskAttemptId(), it)))
     }
   }
 
   /** One table's output file: `file` inside the table dir `dir`. */
   private[graft] case class TableFile(name: String, dir: String, file: String, schema: StructType)
 
-  /** Hadoop conf for the batched parquet writes: the session's Hadoop
+  /** Hadoop conf for the table writes: the session's Hadoop
     * conf plus the same entries ParquetFileFormat.prepareWrite sets for
     * a SQL parquet write command (write-support class, legacy-format /
     * timestamp-type / rebase-mode keys, codec) — the per-TABLE schema
@@ -205,7 +218,7 @@ object XbrlSinks {
     conf
   }
 
-  /** One batched-write task: stream the table's rows into an
+  /** One table's write task: stream the table's rows into an
     * attempt-scoped temp file in the table dir through the same
     * ParquetWriteSupport machinery the SQL write command uses, counting
     * rows as they land, then rename it onto the table's file and mark

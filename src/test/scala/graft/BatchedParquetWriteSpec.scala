@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
 
 import graft.sinks.XbrlSinks
 
-/** The batched single-file parquet writer both table sinks share
-  * (`XbrlSinks.writeSingleFileTables` / `writeOneTable`), on synthetic
-  * tables: the layout (one `part-*.parquet` plus `_SUCCESS` per table),
+/** The single-file parquet table writer (`XbrlSinks.writeTables`, one
+  * job per table, and the `writeOneTable` task the datapackage's routed
+  * write shares), on synthetic tables: the layout (one `part-*.parquet` plus `_SUCCESS` per table),
   * read-back equality for every column type the taxonomy maps to, the
   * per-table error contract, and retry / re-run safety.
   */
@@ -62,10 +62,7 @@ class BatchedParquetWriteSpec extends SparkSpec {
 
   private def writeBatch(tables: Seq[(String, DataFrame)], out: String)
       : Map[String, Either[String, Long]] =
-    XbrlSinks.onPool(spark, 4, Duration(5, "min"), "test write") { (group, ec) =>
-      XbrlSinks.writeSingleFileTables(spark,
-        tables.map { case (n, df) => n -> (() => df) }, out, group)(ec)
-    }.toMap
+    XbrlSinks.writeTables(tables.toMap, out, 4, Duration(5, "min"))
 
   test("every taxonomy column type reads back equal, one part file + _SUCCESS per table") {
     val out = tmpDir()

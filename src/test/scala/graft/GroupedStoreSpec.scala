@@ -8,19 +8,23 @@ import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{array_sort, col, map_entries}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.plans.{FactTableBuilder, FactTableSchema}
 import graft.sources.{FilingSource, TaxonomyParser}
 
 /** The grouped fact store built where each filing is parsed, on seasons
   * the repository generates (`perfbench/gen_xbrl.py`): the fixture twin
-  * of FactTableSpec's real-filing equivalence over all 255 tables, the
-  * job and plan shape of `XbrlExtract.extract` (parse + store in one
-  * job, no exchange), and the two bad inputs that must fail loudly — a
-  * filing that arrives twice and a truncated archive entry.
+  * of FactTableSpec's real-filing equivalence over all 255 tables (the
+  * routed datapackage write included), the job and plan shape of
+  * `XbrlExtract.extract` (parse + store in one job, no exchange) and of
+  * `writeDatapackage` (one job, one write task per table), and the two
+  * bad inputs that must fail loudly — a filing that arrives twice and a
+  * truncated archive entry.
   */
 class GroupedStoreSpec extends SparkSpec {
 
@@ -45,6 +49,22 @@ class GroupedStoreSpec extends SparkSpec {
     df.select(cols: _*).collect().map(_.toString).sorted.toSeq
   }
 
+  /** The Spark schema a parquet part file's footer records: names,
+    * types and nullability as written.
+    */
+  private def footerSchema(dir: String): StructType = {
+    val part = new File(dir).listFiles().map(_.getName)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq
+    assert(part.size === 1, s"$dir: $part")
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/${part.head}"), spark.sparkContext.hadoopConfiguration))
+    try DataType.fromJson(reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+    finally reader.close()
+  }
+
+  // the routed datapackage write of all 255 tables is checked against the same oracle
   test("buildFromStore over the filing-local store matches build() for all 255 tables; the flat form's store is equal") {
     val tables = FactTableSchema.fromTaxonomies(TaxonomyParser.parseArchive(taxonomy(small)))
     assert(tables.size === 255)
@@ -57,6 +77,8 @@ class GroupedStoreSpec extends SparkSpec {
       val storeRows = rows(local)
       assert(storeRows.nonEmpty)
       assert(storeRows === rows(flat), "the two groupers drifted apart")
+      val out = Files.createTempDirectory("graft_store_routed").toString
+      val routed = graft.sinks.XbrlSinks.writeRouted(tables, local, out, Duration(20, "min"))
       // 255 independent small comparisons: four at a time
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -67,6 +89,10 @@ class GroupedStoreSpec extends SparkSpec {
           assert(fromLocal.columns.toSeq === oracle.columns.toSeq, t.name)
           val got = rows(fromLocal)
           assert(got === rows(oracle), s"${t.name}: store vs per-table build")
+          val dir = s"$out/${t.name}.parquet"
+          assert(routed(t.name) === Right(got.size.toLong), t.name)
+          assert(footerSchema(dir) === fromLocal.schema, s"${t.name}: routed schema")
+          assert(rows(spark.read.parquet(dir)) === got, s"${t.name}: routed rows")
           got.size
         }
       }
@@ -80,17 +106,28 @@ class GroupedStoreSpec extends SparkSpec {
     }
   }
 
-  /** Ids of the jobs `body` starts on this thread, read after the
-    * listener bus has delivered every event posted before a marker job.
+  /** What runs while `body` does, read after the listener bus has
+    * delivered every event posted before a marker job: the jobs `body`
+    * starts on this thread, every job started on any thread, and the
+    * number of SQL executions started.
     */
-  private def jobsOf(body: => Unit): Seq[Int] = {
+  private def recorded(body: => Unit): (Seq[SparkListenerJobStart], Seq[SparkListenerJobStart], Int) = {
     val sc = spark.sparkContext
     val group = s"graft-store-spec-${System.nanoTime()}"
     val marker = s"$group-marker"
-    val started = new ConcurrentLinkedQueue[(String, Int)]()
+    val started = new ConcurrentLinkedQueue[(String, SparkListenerJobStart)]()
+    val sqlExecutions = new java.util.concurrent.atomic.AtomicInteger(0)
+    @volatile var markerSeen = false
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        started.add(Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull -> js.jobId)
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == marker) markerSeen = true
+        else if (!markerSeen) started.add(g -> js)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart if !markerSeen => sqlExecutions.incrementAndGet()
+        case _ =>
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -99,11 +136,31 @@ class GroupedStoreSpec extends SparkSpec {
       sc.setJobGroup(marker, "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!started.asScala.exists(_._1 == marker) && System.nanoTime() < deadline)
+      while (!markerSeen && System.nanoTime() < deadline)
         Thread.sleep(20)
-      assert(started.asScala.exists(_._1 == marker), "listener never saw the marker job")
-      started.asScala.collect { case (g, id) if g == group => id }.toSeq
+      assert(markerSeen, "listener never saw the marker job")
+      (started.asScala.collect { case (g, js) if g == group => js }.toSeq,
+        started.asScala.map(_._2).toSeq, sqlExecutions.get)
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** Ids of the jobs `body` starts on this thread. */
+  private def jobsOf(body: => Unit): Seq[Int] = recorded(body)._1.map(_.jobId)
+
+  test("writeDatapackage writes all 255 tables in ONE Spark job with one write task per table, and runs no SQL execution") {
+    val out = XbrlExtract.extract(spark, Seq(zip(tenFilings)), taxonomy(tenFilings))
+    val dir = Files.createTempDirectory("graft_store_one_job").toString
+    var results = Map.empty[String, Either[String, Long]]
+    // the write job runs on the writer's own thread, in its own job group
+    val (_, jobs, sqlExecutions) = try recorded {
+      results = XbrlExtract.writeDatapackage(out.taxonomies, out.schemas, out.store, dir)
+    } finally out.release()
+    assert(out.schemas.size === 255)
+    assert(results.size === 255 && results.values.forall(_.isRight), results.filter(_._2.isLeft))
+    assert(jobs.size === 1, s"jobs started by writeDatapackage: ${jobs.map(_.jobId)}")
+    // the routing stage over the store, then one write task per table
+    assert(jobs.head.stageInfos.map(_.numTasks).max === 255, jobs.head.stageInfos.map(_.numTasks))
+    assert(sqlExecutions === 0, "writeDatapackage must not run a per-table SQL plan")
   }
 
   test("extract runs parse + store as ONE Spark job, and the store plan has no exchange") {

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 import scala.sys.process._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
 /** `graft.Main`, the paper's CLI job, on a season the repository makes
   * itself (`perfbench/gen_xbrl.py`, seeded, with its ground truth in
@@ -73,10 +72,9 @@ class MainCliSpec extends SparkSpec {
     val broken = requested.maxBy(expected) // rows to fail on
     val out = Files.createTempDirectory("graft_datapackage").toString
     val ex = extracted()
-    val results = try {
-      val failing = ex.tables(broken).withColumn("entity_id", when(col("entity_id").isNotNull,
-        raise_error(lit("planted failure"))).otherwise(col("entity_id")))
-      XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables.updated(broken, failing), out)
+    // the file system refuses every file of that table's directory
+    val results = try FailingCreates.under(spark, s"$out/ferc1_xbrl/$broken.parquet", "planted failure") {
+      XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.store, out)
     } finally ex.release()
     assert(results.keySet === requested.toSet)
     assert(results(broken).left.exists(_.contains("planted failure")), results(broken))
@@ -89,11 +87,34 @@ class MainCliSpec extends SparkSpec {
     assert(Files.isRegularFile(Paths.get(s"$out/ferc1_xbrl_taxonomy_metadata.json")))
   }
 
+  test("writeDatapackage: a table no context reaches writes one empty file with its schema; its neighbours keep their rows") {
+    val out = Files.createTempDirectory("graft_datapackage_unreached").toString
+    val ex = extracted()
+    val model = ex.schemas.head
+    val unreached = model.copy(name = "unreached_table_duration",
+      fields = model.fields.map(f =>
+        if (model.primaryKey.contains(f.name)) f else f.copy(name = s"no_such_fact_${f.name}")))
+    val (results, expectedSchema) = try {
+      (XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas :+ unreached, ex.store, out),
+        graft.plans.FactTableBuilder.buildFromStore(unreached, ex.store).schema)
+    } finally ex.release()
+    assert(results === expected.map { case (t, n) => t -> Right(n) } + (unreached.name -> Right(0L)))
+    val dir = new File(s"$out/ferc1_xbrl/${unreached.name}.parquet")
+    val names = dir.listFiles().map(_.getName).filterNot(_.endsWith(".crc")).toSet
+    val parts = names.filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.size === 1 && names === parts + "_SUCCESS", names)
+    val back = spark.read.parquet(dir.toString)
+    assert(back.count() === 0L)
+    assert(back.schema.map(f => f.name -> f.dataType) === expectedSchema.map(f => f.name -> f.dataType))
+    for (t <- requested)
+      assert(spark.read.parquet(s"$out/ferc1_xbrl/$t.parquet").count() === expected(t), t)
+  }
+
   test("writeDatapackage past its timeout throws and writes no descriptor") {
     val out = Files.createTempDirectory("graft_datapackage_timeout").toString
     val ex = extracted()
     try intercept[java.util.concurrent.TimeoutException] {
-      XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables, out,
+      XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.store, out,
         timeout = scala.concurrent.duration.Duration(1, "ms"))
     } finally ex.release()
     for (d <- Seq("ferc1_xbrl/datapackage.json", "ferc1_xbrl_datapackage.json",

@@ -32,7 +32,7 @@ class ReferenceWorkflowSpec extends SparkSpec {
       archive("ferc1-xbrl-taxonomies.zip"))
     try {
       graft.sinks.XbrlSinks.requireWritten(
-        XbrlExtract.writeDatapackage(out.taxonomies, out.schemas, out.tables, dir))
+        XbrlExtract.writeDatapackage(out.taxonomies, out.schemas, out.store, dir))
       // the whole datapackage landed: every taxonomy table + descriptor
       // + metadata (255 = the reference's own regression count)
       assert(out.tables.size === 255)

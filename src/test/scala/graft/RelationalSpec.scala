@@ -151,6 +151,60 @@ class RelationalSpec extends SparkSpec {
     rows.foreach { case (id, _) => assert(out(id) === out(id + 10), s"id $id") }
   }
 
+  /** `rows` (id, ts, value) twice: under a null group with their ids,
+    * and under group `k` with ids + 100.
+    */
+  private def twinGroups(rows: Seq[(Long, Long, Double)]) = {
+    import spark.implicits._
+    (rows.map { case (id, ts, v) => (id, Option.empty[String], ts, v) } ++
+      rows.map { case (id, ts, v) => (id + 100, Some("k"), ts, v) }).toDF("id", "g", "ts", "v")
+  }
+  private val skewed = Seq(1.0, 2.0, 2.5, 3.0, 3.5, 4.0, 4.5, 5.0, 6.0, 40.0).zipWithIndex
+    .map { case (v, i) => (i.toLong + 1, i.toLong * 10, v) }
+
+  /** Output rows keyed by group, the group itself dropped. */
+  private def byGroup(df: org.apache.spark.sql.DataFrame, group: String) =
+    df.collect().toSeq.groupBy(r => Option(r.getAs[String](group)))
+      .map { case (g, rs) => g -> rs.map(r => r.toSeq.patch(r.fieldIndex(group), Nil, 1).toString).sorted }
+
+  test("iqrOutliers keeps a null group and fences it as under any other key") {
+    val out = byGroup(Relational.iqrOutliers(twinGroups(skewed), "g", "v"), "group")
+    assert(out.keySet === Set(None, Some("k")), "the null group must not vanish")
+    assert(out(None) === out(Some("k")))
+  }
+
+  test("winsorize keeps a null group's rows and clamps them as under any other key") {
+    val out = Relational.winsorize(twinGroups(skewed), "g", "id", "v", 0.1, 0.9)
+      .collect().map(r => r.getAs[Long]("id") -> r).toMap
+    assert(out.size === 2 * skewed.size, "null-group rows must not vanish")
+    skewed.foreach { case (id, _, _) =>
+      assert(out(id).toSeq.drop(2) === out(id + 100).toSeq.drop(2), s"id $id")
+    }
+  }
+
+  test("madRobustZ keeps a null group's rows and scores them as under any other key") {
+    val out = Relational.madRobustZ(twinGroups(skewed), "g", "id", "v")
+      .collect().map(r => r.getAs[Long]("id") -> r).toMap
+    assert(out.size === 2 * skewed.size, "null-group rows must not vanish")
+    skewed.foreach { case (id, _, _) =>
+      assert(out(id).toSeq.drop(2) === out(id + 100).toSeq.drop(2), s"id $id")
+    }
+  }
+
+  test("psiDrift keeps a null group and bins it against its own reference edges") {
+    val out = byGroup(Relational.psiDrift(twinGroups(skewed), "g", "v", "ts", bins = 4), "g")
+    assert(out.keySet === Set(None, Some("k")), "the null group must not vanish")
+    assert(out(None) === out(Some("k")))
+  }
+
+  test("binCounts keeps a null group and counts it against its own edges") {
+    val df = twinGroups(skewed)
+    val edges = Relational.referenceEdges(df, "g", "v", bins = 4)
+    val out = byGroup(Relational.binCounts(df, "g", "v", edges), "g")
+    assert(out.keySet === Set(None, Some("k")), "the null group must not vanish")
+    assert(out(None) === out(Some("k")))
+  }
+
   test("zscoreNormalize survives large mean with tiny spread (no cancellation)") {
     import spark.implicits._
     // mean ~1e9, sd 0.01: the one-pass s2/n − mean² form loses the

@@ -60,7 +60,7 @@ class XbrlSinksSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_x05_scoped").toString
     val ex = extracted()
     try {
-      val summary = XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables, dir)
+      val summary = XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.store, dir)
       assert(summary.keySet === requested)
       // the counts taken while writing must equal what actually landed,
       // and the written width the schema's; nothing failed
@@ -90,10 +90,11 @@ class XbrlSinksSpec extends SparkSpec {
     val ex = extracted()
     val poison = "energy_storage_operations_small_plants_419_duration"
     try {
-      // fails on its one row, whatever rows the real table has
-      val failing = spark.range(1).select(raise_error(lit("injected table failure")).as("entity_id"))
-      val summary = XbrlExtract.writeDatapackage(
-        ex.taxonomies, ex.schemas, ex.tables.updated(poison, failing), dir)
+      // the file system refuses every file of the poisoned table's directory
+      val summary = FailingCreates.under(spark, s"$dir/ferc1_xbrl/$poison.parquet",
+          "injected table failure") {
+        XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.store, dir)
+      }
       // the failure is NAMED in its result; the other table still
       // wrote and reports its counts
       assert(summary.size === 2)
@@ -116,7 +117,7 @@ class XbrlSinksSpec extends SparkSpec {
     val ex = extracted()
     try {
       intercept[java.util.concurrent.TimeoutException] {
-        XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.tables, dir,
+        XbrlExtract.writeDatapackage(ex.taxonomies, ex.schemas, ex.store, dir,
           timeout = scala.concurrent.duration.Duration(1, "ms"))
       }
       assert(!java.nio.file.Files.exists(
