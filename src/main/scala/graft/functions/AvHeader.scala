@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codec-FREE audio/video container header parsing — the m07 extension
@@ -47,11 +46,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * mvhd. Both walks are bounded at [[AvHeader.MaxChunks]] so a
   * malicious length chain stops instead of looping.
   *
-  * Five scalar expressions share the bounded static parses, each
-  * emitted as a static call inside whole-stage codegen so the payload
-  * bytes never leave the scan: `graft_av_format`,
+  * Six scalar expressions share the bounded static parses, each a
+  * [[HeaderField]] emitted as a static call inside whole-stage codegen
+  * so the payload bytes never leave the scan: `graft_av_format`,
   * `graft_av_sample_rate`, `graft_av_channels`, `graft_av_bits`,
-  * `graft_av_duration_ms`.
+  * `graft_av_duration_ms`, `graft_av_frame_count`.
   *
   * Fully DuckDB-oracle-able: every read is a fixed-offset or
   * length-walked byte read, which the oracle restates over `hex(blob)`
@@ -359,92 +358,36 @@ object AvHeader extends SqlFunctions {
   }
 
   /** `graft_av_format(payload)` → 'wav' | 'mp4' | null. */
-  case class AvFormat(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_av_format"
-    override lazy val resolved: Boolean =
-      child.resolved && child.dataType == BinaryType
-
-    override protected def nullSafeEval(input: Any): Any =
-      format(input.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.AvHeader.format($c);
-        ${ev.isNull} = (${ev.value} == null);
-      """)
-
+  case class AvFormat(child: Expression) extends HeaderField("graft_av_format",
+      StringType, "graft.functions.AvHeader.format", AvHeader.format) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
-  sealed abstract class IntFieldExpression extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override lazy val resolved: Boolean =
-      child.resolved && child.dataType == BinaryType
-    protected def staticCall: String
-    protected def parse(b: Array[Byte]): Int
-
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = parse(input.asInstanceOf[Array[Byte]])
-      if (v < 0) null else v
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = $staticCall($c);
-        if (${ev.value} < 0) { ${ev.isNull} = true; }
-      """)
-  }
-
   /** `graft_av_sample_rate(payload)` → int Hz | null. */
-  case class AvSampleRate(child: Expression) extends IntFieldExpression {
-    override def prettyName: String = "graft_av_sample_rate"
-    override protected def staticCall: String = "graft.functions.AvHeader.sampleRate"
-    override protected def parse(b: Array[Byte]): Int = sampleRate(b)
+  case class AvSampleRate(child: Expression) extends HeaderField("graft_av_sample_rate",
+      IntegerType, "graft.functions.AvHeader.sampleRate", AvHeader.sampleRate) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
   /** `graft_av_channels(payload)` → int | null. */
-  case class AvChannels(child: Expression) extends IntFieldExpression {
-    override def prettyName: String = "graft_av_channels"
-    override protected def staticCall: String = "graft.functions.AvHeader.channels"
-    override protected def parse(b: Array[Byte]): Int = channels(b)
+  case class AvChannels(child: Expression) extends HeaderField("graft_av_channels",
+      IntegerType, "graft.functions.AvHeader.channels", AvHeader.channels) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
   /** `graft_av_bits(payload)` → int | null. */
-  case class AvBits(child: Expression) extends IntFieldExpression {
-    override def prettyName: String = "graft_av_bits"
-    override protected def staticCall: String = "graft.functions.AvHeader.bits"
-    override protected def parse(b: Array[Byte]): Int = AvHeader.bits(b)
+  case class AvBits(child: Expression) extends HeaderField("graft_av_bits",
+      IntegerType, "graft.functions.AvHeader.bits", AvHeader.bits) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
   /** `graft_av_duration_ms(payload)` → long ms | null. */
-  case class AvDurationMs(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_av_duration_ms"
-    override lazy val resolved: Boolean =
-      child.resolved && child.dataType == BinaryType
-
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = durationMs(input.asInstanceOf[Array[Byte]])
-      if (v < 0L) null else v
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.AvHeader.durationMs($c);
-        if (${ev.value} < 0L) { ${ev.isNull} = true; }
-      """)
-
+  case class AvDurationMs(child: Expression) extends HeaderField("graft_av_duration_ms",
+      LongType, "graft.functions.AvHeader.durationMs", AvHeader.durationMs) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -452,24 +395,8 @@ object AvHeader extends SqlFunctions {
   /** `graft_av_frame_count(payload)` → long sample/frame count of the
     * first track's stts | null (not MP4 / unparseable / over-cap).
     */
-  case class AvFrameCount(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_av_frame_count"
-    override lazy val resolved: Boolean =
-      child.resolved && child.dataType == BinaryType
-
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = frameCount(input.asInstanceOf[Array[Byte]])
-      if (v < 0L) null else v
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.AvHeader.frameCount($c);
-        if (${ev.value} < 0L) { ${ev.isNull} = true; }
-      """)
-
+  case class AvFrameCount(child: Expression) extends HeaderField("graft_av_frame_count",
+      LongType, "graft.functions.AvHeader.frameCount", AvHeader.frameCount) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }

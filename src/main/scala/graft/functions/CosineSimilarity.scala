@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -28,20 +28,14 @@ import org.apache.spark.sql.{Column, SparkSession}
   * embeddings).
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = DoubleType
 
   // nullable even over non-null inputs: zero-norm vectors yield null
   override def nullable: Boolean = true
 
-  override lazy val resolved: Boolean = {
-    def ok(e: Expression) = e.resolved && (e.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    ok(left) && ok(right)
-  }
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
 
   override def prettyName: String = "graft_cosine"
 

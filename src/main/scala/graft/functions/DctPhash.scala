@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
@@ -36,14 +36,13 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * the median is an exact order statistic of the 64 coefficients.
   */
 case class DctPhash(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = LongType
 
   override def prettyName: String = "graft_dct_phash"
 
-  override lazy val resolved: Boolean =
-    child.resolved && child.dataType == BinaryType
+  override def inputTypes = Seq(BinaryType)
 
   override protected def nullSafeEval(input: Any): Any =
     DctPhash.compute(input.asInstanceOf[Array[Byte]])

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * NULL (no distribution), single-symbol arrays exactly 0.0.
   */
 case class ShannonEntropy(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = DoubleType
 
@@ -33,11 +33,7 @@ case class ShannonEntropy(child: Expression)
 
   override def prettyName: String = "graft_entropy"
 
-  override lazy val resolved: Boolean =
-    child.resolved && (child.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
+  override def inputTypes = Seq(ArrayType(StringType))
 
   /** Null symbols are skipped (split() never produces them; defensive
     * for other callers). Returns null (no entropy) when nothing counts.

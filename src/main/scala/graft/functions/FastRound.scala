@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 import org.apache.spark.sql.{Column, SparkSession}
@@ -27,15 +27,14 @@ import org.apache.spark.sql.{Column, SparkSession}
   * values through both and asserts bit equality.
   */
 case class FastRound(child: Expression, scale: Int)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   require(scale >= 0 && scale <= 15, s"graft_round scale must be in [0, 15]: $scale")
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_round"
 
-  override lazy val resolved: Boolean =
-    child.resolved && child.dataType == DoubleType
+  override def inputTypes = Seq(DoubleType)
 
   private val pow10: Double = math.pow(10, scale)
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,14 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (SparkEntry) computes the identical fold via list_reduce.
   */
 case class Fingerprint(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = LongType
 
   override def prettyName: String = "graft_fingerprint"
 
-  override lazy val resolved: Boolean =
-    child.resolved && child.dataType == StringType
+  override def inputTypes = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     Fingerprint.compute(input.asInstanceOf[UTF8String])

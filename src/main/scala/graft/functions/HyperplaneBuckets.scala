@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType}
   * the parquet scan.
   */
 case class HyperplaneBuckets(child: Expression, numTables: Int, planesPerTable: Int)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   require(numTables >= 1 && planesPerTable >= 1 && planesPerTable <= 30,
     s"unsupported LSH config ${numTables}x$planesPerTable")
@@ -42,11 +42,7 @@ case class HyperplaneBuckets(child: Expression, numTables: Int, planesPerTable: 
 
   override def prettyName: String = "graft_hyperplane_buckets"
 
-  override lazy val resolved: Boolean =
-    child.resolved && (child.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   // regenerated deterministically wherever the expression deserializes
   @transient private lazy val planesFlat: Array[Double] =

@@ -3,7 +3,7 @@ package graft.functions
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -99,7 +99,7 @@ final class LmModel(val uniWords: Array[String], val uniCounts: Array[Long],
   * non-literal constant in generated code.
   */
 case class LmScore(child: Expression, model: LmModel)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = StructType(Seq(
     StructField("n_transitions", LongType, nullable = false),
@@ -108,11 +108,7 @@ case class LmScore(child: Expression, model: LmModel)
 
   override def prettyName: String = "graft_lm_score"
 
-  override lazy val resolved: Boolean =
-    child.resolved && (child.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override protected def nullSafeEval(input: Any): Any =
     model.score(input.asInstanceOf[ArrayData])

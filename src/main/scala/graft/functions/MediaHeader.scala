@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -36,8 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Three scalar expressions share one bounded static parse (header
   * prefix only — the JPEG scan is capped at [[MediaHeader.MaxSegments]]
-  * segments), each emitted as a static call inside whole-stage codegen
-  * so the payload bytes never leave the scan:
+  * segments), each a [[HeaderField]] emitted as a static call inside
+  * whole-stage codegen so the payload bytes never leave the scan:
   * `graft_media_format(payload)`, `graft_media_width(payload)`,
   * `graft_media_height(payload)`.
   *
@@ -172,60 +172,22 @@ object MediaHeader extends SqlFunctions {
   }
 
   /** `graft_media_format(payload)` → 'png' | 'jpeg' | 'gif' | null. */
-  case class MediaFormat(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullable: Boolean = true
-    override def prettyName: String = "graft_media_format"
-    override lazy val resolved: Boolean =
-      child.resolved && child.dataType == BinaryType
-
-    override protected def nullSafeEval(input: Any): Any =
-      format(input.asInstanceOf[Array[Byte]])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = graft.functions.MediaHeader.format($c);
-        ${ev.isNull} = (${ev.value} == null);
-      """)
-
+  case class MediaFormat(child: Expression) extends HeaderField("graft_media_format",
+      StringType, "graft.functions.MediaHeader.format", MediaHeader.format) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
-  sealed abstract class DimExpression extends UnaryExpression {
-    override def dataType: DataType = IntegerType
-    override def nullable: Boolean = true
-    override lazy val resolved: Boolean =
-      child.resolved && child.dataType == BinaryType
-    protected def staticCall: String
-    protected def parse(b: Array[Byte]): Int
-
-    override protected def nullSafeEval(input: Any): Any = {
-      val v = parse(input.asInstanceOf[Array[Byte]])
-      if (v < 0) null else v
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"""
-        ${ev.value} = $staticCall($c);
-        if (${ev.value} < 0) { ${ev.isNull} = true; }
-      """)
-  }
-
   /** `graft_media_width(payload)` → int | null. */
-  case class MediaWidth(child: Expression) extends DimExpression {
-    override def prettyName: String = "graft_media_width"
-    override protected def staticCall: String = "graft.functions.MediaHeader.width"
-    override protected def parse(b: Array[Byte]): Int = width(b)
+  case class MediaWidth(child: Expression) extends HeaderField("graft_media_width",
+      IntegerType, "graft.functions.MediaHeader.width", MediaHeader.width) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
 
   /** `graft_media_height(payload)` → int | null. */
-  case class MediaHeight(child: Expression) extends DimExpression {
-    override def prettyName: String = "graft_media_height"
-    override protected def staticCall: String = "graft.functions.MediaHeader.height"
-    override protected def parse(b: Array[Byte]): Int = MediaHeader.height(b)
+  case class MediaHeight(child: Expression) extends HeaderField("graft_media_height",
+      IntegerType, "graft.functions.MediaHeader.height", MediaHeader.height) {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
   }
@@ -247,5 +209,41 @@ object MediaHeader extends SqlFunctions {
   }
   def mediaHeight(spark: SparkSession, payload: Column): Column = {
     register(spark); call_function("graft_media_height", payload)
+  }
+}
+
+/** One header field of a binary media payload: `name(payload)` →
+  * `resultType` | null, the shape every [[MediaHeader]] and [[AvHeader]]
+  * function shares. The field is one bounded static parse, `parse` for
+  * interpreted eval and the same method by its fully qualified name,
+  * `staticCall`, inside whole-stage codegen, so the payload bytes never
+  * leave the scan. The parse returns null (the string fields) or a
+  * negative number (the numeric fields) when the header holds no value;
+  * both read as SQL null. The payload must be BINARY: any other argument
+  * type fails analysis with a type mismatch.
+  *
+  * Each function keeps its own case class, so DESCRIBE FUNCTION reports
+  * the class that implements it.
+  */
+abstract class HeaderField(name: String, resultType: DataType, staticCall: String,
+    parse: Array[Byte] => Any) extends UnaryExpression with ExpectsInputTypes with Serializable {
+
+  override def inputTypes = Seq(BinaryType)
+  override def dataType: DataType = resultType
+  override def nullable: Boolean = true
+  override def prettyName: String = name
+
+  override protected def nullSafeEval(input: Any): Any =
+    parse(input.asInstanceOf[Array[Byte]]) match {
+      case n: Number if n.longValue < 0L => null
+      case v => v
+    }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val absent = if (resultType == StringType) "== null" else "< 0"
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = $staticCall($c);
+      ${ev.isNull} = ${ev.value} $absent;
+    """)
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -33,7 +33,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * DedupSpec pins that equality on the real corpus.
   */
 case class MinHash64(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
@@ -41,10 +41,7 @@ case class MinHash64(child: Expression)
 
   override def prettyName: String = "graft_minhash64"
 
-  override lazy val resolved: Boolean = child.resolved && (child.dataType match {
-    case ArrayType(StringType, _) => true
-    case _ => false
-  })
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override protected def nullSafeEval(input: Any): Any =
     MinHash64.compute(input.asInstanceOf[ArrayData])

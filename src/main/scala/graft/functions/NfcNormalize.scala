@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -20,14 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * policy).
   */
 case class NfcNormalize(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = StringType
 
   override def prettyName: String = "graft_nfc"
 
-  override lazy val resolved: Boolean =
-    child.resolved && child.dataType == StringType
+  override def inputTypes = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     NfcNormalize.norm(input.asInstanceOf[UTF8String])

@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
@@ -24,7 +25,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   * fixed-dimension subvectors, so they never see the null path.
   */
 case class L2Squared(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = DoubleType
 
@@ -32,13 +33,7 @@ case class L2Squared(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_l2sq"
 
-  override lazy val resolved: Boolean = {
-    def ok(e: Expression) = e.resolved && (e.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    ok(left) && ok(right)
-  }
+  override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val xs = a.asInstanceOf[ArrayData]
@@ -100,17 +95,14 @@ object L2Squared extends SqlFunctions {
   * index-build paths.
   */
 case class UnitVector(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with Serializable {
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression with ExpectsInputTypes
+    with Serializable {
 
   override def dataType: DataType = ArrayType(FloatType, containsNull = false)
 
   override def prettyName: String = "graft_unit"
 
-  override lazy val resolved: Boolean =
-    child.resolved && (child.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   /** Normalize one vector (codegen calls this). */
   def computeRow(arr: ArrayData): ArrayData = {
@@ -270,7 +262,7 @@ object PqEncode extends SqlFunctions {
   * `graft_l2sq` NULLs propagate here instead of reading as 0).
   */
 case class PqAdc(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = DoubleType
 
@@ -278,17 +270,7 @@ case class PqAdc(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_pq_adc"
 
-  override lazy val resolved: Boolean = {
-    def okCodes = left.resolved && (left.dataType match {
-      case ArrayType(IntegerType, _) => true
-      case _ => false
-    })
-    def okLut = right.resolved && (right.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    okCodes && okLut
-  }
+  override def inputTypes = Seq(ArrayType(IntegerType), ArrayType(FloatType))
 
   /** ADC sum for one row (codegen calls this; boxed Double for null). */
   def computeRow(codes: ArrayData, lut: ArrayData): java.lang.Double = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,14 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * token's UTF-8 bytes — zero-copy slices of the input string.
   */
 case class SimHash(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = LongType
 
   override def prettyName: String = "graft_simhash"
 
-  override lazy val resolved: Boolean =
-    child.resolved && child.dataType == StringType
+  override def inputTypes = Seq(StringType)
 
   override protected def nullSafeEval(input: Any): Any =
     SimHash.compute(input.asInstanceOf[UTF8String])

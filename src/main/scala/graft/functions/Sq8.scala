@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType}
@@ -26,17 +27,13 @@ import org.apache.spark.sql.{Column, SparkSession}
   * than wrap, so a caller mistake degrades, never corrupts.
   */
 case class Sq8Encode(child: Expression)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = BinaryType
 
   override def prettyName: String = "graft_sq8_encode"
 
-  override lazy val resolved: Boolean =
-    child.resolved && (child.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
+  override def inputTypes = Seq(ArrayType(FloatType))
 
   override protected def nullSafeEval(input: Any): Any = {
     val xs = input.asInstanceOf[ArrayData]
@@ -95,7 +92,7 @@ object Sq8Encode extends SqlFunctions {
   * yield NULL (the [[L2Squared]] dimension-mismatch discipline).
   */
 case class Sq8Dot(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
 
   override def dataType: DataType = DoubleType
 
@@ -103,13 +100,7 @@ case class Sq8Dot(left: Expression, right: Expression)
 
   override def prettyName: String = "graft_sq8_dot"
 
-  override lazy val resolved: Boolean = {
-    def vec(e: Expression) = e.resolved && (e.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    left.resolved && left.dataType == BinaryType && vec(right)
-  }
+  override def inputTypes = Seq(BinaryType, ArrayType(FloatType))
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val codes = a.asInstanceOf[Array[Byte]]

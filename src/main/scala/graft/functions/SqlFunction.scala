@@ -13,7 +13,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   * `builder` checks the argument count before it calls `build`, so a
   * wrong-arity call fails with `<name> takes N argument(s) (...), got M`
-  * and `build` may take its arguments by position.
+  * and `build` may take its arguments by position. The entry does not
+  * check argument types: each expression declares them once, as the
+  * `inputTypes` of Spark's `ExpectsInputTypes` (exact types; Spark
+  * gives a bare `NULL` the declared type) or `ImplicitCastInputTypes`
+  * (the sketch families, which take a cast), so analysis fails a
+  * wrong-typed call with Spark's `DATATYPE_MISMATCH` naming the
+  * function. Arguments that `build` reads as foldable literals are
+  * checked there.
   */
 final class SqlFunction(val name: String, cls: Class[_], val arities: Seq[Int],
     usage: String, build: Seq[Expression] => Expression) {

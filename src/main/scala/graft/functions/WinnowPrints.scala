@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * no gram strings or hex round-trips are materialized.
   */
 case class WinnowPrints(child: Expression, w: Int, window: Int)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   require(w >= 1 && window >= 1, s"unsupported winnow config w=$w window=$window")
 
@@ -32,8 +32,7 @@ case class WinnowPrints(child: Expression, w: Int, window: Int)
 
   override def prettyName: String = "graft_winnow"
 
-  override lazy val resolved: Boolean =
-    child.resolved && child.dataType == StringType
+  override def inputTypes = Seq(StringType)
 
   /** Selected distinct fingerprints for one document (codegen calls
     * this).

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * parameter — the shingle width is schema, not data.
   */
 case class WordShingles(child: Expression, k: Int)
-    extends UnaryExpression with Serializable {
+    extends UnaryExpression with ExpectsInputTypes with Serializable {
 
   require(k >= 1, s"shingle width must be positive, got $k")
 
@@ -31,11 +31,7 @@ case class WordShingles(child: Expression, k: Int)
 
   override def prettyName: String = "word_shingles"
 
-  override lazy val resolved: Boolean =
-    child.resolved && (child.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
+  override def inputTypes = Seq(ArrayType(StringType))
 
   override protected def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[ArrayData]

@@ -105,13 +105,18 @@ object Dedup {
     * Spark infers a non-empty filter for the generator and pushes it
     * below the projection, so every doc's shingle set would be built
     * twice.
+    *
+    * The length test reads the text and allocates no array: `split`
+    * keeps empty tokens, so "at least 3 tokens" is "at least 2 spaces"
+    * (a null text drops out). A `size(split(text, ' '))` test would be
+    * pushed below the projection and split every doc a second time.
     */
   private def docShingles(docs: DataFrame,
       out: Column => Column = _.as("shingles")): DataFrame = {
     val s = docs.sparkSession
     docs
+      .filter(expr("locate(' ', text, locate(' ', text) + 1) > 0"))
       .withColumn("tokens", split(col("text"), " "))
-      .filter(size(col("tokens")) >= 3)
       .select(col("doc_id"),
         out(array_distinct(graft.functions.WordShingles.shingles(s, col("tokens"), 3))))
   }

@@ -121,6 +121,40 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("every function-table entry refuses a wrong-typed argument with a type mismatch, never an internal error") {
+    val derived = spark.newSession()
+    def chain(e: Throwable): Seq[String] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).flatMap(t => Option(t.getMessage)).toSeq
+    for (f <- GraftExtensions.functions; n <- f.arities) {
+      val call = s"${f.name}(${Seq.fill(n)("named_struct('x', 1)").mkString(", ")})"
+      val msgs = scala.util.Try(derived.sql(s"SELECT $call").collect()).failed
+        .map(chain).getOrElse(fail(s"$call did not fail"))
+      val all = msgs.mkString(" | ")
+      assert(!msgs.exists(m => m.contains("INTERNAL_ERROR") || m.contains("unresolved operator")),
+        s"$call: $all")
+      assert(msgs.exists(m => m.contains("DATATYPE_MISMATCH") || m.contains("foldable") ||
+        m.contains("literal")), s"$call: $all")
+    }
+  }
+
+  test("a typed NULL of each declared input type, and a bare NULL, evaluates to NULL") {
+    val derived = spark.newSession()
+    for (sql <- Seq(
+        // Spark types an untyped NULL literal as the declared input type
+        "graft_simhash(NULL)",
+        "graft_media_width(NULL)",
+        "graft_simhash(CAST(NULL AS STRING))",
+        "graft_minhash64(CAST(NULL AS ARRAY<STRING>))",
+        "graft_unit(CAST(NULL AS ARRAY<FLOAT>))",
+        "graft_sq8_dot(CAST(NULL AS BINARY), array(CAST(1.0 AS FLOAT)))",
+        "graft_pq_adc(CAST(NULL AS ARRAY<INT>), array(CAST(1.0 AS FLOAT)))",
+        "graft_dct_phash(CAST(NULL AS BINARY))",
+        "graft_media_width(CAST(NULL AS BINARY))",
+        "graft_av_format(CAST(NULL AS BINARY))",
+        "graft_round(CAST(NULL AS DOUBLE), 6)"))
+      assert(derived.sql(s"SELECT $sql").collect().head.isNullAt(0), sql)
+  }
+
   test("the bloom sketch SQL pair builds and probes through a scalar subquery") {
     val derived = spark.newSession()
     derived.sql("SELECT explode(sequence(1, 100)) AS v")
