@@ -69,8 +69,7 @@ object GraftSession {
     * table statistics the same way.
     */
   private[graft] def initialPartitions(cpus: Int, dataDir: Option[String],
-      conf: org.apache.hadoop.conf.Configuration =
-        new org.apache.hadoop.conf.Configuration()): Int = {
+      conf: org.apache.hadoop.conf.Configuration = hadoopConf()): Int = {
     sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt).getOrElse {
       val bytes = dataDir
         .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
@@ -79,10 +78,27 @@ object GraftSession {
     }
   }
 
+  /** `file:` resolves to [[graft.sinks.NioLocalFileSystem]], which
+    * sets permissions without forking `chmod`.
+    */
+  private val FileImpl = "fs.file.impl" -> classOf[graft.sinks.NioLocalFileSystem].getName
+
+  /** A Hadoop conf with graft's `file:` registration. Hadoop caches one
+    * file system per scheme and user, whatever the conf of a later
+    * lookup names, so a lookup before the session is built goes through
+    * this conf, or the session would keep the stock one.
+    */
+  private[graft] def hadoopConf(): org.apache.hadoop.conf.Configuration = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    conf.set(FileImpl._1, FileImpl._2)
+    conf
+  }
+
   def builder(cpus: String, dataDir: Option[String] = None): SparkSession.Builder = {
     val nCpus = parseCpus(cpus)
     SparkSession.builder()
       .master(s"local[$cpus]")
+      .config(s"spark.hadoop.${FileImpl._1}", FileImpl._2)
       .config("spark.sql.shuffle.partitions", nCpus.toString)
       // scale-adaptive pre-coalesce shuffle width; AQE coalesces back
       // down (parallelismFirst keeps small shuffles at ~core

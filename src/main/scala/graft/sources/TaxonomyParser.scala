@@ -30,7 +30,8 @@ import graft.xbrl.{Calculation, Concept, LinkRole, Names, Taxonomy}
   * This runs on the driver: a taxonomy is schema metadata (a few MB —
   * proportional to the number of CONCEPTS, not the number of filings), so
   * parsing it centrally costs nothing at 100 TB while keeping the derived
-  * schemas available to plan every distributed job.
+  * schemas available to plan every distributed job. An archive's
+  * versions parse concurrently, one per driver core at most.
   */
 object TaxonomyParser {
 
@@ -76,16 +77,28 @@ object TaxonomyParser {
   /** Parse every `form-*.zip` version inside a taxonomies archive.
     * Returns versions sorted ascending (the merge order used by
     * Datapackage.from_taxonomies, datapackage.py:500).
+    *
+    * The inner archives are read first, then parsed concurrently on the
+    * global execution context (as many at once as there are cores):
+    * [[parseVersion]] keeps only local state. A version that fails
+    * throws its own exception, the first in name order, as a sequential
+    * parse would.
     */
   def parseArchive(path: String): Seq[Taxonomy] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.jdk.CollectionConverters._
     val outer = new java.util.zip.ZipFile(path)
-    try {
-      import scala.jdk.CollectionConverters._
-      outer.entries().asScala.toSeq.filter(_.getName.endsWith(".zip")).sortBy(_.getName).map { e =>
-        val bytes = outer.getInputStream(e).readAllBytes()
-        parseVersion(e.getName, bytes)
-      }
-    } finally outer.close()
+    val versions =
+      try outer.entries().asScala.toSeq.filter(_.getName.endsWith(".zip")).sortBy(_.getName)
+        .map(e => e.getName -> outer.getInputStream(e).readAllBytes())
+      finally outer.close()
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // every outcome is a value, fatal errors included, so no failure
+    // leaves a future uncompleted
+    val parsed = Future.traverse(versions) { case (name, bytes) =>
+      Future(try Right(parseVersion(name, bytes)) catch { case e: Throwable => Left(e) })
+    }
+    Await.result(parsed, scala.concurrent.duration.Duration.Inf).map(_.fold(e => throw e, t => t))
   }
 
   /** Parse one taxonomy version from its (inner) zip bytes. */

@@ -4,7 +4,9 @@
     python3 tools/compare_datapackage.py A B
 
 Checks, and prints every difference found:
-  - the file layout: every file's relative path, part-file UUIDs masked;
+  - the file layout: every file's relative path, part-file UUIDs masked,
+    and the permission bits (`st_mode & 0o7777`) of every file and
+    directory;
   - per parquet table (each `*.parquet` directory): the footer schema of
     its part files (names, physical and logical types, repetition, and
     the Spark schema Spark records in the footer) and its rows, compared
@@ -34,6 +36,16 @@ def layout(root):
             real = os.path.join(d, n)
             files[UUID.sub("*", os.path.relpath(real, root))] = real
     return files
+
+
+def modes(root):
+    """Relative path (UUIDs masked) -> permission bits, for every file and
+    directory under root."""
+    out = {}
+    for d, dirs, names in os.walk(root):
+        for real in (os.path.join(d, n) for n in dirs + names):
+            out[UUID.sub("*", os.path.relpath(real, root))] = os.lstat(real).st_mode & 0o7777
+    return out
 
 
 def footer(path):
@@ -70,6 +82,10 @@ def compare(a, b):
     for rel in sorted(set(lb) - set(la)):
         problems.append(f"only in B: {rel}")
     common = sorted(set(la) & set(lb))
+    ma, mb = modes(a), modes(b)
+    for rel in sorted(set(ma) & set(mb)):
+        if ma[rel] != mb[rel]:
+            problems.append(f"{rel}: mode {ma[rel]:04o} vs {mb[rel]:04o}")
 
     for rel in common:
         if rel.endswith(".json"):
