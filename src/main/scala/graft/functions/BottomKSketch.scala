@@ -11,7 +11,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -270,22 +269,18 @@ object BottomKSketch extends SqlFunctions {
     * hash-smallest distinct keys, in (h, key) order — a deterministic
     * uniform sample of the distinct domain.
     */
-  case class BkSample(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  case class BkSample(left: Expression, right: Expression) extends SketchServe[BkSummary] {
 
-    override def inputTypes = Seq(BinaryType, IntegerType)
+    override protected def codec: SketchCodec[BkSummary] = Codec
+    override protected def argType: DataType = IntegerType
     override def dataType: DataType = ArrayType(SampleStruct)
-    override def nullable: Boolean = true
     override def prettyName: String = "graft_bk_sample"
 
-    override def nullSafeEval(state: Any, m: Any): Any = {
-      val s = deserializeSummary(state.asInstanceOf[Array[Byte]])
-      val mm = m.asInstanceOf[Int]
-      val rows = s.pairs.toArray.take(mm).map { case (h, key) =>
+    override protected def check(m: Any): Unit = SketchServe.requireSize(this, "m", m)
+    override protected def serve(s: BkSummary, m: Any): Any =
+      SketchServe.array(s.pairs.iterator.take(m.asInstanceOf[Int]).map { case (h, key) =>
         InternalRow(h, UTF8String.fromString(key))
-      }
-      new GenericArrayData(rows.asInstanceOf[Array[Any]])
-    }
+      })
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): BkSample =
@@ -382,12 +377,8 @@ object BottomKSketch extends SqlFunctions {
     SqlFunction("graft_bk_distinct", classOf[BkDistinct], "state", 1) {
       c => BkDistinct(c(0))
     },
-    SqlFunction("graft_bk_sample", classOf[BkSample], "state, m", 2) { c =>
-      if (c(1).foldable) {
-        val m = SqlFunction.foldableInt(c(1), "graft_bk_sample m")
-        require(m >= 1, s"graft_bk_sample m must be >= 1: $m")
-      }
-      BkSample(c(0), c(1))
+    SqlFunction("graft_bk_sample", classOf[BkSample], "state, m", 2) {
+      c => BkSample(c(0), c(1))
     },
     SqlFunction("graft_bk_overlap", classOf[BkOverlap], "stateA, stateB", 2) {
       c => BkOverlap(c(0), c(1))

@@ -4,12 +4,11 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, QuantileSummaries}
 import org.apache.spark.sql.functions.{array, call_function, lit}
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Mergeable approximate-quantile sketch STATE, the continuous-value
   * twin of the q32 HLL state family: a Greenwald–Khanna ε-approximate
@@ -156,30 +155,23 @@ object GkQuantile extends SqlFunctions {
     * measurable. The empty state (count 0) serves null.
     */
   case class GkQuantilesExpr(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+    extends SketchServe[QuantileSummaries] {
 
-    override def inputTypes =
-      Seq(BinaryType, ArrayType(DoubleType))
+    override protected def codec: SketchCodec[QuantileSummaries] = Codec
+    override protected def argType: DataType = ArrayType(DoubleType)
     override def dataType: DataType = ArrayType(DoubleType)
-    override def nullable: Boolean = true
     override def prettyName: String = "graft_gk_quantiles"
 
-    override def nullSafeEval(state: Any, probs: Any): Any = {
-      val qs = deserializeSummary(state.asInstanceOf[Array[Byte]])
-      // SQL callers bypass gkQuantiles' require — enforce it here too
-      val psCheck = probs.asInstanceOf[ArrayData].toDoubleArray()
-      require(psCheck.nonEmpty && psCheck.forall(p => p >= 0.0 && p <= 1.0),
-        s"graft_gk_quantiles probabilities must be in [0,1], got " +
-          psCheck.mkString("[", ", ", "]"))
-      if (qs.count == 0) null
-      else {
-        val ps = psCheck
-        qs.query(ps.toIndexedSeq) match {
-          case Some(vals) => new GenericArrayData(vals.toArray)
-          case None => null
-        }
-      }
+    // SQL callers bypass gkQuantiles' require — enforce it here too
+    override protected def check(probs: Any): Unit = {
+      val ps = probs.asInstanceOf[ArrayData].toDoubleArray()
+      require(ps.nonEmpty && ps.forall(p => p >= 0.0 && p <= 1.0),
+        s"graft_gk_quantiles probabilities must be in [0,1], got " + ps.mkString("[", ", ", "]"))
     }
+    override protected def serve(qs: QuantileSummaries, probs: Any): Any =
+      if (qs.count == 0) null
+      else qs.query(probs.asInstanceOf[ArrayData].toDoubleArray().toIndexedSeq)
+        .map(vals => new GenericArrayData(vals.toArray)).orNull
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): GkQuantilesExpr =

@@ -7,11 +7,9 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable heavy-hitters sketch STATE (Misra–Gries 1982, merge rule
@@ -179,26 +177,19 @@ object MisraGries extends SqlFunctions {
     * it). Sorted (count_lo desc, item asc), truncated to topK. Runs
     * once per group row post-agg.
     */
-  case class MgTopK(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  case class MgTopK(left: Expression, right: Expression) extends SketchServe[MgSummary] {
 
-    override def inputTypes = Seq(BinaryType, IntegerType)
+    override protected def codec: SketchCodec[MgSummary] = Codec
+    override protected def argType: DataType = IntegerType
     override def dataType: DataType = ArrayType(TopKStruct)
-    override def nullable: Boolean = true
     override def prettyName: String = "graft_mg_topk"
 
-    override def nullSafeEval(state: Any, topK: Any): Any = {
-      val s = deserializeSummary(state.asInstanceOf[Array[Byte]])
-      val kk = topK.asInstanceOf[Int]
-      if (s.counts.isEmpty) return new GenericArrayData(Array.empty[Any])
+    override protected def check(topK: Any): Unit = SketchServe.requireSize(this, "topK", topK)
+    override protected def serve(s: MgSummary, topK: Any): Any = {
       val err = if (s.k > 0) s.n / (s.k + 1) else 0L
-      val rows = s.counts.toArray
-        .sortBy { case (item, c) => (-c, item) }
-        .take(kk)
-        .map { case (item, c) =>
-          InternalRow(UTF8String.fromString(item), c, c + err)
-        }
-      new GenericArrayData(rows.asInstanceOf[Array[Any]])
+      SketchServe.array(s.counts.toArray.sortBy { case (item, c) => (-c, item) }
+        .iterator.take(topK.asInstanceOf[Int])
+        .map { case (item, c) => InternalRow(UTF8String.fromString(item), c, c + err) })
     }
 
     override protected def withNewChildrenInternal(
@@ -213,14 +204,8 @@ object MisraGries extends SqlFunctions {
     // the Agarwal et al. rule keeps the error bound at ⌊n_total/(k+1)⌋
     // at any re-compaction depth
     SketchMergeAgg.function(Codec),
-    SqlFunction("graft_mg_topk", classOf[MgTopK], "state, topK", 2) { c =>
-      // SQL callers bypass mgTopK's require — enforce the same contract
-      // here when the literal is foldable (the only supported form)
-      if (c(1).foldable) {
-        val k = SqlFunction.foldableInt(c(1), "graft_mg_topk topK")
-        require(k >= 1, s"graft_mg_topk topK must be >= 1: $k")
-      }
-      MgTopK(c(0), c(1))
+    SqlFunction("graft_mg_topk", classOf[MgTopK], "state, topK", 2) {
+      c => MgTopK(c(0), c(1))
     })
 
   import org.apache.spark.sql.functions.{call_function, lit}

@@ -1,9 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{BinaryType, DataType}
 
 /** The persisted-state side of one mergeable sketch family (GK
@@ -33,6 +35,39 @@ abstract class SketchAgg[S] extends TypedImperativeAggregate[S] with ImplicitCas
   override def eval(buffer: S): Any = codec.serialize(buffer)
   override def serialize(buffer: S): Array[Byte] = codec.serialize(buffer)
   override def deserialize(bytes: Array[Byte]): S = codec.deserialize(bytes)
+}
+
+/** A sketch-state serve expression, `(state BINARY, arg) → value`: it
+  * reads the state through the family's codec, checks the argument
+  * and hands both to the family's `serve`. The check runs at
+  * evaluation, so a literal and a column argument fail the same way;
+  * a null state or argument serves null. It runs once per group row
+  * after the merge, so the interpreted path costs nothing measurable.
+  */
+abstract class SketchServe[S] extends BinaryExpression with ImplicitCastInputTypes
+    with CodegenFallback {
+  protected def codec: SketchCodec[S]
+  protected def argType: DataType
+  /** Fails loudly on an argument the family cannot serve. */
+  protected def check(arg: Any): Unit
+  protected def serve(state: S, arg: Any): Any
+
+  override def inputTypes = Seq(BinaryType, argType)
+  override def nullable: Boolean = true
+  override def nullSafeEval(state: Any, arg: Any): Any = {
+    check(arg)
+    serve(codec.deserialize(state.asInstanceOf[Array[Byte]]), arg)
+  }
+}
+
+object SketchServe {
+  /** The check of a serve size `m`: `<function> <name> must be >= 1`. */
+  def requireSize(f: SketchServe[_], name: String, m: Any): Unit =
+    require(m.asInstanceOf[Int] >= 1, s"${f.prettyName} $name must be >= 1: $m")
+
+  /** Served entries, in serve order, as a SQL array. */
+  def array(entries: Iterator[InternalRow]): GenericArrayData =
+    new GenericArrayData(entries.toArray[Any])
 }
 
 /** `graft_<family>_merge(state binary)` → merged binary state — the

@@ -8,11 +8,9 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable WEIGHTED reservoir ROW-sample state — the sixth mergeable
@@ -249,22 +247,18 @@ object WeightedReservoir extends SqlFunctions {
     * the m largest-key rows, in (wkey desc, id) order — the weighted
     * sample, served from state.
     */
-  case class WrSample(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
+  case class WrSample(left: Expression, right: Expression) extends SketchServe[WrSummary] {
 
-    override def inputTypes = Seq(BinaryType, IntegerType)
+    override protected def codec: SketchCodec[WrSummary] = Codec
+    override protected def argType: DataType = IntegerType
     override def dataType: DataType = ArrayType(SampleStruct)
-    override def nullable: Boolean = true
     override def prettyName: String = "graft_wr_sample"
 
-    override def nullSafeEval(state: Any, m: Any): Any = {
-      val s = deserializeSummary(state.asInstanceOf[Array[Byte]])
-      val mm = m.asInstanceOf[Int]
-      val rows = s.entries.toArray.take(mm).map { case (wk, id, w) =>
+    override protected def check(m: Any): Unit = SketchServe.requireSize(this, "m", m)
+    override protected def serve(s: WrSummary, m: Any): Any =
+      SketchServe.array(s.entries.iterator.take(m.asInstanceOf[Int]).map { case (wk, id, w) =>
         InternalRow(wk, UTF8String.fromString(id), w)
-      }
-      new GenericArrayData(rows.asInstanceOf[Array[Any]])
-    }
+      })
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): WrSample =
@@ -278,12 +272,8 @@ object WeightedReservoir extends SqlFunctions {
       WrAgg(c(0), c(1), k).toAggregateExpression()
     },
     SketchMergeAgg.function(Codec),
-    SqlFunction("graft_wr_sample", classOf[WrSample], "state, m", 2) { c =>
-      if (c(1).foldable) {
-        val m = SqlFunction.foldableInt(c(1), "graft_wr_sample m")
-        require(m >= 1, s"graft_wr_sample m must be >= 1: $m")
-      }
-      WrSample(c(0), c(1))
+    SqlFunction("graft_wr_sample", classOf[WrSample], "state, m", 2) {
+      c => WrSample(c(0), c(1))
     })
 
   import org.apache.spark.sql.functions.{call_function, lit}

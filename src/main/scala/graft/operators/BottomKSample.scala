@@ -29,12 +29,8 @@ object BottomKSample {
   def bottomKStates(df: DataFrame, groupCols: Seq[String],
       keyCol: String, k: Int = 256): DataFrame = {
     require(groupCols.nonEmpty, "bottomKStates needs group columns")
-    val s = df.sparkSession
-    df.select((groupCols.map(Cols.q) :+
-        Cols.q(keyCol).cast("string").as("__key")): _*)
-      .groupBy(groupCols.map(Cols.q): _*)
-      .agg(BottomKSketch.bkAgg(s, col("__key"), k).as("sketch"),
-        count(col("__key")).as("n_rows"))
+    SketchTable.build(df, groupCols, Seq(Cols.q(keyCol).cast("string").as("__key")),
+      BottomKSketch.bkAgg(df.sparkSession, col("__key"), k), count(col("__key")))
   }
 
   /** Compact appended same-key states to one row per key — the
@@ -42,9 +38,7 @@ object BottomKSample {
     * already-merged state changes nothing.
     */
   def bottomKCompact(states: DataFrame, keyCols: Seq[String]): DataFrame =
-    states.groupBy(keyCols.map(Cols.q): _*)
-      .agg(BottomKSketch.bkMerge(states.sparkSession, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
+    SketchTable.merged(states, keyCols, BottomKSketch.bkMerge)
 
   /** Roll states up to `keepCols` and SERVE long-form: one row per
     * sampled key `(group..., rank, key, h, distinct_est, n_rows)` —
@@ -55,20 +49,10 @@ object BottomKSample {
       sampleSize: Int = 16): DataFrame = {
     require(sampleSize >= 1, s"sampleSize must be >= 1: $sampleSize")
     val s = states.sparkSession
-    states.groupBy(keepCols.map(Cols.q): _*)
-      .agg(BottomKSketch.bkMerge(s, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
-      .select((keepCols.map(Cols.q) ++ Seq(
-        BottomKSketch.bkDistinct(s, col("sketch")).as("distinct_est"),
-        posexplode_outer(BottomKSketch.bkSample(s, col("sketch"), sampleSize))
-          .as(Seq("__i", "__e")),
-        col("n_rows"))): _*)
-      .select((keepCols.map(Cols.q) ++ Seq(
-        (col("__i") + 1).as("rank"),
-        col("__e.key").as("key"),
-        col("__e.h").as("h"),
-        col("distinct_est"),
-        col("n_rows"))): _*)
+    SketchTable.served(bottomKCompact(states, keepCols), keepCols,
+      BottomKSketch.bkSample(s, col("sketch"), sampleSize), outer = true,
+      SketchTable.rank.as("rank"), SketchTable.entry("key"), SketchTable.entry("h"),
+      BottomKSketch.bkDistinct(s, col("sketch")).as("distinct_est"), col("n_rows"))
   }
 
   /** Pairwise distinct-domain overlap BETWEEN groups, from states alone

@@ -30,12 +30,8 @@ object HeavyHitters {
   def heavyHitterStates(df: DataFrame, groupCols: Seq[String],
       itemCol: String, k: Int = 64): DataFrame = {
     require(groupCols.nonEmpty, "heavyHitterStates needs group columns")
-    val s = df.sparkSession
-    df.select((groupCols.map(Cols.q) :+
-        Cols.q(itemCol).cast("string").as("__item")): _*)
-      .groupBy(groupCols.map(Cols.q): _*)
-      .agg(MisraGries.mgAgg(s, col("__item"), k).as("sketch"),
-        count(col("__item")).as("n_rows"))
+    SketchTable.build(df, groupCols, Seq(Cols.q(itemCol).cast("string").as("__item")),
+      MisraGries.mgAgg(df.sparkSession, col("__item"), k), count(col("__item")))
   }
 
   /** Compact appended same-key states to one row per key — the q32/q70
@@ -43,9 +39,7 @@ object HeavyHitters {
     * at ⌊n_total/(k+1)⌋ at any re-compaction depth.
     */
   def heavyHitterCompact(states: DataFrame, keyCols: Seq[String]): DataFrame =
-    states.groupBy(keyCols.map(Cols.q): _*)
-      .agg(MisraGries.mgMerge(states.sparkSession, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
+    SketchTable.merged(states, keyCols, MisraGries.mgMerge)
 
   /** Roll states up to `keepCols` and SERVE the top items long-form:
     * (group..., rank, item, count_lo, count_hi, n_rows, n_states) —
@@ -55,21 +49,11 @@ object HeavyHitters {
   def heavyHitterTopK(states: DataFrame, keepCols: Seq[String],
       topK: Int = 10): DataFrame = {
     require(topK >= 1, s"topK must be >= 1: $topK")
-    val s = states.sparkSession
-    states.groupBy(keepCols.map(Cols.q): _*)
-      .agg(MisraGries.mgMerge(s, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"),
-        count(lit(1)).as("n_states"))
-      .select((keepCols.map(Cols.q) ++ Seq(
-        posexplode_outer(MisraGries.mgTopK(s, col("sketch"), topK))
-          .as(Seq("__i", "__e")),
-        col("n_rows"), col("n_states"))): _*)
-      .select((keepCols.map(Cols.q) ++ Seq(
-        (col("__i") + 1).as("rank"),
-        col("__e.item").as("item"),
-        col("__e.count_lo").as("count_lo"),
-        col("__e.count_hi").as("count_hi"),
-        col("n_rows"), col("n_states"))): _*)
+    SketchTable.served(
+      SketchTable.merged(states, keepCols, MisraGries.mgMerge, countStates = true), keepCols,
+      MisraGries.mgTopK(states.sparkSession, col("sketch"), topK), outer = true,
+      SketchTable.rank.as("rank"), SketchTable.entry("item"), SketchTable.entry("count_lo"),
+      SketchTable.entry("count_hi"), col("n_rows"), col("n_states"))
   }
 
   /** q71: gate binding — a deterministically PLANTED skewed item

@@ -45,13 +45,10 @@ object QuantileSketch {
       valueCol: String, relativeError: Double = 0.01,
       quantizeTo: Option[String] = None): DataFrame = {
     require(groupCols.nonEmpty, "quantileSketchStates needs group columns")
-    val s = df.sparkSession
     val v = quantizeTo.foldLeft(Cols.q(valueCol))((c, t) => c.cast(t))
       .cast("double").as("__v")
-    df.select((groupCols.map(Cols.q) :+ v): _*)
-      .groupBy(groupCols.map(Cols.q): _*)
-      .agg(GkQuantile.gkAgg(s, col("__v"), relativeError).as("sketch"),
-        count(col("__v")).as("n_rows"))
+    SketchTable.build(df, groupCols, Seq(v),
+      GkQuantile.gkAgg(df.sparkSession, col("__v"), relativeError), count(col("__v")))
   }
 
   /** Compact a (possibly duplicated-key) state table back to one row
@@ -62,9 +59,7 @@ object QuantileSketch {
     * depth.
     */
   def quantileSketchCompact(states: DataFrame, keyCols: Seq[String]): DataFrame =
-    states.groupBy(keyCols.map(Cols.q): _*)
-      .agg(GkQuantile.gkMerge(states.sparkSession, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
+    SketchTable.merged(states, keyCols, GkQuantile.gkMerge)
 
   /** Roll persisted states up to `keepCols` and SERVE quantiles: union
     * the sketches, query the probabilities, sum the exact row counts.
@@ -77,21 +72,11 @@ object QuantileSketch {
       probs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.95)): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p >= 0.0 && p <= 1.0),
       s"probabilities must be in [0,1], got $probs")
-    val s = states.sparkSession
-    val served = states.groupBy(keepCols.map(Cols.q): _*)
-      .agg(GkQuantile.gkMerge(s, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"),
-        count(lit(1)).as("n_states"))
-      .withColumn("__qs",
-        GkQuantile.gkQuantiles(s, col("sketch"), probs))
-    served.select((keepCols.map(Cols.q) ++ Seq(
-        col("n_rows"), col("n_states"),
-        posexplode_outer(col("__qs")).as(Seq("__i", "__val")))): _*)
-      .withColumn("quantile",
-        element_at(array(probs.map(lit): _*), col("__i") + 1))
-      .select((keepCols.map(Cols.q) ++ Seq(col("quantile"),
-        round(col("__val"), 6).as("value"),
-        col("n_rows"), col("n_states"))): _*)
+    val merged = SketchTable.merged(states, keepCols, GkQuantile.gkMerge, countStates = true)
+      .withColumn("__qs", GkQuantile.gkQuantiles(states.sparkSession, col("sketch"), probs))
+    SketchTable.served(merged, keepCols, col("__qs"), outer = true,
+      element_at(array(probs.map(lit): _*), SketchTable.rank).as("quantile"),
+      round(col("__e"), 6).as("value"), col("n_rows"), col("n_states"))
   }
 
   /** [[Relational.referenceEdges]]'s wide (group, __b0..__b{n-2})

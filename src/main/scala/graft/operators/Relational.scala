@@ -1010,7 +1010,9 @@ object Relational {
     * column to string first if its distinct VALUES are what you count. At 100 TB this is the only viable
     * "distinct users last N days" architecture: the daily build is one
     * mergeable agg over the day's partition, the serving query unions a
-    * few KB of state per day.
+    * few KB of state per day. `n_rows` counts ROWS, null values
+    * included; the GK, Misra–Gries, bottom-k and reservoir families'
+    * `n_rows` count only the non-null inputs their sketches folded.
     */
   def sketchStates(df: DataFrame, groupCols: Seq[String],
       valueCol: String): DataFrame =
@@ -1027,9 +1029,7 @@ object Relational {
     * the per-micro-batch deployment equals the sequential batch fold.
     */
   def sketchCompact(states: DataFrame, keyCols: Seq[String]): DataFrame =
-    states.groupBy(keyCols.map(q): _*)
-      .agg(hll_union_agg(col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
+    SketchTable.merged(states, keyCols, (_, sketch) => hll_union_agg(sketch))
 
   /** Roll persisted sketch states up to `keepCols`: union the sketches,
     * estimate, sum the exact row counts. State-in, answer-out — the raw
@@ -2217,15 +2217,21 @@ object Relational {
   def countMinStates(df: DataFrame, groupCols: Seq[String], valueCol: String,
       depth: Int = 4, width: Int = 64): DataFrame = {
     require(depth >= 1 && width >= 1, "countMinStates needs positive depth and width")
-    df.select(groupCols.map(q) :+ q(valueCol).cast("string").as("__v"): _*)
-      .withColumn("d", explode(sequence(lit(0), lit(depth - 1))))
+    countMinCells(df.select(groupCols.map(q) :+ q(valueCol).cast("string").as("__v"): _*),
+        depth, width)
+      .groupBy(groupCols.map(q) :+ col("d") :+ col("bucket"): _*)
+      .agg(count(lit(1)).as("n"))
+  }
+
+  /** Each row's `depth` count-min cells: one row per hash row `d`, with
+    * the md5-salted `bucket` of its `__v` out of `width`.
+    */
+  private def countMinCells(df: DataFrame, depth: Int, width: Int): DataFrame =
+    df.withColumn("d", explode(sequence(lit(0), lit(depth - 1))))
       .withColumn("d", col("d").cast("long"))
       .withColumn("bucket", pmod(
         expr("CAST(conv(substring(md5(CAST(concat(__v, ':', d) AS BINARY)), 1, 12), 16, 10) AS BIGINT)"),
         lit(width.toLong)))
-      .groupBy(groupCols.map(q) :+ col("d") :+ col("bucket"): _*)
-      .agg(count(lit(1)).as("n"))
-  }
 
   /** Merge same-key CM state rows after an append — counters ADD,
     * exactly, at any re-compaction depth (the q33/d12 LSM shape).
@@ -2242,14 +2248,9 @@ object Relational {
   def countMinEstimate(states: DataFrame, keyCols: Seq[String],
       queries: DataFrame, valueCol: String, depth: Int = 4,
       width: Int = 64): DataFrame = {
-    val probes = queries
+    val probes = countMinCells(queries
       .select(keyCols.map(q) :+ q(valueCol).cast("string").as("__v"): _*)
-      .distinct()
-      .withColumn("d", explode(sequence(lit(0), lit(depth - 1))))
-      .withColumn("d", col("d").cast("long"))
-      .withColumn("bucket", pmod(
-        expr("CAST(conv(substring(md5(CAST(concat(__v, ':', d) AS BINARY)), 1, 12), 16, 10) AS BIGINT)"),
-        lit(width.toLong)))
+      .distinct(), depth, width)
     probes.join(states, keyCols :+ "d" :+ "bucket", "left")
       .groupBy(keyCols.map(q) :+ col("__v").as(valueCol): _*)
       .agg(min(coalesce(col("n"), lit(0L))).as("estimate"))

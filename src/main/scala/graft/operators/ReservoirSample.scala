@@ -31,22 +31,17 @@ object ReservoirSample {
   def reservoirStates(df: DataFrame, groupCols: Seq[String],
       idCol: String, weightCol: String, k: Int = 64): DataFrame = {
     require(groupCols.nonEmpty, "reservoirStates needs group columns")
-    val s = df.sparkSession
-    df.select((groupCols.map(Cols.q) :+
-        Cols.q(idCol).cast("string").as("__id") :+
-        Cols.q(weightCol).cast("double").as("__w")): _*)
-      .groupBy(groupCols.map(Cols.q): _*)
-      .agg(WeightedReservoir.wrAgg(s, col("__id"), col("__w"), k).as("sketch"),
-        count(when(col("__id").isNotNull && col("__w").isNotNull, 1)).as("n_rows"))
+    SketchTable.build(df, groupCols,
+      Seq(Cols.q(idCol).cast("string").as("__id"), Cols.q(weightCol).cast("double").as("__w")),
+      WeightedReservoir.wrAgg(df.sparkSession, col("__id"), col("__w"), k),
+      count(when(col("__id").isNotNull && col("__w").isNotNull, 1)))
   }
 
   /** Compact appended same-key states to one row per key — the q72
     * maintenance shape. Idempotent (set union).
     */
   def reservoirCompact(states: DataFrame, keyCols: Seq[String]): DataFrame =
-    states.groupBy(keyCols.map(Cols.q): _*)
-      .agg(WeightedReservoir.wrMerge(states.sparkSession, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
+    SketchTable.merged(states, keyCols, WeightedReservoir.wrMerge)
 
   /** Roll states up to `keepCols` and SERVE long-form: one row per
     * sampled row `(group..., smp_rank, id, weight, wkey, n_rows)` —
@@ -55,25 +50,15 @@ object ReservoirSample {
     * full double). State-in, answer-out. Contract: only SAMPLED rows
     * are served — a group whose merged state is empty (every ingested
     * id/weight was null) emits zero rows rather than one all-null row
-    * (r14 ADVICE; posexplode, not posexplode_outer, is the spelling).
+    * (`served` without `outer`).
     */
   def reservoirServe(states: DataFrame, keepCols: Seq[String],
       sampleSize: Int = 16): DataFrame = {
     require(sampleSize >= 1, s"sampleSize must be >= 1: $sampleSize")
-    val s = states.sparkSession
-    states.groupBy(keepCols.map(Cols.q): _*)
-      .agg(WeightedReservoir.wrMerge(s, col("sketch")).as("sketch"),
-        sum(col("n_rows")).as("n_rows"))
-      .select((keepCols.map(Cols.q) ++ Seq(
-        posexplode(WeightedReservoir.wrSample(s, col("sketch"), sampleSize))
-          .as(Seq("__i", "__e")),
-        col("n_rows"))): _*)
-      .select((keepCols.map(Cols.q) ++ Seq(
-        (col("__i") + 1).as("smp_rank"),
-        col("__e.id").as("id"),
-        col("__e.weight").as("weight"),
-        round(col("__e.wkey"), 2).as("wkey"),
-        col("n_rows"))): _*)
+    SketchTable.served(reservoirCompact(states, keepCols), keepCols,
+      WeightedReservoir.wrSample(states.sparkSession, col("sketch"), sampleSize), outer = false,
+      SketchTable.rank.as("smp_rank"), SketchTable.entry("id"), SketchTable.entry("weight"),
+      round(col("__e.wkey"), 2).as("wkey"), col("n_rows"))
   }
 
   /** q74: gate binding — 16 representative documents per source,

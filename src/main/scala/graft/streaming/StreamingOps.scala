@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -147,41 +147,36 @@ object StreamingOps {
       UserSession(userId, new java.sql.Timestamp(s.startMs), new java.sql.Timestamp(s.endMs),
         s.nEvents, s.totalValue)
 
-    def fn(userId: Long, evs: Iterator[UserEvent], state: GroupState[OpenSession]): Iterator[UserSession] =
-      if (state.hasTimedOut) {
-        // watermark passed end + gap: no in-horizon event can extend it
-        val s = state.get
-        state.remove()
-        Iterator.single(close(userId, s))
-      } else {
-        val sorted = evs.toIndexedSeq.sortBy(_.ts.getTime)
-        val closed = Vector.newBuilder[UserSession]
-        var open = state.getOption
-        for (e <- sorted) {
-          val t = e.ts.getTime
-          open = open match {
-            case Some(s) if t <= s.endMs + gapMs =>
-              Some(OpenSession(s.startMs, math.max(s.endMs, t), s.nEvents + 1, s.totalValue + e.value))
-            case Some(s) =>
-              closed += close(userId, s)
-              Some(OpenSession(t, t, 1L, e.value))
-            case None =>
-              Some(OpenSession(t, t, 1L, e.value))
-          }
+    def onBatch(userId: Long, evs: Iterator[UserEvent],
+        state: GroupState[OpenSession]): Iterator[UserSession] = {
+      val sorted = evs.toIndexedSeq.sortBy(_.ts.getTime)
+      val closed = Vector.newBuilder[UserSession]
+      var open = state.getOption
+      for (e <- sorted) {
+        val t = e.ts.getTime
+        open = open match {
+          case Some(s) if t <= s.endMs + gapMs =>
+            Some(OpenSession(s.startMs, math.max(s.endMs, t), s.nEvents + 1, s.totalValue + e.value))
+          case Some(s) =>
+            closed += close(userId, s)
+            Some(OpenSession(t, t, 1L, e.value))
+          case None =>
+            Some(OpenSession(t, t, 1L, e.value))
         }
-        open.foreach { s =>
-          state.update(s)
-          // timeout must sit beyond the current watermark; an already-
-          // expired session closes on the next trigger via the max
-          state.setTimeoutTimestamp(math.max(s.endMs + gapMs, state.getCurrentWatermarkMs() + 1))
-        }
-        closed.result().iterator
       }
+      open.foreach { s =>
+        state.update(s)
+        // timeout must sit beyond the current watermark; an already-
+        // expired session closes on the next trigger via the max
+        state.setTimeoutTimestamp(math.max(s.endMs + gapMs, state.getCurrentWatermarkMs() + 1))
+      }
+      closed.result().iterator
+    }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    // watermark passed end + gap: no in-horizon event can extend it
+    keyedState(events, watermark)(_.user_id)(onBatch) {
+      (userId, s) => Iterator.single(close(userId, s))
+    }
   }
 
   /** Streaming as-of attribution — the streaming twin of batch
@@ -206,50 +201,43 @@ object StreamingOps {
     import spark.implicits._
     val idleMs = maxIdleMinutes * 60000L
 
-    def fn(userId: Long, evs: Iterator[AttributionEvent],
-        state: GroupState[LastTouch]): Iterator[AttributedPurchase] =
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        // touches ("touch" < "purchase" lexically) before purchases at
-        // equal ts; max event_id wins among equal-ts touches
-        val sorted = evs.toIndexedSeq.sortBy(e => (e.ts.getTime, if (e.kind == "touch") 0 else 1, e.event_id))
-        val out = Vector.newBuilder[AttributedPurchase]
-        var last = state.getOption
-        for (e <- sorted) {
-          if (e.kind == "touch") {
-            // keep the lexicographically greatest (ts, event_id): a
-            // within-watermark late touch must not clobber a later one
-            // already in state from a previous trigger
-            val t = e.ts.getTime
-            if (last.forall(s => t > s.tsMs || (t == s.tsMs && e.event_id > s.eventId)))
-              last = Some(LastTouch(t, e.event_id))
-          } else {
-            // at-or-before guard: state may hold a touch NEWER than this
-            // purchase (the purchase arrived in a later trigger, within
-            // the watermark) — a future touch must never attribute.
-            // Single-touch state cannot recover an older superseded
-            // touch in that case, so the purchase emits unattributed:
-            // the bounded-state tradeoff vs batch q16's full lookback.
-            out += AttributedPurchase(e.event_id, userId,
-              last.filter(_.tsMs <= e.ts.getTime)
-                .map(s => java.lang.Long.valueOf(s.eventId)).orNull)
-          }
+    def onBatch(userId: Long, evs: Iterator[AttributionEvent],
+        state: GroupState[LastTouch]): Iterator[AttributedPurchase] = {
+      // touches ("touch" < "purchase" lexically) before purchases at
+      // equal ts; max event_id wins among equal-ts touches
+      val sorted = evs.toIndexedSeq.sortBy(e => (e.ts.getTime, if (e.kind == "touch") 0 else 1, e.event_id))
+      val out = Vector.newBuilder[AttributedPurchase]
+      var last = state.getOption
+      for (e <- sorted) {
+        if (e.kind == "touch") {
+          // keep the lexicographically greatest (ts, event_id): a
+          // within-watermark late touch must not clobber a later one
+          // already in state from a previous trigger
+          val t = e.ts.getTime
+          if (last.forall(s => t > s.tsMs || (t == s.tsMs && e.event_id > s.eventId)))
+            last = Some(LastTouch(t, e.event_id))
+        } else {
+          // at-or-before guard: state may hold a touch NEWER than this
+          // purchase (the purchase arrived in a later trigger, within
+          // the watermark) — a future touch must never attribute.
+          // Single-touch state cannot recover an older superseded
+          // touch in that case, so the purchase emits unattributed:
+          // the bounded-state tradeoff vs batch q16's full lookback.
+          out += AttributedPurchase(e.event_id, userId,
+            last.filter(_.tsMs <= e.ts.getTime)
+              .map(s => java.lang.Long.valueOf(s.eventId)).orNull)
         }
-        last match {
-          case Some(s) =>
-            state.update(s)
-            state.setTimeoutTimestamp(math.max(s.tsMs + idleMs, state.getCurrentWatermarkMs() + 1))
-          case None => ()
-        }
-        out.result().iterator
       }
+      last match {
+        case Some(s) =>
+          state.update(s)
+          state.setTimeoutTimestamp(math.max(s.tsMs + idleMs, state.getCurrentWatermarkMs() + 1))
+        case None => ()
+      }
+      out.result().iterator
+    }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    keyedState(events, watermark)(_.user_id)(onBatch)((_, _) => Iterator.empty)
   }
 
   /** Streaming interval-count — the streaming twin of batch
@@ -275,40 +263,33 @@ object StreamingOps {
     import spark.implicits._
     val intervalMs = intervalMinutes * 60000L
 
-    def fn(userId: Long, evs: Iterator[AttributionEvent],
-        state: GroupState[TouchBuffer]): Iterator[RangeCounted] =
-      if (state.hasTimedOut) {
-        state.remove()
-        Iterator.empty
-      } else {
-        // touches before purchases at equal ts, matching the batch
-        // inclusive upper bound
-        val sorted = evs.toIndexedSeq.sortBy(e =>
-          (e.ts.getTime, if (e.kind == "touch") 0 else 1, e.event_id))
-        var touches = state.getOption.map(_.tsMs.toVector).getOrElse(Vector.empty)
-        val out = Vector.newBuilder[RangeCounted]
-        for (e <- sorted) {
-          val t = e.ts.getTime
-          if (e.kind == "touch") touches = touches :+ t
-          else out += RangeCounted(e.event_id, userId,
-            touches.count(x => x <= t && x > t - intervalMs).toLong)
-        }
-        val horizon = state.getCurrentWatermarkMs() - intervalMs
-        val kept = touches.filter(_ > horizon)
-        if (kept.nonEmpty) {
-          state.update(TouchBuffer(kept))
-          state.setTimeoutTimestamp(
-            math.max(kept.max + intervalMs, state.getCurrentWatermarkMs() + 1))
-        } else if (state.exists) {
-          state.remove()
-        }
-        out.result().iterator
+    def onBatch(userId: Long, evs: Iterator[AttributionEvent],
+        state: GroupState[TouchBuffer]): Iterator[RangeCounted] = {
+      // touches before purchases at equal ts, matching the batch
+      // inclusive upper bound
+      val sorted = evs.toIndexedSeq.sortBy(e =>
+        (e.ts.getTime, if (e.kind == "touch") 0 else 1, e.event_id))
+      var touches = state.getOption.map(_.tsMs.toVector).getOrElse(Vector.empty)
+      val out = Vector.newBuilder[RangeCounted]
+      for (e <- sorted) {
+        val t = e.ts.getTime
+        if (e.kind == "touch") touches = touches :+ t
+        else out += RangeCounted(e.event_id, userId,
+          touches.count(x => x <= t && x > t - intervalMs).toLong)
       }
+      val horizon = state.getCurrentWatermarkMs() - intervalMs
+      val kept = touches.filter(_ > horizon)
+      if (kept.nonEmpty) {
+        state.update(TouchBuffer(kept))
+        state.setTimeoutTimestamp(
+          math.max(kept.max + intervalMs, state.getCurrentWatermarkMs() + 1))
+      } else if (state.exists) {
+        state.remove()
+      }
+      out.result().iterator
+    }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    keyedState(events, watermark)(_.user_id)(onBatch)((_, _) => Iterator.empty)
   }
 
   /** Streaming contamination gate — the unbounded-corpus twin of batch
@@ -432,29 +413,21 @@ object StreamingOps {
           WindowTopK(key._1, new java.sql.Timestamp(key._2), i + 1, id, v)
       }
 
-    def fn(key: (String, Long), evs: Iterator[TopKEvent],
-        state: GroupState[TopKBuffer]): Iterator[WindowTopK] =
-      if (state.hasTimedOut) {
-        val s = state.get
-        state.remove()
-        emit(key, s)
-      } else {
-        // fold the batch into the bounded buffer: keep only the k
-        // best (value desc, event_id asc) seen so far
-        val merged = (state.getOption.map(_.items).getOrElse(Seq.empty) ++
-          evs.map(e => (e.value, e.event_id)))
-          .sortBy { case (v, id) => (-v, id) }.take(k)
-        state.update(TopKBuffer(merged))
-        // final the moment the watermark passes the window end
-        state.setTimeoutTimestamp(
-          math.max(key._2 + winMs, state.getCurrentWatermarkMs() + 1))
-        Iterator.empty
-      }
+    def onBatch(key: (String, Long), evs: Iterator[TopKEvent],
+        state: GroupState[TopKBuffer]): Iterator[WindowTopK] = {
+      // fold the batch into the bounded buffer: keep only the k
+      // best (value desc, event_id asc) seen so far
+      val merged = (state.getOption.map(_.items).getOrElse(Seq.empty) ++
+        evs.map(e => (e.value, e.event_id)))
+        .sortBy { case (v, id) => (-v, id) }.take(k)
+      state.update(TopKBuffer(merged))
+      // final the moment the watermark passes the window end
+      state.setTimeoutTimestamp(
+        math.max(key._2 + winMs, state.getCurrentWatermarkMs() + 1))
+      Iterator.empty
+    }
 
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(e => (e.event_type, e.ts.getTime / winMs * winMs))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
+    keyedState(events, watermark)(e => (e.event_type, e.ts.getTime / winMs * winMs))(onBatch)(emit)
   }
 
   /** Streaming conversion funnel — the stateful deployment of batch
@@ -503,32 +476,47 @@ object StreamingOps {
         Seq(fin.v, fin.c, fin.p).count(_.isDefined))
     }
 
-    def fn(userId: Long, evs: Iterator[FunnelEvent],
-        state: GroupState[FunnelChain]): Iterator[FunnelJourney] =
-      if (state.hasTimedOut) {
-        // idle past the watermark: everything buffered is ripe —
-        // finalize the chain and emit the journey once
-        val s = state.get
-        state.remove()
-        Iterator.single(journey(userId, s))
-      } else {
-        val wm = state.getCurrentWatermarkMs()
-        val incoming = evs.map(e => (e.ts_ns, e.event_type)).toSeq
-        val s0 = state.getOption.getOrElse(FunnelChain(Seq.empty, None, None, None))
-        val all = s0.pending ++ incoming
-        // ripe = at or before the watermark (ns compared in ms): no
-        // earlier event can still arrive, so the ts-order fold is final
-        val (ripe, hold) = all.partition(_._1 / 1000000L <= wm)
-        val s1 = fold(s0, ripe).copy(pending = hold)
-        state.update(s1)
-        val horizonMs = (all.map(_._1 / 1000000L) :+ wm).max
-        state.setTimeoutTimestamp(math.max(horizonMs + idleMs, wm + 1))
-        Iterator.empty
-      }
+    def onBatch(userId: Long, evs: Iterator[FunnelEvent],
+        state: GroupState[FunnelChain]): Iterator[FunnelJourney] = {
+      val wm = state.getCurrentWatermarkMs()
+      val incoming = evs.map(e => (e.ts_ns, e.event_type)).toSeq
+      val s0 = state.getOption.getOrElse(FunnelChain(Seq.empty, None, None, None))
+      val all = s0.pending ++ incoming
+      // ripe = at or before the watermark (ns compared in ms): no
+      // earlier event can still arrive, so the ts-order fold is final
+      val (ripe, hold) = all.partition(_._1 / 1000000L <= wm)
+      val s1 = fold(s0, ripe).copy(pending = hold)
+      state.update(s1)
+      val horizonMs = (all.map(_._1 / 1000000L) :+ wm).max
+      state.setTimeoutTimestamp(math.max(horizonMs + idleMs, wm + 1))
+      Iterator.empty
+    }
 
+    // idle past the watermark: everything buffered is ripe — finalize
+    // the chain and emit the journey once
+    keyedState(events, watermark)(_.user_id)(onBatch) {
+      (userId, s) => Iterator.single(journey(userId, s))
+    }
+  }
+
+  /** The keyed event-time state of the stateful operators above:
+    * watermark `ts`, group by `key`, and run `onBatch` over each key's
+    * trigger batch and its state (Append mode, event-time timeout).
+    * Once the watermark passes a key's timeout, its state is removed
+    * and `onTimeout` emits from it.
+    */
+  private def keyedState[E, K: Encoder, S: Encoder, U: Encoder](events: Dataset[E],
+      watermark: String)(key: E => K)(onBatch: (K, Iterator[E], GroupState[S]) => Iterator[U])(
+      onTimeout: (K, S) => Iterator[U]): Dataset[U] =
     events
       .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(fn)
-  }
+      .groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: K, evs: Iterator[E], state: GroupState[S]) =>
+          if (state.hasTimedOut) {
+            val s = state.get
+            state.remove()
+            onTimeout(k, s)
+          } else onBatch(k, evs, state)
+      }
 }

@@ -45,4 +45,31 @@ class SketchStateSpec extends SparkSpec {
       assert(sha256(merged) === mergeHex, s"$family merged state bytes moved")
     }
   }
+
+  test("a serve size below 1 fails loudly as a literal and as a column; a null size serves null") {
+    import spark.implicits._
+    MisraGries.register(spark); BottomKSketch.register(spark); WeightedReservoir.register(spark)
+    def chain(e: Throwable): String =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).flatMap(t => Option(t.getMessage)).mkString(" | ")
+    // (serve function, its size argument's name, agg call over `id`)
+    val cases = Seq(
+      ("graft_bk_sample", "m", "graft_bk_agg(concat('u', id), 8)"),
+      ("graft_wr_sample", "m", "graft_wr_agg(concat('r', id), CAST(1 + id % 7 AS DOUBLE), 5)"),
+      ("graft_mg_topk", "topK", "graft_mg_agg(concat('i', (id * id) % 17), 4)"))
+    val misses = for ((serve, arg, agg) <- cases; bad <- Seq(0, -3); size <- Seq(bad.toString, "m")) yield {
+      val states = spark.range(0, 50, 1, 1).selectExpr(s"$agg AS st")
+        .crossJoin(Seq(bad).toDF("m"))
+      val call = s"$serve(st, $size) with m = $bad"
+      val err = scala.util.Try(states.selectExpr(s"$serve(st, $size)").collect()).failed
+        .map(chain).getOrElse("no error")
+      if (err.contains(s"$serve $arg must be >= 1: $bad")) None else Some(s"$call: $err")
+    }
+    assert(misses.flatten.isEmpty, misses.flatten.mkString("\n"))
+    for ((serve, _, agg) <- cases) {
+      val nulls = spark.range(0, 50, 1, 1).selectExpr(s"$agg AS st")
+        .crossJoin(Seq[Integer](null).toDF("m"))
+        .selectExpr(s"$serve(st, m)", s"$serve(st, CAST(NULL AS INT))").collect()
+      assert(nulls.length === 1 && nulls.head.isNullAt(0) && nulls.head.isNullAt(1), serve)
+    }
+  }
 }
