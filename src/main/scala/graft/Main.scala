@@ -139,10 +139,11 @@ object Main {
       val out = XbrlExtract.extract(spark, args.filings, args.taxonomy,
         args.formNumber, args.requestedTables, args.instancePattern)
       val tablesDir = s"${args.outputDir}/ferc${args.formNumber}_xbrl"
-      XbrlSinks.requireWritten(XbrlExtract.writeDatapackage(out.taxonomies, out.schemas,
-        out.store, args.outputDir, args.formNumber))
-      args.jdbcUrl.foreach(url => XbrlSinks.writeJdbc(out.tables, url))
-      out.release()
+      try {
+        XbrlSinks.requireWritten(XbrlExtract.writeDatapackage(out.taxonomies, out.schemas,
+          out.store, args.outputDir, args.formNumber))
+        args.jdbcUrl.foreach(url => XbrlSinks.writeJdbc(out.tables, url))
+      } finally out.release()
       log.info(s"wrote ${out.schemas.size} tables to $tablesDir")
       println(s"[graft.Main] wrote ${out.schemas.size} tables to $tablesDir")
     } finally if (!preExisting) spark.stop()

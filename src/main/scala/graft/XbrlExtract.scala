@@ -14,29 +14,38 @@ import graft.xbrl.TableSchema
   * projection of out, with optional table filtering and instance-name
   * pattern matching.
   *
-  * Only the store materializes up front. [[writeDatapackage]] is the
-  * load that follows: every table routed from the store in one Spark
-  * job, both datapackage descriptors and the taxonomy metadata.
+  * Nothing runs up front: [[extract]] plans the store, and
+  * [[writeDatapackage]] is the load that follows — the filings parsed,
+  * every table routed from the store and written, all in one Spark job,
+  * then both datapackage descriptors and the taxonomy metadata.
   */
 object XbrlExtract {
 
-  /** `release()` frees the shared grouped store's checkpoint blocks and
-    * the parsed filings behind it — call it once every output table is
-    * materialized (long-lived callers; a CLI process exit releases
+  /** The extraction's plan. `store` reads the filings afresh in each job
+    * that scans it; [[tables]] checkpoints it once, on first use, and
+    * `release()` frees that checkpoint — call it once every table view
+    * has been read (long-lived callers; a CLI process exit releases
     * implicitly).
     */
   case class ExtractOutput(
       taxonomies: Seq[graft.xbrl.Taxonomy],
       schemas: Seq[TableSchema],
-      store: DataFrame,
-      release: () => Unit = () => ()) {
+      store: DataFrame) {
+
+    @volatile private var freeCheckpoint: () => Unit = () => ()
 
     /** Each table as a lazy [[FactTableBuilder.buildFromStore]] view of
-      * the store, for API callers and the JDBC sink; the datapackage
-      * write does not use them.
+      * the store, checkpointed on first use so that reading every view
+      * parses the filings once, not once per table — for API callers
+      * and the JDBC sink; the datapackage write does not use them.
       */
-    lazy val tables: Map[String, DataFrame] =
-      schemas.map(s => s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
+    lazy val tables: Map[String, DataFrame] = {
+      val (checkpoint, free) = checkpointed(store)
+      freeCheckpoint = free
+      schemas.map(s => s.name -> FactTableBuilder.buildFromStore(s, checkpoint)).toMap
+    }
+
+    def release(): Unit = freeCheckpoint()
   }
 
   /** Each element of `filings` may be a zip archive, a directory of
@@ -45,17 +54,14 @@ object XbrlExtract {
     *
     * Every table is a map-only projection of ONE grouped fact store
     * ([[FactTableBuilder.groupedStore]]), built inside the tasks that
-    * parse the filings: parse + store is ONE Spark job with no exchange.
-    * The store is materialized here, eagerly, by [[checkpointed]]: a
-    * job over it then scans a leaf RDD instead of re-planning and
-    * re-shipping the parse lineage in its task binary. No table is
-    * planned here — `graft.Main` writes them all from the store through
-    * [[writeDatapackage]].
+    * parse the filings, with no exchange. It is returned as a plan and
+    * no job runs here: [[writeDatapackage]] parses, routes and writes in
+    * its one job.
     *
     * A filing that arrives twice (the same archive passed twice, or two
     * entries with one stem) throws an `IllegalArgumentException` naming
-    * it before any job runs; the names come from the archives' central
-    * directories and the file scans' indexes, already read on the driver.
+    * it; the names come from the archives' central directories and the
+    * file scans' indexes, already read on the driver.
     */
   def extract(
       spark: SparkSession,
@@ -73,28 +79,17 @@ object XbrlExtract {
     }
 
     val parsed = filings.map(FilingSource.fromPath(spark, _))
-    try {
-      // same matching as `rlike`: a find anywhere in the name
-      val selected = instancePattern.map(java.util.regex.Pattern.compile)
-        .fold(parsed.flatMap(_.names))(p => parsed.flatMap(_.names).filter(p.matcher(_).find()))
-      val repeated = selected.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
-      if (repeated.nonEmpty)
-        throw new IllegalArgumentException(
-          s"filing(s) given more than once: ${repeated.toSeq.sorted.mkString(", ")}")
+    // same matching as `rlike`: a find anywhere in the name
+    val selected = instancePattern.map(java.util.regex.Pattern.compile)
+      .fold(parsed.flatMap(_.names))(p => parsed.flatMap(_.names).filter(p.matcher(_).find()))
+    val repeated = selected.groupBy(identity).collect { case (n, xs) if xs.size > 1 => n }
+    if (repeated.nonEmpty)
+      throw new IllegalArgumentException(
+        s"filing(s) given more than once: ${repeated.toSeq.sorted.mkString(", ")}")
 
-      val grouped = FactTableBuilder.groupedStore(schemas, parsed)
-      val (store, releaseStore) = checkpointed(
-        instancePattern.fold(grouped)(p => grouped.filter(col("filing_name").rlike(p))))
-      ExtractOutput(taxonomies, schemas, store,
-        release = () => {
-          releaseStore()
-          parsed.foreach(_.unpersist())
-        })
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        parsed.foreach(_.unpersist())
-        throw e
-    }
+    val grouped = FactTableBuilder.groupedStore(schemas, parsed)
+    ExtractOutput(taxonomies, schemas,
+      instancePattern.fold(grouped)(p => grouped.filter(col("filing_name").rlike(p))))
   }
 
   /** `df` materialized now by `localCheckpoint`, and the function that
@@ -122,8 +117,10 @@ object XbrlExtract {
   /** The reference CLI's load (cli.py:101-130): every table of
     * `schemas` written from the grouped fact store `store` as one
     * parquet file at `<outputDir>/fercN_xbrl/<name>.parquet`
-    * (cli.py:211-230), all in ONE Spark job that routes each context to
-    * the tables that take it ([[XbrlSinks.writeRouted]]); then the
+    * (cli.py:211-230), all in ONE Spark job whose map stage runs the
+    * store's plan — for [[extract]]'s store, parsing the filings — and
+    * routes each context to the tables that take it
+    * ([[XbrlSinks.writeRouted]]); then the
     * parquet descriptor `fercN_xbrl/datapackage.json`, the sqlite-style
     * descriptor `fercN_xbrl_datapackage.json` and
     * `fercN_xbrl_taxonomy_metadata.json`. `graft.Main` and x05 both
@@ -133,9 +130,11 @@ object XbrlExtract {
     * write: a failed table never stops the others, and both descriptors
     * list exactly the tables that landed, so they never reference
     * missing or partial data. No descriptor is written if no table
-    * landed. If `timeout` expires, the in-flight write job is cancelled
-    * and this throws — again with no descriptor. A rerun into the same
-    * `outputDir` replaces each table it writes.
+    * landed. A failure of the map stage (a filing entry that cannot be
+    * read, say) fails the job, and this throws it with no descriptor;
+    * so does an expired `timeout`, which covers the parse as well and
+    * cancels the in-flight job. A rerun into the same `outputDir`
+    * replaces each table it writes.
     */
   def writeDatapackage(
       taxonomies: Seq[graft.xbrl.Taxonomy],

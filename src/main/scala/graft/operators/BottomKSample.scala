@@ -49,10 +49,13 @@ object BottomKSample {
       sampleSize: Int = 16): DataFrame = {
     require(sampleSize >= 1, s"sampleSize must be >= 1: $sampleSize")
     val s = states.sparkSession
-    SketchTable.served(bottomKCompact(states, keepCols), keepCols,
+    // the estimate once per group, below the explode, not once per entry
+    val merged = bottomKCompact(states, keepCols)
+      .withColumn("distinct_est", BottomKSketch.bkDistinct(s, col("sketch")))
+    SketchTable.served(merged, keepCols,
       BottomKSketch.bkSample(s, col("sketch"), sampleSize), outer = true,
       SketchTable.rank.as("rank"), SketchTable.entry("key"), SketchTable.entry("h"),
-      BottomKSketch.bkDistinct(s, col("sketch")).as("distinct_est"), col("n_rows"))
+      col("distinct_est"), col("n_rows"))
   }
 
   /** Pairwise distinct-domain overlap BETWEEN groups, from states alone

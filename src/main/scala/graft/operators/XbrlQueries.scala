@@ -43,7 +43,7 @@ object XbrlQueries {
 
   private lazy val tables: Seq[TableSchema] = FactTableSchema.fromTaxonomies(taxonomies)
 
-  /** One parsed-filings store per session: x01-x04 are projections of
+  /** One parsed-filings store per session: x01-x05 are projections of
     * the same persisted parse, so parsing (and caching) the archive once
     * per JVM mirrors how a real deployment would share the long tables.
     * Bounded (a bench/test JVM holds a handful of sessions, never more):
@@ -54,11 +54,13 @@ object XbrlQueries {
   private val filingsCache =
     scala.collection.mutable.LinkedHashMap.empty[SparkSession, Entry]
 
-  /** A session's parse and, once x05 has asked for it, the grouped fact
-    * store checkpointed from it with the function that frees the store's
-    * blocks — released together.
+  /** A session's parse, persisted here for the queries that share it,
+    * and, once x05 has asked for it, the grouped fact store checkpointed
+    * from it with the function that frees the store's blocks — released
+    * together.
     */
   private final class Entry(val parsed: graft.sources.ParsedFilings) {
+    parsed.parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var store: Option[(DataFrame, () => Unit)] = None
     def release(): Unit = { store.foreach(_._2()); parsed.unpersist() }
   }

@@ -190,13 +190,15 @@ object FactTableBuilder {
     * cheap filter + map-lookup projection over the same frame
     * ([[buildFromStore]]), no per-table shuffle at all. The map is
     * bounded by the taxonomy's column count per context —
-    * taxonomy-sized, never corpus-scaled. Materialize the result before
-    * fanning out table builds (XbrlExtract checkpoints it).
+    * taxonomy-sized, never corpus-scaled. The result is a plan over the
+    * parse: [[route]] reads it in the map stage of the one write job,
+    * and a caller fanning out per-table builds materializes it first
+    * (`XbrlExtract.ExtractOutput.tables` checkpoints it).
     *
     * Every step is keyed by filing, so the store is built where each
     * filing is parsed ([[ParsedFilings.contextFacts]]) and resolved by
-    * one map-only projection: parse + store is one job with NO exchange
-    * over the corpus, however many tables are built from it.
+    * one map-only projection: parse + store has NO exchange over the
+    * corpus, however many tables are built from it.
     */
   def groupedStore(schemas: Seq[TableSchema], filings: Seq[ParsedFilings]): DataFrame = {
     require(filings.nonEmpty, "groupedStore needs at least one parsed input")

@@ -87,14 +87,15 @@ object XbrlSinks {
     }
 
   /** The datapackage write: every table of `schemas` from the grouped
-    * fact store `store` in ONE Spark job. The map stage routes each
-    * context to the tables that take it
+    * fact store `store` in ONE Spark job. The map stage runs the store's
+    * plan (the filings' parse, for a store `XbrlExtract.extract`
+    * planned) and routes each context to the tables that take it
     * ([[graft.plans.FactTableBuilder.route]]); a partition by table id
     * gives every table exactly one write task — a table no context
     * reaches writes one empty file with its schema. Bounded by
     * `timeout` ([[onPool]]): on expiry the job is cancelled and this
     * throws. Returns each table's row count, or the error that stopped
-    * its write; a failure of the routing stage fails the job, and this
+    * its write; a failure of the map stage fails the job, and this
     * throws it.
     */
   private[graft] def writeRouted(schemas: Seq[TableSchema], store: DataFrame, outDir: String,

@@ -9,7 +9,6 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.sources.XbrlInstanceParser.ParsedInstance
 import graft.xbrl.{ContextFacts, FactValue, RawFact, XbrlContext}
@@ -169,9 +168,10 @@ object FilingSource {
 
 /** Parsed filings exposed as the three long tables the fact-table builder
   * consumes, and as the per-context rows ([[contextFacts]]) the grouped
-  * fact store is built from. The parsed Dataset is persisted
-  * (MEMORY_AND_DISK) because these are projections of one expensive
-  * parse; call `unpersist()` when the downstream tables are materialized.
+  * fact store is built from. Nothing is persisted: each job that reads
+  * one of these parses the filings it reads, so a caller that reads the
+  * parse more than once persists `parsed` itself (x01-x05 share one
+  * persisted parse per session) and frees it with `unpersist()`.
   * `names` are the filing names the driver read while listing the input
   * (archive central directory or file index) — one per filing entry,
   * repeats included.
@@ -182,8 +182,6 @@ class ParsedFilings(
     info: Map[String, FilingSource.FilingInfo],
     val names: Seq[String]) {
   import spark.implicits._
-
-  parsed.persist(StorageLevel.MEMORY_AND_DISK)
 
   def facts: Dataset[RawFact] = parsed.flatMap(_.facts)
 

@@ -20,11 +20,12 @@ import graft.sources.{FilingSource, TaxonomyParser}
 /** The grouped fact store built where each filing is parsed, on seasons
   * the repository generates (`perfbench/gen_xbrl.py`): the fixture twin
   * of FactTableSpec's real-filing equivalence over all 255 tables (the
-  * routed datapackage write included), the job and plan shape of
-  * `XbrlExtract.extract` (parse + store in one job, no exchange) and of
-  * `writeDatapackage` (one job, one write task per table), and the two
-  * bad inputs that must fail loudly — a filing that arrives twice and a
-  * truncated archive entry.
+  * routed datapackage write included), the job and plan shape of a
+  * Main run (`XbrlExtract.extract` runs no job and plans a store with no
+  * exchange and no cached scan; `writeDatapackage` parses, routes and
+  * writes in one job, one write task per table), and the two bad inputs
+  * that must fail loudly — a filing that arrives twice and a truncated
+  * archive entry.
   */
 class GroupedStoreSpec extends SparkSpec {
 
@@ -69,6 +70,8 @@ class GroupedStoreSpec extends SparkSpec {
     val tables = FactTableSchema.fromTaxonomies(TaxonomyParser.parseArchive(taxonomy(small)))
     assert(tables.size === 255)
     val parsed = FilingSource.fromZip(spark, zip(small))
+    // read once per store and twice per table below: parse it once
+    parsed.parsed.persist()
     val local = FactTableBuilder.groupedStore(tables, Seq(parsed)).persist()
     val flat = FactTableBuilder.groupedStore(
       tables, parsed.facts, parsed.contexts, parsed.meta).persist()
@@ -144,52 +147,49 @@ class GroupedStoreSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** Ids of the jobs `body` starts on this thread. */
-  private def jobsOf(body: => Unit): Seq[Int] = recorded(body)._1.map(_.jobId)
-
   test("writeDatapackage writes all 255 tables in ONE Spark job with one write task per table, and runs no SQL execution") {
-    val out = XbrlExtract.extract(spark, Seq(zip(tenFilings)), taxonomy(tenFilings))
     val dir = Files.createTempDirectory("graft_store_one_job").toString
+    var out: XbrlExtract.ExtractOutput = null
     var results = Map.empty[String, Either[String, Long]]
-    // the write job runs on the writer's own thread, in its own job group
+    // a Main run: extract plans, the write job parses, routes and writes;
+    // it runs on the writer's own thread, in its own job group
     val (_, jobs, sqlExecutions) = try recorded {
+      out = XbrlExtract.extract(spark, Seq(zip(tenFilings)), taxonomy(tenFilings))
       results = XbrlExtract.writeDatapackage(out.taxonomies, out.schemas, out.store, dir)
-    } finally out.release()
+    } finally if (out != null) out.release()
     assert(out.schemas.size === 255)
     assert(results.size === 255 && results.values.forall(_.isRight), results.filter(_._2.isLeft))
-    assert(jobs.size === 1, s"jobs started by writeDatapackage: ${jobs.map(_.jobId)}")
-    // the routing stage over the store, then one write task per table
-    assert(jobs.head.stageInfos.map(_.numTasks).max === 255, jobs.head.stageInfos.map(_.numTasks))
+    assert(jobs.size === 1, s"jobs started by extract + writeDatapackage: ${jobs.map(_.jobId)}")
+    // the parse + route stage, then the result stage: one write task per table
+    val stages = jobs.head.stageInfos.sortBy(_.stageId)
+    assert(stages.size === 2, stages.map(_.numTasks))
+    assert(stages.last.numTasks === 255, stages.map(_.numTasks))
     assert(sqlExecutions === 0, "writeDatapackage must not run a per-table SQL plan")
   }
 
-  test("extract runs parse + store as ONE Spark job, and the store plan has no exchange") {
+  test("extract runs no Spark job; its store plan has no exchange and no cached scan") {
     var out: XbrlExtract.ExtractOutput = null
-    val jobs = jobsOf {
+    val (_, jobs, _) = recorded {
       out = XbrlExtract.extract(spark, Seq(zip(tenFilings)), taxonomy(tenFilings))
     }
-    try {
-      assert(jobs.size === 1, s"jobs started by extract: $jobs")
-      assert(out.tables.size === 255)
-    } finally out.release()
+    assert(jobs.isEmpty, s"jobs started by extract: ${jobs.map(_.jobId)}")
 
     import org.apache.spark.sql.execution.exchange.Exchange
-    val tables = FactTableSchema.fromTaxonomies(TaxonomyParser.parseArchive(taxonomy(tenFilings)))
-    val parsed = FilingSource.fromZip(spark, zip(tenFilings))
     val key = "spark.sql.adaptive.enabled"
     val aqe = spark.conf.get(key)
     spark.conf.set(key, "false")
     try {
-      val plan = FactTableBuilder.groupedStore(tables, Seq(parsed)).queryExecution.executedPlan
+      val plan = out.store.queryExecution.executedPlan
       val exchanges = plan.collect { case e: Exchange => e }
       assert(exchanges.isEmpty, s"${exchanges.size} exchanges\n$plan")
-      val parseScans = plan.collect {
+      // the parse runs in the job that reads the store, not from a cache
+      val cached = plan.collect {
         case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
       }
-      assert(parseScans.size === 1, s"expected one scan of the persisted parse\n$plan")
+      assert(cached.isEmpty, s"the store plan reads a cached parse\n$plan")
     } finally {
       spark.conf.set(key, aqe)
-      parsed.unpersist()
+      out.release()
     }
   }
 
@@ -276,14 +276,21 @@ class GroupedStoreSpec extends SparkSpec {
     val entry = FilingSource.listEntries(zip(small)).last
     val dir = Files.createTempDirectory("graft_truncated")
     val bad = truncateEntry(zip(small), entry, dir.resolve("ferc1-xbrl-2021.zip"))
+    val outDir = Files.createTempDirectory("graft_truncated_out")
     val persisted = spark.sparkContext.getPersistentRDDs.size
+    // extract only plans: the entry is read, and fails, in the write job
     val e = intercept[Exception] {
-      XbrlExtract.extract(spark, Seq(bad), taxonomy(small))
+      val out = XbrlExtract.extract(spark, Seq(bad), taxonomy(small))
+      try XbrlExtract.writeDatapackage(out.taxonomies, out.schemas, out.store, outDir.toString)
+      finally out.release()
     }
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
     val named = chain.collectFirst { case io: java.io.IOException if io.getMessage.contains(entry) => io }
     assert(named.isDefined, s"no IOException naming $entry in:\n${chain.mkString("\n")}")
     assert(named.get.getMessage.contains(bad), named.get.getMessage)
+    for (d <- Seq("ferc1_xbrl/datapackage.json", "ferc1_xbrl_datapackage.json",
+        "ferc1_xbrl_taxonomy_metadata.json"))
+      assert(!Files.exists(outDir.resolve(d)), d)
     assert(spark.sparkContext.getPersistentRDDs.size === persisted)
   }
 }

@@ -11,8 +11,9 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * itself (`perfbench/gen_xbrl.py`, seeded, with its ground truth in
   * `truth.json`): every requested table written as one part file plus
   * `_SUCCESS` with the planted row count, both datapackage descriptors
-  * listing exactly the requested tables, and every block the extraction
-  * persisted or checkpointed freed again once the run is over. Main's
+  * listing exactly the requested tables, the `--jdbc-url` load into an
+  * in-memory Derby database, and every block the extraction persisted
+  * or checkpointed freed again once the run is over. Main's
   * writer, `XbrlExtract.writeDatapackage`, reports a failed table as its
   * error and lists only the tables that landed; its descriptors are
   * pinned field by field.
@@ -42,7 +43,7 @@ class MainCliSpec extends SparkSpec {
     Main.main(Array(s"$data/ferc1-xbrl-2021.zip", "--taxonomy", s"$data/ferc1-xbrl-taxonomies.zip",
       "--output-dir", out, "--cpus", "4", "--requested-tables", requested.mkString(",")))
     assert(sc.getPersistentRDDs.size === persistedBefore,
-      "Main's release() must free the parsed filings and the checkpointed store")
+      "Main must leave no persisted or checkpointed block behind")
 
     val tablesDir = s"$out/ferc1_xbrl"
     val written = new File(tablesDir).listFiles().filter(_.isDirectory)
@@ -62,6 +63,45 @@ class MainCliSpec extends SparkSpec {
     for (d <- Seq(s"$tablesDir/datapackage.json", s"$out/ferc1_xbrl_datapackage.json"))
       assert(resources(d) === requested.toSet, d)
     assert(Files.isRegularFile(Paths.get(s"$out/ferc1_xbrl_taxonomy_metadata.json")))
+  }
+
+  test("Main --jdbc-url loads every requested table into Derby, parsing the filings at most twice") {
+    val sc = spark.sparkContext
+    val url = s"jdbc:derby:memory:graft_cli_${System.nanoTime()}"
+    val persistedBefore = sc.getPersistentRDDs.size
+    // stages that read the filings archive: the parse's `parallelize`
+    // is one of the RDDs they run
+    val parses = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = s"graft-jdbc-spec-marker-${System.nanoTime()}"
+    @volatile var markerSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (!markerSeen && e.stageInfo.rddInfos.exists(_.callSite.contains("FilingSource.scala")))
+          parses.incrementAndGet()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker)) markerSeen = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      Main.main(Array(s"$data/ferc1-xbrl-2021.zip", "--taxonomy", s"$data/ferc1-xbrl-taxonomies.zip",
+        "--output-dir", Files.createTempDirectory("graft_cli_jdbc").toString, "--cpus", "4",
+        "--requested-tables", requested.mkString(","), "--jdbc-url", s"$url;create=true"))
+      // the listener has seen every event posted before the marker job
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    // once for the parquet write, once for the checkpoint the JDBC load reads
+    assert(parses.get >= 1 && parses.get <= 2, s"${parses.get} stages parsed the filings")
+    assert(sc.getPersistentRDDs.size === persistedBefore,
+      "Main must leave no persisted or checkpointed block behind")
+    val conn = java.sql.DriverManager.getConnection(url)
+    try for (t <- requested) {
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $t")
+      assert(rs.next() && rs.getLong(1) === expected(t), t)
+    } finally conn.close()
   }
 
   /** The requested tables extracted from the season; `release()` them. */
