@@ -70,7 +70,7 @@ class GroupedStoreSpec extends SparkSpec {
     val tables = FactTableSchema.fromTaxonomies(TaxonomyParser.parseArchive(taxonomy(small)))
     assert(tables.size === 255)
     val parsed = FilingSource.fromZip(spark, zip(small))
-    // read once per store and twice per table below: parse it once
+    // both stores and every table's build() below read it: parse it once
     parsed.parsed.persist()
     val local = FactTableBuilder.groupedStore(tables, Seq(parsed)).persist()
     val flat = FactTableBuilder.groupedStore(
