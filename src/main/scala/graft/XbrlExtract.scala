@@ -104,10 +104,10 @@ object XbrlExtract {
     * propagates.
     */
   private[graft] def checkpointed(df: DataFrame): (DataFrame, () => Unit) = {
+    // lazy, then materialized here: a failed eager checkpoint would
+    // leave its RDD persisted with no handle to free it
     val cp = df.localCheckpoint(eager = false)
-    val rdds = cp.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
+    val rdds = graft.operators.IterativeCheckpoint.checkpointRdds(cp)
     val release = () => rdds.foreach(_.unpersist(blocking = false))
     try rdds.foreach(_.count())
     catch { case scala.util.control.NonFatal(e) => release(); throw e }

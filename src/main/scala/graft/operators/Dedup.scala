@@ -634,7 +634,7 @@ object Dedup {
     val e = emb.select(Cols.q(idCol).as("vec_id"), Cols.q(vecCol).as("embedding"))
     // sizing needs only n's magnitude — callers with a known/estimated
     // corpus size (catalog stats, file sizes) pass it and skip the
-    // plan-build count() job entirely (see SharedCount)
+    // plan-build count() job entirely (see embeddingsCount)
     val planes =
       if (planesPerTable > 0) planesPerTable
       else math.max(8, Similarity.knnPlanes(
@@ -675,7 +675,14 @@ object Dedup {
     * must not prepend one full-scan counting job per operator.
     */
   private[operators] def embeddingsCount(s: SparkSession, dir: String): Long =
-    SharedCount(s, dir, "embeddings_rows")(Tables.embeddings(s, dir).count())
+    SharedIndex.entry(s, dir, "embeddings_rows") {
+      // job-group tag: lets listeners (and the PlanAuditSpec pin)
+      // attribute exactly which jobs are corpus-sizing counts
+      val sc = s.sparkContext
+      sc.setJobGroup("graft_shared_count", s"corpus count: embeddings_rows @ $dir",
+        interruptOnCancel = false)
+      try Tables.embeddings(s, dir).count() finally sc.clearJobGroup()
+    }(_ => ())
 
   /** d08: gate binding of [[embeddingLshPairs]] with its own
     * session-cached fine (8x8) bucket store. The synthetic embeddings

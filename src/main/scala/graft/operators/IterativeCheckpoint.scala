@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Tracked eager `localCheckpoint` for iterative DataFrame loops
   * (dupClusters' label propagation, trainIvfCodebook's Lloyd rounds).
@@ -12,9 +13,10 @@ import org.apache.spark.sql.DataFrame
   * Without a handle to that RDD, every superseded generation of an
   * iterative loop stays persisted until driver GC + ContextCleaner get
   * around to it: a slow storage leak on a long-running cluster job.
-  * Capturing the RDDs each checkpoint call persists (diff of
-  * `getPersistentRDDs` around it — exact here because the loops run
-  * sequentially on the driver) makes release explicit and immediate.
+  * The handles are the RDDs under the checkpointed plan's `LogicalRDD`
+  * nodes, so release is explicit and immediate and frees only the
+  * generation's own blocks — never a persisted input that happened to
+  * be materialized for the first time inside the checkpoint's job.
   */
 private[graft] object IterativeCheckpoint {
 
@@ -26,21 +28,16 @@ private[graft] object IterativeCheckpoint {
     def release(): Unit = rdds.foreach(_.unpersist(blocking = false))
   }
 
-  /** Eagerly localCheckpoint `df`, capturing exactly the RDDs the call
-    * newly persisted. The capture section is locked: two driver threads
-    * running iterative loops concurrently must not attribute each
-    * other's fresh checkpoints to themselves — releasing a live
-    * checkpoint is fatal (its lineage is truncated, so the data cannot
-    * be recomputed). The lock serializes only the checkpoint
-    * materialization calls; the jobs inside still use every executor.
+  /** The checkpointed RDDs a `localCheckpoint` result reads. */
+  def checkpointRdds(cp: DataFrame): Seq[RDD[_]] =
+    cp.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+
+  /** Eagerly localCheckpoint `df`. Eager, not materialized by a later
+    * `RDD.count()`: an `observe` on `df` (dupClusters' label sums)
+    * delivers its metrics only through the checkpoint's own action.
     */
-  def apply(df: DataFrame): Generation = synchronized {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+  def apply(df: DataFrame): Generation = {
     val out = df.localCheckpoint()
-    val added = sc.getPersistentRDDs.collect {
-      case (id, r) if !before.contains(id) => r
-    }.toSeq
-    Generation(out, added)
+    Generation(out, checkpointRdds(out))
   }
 }

@@ -5,9 +5,13 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Per-session cache for derived "index" DataFrames shared by multiple
-  * operators (the shingle-bucket store feeding d02/d03, the LSH bucket
-  * store feeding s02's query and corpus sides).
+/** The engine's per-session cache of derived state, keyed by (session,
+  * input dir or archive path, name): the index DataFrames several
+  * operators share (the shingle-bucket store feeding d02/d03, the LSH
+  * bucket store feeding s02's query and corpus sides, the codebooks),
+  * the XBRL gates' persisted parse, grouped store and taxonomy
+  * metadata, and corpus-level scalars such as the embeddings count LSH
+  * geometry sizing needs.
   *
   * Rationale: a lazy DataFrame subtree consumed k times is recomputed k
   * times — for d03 that meant building the shingle buckets four times
@@ -17,98 +21,62 @@ import org.apache.spark.storage.StorageLevel
   * when the executors need the space. Index size is proportional to the
   * distinct shingle count, far below the corpus itself.
   *
-  * The cache itself is bounded (LRU, [[MaxEntries]] entries): the evicted
-  * DataFrame is unpersisted so a long-lived service cycling through many
-  * input dirs can't accumulate driver references and cached blocks.
-  * [[invalidate]] drops everything a session holds — call it before
-  * `session.stop()`.
+  * The cache itself is bounded (LRU, [[MaxEntries]] entries): each entry
+  * carries the function that releases it, run when the entry is evicted
+  * or invalidated, so a long-lived service cycling through many input
+  * dirs can't accumulate driver references and cached blocks. Entries of
+  * a stopped session are evicted first and never released: their blocks
+  * went with the session's context, and unpersisting a frame of a
+  * stopped session throws (its block manager endpoint is gone) even
+  * while another session is live. [[invalidate]] drops everything a
+  * session holds — call it before `session.stop()`.
   */
-private[operators] object SharedIndex {
+private[graft] object SharedIndex {
 
   private val MaxEntries = 32
 
-  // insertion/access-ordered; all access synchronized (driver-side only,
-  // contention-free — entries are built once per query family)
-  private val cache =
-    mutable.LinkedHashMap.empty[(SparkSession, String, String), DataFrame]
+  private final class Entry(val value: Any, val release: () => Unit)
 
-  def apply(s: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame =
-    synchronized {
-      val key = (s, dir, name)
-      cache.remove(key) match {
-        case Some(df) =>
-          cache.put(key, df) // refresh LRU position
-          df
-        case None =>
-          val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-          cache.put(key, df)
-          while (cache.size > MaxEntries) {
-            val (k, old) = cache.head
-            cache.remove(k)
-            old.unpersist(blocking = false)
-          }
-          df
-      }
+  // insertion/access-ordered; all access synchronized (driver-side only).
+  // Builds run under the lock: an entry is built once per (session, dir,
+  // name), and a build may read other entries (the lock is reentrant).
+  private val cache = mutable.LinkedHashMap.empty[(SparkSession, String, String), Entry]
+
+  /** The entry for (session, dir, name), built by `build` on first use;
+    * `release` frees what the build holds when the entry is dropped.
+    */
+  def entry[T](s: SparkSession, dir: String, name: String)(build: => T)(
+      release: T => Unit): T = synchronized {
+    val key = (s, dir, name)
+    val e = cache.remove(key).getOrElse {
+      val v = build
+      new Entry(v, () => release(v))
     }
+    cache.put(key, e) // (re)insert at the most recent LRU position
+    while (cache.size > MaxEntries)
+      drop(cache.keys.find(_._1.sparkContext.isStopped).getOrElse(cache.head._1))
+    e.value.asInstanceOf[T]
+  }
 
-  /** Unpersist and drop ONE named index for (session, dir), leaving
-    * sibling indexes cached — the bench uses this to time a cold
-    * rebuild of a specific artifact without perturbing anything else.
-    * Blocking, so the blocks are really gone before timing starts.
+  /** A persisted (MEMORY_AND_DISK) index frame. */
+  def apply(s: SparkSession, dir: String, name: String)(build: => DataFrame): DataFrame =
+    entry(s, dir, name)(build.persist(StorageLevel.MEMORY_AND_DISK))(
+      _.unpersist(blocking = true))
+
+  private def drop(key: (SparkSession, String, String)): Unit =
+    cache.remove(key).foreach { e => if (!key._1.sparkContext.isStopped) e.release() }
+
+  /** Release and drop ONE entry for (session, dir), leaving its siblings
+    * cached — the bench uses this to time a cold rebuild of a specific
+    * artifact without perturbing anything else. A frame's release is a
+    * blocking unpersist, so its blocks are really gone before timing
+    * starts.
     */
   def invalidateEntry(s: SparkSession, dir: String, name: String): Unit =
-    synchronized {
-      cache.remove((s, dir, name)).foreach(_.unpersist(blocking = true))
-    }
+    synchronized(drop((s, dir, name)))
 
-  /** Unpersist and drop every index the session holds. */
+  /** Release and drop every entry the session holds. */
   def invalidate(s: SparkSession): Unit = synchronized {
-    val keys = cache.keys.filter(_._1 eq s).toVector
-    keys.foreach { k => cache.remove(k).foreach(_.unpersist(blocking = false)) }
-    SharedCount.invalidate(s)
-  }
-}
-
-/** Per-(session, dir, name) cache for corpus-level scalars — today the
-  * row counts LSH geometry sizing needs. Corpus-sizing the plane count
-  * is the right call (fixed geometry silently sheds recall as n grows
-  * past the bucket caps — measured and spec'd in r9), but the `count()`
-  * it costs is a full corpus scan BEFORE any real work, and r9 paid it
-  * once per operator invocation: d08 and s08 each counted the same
-  * embeddings table every time their plans were built. At 100 TB that
-  * is a non-trivial prepended job. One cached count per (session, dir)
-  * bounds it to a single job per corpus per session; library callers
-  * that already know their corpus size skip the job entirely via the
-  * `corpusSize` parameters on [[Similarity.knnJoinLsh]] /
-  * [[Dedup.embeddingLshPairs]].
-  */
-private[graft] object SharedCount {
-
-  private val cache = mutable.LinkedHashMap.empty[(SparkSession, String, String), Long]
-
-  def apply(s: SparkSession, dir: String, name: String)(compute: => Long): Long = {
-    // compute OUTSIDE the lock when missing: a count() job can take
-    // seconds and must not serialize unrelated sessions' lookups
-    val key = (s, dir, name)
-    val hit = synchronized(cache.get(key))
-    hit match {
-      case Some(n) => n
-      case None =>
-        // job-group tag: lets listeners (and the PlanAuditSpec pin)
-        // attribute exactly which jobs are corpus-sizing counts
-        val sc = s.sparkContext
-        sc.setJobGroup("graft_shared_count", s"corpus count: $name @ $dir",
-          interruptOnCancel = false)
-        val n = try compute finally sc.clearJobGroup()
-        synchronized {
-          cache.getOrElseUpdate(key, n)
-          while (cache.size > 256) cache.remove(cache.head._1)
-        }
-        n
-    }
-  }
-
-  def invalidate(s: SparkSession): Unit = synchronized {
-    cache.keys.filter(_._1 eq s).toVector.foreach(cache.remove)
+    cache.keys.filter(_._1 eq s).toVector.foreach(drop)
   }
 }

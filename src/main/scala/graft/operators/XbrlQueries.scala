@@ -19,9 +19,9 @@ object XbrlQueries {
     * GRAFT_XBRL_DATA_DIR env var (or the `graft.xbrl.data.dir` system
     * property, which wins — a JVM can't change its own env, so tests
     * and embedders need the property route) so the built jar isn't
-    * coupled to this container's layout. Resolved per call; the
-    * session-level taxonomy/filings caches capture whatever directory
-    * was active at their first use.
+    * coupled to this container's layout. Resolved per call, and the
+    * session entries below are keyed by the archive path it resolves
+    * to, so the gates follow a change of directory.
     */
   private def dataDir: String =
     sys.props.get("graft.xbrl.data.dir")
@@ -37,83 +37,51 @@ object XbrlQueries {
     path
   }
 
-  /** Taxonomies + schemas parse once per JVM — metadata, not data. */
-  private lazy val taxonomies: Seq[graft.xbrl.Taxonomy] =
-    TaxonomyParser.parseArchive(requireArchive("ferc1-xbrl-taxonomies.zip"))
+  // Session entries ([[SharedIndex]]), keyed by the archive they derive
+  // from. Both archives resolve from one data dir, so the filings path
+  // also names the taxonomy the grouped store was built with.
+  private def filingsZip = requireArchive("ferc1-xbrl-2021.zip")
+  private def taxonomyZip = requireArchive("ferc1-xbrl-taxonomies.zip")
 
-  private lazy val tables: Seq[TableSchema] = FactTableSchema.fromTaxonomies(taxonomies)
+  /** Taxonomies and the schemas derived from them: metadata, not data. */
+  private def taxonomies(s: SparkSession): Seq[graft.xbrl.Taxonomy] =
+    SharedIndex.entry(s, taxonomyZip, "taxonomies")(
+      TaxonomyParser.parseArchive(taxonomyZip))(_ => ())
 
-  /** One parsed-filings store per session: x01-x05 are projections of
-    * the same persisted parse, so parsing (and caching) the archive once
-    * per JVM mirrors how a real deployment would share the long tables.
-    * Bounded (a bench/test JVM holds a handful of sessions, never more):
-    * beyond [[MaxSessions]] the oldest entry is released and dropped,
-    * and [[invalidate]] releases a session's entry eagerly.
+  private def tables(s: SparkSession): Seq[TableSchema] =
+    SharedIndex.entry(s, taxonomyZip, "table_schemas")(
+      FactTableSchema.fromTaxonomies(taxonomies(s)))(_ => ())
+
+  /** The parsed filings, persisted for x01-x05: every gate is a
+    * projection of the same parse, so the archive is parsed (and
+    * cached) once per session, as a real deployment would share the
+    * long tables.
     */
-  private val MaxSessions = 4
-  private val filingsCache =
-    scala.collection.mutable.LinkedHashMap.empty[SparkSession, Entry]
-
-  /** A session's parse, persisted here for the queries that share it,
-    * and, once x05 has asked for it, the grouped fact store checkpointed
-    * from it with the function that frees the store's blocks — released
-    * together.
-    */
-  private final class Entry(val parsed: graft.sources.ParsedFilings) {
-    parsed.parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var store: Option[(DataFrame, () => Unit)] = None
-    def release(): Unit = { store.foreach(_._2()); parsed.unpersist() }
-  }
-
-  private def entry(s: SparkSession): Entry = synchronized {
-    // explicit get/evict/put (never mutate inside getOrElseUpdate's
-    // by-name default); evict stopped sessions first so a live session's
-    // persisted parse is only dropped as a last resort
-    filingsCache.get(s) match {
-      case Some(e) => e
-      case None =>
-        while (filingsCache.size >= MaxSessions) {
-          val victim = filingsCache.keys.find(_.sparkContext.isStopped)
-            .getOrElse(filingsCache.head._1)
-          filingsCache.remove(victim).foreach { old =>
-            // unpersist on a stopped context throws; the blocks are gone
-            if (!victim.sparkContext.isStopped) old.release()
-          }
-        }
-        val e = new Entry(FilingSource.fromZip(s, requireArchive("ferc1-xbrl-2021.zip")))
-        filingsCache.put(s, e)
-        e
-    }
-  }
-
-  private def filings(s: SparkSession): graft.sources.ParsedFilings = entry(s).parsed
-
-  /** Release the parsed filings and the grouped store a session holds. */
-  def invalidate(s: SparkSession): Unit = synchronized {
-    filingsCache.remove(s).foreach(_.release())
-  }
+  private def filings(s: SparkSession): graft.sources.ParsedFilings =
+    SharedIndex.entry(s, filingsZip, "filings_parse") {
+      val p = FilingSource.fromZip(s, filingsZip)
+      p.parsed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      p
+    }(_.unpersist())
 
   /** Test hooks (PlanAuditSpec pins x05's per-table plans against the
-    * session-shared parse these gate queries actually use).
+    * session-shared parse these gate queries actually use); the schemas
+    * are those of the session active on the calling thread.
     */
   private[graft] def sharedParse(s: SparkSession): graft.sources.ParsedFilings = filings(s)
-  private[graft] def tableSchemas: Seq[TableSchema] = tables
+  private[graft] def tableSchemas: Seq[TableSchema] = tables(SparkSession.active)
 
   /** The grouped fact store x05 writes from, built on x05's first call
     * in a session (x01-x04 never build it) inside the tasks that parse
-    * the filings, as `XbrlExtract.extract` builds it, and held in the
-    * session's entry beside the parse. Each x05 run routes all 255
+    * the filings, as `XbrlExtract.extract` builds it, and held as a
+    * session entry beside the parse. Each x05 run routes all 255
     * tables from it in one write job; `XbrlExtract.checkpointed`
     * materializes it and truncates its lineage, so that job ships a
     * scan of a leaf RDD, not the parse lineage.
     */
-  private[graft] def sharedStore(s: SparkSession): DataFrame = synchronized {
-    val e = entry(s)
-    if (e.store.isEmpty)
-      e.store = Some(graft.XbrlExtract.checkpointed(
-        FactTableBuilder.groupedStore(tables, Seq(e.parsed))))
-    e.store.get._1
-  }
+  private[graft] def sharedStore(s: SparkSession): DataFrame =
+    SharedIndex.entry(s, filingsZip, "grouped_store")(graft.XbrlExtract.checkpointed(
+      FactTableBuilder.groupedStore(tables(s), Seq(filings(s)))))(_._2())._1
 
   /** x01: distributed parse of the ferc1 2021 filings archive — one
     * summary row per filing (context/fact counts by period type,
@@ -138,9 +106,10 @@ object XbrlQueries {
     * -> dedup -> pivot -> typed cast): identification_001_duration.
     */
   def x02XbrlFactTable(s: SparkSession, dir: String): DataFrame = {
-    val schema = tables.find(_.name == "identification_001_duration").getOrElse(
+    val ts = tables(s)
+    val schema = ts.find(_.name == "identification_001_duration").getOrElse(
       throw new NoSuchElementException(
-        s"table identification_001_duration not in the ${tables.size} schemas " +
+        s"table identification_001_duration not in the ${ts.size} schemas " +
           s"derived from $dataDir/ferc1-xbrl-taxonomies.zip — wrong or stale taxonomy archive?"))
     val fs = filings(s)
     FactTableBuilder.build(schema, fs.facts, fs.contexts, fs.meta)
@@ -152,7 +121,7 @@ object XbrlQueries {
     */
   def x03XbrlCoverage(s: SparkSession, dir: String): DataFrame = {
     val fs = filings(s)
-    FactTableBuilder.stats(s, tables, fs.facts, fs.contexts, fs.meta)
+    FactTableBuilder.stats(s, tables(s), fs.facts, fs.contexts, fs.meta)
       .select(col("filing_name"), col("used_facts"), col("total_facts"),
         round(col("coverage"), 6).as("coverage"))
       .orderBy("filing_name")
@@ -163,26 +132,27 @@ object XbrlQueries {
     * every child are numeric columns of that table. Driver-side
     * metadata walk (taxonomy-sized, not data-sized).
     */
-  private lazy val calcSets: Seq[(TableSchema, Seq[(String, Seq[(String, Double)])])] = {
-    tables.map { t =>
-      val numericCols = t.dataColumns.filter(_.schemaType == "number").map(_.name).toSet
-      val seen = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
-      def walk(c: graft.xbrl.Concept): Unit = {
-        val parent = graft.xbrl.Names.snakecase(c.name)
-        if (c.calculations.nonEmpty && numericCols.contains(parent)) {
-          val children = c.calculations.map(cal => cal.name -> cal.weight)
-          if (children.nonEmpty && children.forall(ch => numericCols.contains(ch._1)))
-            seen.getOrElseUpdate(parent, children)
+  private def calcSets(s: SparkSession): Seq[(TableSchema, Seq[(String, Seq[(String, Double)])])] =
+    SharedIndex.entry(s, taxonomyZip, "calc_sets") {
+      tables(s).map { t =>
+        val numericCols = t.dataColumns.filter(_.schemaType == "number").map(_.name).toSet
+        val seen = scala.collection.mutable.LinkedHashMap.empty[String, Seq[(String, Double)]]
+        def walk(c: graft.xbrl.Concept): Unit = {
+          val parent = graft.xbrl.Names.snakecase(c.name)
+          if (c.calculations.nonEmpty && numericCols.contains(parent)) {
+            val children = c.calculations.map(cal => cal.name -> cal.weight)
+            if (children.nonEmpty && children.forall(ch => numericCols.contains(ch._1)))
+              seen.getOrElseUpdate(parent, children)
+          }
+          c.children.foreach(walk)
         }
-        c.children.foreach(walk)
-      }
-      for (tx <- taxonomies; role <- tx.roles
-           if FactTableSchema.cleanTableName(role.definition)
-             .exists(n => s"${n}_${t.periodType}" == t.name))
-        walk(role.concepts)
-      t -> seen.toSeq
-    }.filter(_._2.nonEmpty)
-  }
+        for (tx <- taxonomies(s); role <- tx.roles
+             if FactTableSchema.cleanTableName(role.definition)
+               .exists(n => s"${n}_${t.periodType}" == t.name))
+          walk(role.concepts)
+        t -> seen.toSeq
+      }.filter(_._2.nonEmpty)
+    }(_ => ())
 
   /** x04: real calculation-linkbase validation (the downstream semantics
     * q15 models synthetically): reported parent totals vs
@@ -190,7 +160,7 @@ object XbrlQueries {
     * with the most in-table calculation sets.
     */
   def x04XbrlCalcValidate(s: SparkSession, dir: String): DataFrame = {
-    val (schema, calcs) = calcSets.maxBy { case (t, cs) => (cs.size, t.name) }
+    val (schema, calcs) = calcSets(s).maxBy { case (t, cs) => (cs.size, t.name) }
     val fs = filings(s)
     FactTableBuilder.validateCalculations(s, schema, calcs, fs.facts, fs.contexts)
       .orderBy("filing_name", "entity_id", "concept")
@@ -228,13 +198,14 @@ object XbrlQueries {
       s"${System.getProperty("java.io.tmpdir")}/graft_x05_datapackage")
     val scope = s"$base/${s.sparkContext.applicationId}"
     val run = x05Runs.incrementAndGet()
-    val written = graft.XbrlExtract.writeDatapackage(taxonomies, tables, sharedStore(s),
+    val ts = tables(s)
+    val written = graft.XbrlExtract.writeDatapackage(taxonomies(s), ts, sharedStore(s),
       s"$scope/run_$run")
     // writes are complete here (the datapackage writer awaits its job):
     // drop the predecessor so repeat runs don't accumulate
     if (run > 1) deleteRecursively(new java.io.File(s"$scope/run_${run - 1}"))
     import s.implicits._
-    tables.map { t =>
+    ts.map { t =>
       val r = written(t.name)
       (t.name, r.toOption, t.fields.size, r.left.toOption)
     }.toDF("table_name", "n_rows", "n_cols", "error").orderBy("table_name")

@@ -139,6 +139,23 @@ class DedupSpec extends SparkSpec {
     assert(out.count() === 60L)
   }
 
+  test("releasing a checkpoint generation leaves the persisted input it read cached") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    // persisted, not yet materialized: the generation's checkpoint job
+    // is the first to fill the input's cache
+    val input = spark.range(0, 1237).toDF("v").withColumn("w", col("v") * 7919L).persist()
+    try {
+      val gen = graft.operators.IterativeCheckpoint(input.filter(col("v") % 2L === 0L))
+      val inputRdd = input.queryExecution.withCachedData.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers
+      }.get
+      gen.release()
+      val persisted = spark.sparkContext.getPersistentRDDs
+      assert(persisted.contains(inputRdd.id), "the input's cache went with the generation")
+      assert(gen.rdds.nonEmpty && gen.rdds.forall(r => !persisted.contains(r.id)))
+    } finally input.unpersist()
+  }
+
   test("nearDupCorpus: planted clusters elect the preferred survivor; conservation and pass-through hold under repartitioning") {
     import spark.implicits._
     // three planted clusters + two untouched docs. Cluster A {1,2,3}:

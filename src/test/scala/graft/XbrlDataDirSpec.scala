@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.operators.XbrlQueries
+import scala.sys.process._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import graft.operators.{SharedIndex, XbrlQueries}
 import graft.sources.{FilingSource, TaxonomyParser}
 
 /** The GRAFT_XBRL_DATA_DIR portability knob, actually exercised: the
@@ -11,11 +15,9 @@ import graft.sources.{FilingSource, TaxonomyParser}
   * no hidden coupling to this container's reference checkout. A JVM
   * cannot modify its own environment, so the test drives the
   * `graft.xbrl.data.dir` system property, which shares the resolution
-  * path and deliberately wins over the env var. (The gate bindings
-  * themselves cache taxonomies/filings per JVM at first use, so the
-  * override must be active before any XBRL query runs — documented on
-  * XbrlQueries.dataDir; this spec tests the resolver + parse directly
-  * to stay independent of suite ordering.)
+  * path and deliberately wins over the env var. The gates' session
+  * entries are keyed by the resolved archive path, so a gate run after
+  * the property changes serves the new directory's archive.
   */
 class XbrlDataDirSpec extends SparkSpec {
 
@@ -43,6 +45,30 @@ class XbrlDataDirSpec extends SparkSpec {
     } finally {
       System.clearProperty(Prop)
       Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+    }
+  }
+
+  test("the gates follow a change of data directory") {
+    // two generated seasons of different sizes, served in turn by one
+    // session: x01 has one row per filing of the CURRENT directory
+    val seasons = Seq(2, 4).map { n =>
+      val dir = Files.createTempDirectory(s"graft_xbrl_season_$n")
+      val gen = Seq("python3", "perfbench/gen_xbrl.py", "--seed", "41",
+        "--filings", n.toString, "--out", dir.toString)
+      assert(gen.! === 0, s"generator failed: ${gen.mkString(" ")}")
+      dir
+    }
+    try seasons.foreach { dir =>
+      System.setProperty(Prop, dir.toString)
+      try {
+        val truth = new ObjectMapper().readTree(dir.resolve("truth.json").toFile)
+        assert(XbrlQueries.x01XbrlParse(spark, "").count() === truth.get("filings").asLong)
+      } finally System.clearProperty(Prop)
+    } finally seasons.foreach { dir =>
+      // x01 creates only the parse entry
+      SharedIndex.invalidateEntry(spark, s"$dir/ferc1-xbrl-2021.zip", "filings_parse")
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
         .forEach(p => Files.deleteIfExists(p))
     }
   }

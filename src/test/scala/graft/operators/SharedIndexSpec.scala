@@ -5,8 +5,8 @@ import org.apache.spark.storage.StorageLevel
 /** Pins the session index cache's memory contract: bounded LRU where
   * eviction really unpersists (no cached-block leak however many input
   * dirs a long-lived service cycles through) and access refreshes
-  * recency. In the same package because SharedIndex is
-  * private[operators] by design.
+  * recency; each entry's own release runs exactly once, and a derived
+  * value is computed once per (session, dir).
   */
 class SharedIndexSpec extends graft.SparkSpec {
 
@@ -41,5 +41,31 @@ class SharedIndexSpec extends graft.SparkSpec {
 
     // drop this test's junk so later suites start from a clean cache
     SharedIndex.invalidate(spark)
+  }
+
+  test("an entry's release runs exactly once: on LRU eviction, and on invalidate") {
+    val dir = "/tmp/shared-index-spec-release"
+    SharedIndex.invalidate(spark)
+    val released = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def put(name: String): String =
+      SharedIndex.entry(spark, dir, name)(name)(n => released(n) += 1)
+
+    put("first")
+    (1 to 32).foreach(i => put(s"fill$i")) // one past capacity
+    assert(released.toMap === Map("first" -> 1))
+    SharedIndex.invalidate(spark)
+    SharedIndex.invalidate(spark) // nothing left to release
+    assert(released.toMap === (("first" +: (1 to 32).map(i => s"fill$i")).map(_ -> 1).toMap))
+  }
+
+  test("a count entry computes once per (session, dir)") {
+    var computed = 0
+    def rows(dir: String): Long =
+      SharedIndex.entry(spark, dir, "rows") { computed += 1; dir.length.toLong }(_ => ())
+    val (a, b) = ("/tmp/shared-index-spec-a", "/tmp/shared-index-spec-bb")
+    assert(rows(a) === a.length && rows(a) === a.length && computed === 1)
+    assert(rows(b) === b.length && computed === 2)
+    assert(rows(a) === a.length && computed === 2)
+    Seq(a, b).foreach(SharedIndex.invalidateEntry(spark, _, "rows"))
   }
 }
